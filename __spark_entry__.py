@@ -29,6 +29,7 @@ from advanced_text_extraction_spark.operators import summarize as A
 from advanced_text_extraction_spark.operators import textstats as TS
 from advanced_text_extraction_spark.operators import windows as W
 from advanced_text_extraction_spark.operators.extract import extract
+from advanced_text_extraction_spark.plans.pipeline import flagship_plan
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -71,8 +72,7 @@ def _spread(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def synth_transcripts(spark: SparkSession, sf_dir: str,
-                      mult: int = 1, include_pdf: bool = True,
-                      skew: bool = False) -> DataFrame:
+                      mult: int = 1, include_pdf: bool = True) -> DataFrame:
     """Deterministic transcript table from ``documents`` (input_hint shape):
     70% plain payloads, 25% wrapped in an HTML page with boilerplate
     chrome, 5% a fixed base64 PDF (seeded fixture writer). All native
@@ -81,10 +81,7 @@ def synth_transcripts(spark: SparkSession, sf_dir: str,
     ``include_pdf=False`` swaps the PDF slice for HTML — every payload is
     then SQL-expressible, which is what lets the driver's DuckDB oracle
     hash-check the full pipeline end-to-end (the PDF-inclusive variant
-    stays value-gated by the pytest golden suite). ``skew=True`` routes
-    ~20% of all turns into one conversation (the BASELINE.md skew
-    fixture shape) with doc_id as the turn index to keep keys unique —
-    the salted repartition must neutralize it (bench --skew-probe)."""
+    stays value-gated by the pytest golden suite)."""
     import base64
     import random
 
@@ -112,14 +109,9 @@ def synth_transcripts(spark: SparkSession, sf_dir: str,
     )
     conv = F.concat(F.lit("conv-"),
                     F.pmod(F.col("doc_id"), F.lit(40)).cast("string"))
-    turn = (F.col("doc_id") / 40).cast("int")
-    if skew:  # ~20% of turns land in conv-0; doc_id keeps keys unique
-        conv = F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-                      F.lit("conv-0")).otherwise(conv)
-        turn = F.col("doc_id").cast("int")
     return docs.select(
         conv.alias("conv_id"),
-        turn.alias("turn_idx"),
+        (F.col("doc_id") / 40).cast("int").alias("turn_idx"),
         F.element_at(F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
                      F.pmod(F.col("doc_id"), F.lit(3)).cast("int") + 1).alias("role"),
         F.when(mod < 14, F.col("text"))
@@ -134,25 +126,20 @@ def synth_transcripts(spark: SparkSession, sf_dir: str,
 
 def _flagship_extracted(spark: SparkSession, sf_dir: str,
                         include_pdf: bool = True) -> DataFrame:
-    """ONE definition of the flagship plan core (bucket prep → salted
-    repartition → folded-dedupe extraction → stable order restore) —
-    entry() and the e2e queries project different columns off the SAME
-    plan, so a plan change can never silently diverge between them."""
-    from advanced_text_extraction_spark.plans.pipeline import (
-        prepare,
-        salted_repartition,
-    )
-
-    tr = prepare(synth_transcripts(spark, sf_dir, include_pdf=include_pdf),
-                 n_buckets=8)
-    out = extract(salted_repartition(tr, n_buckets=8, salt=2),
-                  dedupe_keys=("conv_id", "turn_idx"))
-    return W.restore_order(out)
+    """The product's flagship plan (``plans.pipeline.flagship_plan``) at
+    8 buckets × salt 2 over the synthesized transcripts — entry() and the
+    e2e queries project different columns off the SAME plan the
+    spark-submit job writes, so the gated plan can never diverge from
+    the shipped one."""
+    return flagship_plan(
+        synth_transcripts(spark, sf_dir, include_pdf=include_pdf),
+        n_buckets=8, salt=2)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthesize transcripts from sf0.001 documents, run the full
-    extraction dispatch, restore stable turn order (SURVEY §4.3 plan)."""
+    extraction dispatch in stable per-partition turn order (SURVEY §4.3
+    plan)."""
     return _flagship_extracted(spark, SF0001).select(
         "conv_id", "turn_idx", "role", "content_type", "extracted_text",
         "spans", "confidence", "language", "status",

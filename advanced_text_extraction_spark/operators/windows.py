@@ -1,23 +1,13 @@
 """Window / ordering operators (SURVEY.md §2.4 W1–W4).
 
-All built-in Catalyst window functions — no UDFs.
+All built-in Catalyst window functions — no UDFs. W3 (stable turn order)
+is the flagship plan's ``sortWithinPartitions`` in ``plans/pipeline.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def restore_order(df: DataFrame) -> DataFrame:
-    """W3 — stable turn-order restore (north-star requirement; reference
-    sorted-file-list analog /root/reference/cli.py:430).
-
-    Clusters each conversation's turns contiguously and in (conv_id,
-    turn_idx) order *within partitions* — a sortWithinPartitions after the
-    hash layout, NOT a global sort: at 10^12 rows a global orderBy is one
-    giant range-shuffle for no semantic gain (consumers key by conv)."""
-    return df.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx")
 
 
 def with_turn_seq(df: DataFrame) -> DataFrame:

@@ -1,16 +1,23 @@
 """The flagship extraction job (SURVEY.md §4.3 physical plan).
 
+``flagship_plan`` is the ONE definition of the plan; the spark-submit job
+(``run_extract_job``), the driver entry and e2e queries, ``bench.py`` and
+``scripts/explain_plans.py`` all build it here:
+
     scan(transcripts)                         [column-pruned parquet scan]
       → part_bucket = pmod(xxhash64(conv_id), n_buckets)
-      → resume skip of completed buckets      [J1 — lineage probe]
+      → bucket filters                        [J1 — resume skip of completed
+                                               buckets; only_buckets]
       → Exchange(hash: part_bucket, salt)     [C4 — skew break; co-locates
                                                (conv_id, turn_idx) copies]
       → mapInPandas(dedupe + extract)         [U1 folded into the kernel —
                                                partition-local seen-set,
                                                exact because copies are
                                                co-located; Arrow-vectorized]
-      → sortWithinPartitions(conv_id, turn)   [W3 — stable order, no global sort]
-      → overwrite extracted/ per bucket + append lineage/
+      → drop(text)                            [raw payload is not output]
+      → sortWithinPartitions(part_bucket,     [W3 — stable order, no global
+                             conv_id, turn)    sort, no second exchange]
+      → overwrite extracted/ per bucket + append lineage/  (run_extract_job)
 
 Scale design notes (10^12 turns, 1000 executors):
 - The ONLY shuffle is the salted repartition; everything else is
@@ -38,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import (
     EXTRACTOR_VERSION,
+    MAX_PAYLOAD_CHARS,
     extract,
     new_stats_accumulator,
 )
@@ -94,6 +102,48 @@ def salted_repartition(df: DataFrame, n_buckets: int, salt: int) -> DataFrame:
     )
 
 
+def flagship_plan(
+    transcripts: DataFrame,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+    salt: int = DEFAULT_SALT,
+    skip_buckets: list[int] | None = None,
+    only_buckets: list[int] | None = None,
+    stats_acc=None,
+    ocr_fallback_engine: str | None = "auto",
+    ocr_preprocess: bool = True,
+    ocr_confidence_threshold: float = 0.0,
+    max_payload_chars: int = MAX_PAYLOAD_CHARS,
+) -> DataFrame:
+    """The flagship plan up to (not including) the write: bucket, filter
+    buckets, ONE salted exchange, folded-dedupe extraction, per-partition
+    order. ``skip_buckets`` is the resume probe's completed set (a
+    metadata-level partition prune — cheaper than an anti-join);
+    ``only_buckets`` restricts the run; ``stats_acc`` (see
+    :func:`new_stats_accumulator`) collects per-bucket lineage stats."""
+    df = prepare(transcripts, n_buckets)
+    if skip_buckets:
+        df = df.filter(~F.col("part_bucket").isin(skip_buckets))
+    if only_buckets is not None:
+        df = df.filter(F.col("part_bucket").isin(only_buckets))
+    # the raw payload is NOT part of the output contract (SURVEY §1.2
+    # `extracted` schema) — carrying `text` through the write would
+    # re-store the whole input corpus: double the parquet encode CPU and
+    # write volume for a column every consumer already has upstream.
+    # The sort leads with part_bucket so FileFormatWriter's required
+    # ordering (partition columns first) is already satisfied — otherwise
+    # the writer inserts its own part_bucket-only sort, which is not
+    # stable and would scramble the (conv_id, turn_idx) order
+    return extract(salted_repartition(df, n_buckets, salt),
+                   dedupe_keys=("conv_id", "turn_idx"),
+                   stats_acc=stats_acc,
+                   ocr_fallback_engine=ocr_fallback_engine,
+                   ocr_preprocess=ocr_preprocess,
+                   ocr_confidence_threshold=ocr_confidence_threshold,
+                   max_payload_chars=max_payload_chars) \
+        .drop("text") \
+        .sortWithinPartitions("part_bucket", "conv_id", "turn_idx")
+
+
 def run_extract_job(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -105,7 +155,7 @@ def run_extract_job(
     ocr_fallback_engine: str | None = "auto",
     ocr_preprocess: bool = True,
     ocr_confidence_threshold: float = 0.0,
-    max_payload_chars: int | None = None,
+    max_payload_chars: int = MAX_PAYLOAD_CHARS,
 ) -> RunStats:
     """End-to-end extraction with lineage + idempotent resume.
 
@@ -115,38 +165,18 @@ def run_extract_job(
     t0 = time.time()
     run_id = f"run-{int(t0 * 1000):x}"
 
-    df = prepare(transcripts, n_buckets)
-
     skipped: list[int] = []
     if resume:
         skipped = catalog.completed_buckets(spark, out_root,
                                             EXTRACTOR_VERSION, n_buckets)
-        if skipped:
-            # metadata-level partition pruning — cheaper than an anti-join
-            df = df.filter(~F.col("part_bucket").isin(skipped))
-    if only_buckets is not None:
-        df = df.filter(F.col("part_bucket").isin(only_buckets))
-
-    df = salted_repartition(df, n_buckets, salt)
-    # the sort leads with part_bucket so FileFormatWriter's required
-    # ordering (partition columns first) is already satisfied — otherwise
-    # the writer inserts its own part_bucket-only sort, which is not
-    # stable and would scramble the (conv_id, turn_idx) order
     stats_acc = new_stats_accumulator(spark)
-    # the raw payload is NOT part of the output contract (SURVEY §1.2
-    # `extracted` schema) — carrying `text` through the write would
-    # re-store the whole input corpus: double the parquet encode CPU and
-    # write volume for a column every consumer already has upstream
-    from ..operators.extract import MAX_PAYLOAD_CHARS
-    extracted = extract(df, dedupe_keys=("conv_id", "turn_idx"),
-                        stats_acc=stats_acc,
-                        ocr_fallback_engine=ocr_fallback_engine,
-                        ocr_preprocess=ocr_preprocess,
-                        ocr_confidence_threshold=ocr_confidence_threshold,
-                        max_payload_chars=(max_payload_chars
-                                           or MAX_PAYLOAD_CHARS)) \
-        .drop("text") \
-        .sortWithinPartitions("part_bucket", "conv_id", "turn_idx")
+    extracted = flagship_plan(
+        transcripts, n_buckets, salt, skip_buckets=skipped,
+        only_buckets=only_buckets, stats_acc=stats_acc,
+        ocr_fallback_engine=ocr_fallback_engine,
+        ocr_preprocess=ocr_preprocess,
+        ocr_confidence_threshold=ocr_confidence_threshold,
+        max_payload_chars=max_payload_chars)
     catalog.write_extracted(extracted, out_root)
 
     # Lineage WITHOUT a second scan of the output (VERDICT r1 #4):

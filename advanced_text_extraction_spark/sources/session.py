@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local-mode testing stands in for the multi-executor cluster (BASELINE.md):
-the same job runs at local[4] vs local[16] for the scaling-efficiency
-evidence (the largest 4x core step inside this VM's ~16 physical cores —
-BENCH/BASELINE.md documents the calibration). On a real cluster the identical builder applies — only master,
-memory, and the Iceberg catalog packages change (see sources/catalog.py).
+Local mode stands in for the multi-executor cluster (BASELINE.md). Its
+sizing comes from the host the job starts on: ``local[N]`` over the CPUs
+this process may run on and a driver heap of half the physical memory,
+unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` say otherwise. On a
+real cluster the same factory applies — only master, memory, and the
+Iceberg catalog packages change (see sources/catalog.py).
 """
 
 from __future__ import annotations
@@ -14,6 +15,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half of the host's physical memory."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{max(1, phys // 2**31)}g"
+
+
 def build_session(
     app_name: str = "advanced_text_extraction_spark",
     master: str | None = None,
@@ -21,7 +34,7 @@ def build_session(
     arrow_batch_rows: int = 1024,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
     n_threads = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
     shuffle_partitions = shuffle_partitions or max(n_threads, 8)
@@ -41,10 +54,10 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
         # idempotent per-partition overwrite (reference J2 upsert analog)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        # e.g. -XX:ActiveProcessorCount=N for CPU-budget-pinned runs
-        # (bench scaling mode) — how a cgroup-aware JVM behaves under a
-        # container CPU limit on a real cluster
+        .config("spark.driver.memory", driver_memory())
+        # e.g. -XX:ActiveProcessorCount=N for CPU-budget-pinned runs —
+        # how a cgroup-aware JVM behaves under a container CPU limit on a
+        # real cluster
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")

@@ -1,46 +1,42 @@
 #!/usr/bin/env python
-"""bench.py — headline benchmark for the PySpark extraction engine.
+"""bench.py — headline timings for the PySpark extraction engine.
 
-Default mode (what the driver runs per round):
     python bench.py
-Runs the headline queries from ``__spark_entry__.queries()`` plus the
-flagship extraction job at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-where ``queries``/``value`` are per-query MINIMA pooled over every run of
-the same config logged in BENCH/headline_runs.jsonl (this run included) —
-see the HEADLINE_RUNS_LOG comment; raw walls ride along as
-``queries_this_run``.
 
-Scaling mode (north-rule evidence — two parallelism levels, same input):
-    python bench.py --scaling
-Synthesizes a transcript table once, runs the identical extraction job in
-fresh subprocesses at local[4] and local[16] (the largest 4x core step
-inside this VM's ~16 physical cores — see BENCH/BASELINE.md), reports
-turns/sec at both and the scaling efficiency (T_4N / T_N) / 4, and
-rewrites the measured section of BENCH/BASELINE.md.
+Runs every ``HEADLINE`` query from ``__spark_entry__.queries()`` over
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test tables), plus the
+flagship extraction plan (``plans.pipeline.flagship_plan`` at the job's
+default layout) over ``MULT`` x the synthesized transcripts. Each one runs
+``REPEATS`` times in one session on ``local[$SPARK_GRAFT_CPUS]`` (default:
+the CPUs this process may run on). Prints ONE JSON line:
 
-Materialization uses the ``noop`` sink so every output column is computed
-(a bare .count() would let Catalyst prune the projection).
+    {"metric": "headline_total_sec", "value": <sum of per-query minima>,
+     "unit": "sec", "queries": {name: min_s},
+     "queries_median": {name: median_s}, "host": {...}, ...}
+
+and writes nothing. Materialization uses the ``noop`` sink so every output
+column is computed (a bare .count() would let Catalyst prune the
+projection). This is the quick per-operator view; the gated benchmark is
+``perfbench/`` (see BENCHMARK.json).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import statistics
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # transcript multiplier for the extraction throughput measurement
-MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "25"))
+MULT = 25
+# timed runs per query; min is the interference-free estimate, median the
+# typical one
+REPEATS = 3
 
 # headline subset of __spark_entry__.queries() — one per operator family
 HEADLINE = [
@@ -77,15 +73,13 @@ HEADLINE = [
 ]
 
 
-def _materialize(df) -> int:
+def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 def _sf_of(sf_dir: str):
     """Scale factor parsed from the dir name; None (valid JSON) for a
-    custom corpus dir — a ValueError here would discard a completed
-    multi-minute benchmark at the very last step."""
+    custom corpus dir."""
     tail = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         return float(tail)
@@ -93,1454 +87,67 @@ def _sf_of(sf_dir: str):
         return None
 
 
-def _busy(_sec: float = 0.4) -> float:
-    """Iterations/sec of a pure-CPU busy loop — one process."""
-    end = time.time() + _sec
-    n = 0
-    while time.time() < end:
-        for _ in range(10_000):
-            n += 1
-    return n / 1e6 / _sec
-
-
-def _calibrate(procs: int) -> float:
-    """Aggregate busy-loop M-iters/s over `procs` concurrent processes.
-    The sandbox host shows bursty CPU steal lasting minutes-to-hours
-    (see BENCH/BASELINE.md); recording this alongside each bench run
-    lets a reader tell an interference-inflated run from a regression.
-    THIS probe's interference-free ceiling on this VM is ~520-550
-    (sampled max 551; quiet-host samples cluster 420-550, so treat
-    values well under ~400 as an interference flag, not a code
-    regression)."""
-    import concurrent.futures as cf
-    with cf.ProcessPoolExecutor(max_workers=procs) as ex:
-        return round(sum(ex.map(_busy, [0.4] * procs)), 1)
-
-
-def _membw_one(_sec: float = 0.5) -> float:
-    """GB/s of a large-array copy loop — one process, STEADY STATE. The
-    64 MB arrays exceed LLC, so the loop is bound by DRAM bandwidth,
-    which the register-increment busy loop cannot see: the r2 steal
-    window inflated Spark 3-4.5x while BOTH busy-loop brackets read
-    quiet (VERDICT r2 #1) — the interference mode evidently hits
-    memory/IO. One untimed copy first: this sandbox populates fresh
-    pages at ~20 MB/s (measured; 200x slower than the 3.9 GB/s
-    steady-state copy), so timing first-touch would measure the fault
-    path, not bandwidth."""
-    import numpy as np
-    src = np.ones(8 * 1024 * 1024, dtype=np.int64)  # 64 MB
-    dst = np.empty_like(src)
-    dst[:] = src  # untimed: materialize every page of both arrays
-    deadline = time.time() + _sec
-    n = 0
-    t0 = time.time()
-    while time.time() < deadline:
-        dst[:] = src
-        n += 1
-    el = time.time() - t0
-    return n * src.nbytes * 2 / el / 1e9  # read + write traffic
-
-
-def _membw(procs: int = 4) -> float:
-    """Aggregate GB/s over `procs` concurrent copy processes — the
-    memory-bandwidth twin of _calibrate. Quiet-host reference scale is
-    recorded per run in headline_runs.jsonl; read relative to the pooled
-    history, not as an absolute."""
-    import concurrent.futures as cf
-    with cf.ProcessPoolExecutor(max_workers=procs) as ex:
-        return round(sum(ex.map(_membw_one, [0.5] * procs)), 1)
-
-
-# Every headline run's raw per-query times are appended here and the
-# REPORTED number is the per-query MINIMUM over all logged runs of the
-# same config — the same pooled-minimum estimator the scaling evidence
-# uses. Rationale (VERDICT r2 #1): host CPU steal is additive noise in
-# minutes-to-hours windows, an entire session can be inflated 3-4.5x
-# while the busy-loop marker reads quiet, so a single-session BENCH_r*.json
-# makes every round-over-round comparison a coin flip. Bump the round
-# marker whenever a headline query's implementation materially changes —
-# minima pooled across code versions are meaningless.
-HEADLINE_RUNS_LOG = os.path.join(REPO, "BENCH", "headline_runs.jsonl")
-HEADLINE_CONFIG_VER = "r5a"
-
-
-def _source_tag() -> str:
-    """8-hex digest over every source file the headline queries execute
-    (ADVICE r3: the manually-bumped round marker alone lets a forgotten
-    bump mask a regression forever — min can only decrease within a
-    config). Any edit to these files starts a fresh pool; comment-only
-    edits bust the pool too, the accepted cost of making staleness
-    impossible rather than remembered."""
-    import hashlib
-    h = hashlib.md5()
-    roots = [os.path.join(REPO, "__spark_entry__.py")]
-    pkg = os.path.join(REPO, "advanced_text_extraction_spark")
-    for sub in ("operators", "kernels", "functions", "plans", "sources",
-                "multimodal"):
-        d = os.path.join(pkg, sub)
-        roots.extend(os.path.join(d, f) for f in sorted(os.listdir(d))
-                     if f.endswith(".py"))
-    for p in roots:
-        with open(p, "rb") as f:
-            h.update(p.encode())
-            h.update(f.read())
-    return h.hexdigest()[:8]
-
-
-def _headline_config() -> str:
-    return (f"{HEADLINE_CONFIG_VER}-{_source_tag()}"
-            f"-sf{_sf_of(SF_DIR)}-cpus{CPUS}-mult{MULT}")
-
-
-def _log_headline(record: dict) -> None:
-    os.makedirs(os.path.dirname(HEADLINE_RUNS_LOG), exist_ok=True)
-    with open(HEADLINE_RUNS_LOG, "a") as f:
-        f.write(json.dumps(record) + "\n")
-
-
-def _headline_pool() -> list[dict]:
-    if not os.path.exists(HEADLINE_RUNS_LOG):
-        return []
-    out = []
-    with open(HEADLINE_RUNS_LOG) as f:
-        for line in f:
-            try:
-                r = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if r.get("config") == _headline_config():
-                out.append(r)
-    return out
+def _timed(fn) -> list[float]:
+    walls = []
+    for _ in range(REPEATS):
+        t0 = time.perf_counter()
+        fn()
+        walls.append(time.perf_counter() - t0)
+    return walls
 
 
 def run_headline() -> dict:
     import __spark_entry__ as entrymod
-    from advanced_text_extraction_spark.plans.pipeline import (
-        prepare, salted_repartition,
+    from advanced_text_extraction_spark.plans.pipeline import flagship_plan
+    from advanced_text_extraction_spark.sources.session import (
+        build_session, driver_memory, host_cpus,
     )
-    from advanced_text_extraction_spark.operators.extract import extract
-    from advanced_text_extraction_spark.operators.windows import restore_order
-    from advanced_text_extraction_spark.sources.session import build_session
+    from perfbench.probes import host_facts
 
-    cal_pre = _calibrate(24)  # bracket the run: a burst can end before a
-    # single post-run sample and make an inflated run look quiet
-    membw_pre = _membw()
-    spark = build_session(app_name="ate-bench", master=f"local[{CPUS}]")
-    timings: dict[str, float] = {}
+    spark = build_session(
+        app_name="ate-bench",
+        extra_conf={"spark.ui.showConsoleProgress": "false"})
+    walls: dict[str, list[float]] = {}
     try:
         qs = entrymod.queries()
-
         # untimed warmup: start the Python UDF workers on every core and
         # JIT the scan paths, so timings reflect steady-state throughput
-        # (a long-lived cluster amortizes this; the ~5 s one-off pandas
-        # import per worker would otherwise dominate every number here)
         warm = entrymod.synth_transcripts(spark, SF_DIR).limit(2048)
-        _materialize(extract(warm.repartition(CPUS)))
+        _materialize(flagship_plan(warm))
         for tbl in ("events", "lineitem", "orders", "embeddings"):
             spark.read.parquet(f"{SF_DIR}/{tbl}.parquet") \
                 .selectExpr("count(*) c").collect()
         print("warmup done", file=sys.stderr)
-        def timed(fn) -> float:
-            # best-of-2: the sandbox VM sees bursty host CPU steal; the
-            # min is the interference-free steady-state number
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                fn()
-                best = min(best, time.time() - t0)
-            return round(best, 3)
 
         for name in HEADLINE:
-            timings[name] = timed(lambda: _materialize(qs[name](spark, SF_DIR)))
-            print(f"  {name}: {timings[name]}s", file=sys.stderr)
+            walls[name] = _timed(
+                lambda: _materialize(qs[name](spark, SF_DIR)))
+            print(f"  {name}: {min(walls[name]):.3f}s", file=sys.stderr)
 
-        # flagship extraction throughput: synthesized transcripts (MULT x
-        # documents), full pipeline incl. salted repartition + order restore
+        # flagship extraction throughput over a cached input, so the
+        # timing covers the plan, not the synthesis
         tr = entrymod.synth_transcripts(spark, SF_DIR, mult=MULT).cache()
         n_rows = tr.count()
-        el = timed(lambda: _materialize(
-            restore_order(extract(salted_repartition(prepare(tr, 32), 32, 4),
-                                  dedupe_keys=("conv_id", "turn_idx")))))
-        timings["extract_e2e"] = el
-        tps = round(n_rows / el, 1)
-        print(f"  extract_e2e: {el:.3f}s ({n_rows} turns, {tps} turns/s)",
-              file=sys.stderr)
+        walls["extract_e2e"] = _timed(
+            lambda: _materialize(flagship_plan(tr)))
     finally:
         spark.stop()
 
-    cal_post = _calibrate(24)
-    membw_post = _membw()
-    _log_headline({
-        "session": f"h{os.getpid()}",
-        "config": _headline_config(),
-        "queries": timings,
-        "extract_rows": n_rows,
-        "extract_turns_per_sec": tps,
-        "cal_pre": cal_pre, "cal_post": cal_post,
-        "membw_pre": membw_pre, "membw_post": membw_post,
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    })
-    # pooled per-query minima across every logged run of this config
-    # (this run included) — the reported headline number; raw times of
-    # THIS run ride along so a steal-inflated session is visible but
-    # not binding
-    pool = _headline_pool()
-    pooled = {
-        q: min(r["queries"][q] for r in pool if q in r.get("queries", {}))
-        for q in timings
-    }
-    tps_best = max((r.get("extract_turns_per_sec", 0.0) for r in pool
-                    if r.get("extract_rows") == n_rows), default=tps)
-    total = round(sum(pooled.values()), 3)
+    mins = {q: round(min(w), 3) for q, w in walls.items()}
+    medians = {q: round(statistics.median(w), 3) for q, w in walls.items()}
     return {
         "metric": "headline_total_sec",
-        "value": total,
+        "value": round(sum(mins.values()), 3),
         "unit": "sec",
-        # pooled minima (see HEADLINE_RUNS_LOG comment); "queries_this_run"
-        # carries this session's raw walls for interference diagnosis
-        "queries": pooled,
+        "queries": mins,
+        "queries_median": medians,
+        "repeats": REPEATS,
         "sf": _sf_of(SF_DIR),
-        "extract_turns_per_sec": tps_best,
         "extract_rows": n_rows,
-        "cpus": CPUS,
-        "pooled_runs": len(pool),
-        "queries_this_run": timings,
-        "extract_turns_per_sec_this_run": tps,
-        # host-interference context, sampled BEFORE and AFTER the queries:
-        # busy-loop M-iters/s (pure CPU; quiet ~420-550, well under ~400 =
-        # steal) AND a 4-proc big-array copy in GB/s (DRAM bandwidth — the
-        # channel the r2 steal mode hit while the busy loop read quiet).
-        # Either probe low marks THIS RUN inflated; the pooled minima
-        # above remain the binding numbers either way.
-        "host_cal_miters_24p_pre": cal_pre,
-        "host_cal_miters_24p": cal_post,
-        "host_membw_gbps_pre": membw_pre,
-        "host_membw_gbps": membw_post,
+        "extract_turns_per_sec": round(n_rows / mins["extract_e2e"], 1),
+        "host": host_facts(host_cpus(), driver_memory()),
     }
-
-
-# ---------------------------------------------------------------------------
-# scaling mode
-# ---------------------------------------------------------------------------
-
-# Scaling runs measure COMPUTE scaling, so shuffle dirs + warehouse live on
-# tmpfs: on a real cluster, per-node disk bandwidth scales with node count,
-# but this sandbox has ONE ~190 MB/s virtual disk shared by all cores — the
-# job goes disk-bound there and no core count helps (measured: both
-# local[8] and local[32] plateau at the disk, efficiency ~0.25).
-SCALING_TMP = "/dev/shm" if os.path.isdir("/dev/shm") else None
-
-
-def _subproc_env(master: str | None = None) -> dict:
-    # fresh JVM per measured run; isolated shuffle dirs on tmpfs
-    env = dict(os.environ, PYTHONPATH=REPO)
-    if SCALING_TMP:
-        local_dirs = os.path.join(SCALING_TMP, "ate_spark_local")
-        os.makedirs(local_dirs, exist_ok=True)
-        env["SPARK_LOCAL_DIRS"] = local_dirs
-    if master and master.startswith("local[") and master[6:-1].isdigit():
-        n = int(master[6:-1])
-        # memory scales with core count (2 GiB/core), as on a real
-        # cluster where per-executor memory is fixed and TOTAL memory
-        # grows with executor count — a shared fixed heap at 4N cores
-        # serves 4x the concurrent task state and GC-thrashes, which
-        # measures heap pressure, not compute scaling
-        env["SPARK_DRIVER_MEM"] = f"{2 * n}g"
-        # the JVM must size its internal pools (GC, compiler) for the
-        # PINNED budget, not the host's 32 cores — same mechanism as a
-        # cgroup-aware JVM inside a container CPU limit
-        env["SPARK_DRIVER_JAVA_OPTS"] = f"-XX:ActiveProcessorCount={n}"
-    return env
-
-
-def _pin_prefix(n_cpus: int) -> list[str]:
-    """Pin the whole process tree (driver + JVM + Python workers) to a
-    fixed CPU budget — the local-mode stand-in for a real executor's
-    container CPU limit. WITHOUT pinning, the low-parallelism level
-    free-rides: its JVM service threads (GC, shuffle, parquet encode)
-    run on the host's idle cores for free, while at the high level they
-    compete with the Python workers — that asymmetry, not the job,
-    dominated the unpinned measurement (N per-core throughput came out
-    ~40% HIGHER than 4N's)."""
-    import shutil
-
-    if shutil.which("taskset"):
-        return ["taskset", "-a", "-c", f"0-{n_cpus - 1}"]
-    return []
-
-
-def _synth_input(path: str, mult: int, skew: bool = False) -> int:
-    # subprocess so the synth JVM EXITS before any measured run: a
-    # lingering gateway JVM after GC-heavy synth has been observed to
-    # wedge py4j and steal CPU from the measurement
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "synth_bench_input.py"),
-         "--sf-dir", SF_DIR, "--mult", str(mult), "--out", path]
-        + (["--skew"] if skew else []),
-        capture_output=True, text=True, env=_subproc_env(), cwd=REPO,
-        check=True, timeout=1800)
-    return int(proc.stdout.strip().splitlines()[-1])
-
-
-def _run_job(inp: str, out: str, master: str, n_cpus: int) -> dict | None:
-    """One measured fresh-JVM run under a pinned CPU budget; None on
-    timeout/crash (logged, skipped)."""
-    try:
-        # salt 16: the synth has 40 conversations → ~23 non-empty buckets;
-        # at the default salt 4 that is only ~92 task groups over 128
-        # shuffle partitions — poor last-wave balance, which hurts the
-        # higher parallelism level disproportionately (fewer waves to
-        # amortize stragglers). 23×16 ≈ 368 groups balance by LLN.
-        proc = subprocess.run(
-            _pin_prefix(n_cpus) +
-            [sys.executable, os.path.join(REPO, "scripts", "run_extract.py"),
-             "--input", inp, "--output", out, "--master", master,
-             "--no-resume", "--warmup", "--shuffle-partitions", "128",
-             "--salt", "16"],
-            capture_output=True, text=True, env=_subproc_env(master),
-            cwd=REPO, check=True, timeout=1800)
-        return json.loads(proc.stdout.strip().splitlines()[-1])
-    except (subprocess.TimeoutExpired, subprocess.CalledProcessError) as exc:
-        err = (exc.stderr or b"") if isinstance(exc.stderr, (bytes, str)) else ""
-        if isinstance(err, bytes):
-            err = err.decode(errors="replace")
-        tail = "\n".join(str(err).splitlines()[-15:])
-        print(f"  run FAILED ({master}): {type(exc).__name__}\n{tail}",
-              file=sys.stderr)
-        return None
-
-
-def run_scaling(mult: int) -> dict:
-    if SCALING_TMP:
-        os.environ.setdefault(
-            "SPARK_LOCAL_DIRS", os.path.join(SCALING_TMP, "ate_spark_local"))
-        os.makedirs(os.environ["SPARK_LOCAL_DIRS"], exist_ok=True)
-    with tempfile.TemporaryDirectory(prefix="ate_bench_",
-                                     dir=SCALING_TMP) as td:
-        inp = os.path.join(td, "transcripts")
-        n = _synth_input(inp, mult)
-        print(f"input: {n} turns", file=sys.stderr)
-        # interleaved best-of-3 fresh-JVM runs per level: the sandbox host
-        # shows bursty CPU steal lasting minutes (same job measured 3-4x
-        # apart back-to-back); interleaving N/4N attempts decorrelates the
-        # bursts from the level and the min is the interference-free number.
-        # Levels are local[4] vs local[16]: a pure-CPU busy-loop calibration
-        # shows this VM's 32 vCPUs are ~16 physical cores + SMT — 8->32
-        # processes yields only 2.18x raw compute (hardware ceiling 0.55),
-        # so any 8-vs-32 software measurement is bounded by hardware, not
-        # the job. 4->16 stays inside the physical-core envelope
-        # (hardware ratio 3.43x of 4x = 0.86 ceiling).
-        levels = [("N", "local[4]", 4), ("4N", "local[16]", 16)]
-        session = f"s{int(os.getpid())}-{time.strftime('%H%M', time.gmtime())}"
-        for attempt in range(ATTEMPTS):
-            for label, master, n_cpus in levels:
-                out = os.path.join(td, f"out_{label}_{attempt}")
-                stats = _run_job(inp, out, master, n_cpus)
-                if stats is None:
-                    continue
-                print(f"  {label} ({master}) run {attempt}: "
-                      f"{stats['wall_sec']}s {stats['turns_per_sec']} turns/s",
-                      file=sys.stderr)
-                _log_run(session, label, master, stats)
-        best = _pooled_best(n)
-        missing = [label for label, _, _ in levels if label not in best]
-        if missing:
-            raise RuntimeError(
-                f"all attempts failed for parallelism level(s) {missing}; "
-                "no scaling number can be computed — see run FAILED logs above")
-        n_pooled = _pooled_count(n)
-        print(f"  pooled minima over {n_pooled} logged runs: "
-              f"N {best['N']['wall_sec']}s, 4N {best['4N']['wall_sec']}s",
-              file=sys.stderr)
-        res = {
-            label: {"master": master,
-                    "wall_sec": best[label]["wall_sec"],
-                    "turns_per_sec": best[label]["turns_per_sec"]}
-            for label, master, _ in levels
-        }
-        eff = round(
-            (res["4N"]["turns_per_sec"] / res["N"]["turns_per_sec"]) / 4, 3)
-        # the busy-loop calibration of THIS HOST (no Spark, no memory
-        # traffic — see write_bench_md) caps any 4→16-process ratio at
-        # 3.43/4 = 0.857; the normalized value expresses the job's
-        # scaling relative to what the hardware permits
-        eff_hw_normalized = round(eff / (HW_RATIO_4_16 / 4), 3)
-
-        # resume overhead: re-run the completed job WITH resume — all
-        # buckets skip via the lineage probe, so the wall is pure
-        # plan+probe overhead (north-rule checkpoint-resume evidence)
-        resume = {"wall_sec": None, "buckets_skipped": []}
-        out_done = os.path.join(td, "out_4N_0")
-        if os.path.isdir(out_done):
-            try:
-                proc = subprocess.run(
-                    [sys.executable,
-                     os.path.join(REPO, "scripts", "run_extract.py"),
-                     "--input", inp, "--output", out_done,
-                     "--master", "local[16]", "--shuffle-partitions", "128"],
-                    capture_output=True, text=True, env=_subproc_env(),
-                    cwd=REPO, check=True, timeout=600)
-                resume = json.loads(proc.stdout.strip().splitlines()[-1])
-                print(f"  resume noop: {resume['wall_sec']}s, "
-                      f"{len(resume['buckets_skipped'])} buckets skipped",
-                      file=sys.stderr)
-            except (subprocess.TimeoutExpired,
-                    subprocess.CalledProcessError):
-                print("  resume probe FAILED", file=sys.stderr)
-
-        result = {"metric": "scaling_efficiency", "value": eff,
-                  "unit": "ratio", "hw_normalized": eff_hw_normalized,
-                  "hw_ceiling": round(HW_RATIO_4_16 / 4, 3),
-                  "attempts": ATTEMPTS, "pooled_runs": n_pooled,
-                  "rows": n, "N": res["N"], "4N": res["4N"],
-                  "resume_noop_sec": resume["wall_sec"],
-                  "resume_buckets_skipped": len(resume["buckets_skipped"])}
-        with open(os.path.join(REPO, "BENCH", "last_session.json"), "w") as f:
-            json.dump(result, f)
-        return result
-
-
-def rescore_from_pool() -> dict:
-    """Recompute the pooled-minimum efficiency and rewrite the evidence
-    file — used after burst runs append to the pool. Falls back to a
-    skeleton result when last_session.json is absent (fresh checkout):
-    everything except the resume-probe fields derives from the pool."""
-    sess = os.path.join(REPO, "BENCH", "last_session.json")
-    if not os.path.exists(RUNS_LOG):
-        raise SystemExit(
-            f"no runs pool at {RUNS_LOG} — run `bench.py --scaling` or "
-            f"`--burst-4n/--burst-n` first")
-    if os.path.exists(sess):
-        with open(sess) as f:
-            result = json.load(f)
-    else:
-        # fresh checkout: derive everything from the pool; NO resume
-        # fields — those are per-session measurements, and fabricating
-        # them would present never-measured numbers as evidence
-        # (write_bench_md renders their absence explicitly)
-        result = {"metric": "scaling_efficiency", "unit": "ratio",
-                  "hw_ceiling": round(HW_RATIO_4_16 / 4, 3),
-                  "attempts": ATTEMPTS, "rows": _pooled_rows_mode()}
-        if result["rows"] is None:
-            raise SystemExit(
-                f"runs pool at {RUNS_LOG} has no rows for config "
-                f"{CONFIG_TAG} — rerun --scaling")
-    best = _pooled_best(result["rows"])
-    missing = [lb for lb in ("N", "4N") if lb not in best]
-    if missing:
-        raise SystemExit(
-            f"runs pool has no {'/'.join(missing)} runs for "
-            f"rows={result['rows']} — burst the missing level(s) or rerun "
-            f"--scaling (pool rows must match last_session.json's)")
-    for label in ("N", "4N"):
-        result[label] = {"master": best[label]["master"],
-                         "wall_sec": best[label]["wall_sec"],
-                         "turns_per_sec": best[label]["turns_per_sec"]}
-    eff = round(
-        (result["4N"]["turns_per_sec"] / result["N"]["turns_per_sec"]) / 4, 3)
-    result["value"] = eff
-    result["hw_normalized"] = round(eff / (HW_RATIO_4_16 / 4), 3)
-    result["pooled_runs"] = _pooled_count(result["rows"])
-    with open(os.path.join(REPO, "BENCH", "last_session.json"), "w") as f:
-        json.dump(result, f)
-    return result
-
-
-def run_burst(label: str, master: str, n_cpus: int, count: int) -> None:
-    """Append `count` pinned single-level runs to the pool — extra
-    samples for the per-level minimum (steal windows vary by session;
-    the minimum estimator needs only ONE calm window per level)."""
-    with tempfile.TemporaryDirectory(prefix="ate_burst_",
-                                     dir=SCALING_TMP) as td:
-        inp = os.path.join(td, "transcripts")
-        n = _synth_input(inp, MULT_SCALING)
-        print(f"input: {n} turns", file=sys.stderr)
-        session = f"burst{os.getpid()}"
-        for attempt in range(count):
-            out = os.path.join(td, f"out_{attempt}")
-            stats = _run_job(inp, out, master, n_cpus)
-            if stats is None:
-                continue
-            print(f"  {label} run {attempt}: {stats['wall_sec']}s "
-                  f"{stats['turns_per_sec']} turns/s", file=sys.stderr)
-            _log_run(session, label, master, stats)
-
-
-def _secondary_pools_md(scaling: dict | None = None) -> list[str]:
-    """Evidence blocks for every pool config OTHER than the current
-    CONFIG_TAG — the same pooled-minimum estimator at a different input
-    size (or job revision) stays visible and reproducible instead of
-    being silently superseded by a tag flip. Thin renderer over
-    _all_pool_effs (the single pooling-rule implementation)."""
-    lines: list[str] = []
-    for p in _all_pool_effs():
-        if p["tag"] == CONFIG_TAG:
-            continue
-        best, rows_mode = p["best"], p["rows"]
-        if not lines:
-            lines += [
-                "## Secondary input-size evidence (same estimator, "
-                "other pool configs)",
-                "",
-                "Pooled per-level minima for every other config tag in",
-                "`BENCH/scaling_runs.jsonl` — the same job measured at a",
-                "different input size or revision; kept visible so a tag",
-                "change never hides a previously published number:",
-                "",
-            ]
-        lines += [
-            f"- `{p['tag']}` ({rows_mode} turns, {p['n_runs']} runs): "
-            f"N {best['N']['wall_sec']} s "
-            f"({best['N']['turns_per_sec']} turns/s), "
-            f"4N {best['4N']['wall_sec']} s "
-            f"({best['4N']['turns_per_sec']} turns/s) → "
-            f"efficiency **{p['eff']}** "
-            f"(hw-ceiling-normalized {p['hw_norm']})",
-        ]
-        if scaling and scaling.get("rows") and rows_mode != scaling["rows"]:
-            # computed, not narrated: how each level's per-turn
-            # throughput moved between the two input sizes
-            dn = round(scaling["N"]["turns_per_sec"]
-                       / best["N"]["turns_per_sec"], 3)
-            d4 = round(scaling["4N"]["turns_per_sec"]
-                       / best["4N"]["turns_per_sec"], 3)
-            note = (" — both exceed 1.0 at the larger input: a LOWER "
-                    "ratio there means the low-parallelism level "
-                    "amortized fixed work better, not that the high "
-                    "level degraded"
-                    if dn > 1 and d4 > 1
-                    and scaling["rows"] > rows_mode else "")
-            lines += [
-                f"  - vs the binding pool ({scaling['rows']} turns): "
-                f"per-turn throughput ratio N ×{dn}, 4N ×{d4}{note}",
-            ]
-    if lines:
-        lines.append("")
-    return lines
-
-
-def _pool_shape(rows: int) -> dict[str, dict]:
-    """Per-level wall distribution of the current-tag pool — renders the
-    convergence state of each level's minimum estimator."""
-    from collections import defaultdict
-    walls: dict[str, list[float]] = defaultdict(list)
-    for r in _pool_iter(rows):
-        walls[r["label"]].append(r["wall_sec"])
-    out: dict[str, dict] = {}
-    for lb, ws in walls.items():
-        ws.sort()
-        out[lb] = {
-            "n": len(ws), "min": ws[0],
-            "second": ws[1] if len(ws) > 1 else None,
-            "p25": ws[len(ws) // 4], "median": ws[len(ws) // 2],
-            "max": ws[-1],
-        }
-    return out
-
-
-def _pool_shape_md(scaling: dict) -> list[str]:
-    """Distribution table for the binding pool + the sampling policy it
-    implies. All numbers computed from the pool file, never narrated."""
-    shape = _pool_shape(scaling.get("rows") or 0)
-    if not shape or any(lb not in shape for lb in ("N", "4N")):
-        return []
-    lines = [
-        "## Binding-pool shape (per-level wall distribution, seconds)",
-        "",
-        "| level | runs | min | 2nd-best | p25 | median | max |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for lb in ("N", "4N"):
-        s = shape[lb]
-        lines.append(
-            f"| {lb} | {s['n']} | {s['min']} | {s['second']} | "
-            f"{s['p25']} | {s['median']} | {s['max']} |")
-    gaps = {lb: (shape[lb]["second"] / shape[lb]["min"] - 1) * 100
-            for lb in ("N", "4N") if shape[lb]["second"]}
-    if gaps:
-        gap_txt = ", ".join(f"{lb} {g:.1f}%" for lb, g in gaps.items())
-        widest = max(gaps, key=gaps.get)
-        lines += [
-            "",
-            f"Top-2 sample gap per level: {gap_txt}. The per-level",
-            "minimum is the estimator of the interference-free wall",
-            "(host steal is additive), so a level's floor is 'converged'",
-            "when independent sessions reproduce it — a small top-2 gap.",
-            f"Additional burst samples target the least-converged level",
-            f"(currently {widest}); a new sample can only move that",
-            "level's estimate DOWN toward its true wall, and the other",
-            "level's converged floor bounds how far the ratio can move.",
-            "The max column shows the interference the pooling defends",
-            "against: the worst logged run at each level is "
-            f"{shape['N']['max'] / shape['N']['min']:.2f}x (N) / "
-            f"{shape['4N']['max'] / shape['4N']['min']:.2f}x (4N) its "
-            "floor — single-pair A/B measurements on this host are coin",
-            "flips (see probes below).",
-            "",
-        ]
-    return lines
-
-
-def _all_pool_effs() -> list[dict]:
-    """Pooled-minimum efficiency of EVERY config tag in the runs file
-    (binding + historical). Each entry: tag, rows, n_runs, per-level
-    best runs, eff, hw-normalized eff. The ONE place the pooling rule
-    (rows-mode filter + per-level minimum) is applied across tags —
-    every renderer consumes these entries."""
-    from collections import Counter, defaultdict
-    if not os.path.exists(RUNS_LOG):
-        return []
-    by_tag: dict[str, list[dict]] = defaultdict(list)
-    with open(RUNS_LOG) as f:
-        for line in f:
-            try:
-                r = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if r.get("config"):
-                by_tag[r["config"]].append(r)
-    out = []
-    for tag, rs in sorted(by_tag.items()):
-        rows_mode = Counter(r.get("rows") for r in rs).most_common(1)[0][0]
-        rs = [r for r in rs if r.get("rows") == rows_mode]
-        best: dict[str, dict] = {}
-        for r in rs:
-            lb = r["label"]
-            if lb not in best or r["wall_sec"] < best[lb]["wall_sec"]:
-                best[lb] = r
-        if "N" not in best or "4N" not in best:
-            continue
-        eff = round((best["4N"]["turns_per_sec"]
-                     / best["N"]["turns_per_sec"]) / 4, 3)
-        out.append({"tag": tag, "rows": rows_mode, "n_runs": len(rs),
-                    "best": best, "eff": eff,
-                    "hw_norm": round(eff / (HW_RATIO_4_16 / 4), 3)})
-    return out
-
-
-def _north_verdict_md(scaling: dict) -> list[str]:
-    """The north-rule check stated across EVERY pool ever measured —
-    computed, so a tag flip can never quietly reframe the conclusion."""
-    pools = _all_pool_effs()
-    if not pools:
-        return []
-    binding = next((p for p in pools if p["tag"] == CONFIG_TAG), None)
-    lines = ["## North-rule check (computed across all measured pools)", ""]
-    for p in pools:
-        mark = " ← binding (current kernel/config)" if p["tag"] == CONFIG_TAG \
-            else ""
-        lines.append(
-            f"- `{p['tag']}` ({p['rows']} turns, {p['n_runs']} runs): "
-            f"efficiency **{p['eff']}**, hardware-ceiling-normalized "
-            f"**{p['hw_norm']}**{mark}")
-    effs = [p["eff"] for p in pools]
-    lo, hi = min(effs), max(effs)
-    min_hw = min(p["hw_norm"] for p in pools)
-    # position of the measured range vs the 0.8 target — computed,
-    # never narrated, so a tag flip or a new pool cannot leave a
-    # stale verdict sentence behind
-    if lo >= 0.8:
-        position = "sits at or above the target in every pool"
-    elif hi >= 0.8:
-        position = ("straddles the target within the host's "
-                    "measurement regime")
-    else:
-        position = "sits under the target in every pool"
-    lines += [
-        "",
-        f"Across every input size and kernel revision measured, the",
-        f"raw thread-scaling ratio sits in [{lo}, {hi}] against the",
-        f"0.8 target, i.e. it {position},",
-        "while the hardware-ceiling-normalized",
-        f"value is ≥ {min_hw} everywhere —",
-        f"the job consumes ≥{int(min_hw * 100)}% of the 4→16-core "
-        "scaling this VM's own",
-        "busy loop can realize. The residual is JVM shuffle/Arrow/",
-        "parquet memory traffic contending inside ONE box's bandwidth",
-        "(plan anatomy below): on a real N- vs 4N-EXECUTOR cluster",
-        "that term is per-node-constant — each executor brings its own",
-        "memory bus — so the single-box thread ratio measured here is",
-        "a LOWER BOUND on the multi-node executor-scaling the north",
-        "rule targets.",
-        "",
-    ]
-    if binding and binding["eff"] < 0.8:
-        shape = _pool_shape(binding["rows"])
-        if "4N" in shape and shape["4N"].get("second"):
-            gap = (shape["4N"]["second"] / shape["4N"]["min"] - 1) * 100
-            short = (0.8 / binding["eff"] - 1) * 100
-            lines += [
-                f"The binding pool's raw value is {short:.1f}% under the",
-                f"target while its 4N floor's top-2 sample gap is",
-                f"{gap:.1f}% — the shortfall is the same order as the",
-                "floor estimator's own remaining uncertainty; burst",
-                "sampling continues (every new quiet-window sample",
-                "tightens it).",
-                "",
-            ]
-    return lines
-
-
-# the pool the event-log anatomy below was measured on — the section
-# renders ONLY while that pool is present in the runs file, and its
-# title names the pool, so a later CONFIG_TAG change can never present
-# these one-off measurements as evidence for a different pool
-ANATOMY_TAG = "pinned-activeproc-salt16-2gpc-tmpfs-12M"
-
-
-def _plan_anatomy_md() -> list[str]:
-    """Event-log stage anatomy of one pinned run per level, measured on
-    the r5 kernel at the ANATOMY_TAG pool's input (12,000,000 turns).
-    Static measured prose, but gated on + titled by the pool it came
-    from (review r5: regenerations must not re-attribute it)."""
-    pools = {p["tag"] for p in _all_pool_effs()}
-    if ANATOMY_TAG not in pools:
-        return []
-    return [
-        f"## Plan anatomy at 12M turns (event-log evidence, r5 kernel, "
-        f"pool `{ANATOMY_TAG}`)",
-        "",
-        "Spark event logs of one pinned run per level (zstd logs parsed",
-        "stage-by-stage) show the job has NO serial tail at this input:",
-        "the single salted-shuffle→mapInPandas→sort→write stage (512",
-        "tasks) is 94-96% of the measured wall at BOTH local[4] and",
-        "local[16], and its aggregate task time divided by the core",
-        "budget equals the stage wall within 2% at both levels — i.e.",
-        "perfect wave packing, nothing left for core count to hide. What",
-        "DOES grow at 16 threads is per-task JVM-side cost on identical",
-        "work: executor CPU share of task time rises from ~9% (local[4])",
-        "to ~22% (local[16]) with GC 4s → 54s — shuffle/Arrow/parquet",
-        "memory traffic contending inside the fixed host bandwidth, the",
-        "same contention the busy-loop hardware ceiling (0.858) prices",
-        "for pure compute. (The GC term itself is small: direct -Xlog:gc",
-        "A/B at this input measured 1.2-2.5 s of actual G1 pause per",
-        "local[16] run — ~1-2% of wall; ParallelGC read 4.4-5.0 s,",
-        "worse. The 54 s figure is the event log attributing concurrent",
-        "GC wall across 16 in-flight tasks. GC tuning is not the lever;",
-        "the contention is intrinsic bandwidth.) The Python extraction",
-        "kernels (the ~75%",
-        "majority of task time) scale core-linearly. At equal per-node",
-        "memory bandwidth on a real cluster this contention term stays",
-        "CONSTANT per node as nodes are added — it does not compound",
-        "with cluster size the way it compounds with threads-per-box",
-        "here, so the measured ratio under-states, not over-states, the",
-        "N→4N-executor case.",
-        "",
-    ]
-
-
-def write_bench_md(scaling: dict) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    p = os.path.join(REPO, "BENCH", "BASELINE.md")
-    lines = [
-        "# BENCH/BASELINE.md — measured scaling evidence (north rule)",
-        "",
-        "Same job (`scripts/run_extract.py`), same input, two parallelism",
-        "levels standing in for N- and 4N-executor clusters (no real",
-        "cluster in this sandbox). Each level runs PINNED to a fixed CPU",
-        "budget (`taskset -a -c 0-3` / `0-15`, JVM pools sized to it via",
-        "-XX:ActiveProcessorCount) — the local-mode equivalent of a real",
-        "executor's container CPU limit: without pinning the LOW level",
-        "free-rides, its JVM service threads (GC, shuffle, parquet encode)",
-        "running on the host's idle cores for free while the high level's",
-        "compete with its Python workers (measured: unpinned local[4]",
-        "showed ~40% higher per-core throughput than local[16], an",
-        "asymmetry of the harness, not the job). Fresh JVM per run;",
-        f"interleaved runs, with the per-level MINIMUM taken over all",
-        f"{scaling['pooled_runs']} logged runs of this exact config across",
-        "sessions started at different times (`BENCH/scaling_runs.jsonl`):",
-        "the sandbox host shows bursty CPU steal in windows lasting",
-        "minutes-to-hours — additive slowdown, so an entire session can be",
-        "inflated and the pooled minimum is the estimator of the",
-        "interference-free wall; interleaving decorrelates bursts from",
-        "level within a session; resume off;",
-        "per-level JVM heap = 2 GiB/core (total memory scales with cluster",
-        "size, as on a real cluster; a fixed shared heap at 4N cores would",
-        "measure GC pressure, not compute scaling);",
-        "Arrow batch size fixed (1024 rows); salt 16 (the synth input has",
-        "40 conversations → ~23 non-empty buckets; 23×16 ≈ 368 task groups",
-        "over 128 shuffle partitions balance the last wave at both levels).",
-        "The serial tail is ~1-3 s after moving lineage off the output",
-        "re-scan (accumulator side-output + parquet footers) — the r1 tail",
-        "was ~22 s, which alone capped 2M-row measurements at ~0.55.",
-        "Shuffle dirs + warehouse live",
-        "on tmpfs: per-node disk bandwidth scales with node count on a real",
-        "cluster, but this sandbox shares ONE ~190 MB/s virtual disk across",
-        "all cores — on it the job is disk-bound at every parallelism and",
-        "core scaling is unmeasurable.",
-        "",
-        "Why local[4] vs local[16]: a pure-CPU busy-loop calibration of",
-        "this VM (no Spark, no memory traffic) shows its 32 vCPUs deliver",
-        "only 2.18x aggregate compute going 8 -> 32 processes (~16",
-        "physical cores + SMT; hardware ceiling 0.55 of ideal), while",
-        "4 -> 16 processes delivers 3.43x (ceiling 0.86). The 4-vs-16",
-        "pair is the largest 4x core step that stays inside the physical",
-        "core envelope — outside it the measurement bounds the HOST, not",
-        "the job. Calibration (M iters/s): 2 procs 19.3, 4: 35.4, 8: 61.8,",
-        "16: 121.5, 24: 163.4.",
-        "",
-        f"- input: {scaling['rows']} synthesized transcript turns "
-        f"(sf dir `{SF_DIR}`, mult={MULT_SCALING})",
-        f"- N  = `{scaling['N']['master']}`: {scaling['N']['wall_sec']} s, "
-        f"{scaling['N']['turns_per_sec']} turns/sec",
-        f"- 4N = `{scaling['4N']['master']}`: {scaling['4N']['wall_sec']} s, "
-        f"{scaling['4N']['turns_per_sec']} turns/sec",
-        f"- scaling efficiency (T_4N / T_N) / 4 = **{scaling['value']}** "
-        f"(target ≥ 0.8)",
-        f"- hardware-ceiling-normalized efficiency = "
-        f"**{scaling['hw_normalized']}** — the raw value divided by this "
-        f"host's busy-loop 4→16 ceiling of {scaling['hw_ceiling']} "
-        f"(even a perfectly-scaling job cannot exceed the ceiling on "
-        f"16-physical-core + SMT hardware; calibration table above)"
-        + (" — a value slightly above 1.0 means the pooled minima now "
-           "saturate the busy-loop ceiling estimate; both are noisy "
-           "minimum-estimators, so this is measurement coincidence, not "
-           "super-linear scaling — the RAW value is the binding number"
-           if scaling["hw_normalized"] > 1.0 else ""),
-        (f"- resume: re-running the completed job skips all "
-         f"{scaling['resume_buckets_skipped']} buckets via the "
-         f"lineage probe in {scaling['resume_noop_sec']} s "
-         f"(~zero extraction work)"
-         if "resume_noop_sec" in scaling else
-         "- resume: not re-measured in this rescore session (the probe "
-         "runs with `bench.py --scaling`; pooled minima above carry the "
-         "scaling evidence)"),
-        "",
-        f"Generated by `python bench.py --scaling` on "
-        f"{time.strftime('%Y-%m-%d %H:%M UTC', time.gmtime())}.",
-        "",
-        *_north_verdict_md(scaling),
-        *_pool_shape_md(scaling),
-        *_plan_anatomy_md(),
-        *_secondary_pools_md(scaling),
-        "## Headline mode: pooled minima + two interference probes",
-        "",
-        "`python bench.py` (headline mode) REPORTS pooled per-query",
-        "MINIMA: every run's raw per-query walls are appended to",
-        "`BENCH/headline_runs.jsonl` and the emitted `queries`/`value`",
-        "are the minimum per query over all logged runs of the same",
-        "config tag — the same estimator as the scaling pool above, so",
-        "round-over-round BENCH comparisons stop being single-session",
-        "coin flips (r2's headline read 2.9x slow purely from a steal",
-        "window). The raw walls of the emitting session ride along as",
-        "`queries_this_run`. The config tag embeds a round marker,",
-        "bumped when a headline query's implementation materially",
-        "changes — minima never pool across code versions.",
-        "",
-        "Each run also brackets itself with TWO probes, sampled before",
-        "and after the queries:",
-        "- `host_cal_miters_24p_pre`/`..._24p`: 24-process pure-CPU busy",
-        "  loop, M-iters/s; quiet-host samples cluster at 420-550",
-        "  (sampled max 551) — well under ~400 means CPU steal.",
-        "- `host_membw_gbps_pre`/`host_membw_gbps`: 4-process 64 MB",
-        "  steady-state array-copy, aggregate GB/s; quiet-host samples",
-        "  cluster at ~50-70 — well under ~30 means MEMORY-BANDWIDTH",
-        "  interference, the mode the busy loop is blind to (the r2",
-        "  steal window inflated Spark 3-4.5x with quiet busy-loop",
-        "  brackets).",
-        "Read both as flags, not ratios: a low sample marks THAT RUN as",
-        "host-inflated; the pooled minima remain the binding numbers.",
-        "A burst that starts and ends inside the run can still evade",
-        "both brackets — one more reason only pooled minima are",
-        "compared.",
-        "",
-        "Round-over-round note (r5): `curate_e2e` is NOT comparable to",
-        "its r4 wall — r4 measured the vacuous flagship (the sf0.01",
-        "corpus died whole at the Gopher gate, so the keep-join, reason",
-        "composition and stratified sample ran on 0 rows); r5 measures",
-        "the non-vacuous version (in-query longform strata, both keep",
-        "branches live, non-empty sample), which legitimately does the",
-        "full downstream work. `lang_id_*`/`extract_e2e` carry 55",
-        "languages vs r4's 40 (langdetect parity) — more work per turn",
-        "by design, same plans.",
-        "",
-    ]
-    skew_path = os.path.join(REPO, "BENCH", "last_skew.json")
-    if os.path.exists(skew_path):
-        with open(skew_path) as f:
-            lines += _skew_md(json.load(f))
-    # carry the ANN section over: --ann-bench appends it after this
-    # file's content, and a later --scaling/--rescore regen must not
-    # silently drop that evidence
-    if os.path.exists(p):
-        head = open(p).read()
-        cut = head.find("## IVF ANN at corpus scale")
-        if cut != -1:
-            lines += [head[cut:].rstrip(), ""]
-    with open(p, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {p}", file=sys.stderr)
-
-
-# host busy-loop calibration: 4 procs 35.4 M iters/s → 16 procs 121.5
-# (see write_bench_md table) — the 4→16 hardware ratio of this VM
-HW_RATIO_4_16 = 121.5 / 35.4
-
-# Every measured run is appended here and the per-level minimum is taken
-# over ALL runs of the same config: host CPU steal is additive noise in
-# windows lasting minutes-to-hours, so one session can be entirely
-# inflated — pooling sessions run at different times estimates the
-# interference-free wall. Only runs with an identical config tag pool.
-RUNS_LOG = os.path.join(REPO, "BENCH", "scaling_runs.jsonl")
-CONFIG_TAG = "pinned-activeproc-salt16-2gpc-tmpfs-6M-r5"
-
-
-def _log_run(session: str, label: str, master: str, stats: dict) -> None:
-    os.makedirs(os.path.dirname(RUNS_LOG), exist_ok=True)
-    with open(RUNS_LOG, "a") as f:
-        f.write(json.dumps({
-            "session": session, "config": CONFIG_TAG, "label": label,
-            "master": master, "wall_sec": stats["wall_sec"],
-            "turns_per_sec": stats["turns_per_sec"],
-            "rows": stats["input_rows"],
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }) + "\n")
-
-
-def _pool_iter(rows: int | None = None):
-    """Parsed pool lines, filtered to this CONFIG_TAG (and rows if
-    given) — the SAME filter everywhere, so the 'over N logged runs'
-    evidence text can never overstate the sample the minima came from."""
-    if not os.path.exists(RUNS_LOG):
-        return
-    with open(RUNS_LOG) as f:
-        for line in f:
-            try:
-                r = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if r.get("config") != CONFIG_TAG:
-                continue
-            if rows is not None and r.get("rows") != rows:
-                continue
-            yield r
-
-
-def _pooled_count(rows: int) -> int:
-    return sum(1 for _ in _pool_iter(rows))
-
-
-def _pooled_rows_mode() -> int | None:
-    """Most common input size in the pool — the rows key a fresh
-    checkout should rescore against."""
-    from collections import Counter
-    c = Counter(r.get("rows") for r in _pool_iter())
-    return c.most_common(1)[0][0] if c else None
-
-
-def _pooled_best(rows: int) -> dict[str, dict]:
-    """Per-level minimum wall over every logged run of this config."""
-    best: dict[str, dict] = {}
-    for r in _pool_iter(rows):
-        lb = r["label"]
-        if lb not in best or r["wall_sec"] < best[lb]["wall_sec"]:
-            best[lb] = r
-    return best
-
-# interleaved attempts per level; the min per level estimates the
-# interference-free wall under the host's additive bursty CPU steal
-ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-
-# 6M turns (r5 final; the 12M experiment is kept as a secondary pool).
-# VERDICT r4 #4 predicted doubling the input to 12M would re-dominate
-# the parallel phase (serial-tail Amdahl fit: eff ≈ 0.90); 67 pooled
-# runs MEASURED 0.797 — the prediction was wrong because the loss at
-# 16 threads is not a serial tail (event-log anatomy: one 512-task
-# stage, perfect packing, 94-96% of wall at both levels) but JVM
-# shuffle/Arrow/parquet memory traffic contending inside this ONE
-# box's bus, a term that GROWS with the input's working set and that a
-# real cluster pays per-node, not per-core (each executor brings its
-# own memory bus). A direct -Xlog:gc A/B confirmed GC is 1-2% of wall,
-# not the lever. So the binding pool is the input size where the job's
-# COMPUTE dominates the single-box bandwidth artifact (6M), measured
-# fresh under a version-bumped tag (-r5) so minima never pool with
-# r4-kernel runs; the 12M pool stays rendered alongside with its
-# anatomy as the scale probe.
-MULT_SCALING = int(os.environ.get("SPARK_GRAFT_BENCH_SCALING_MULT", "1200"))
-
-
-def run_dedup_bench(mult: int = 200, attempts: int = 2) -> dict:
-    """Dedup chain at corpus scale (r2 VERDICT stretch): dedup_clusters
-    (MinHash sketch → LSH band self-join → candidate pairs → connected
-    components) over ``mult`` x the sf documents table — ≥1M docs at the
-    default — recording wall, CC round count, and cluster volume.
-
-    Synth keeps the duplicate structure REALISTIC at scale: replica k
-    applies a BIJECTIVE token renaming (every word prefixed with the
-    replica tag), so within a replica the shingle-similarity structure
-    of the base corpus is preserved EXACTLY (organic near-dups stay
-    near-dups, distinct docs stay distinct) while replicas share no
-    shingles at all — naive verbatim replication would instead put 200
-    copies of each doc in one LSH bucket and fan the band self-join out
-    quadratically (~10^8 rows), benchmarking the synth artifact, not
-    the operator. (An interleaved-salt variant fails more subtly:
-    salt-word-salt shingles collapse onto single words and cross-link
-    every vocabulary-sharing doc — measured 70% of the corpus in one
-    cluster web and 15 CC rounds.) Guaranteed signal: every 997th doc
-    gets one exact twin, so clusters ≈ organic rate + n_docs/997.
-    Per-attempt minimum + interference probes, as in headline mode."""
-    from advanced_text_extraction_spark.operators.dedup import dedup_clusters
-    from advanced_text_extraction_spark.sources.session import build_session
-
-    spark = build_session(app_name="ate-dedup-bench",
-                          master=f"local[{CPUS}]")
-    try:
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-            .select("doc_id", "text")
-        reps = spark.range(mult).withColumnRenamed("id", "k")
-        from pyspark.sql import functions as F
-        tag = F.concat(F.lit("r"), F.col("k").cast("string"), F.lit("$1"))
-        big = docs.crossJoin(reps).select(
-            (F.col("doc_id") * mult + F.col("k")).alias("doc_id"),
-            F.regexp_replace(F.col("text"), F.lit(r"(\S+)"), tag)
-            .alias("text"))
-        twins = big.filter(F.col("doc_id") % 997 == 0).select(
-            (F.col("doc_id") + F.lit(1) * 10**12).alias("doc_id"), "text")
-        corpus = big.unionByName(twins) \
-            .repartition(CPUS * 4).persist()
-        n_docs = corpus.count()
-        n_twins = twins.count()
-        print(f"corpus: {n_docs} docs ({n_twins} exact twins)",
-              file=sys.stderr)
-
-        best = None
-        for attempt in range(attempts):
-            cal = _calibrate(24)
-            stats: dict = {}
-            t0 = time.time()
-            out = dedup_clusters(corpus, "doc_id", "text", stats=stats)
-            n_rows = out.count()
-            n_clusters = out.select("cluster_id").distinct().count()
-            wall = round(time.time() - t0, 1)
-            rec = {"wall_sec": wall, "cc_rounds": stats.get("rounds"),
-                   "clustered_docs": n_rows, "clusters": n_clusters,
-                   "docs_per_sec": round(n_docs / wall, 1),
-                   "host_cal_miters_24p": cal}
-            print(f"  attempt {attempt}: {rec}", file=sys.stderr)
-            if best is None or wall < best["wall_sec"]:
-                best = rec
-    finally:
-        spark.stop()
-    result = {"metric": "dedup_clusters_1m_wall_sec",
-              "value": best["wall_sec"], "unit": "sec",
-              "docs": n_docs, "twins": n_twins, "attempts": attempts,
-              **best}
-    with open(os.path.join(REPO, "BENCH", "last_dedup.json"), "w") as f:
-        json.dump(result, f)
-    p = os.path.join(REPO, "BENCH", "BASELINE.md")
-    head = ""
-    if os.path.exists(p):
-        head = open(p).read()
-        cut = head.find("## Dedup chain at corpus scale")
-        if cut != -1:
-            head = head[:cut].rstrip() + "\n\n"
-        else:
-            head = head.rstrip() + "\n\n"
-    with open(p, "w") as f:
-        f.write(head + "\n".join([
-            "## Dedup chain at corpus scale (T1-T4 stretch evidence)",
-            "",
-            f"`python bench.py --dedup-bench` — dedup_clusters (MinHash",
-            f"sketch → LSH band self-join → pairs → connected components)",
-            f"over {result['docs']} synthesized docs ({result['twins']}",
-            "exact twins; replica-token rewrite keeps cross-replica text",
-            "disjoint so bucket sizes stay realistic — see bench.py).",
-            f"Best of {attempts} attempts on local[{CPUS}]:",
-            "",
-            f"- wall {result['wall_sec']} s "
-            f"({result['docs_per_sec']} docs/s end-to-end)",
-            f"- connected components converged in {result['cc_rounds']}"
-            f" round(s); {result['clustered_docs']} clustered docs in"
-            f" {result['clusters']} clusters",
-            f"- busy-loop marker at best attempt: "
-            f"{result['host_cal_miters_24p']} (quiet ≈ 420-550)",
-            "",
-            f"Generated on "
-            f"{time.strftime('%Y-%m-%d %H:%M UTC', time.gmtime())}.",
-            "",
-        ]))
-    print(f"wrote dedup section to {p}", file=sys.stderr)
-    return result
-
-
-def run_ann_bench(n_vecs: int = 1_000_000, dim: int = 64,
-                  n_cells: int = 64, nprobes: tuple = (1, 2, 4, 8),
-                  k: int = 10, n_queries: int = 32,
-                  t_max: float = 1.0) -> dict:
-    """IVF ANN at corpus scale (r3 VERDICT task #4; r4 task #6 added the
-    recall CURVE on an overlapping regime): train k-means centroids over
-    1M synthetic vectors, materialize the assignment cell-PARTITIONED at
-    rest, then measure the probe path (partition-pruned scan + exact
-    rescore) against brute-force ``cosine_topk`` ground truth — recall@k
-    per nprobe and wall per stage → BENCH/last_ann.json.
-
-    Synth (pure hash arithmetic with Knuth-constant mixing and large
-    prime moduli, no RNG state, all JVM-side): r4's original synth was
-    DEGENERATE — noise had period 7 in the vector id and the center
-    formula period 19 in the cell id, so every vector had ~2k exact
-    same-cell duplicates and recall read 1.0 even at nprobe 1. Pure
-    independent per-vector noise does not fix it: in 64 dims the noise
-    is near-orthogonal to the center differences, so cosine-Voronoi
-    assignment stays cell-pure and recall reads 1.0 regardless of
-    amplitude (measured). The current regime creates BOUNDARY MASS the
-    way real corpora have it: each vector interpolates between two
-    deterministic cluster centers, ``x = (1-t)*center[c1] +
-    t*center[c2] + small noise`` with per-vector ``t`` uniform over
-    [0, t_max=1] and c2 quasi-independent of c1 (64x63 pairs) — the
-    interpolation band between two cells carries mass from BOTH sides,
-    so k-means cannot adapt its Voronoi boundary out of the band (it
-    does exactly that when t stops at 0.5 or c2 is a function of c1 —
-    both measured as recall 1.0 everywhere). Half the queries stride
-    the corpus, half are members nearest the t=0.5 midpoint.
-    Calibrated by numpy replay at the full 1M (3 Lloyd rounds, cosine
-    Voronoi): combined recall@10 0.866 / 0.953 / 0.988 / 1.0 at nprobe
-    1/2/4/8; the near-boundary half dips to 0.75 avg (min 0.2) at
-    nprobe 1 — a real recall-vs-nprobe trade-off. A uniform random cloud is deliberately avoided — it is
-    the worst case of EVERY cell-probing ANN method (recall → nprobe/C
-    by construction) and would benchmark the synth, not the operator.
-    Queries are member vectors, so exact self-retrieval is part of the
-    recall contract."""
-    from pyspark.sql import functions as F
-
-    from advanced_text_extraction_spark.operators.similarity import (
-        cosine_topk, ivf_assign_kernel, ivf_topk, train_centroids,
-    )
-    from advanced_text_extraction_spark.sources.session import build_session
-
-    spark = build_session(app_name="ate-ann-bench", master=f"local[{CPUS}]")
-    result: dict = {}
-    try:
-        with tempfile.TemporaryDirectory(prefix="ate_ann_",
-                                         dir=SCALING_TMP) as td:
-            vec_path = os.path.join(td, "vectors")
-            idx_path = os.path.join(td, "ivf")
-            i = F.col("id")
-            c = F.pmod(i, F.lit(n_cells))
-            # c2 quasi-independent of c1 (never equal): 64*63 direction
-            # pairs, ~250 vectors per pair at 1M — neighbor t-spacing
-            # wide enough that a near-boundary query's top-10 straddles
-            c2 = F.pmod(c + 1 + F.pmod(i * 1013904223, F.lit(63)),
-                        F.lit(n_cells))
-            t = (F.pmod(i * 2654435761, F.lit(1009)).cast("double")
-                 / 1009.0 * t_max)
-
-            def center(cc, j):
-                return (F.pmod(cc * 2654435761 + j * 97, F.lit(4093))
-                        .cast("double") / 4093.0 * 18.0 - 9.0)
-
-            dims = [
-                ((1.0 - t) * center(c, j) + t * center(c2, j)
-                 + (F.pmod(i * 40503 + j * 2654435761, F.lit(8191))
-                    .cast("double") / 8191.0 - 0.5) * 2.0)
-                .alias(f"d{j}")
-                for j in range(dim)
-            ]
-            t0 = time.time()
-            (spark.range(n_vecs)
-             .select(i.alias("vec_id"), F.array(*dims).alias("embedding"))
-             .repartition(CPUS * 2)
-             .write.mode("overwrite").parquet(vec_path))
-            synth_wall = round(time.time() - t0, 1)
-            vecs = spark.read.parquet(vec_path)
-
-            cal0 = _calibrate(24)
-            t0 = time.time()
-            cents = train_centroids(vecs, n_cells=n_cells, n_iter=2,
-                                    kernel=True)
-            train_wall = round(time.time() - t0, 1)
-            print(f"train: {train_wall}s", file=sys.stderr)
-
-            # index build: assignment written partitioned BY CELL — the
-            # at-rest layout that turns the probe's IN-filter into
-            # partition pruning. repartition("cell") first: without it
-            # every input task writes a sliver of every cell (observed
-            # 2048 files at 50k rows — the small-files pathology)
-            t0 = time.time()
-            (ivf_assign_kernel(vecs, cents).repartition("cell")
-             .write.mode("overwrite").partitionBy("cell").parquet(idx_path))
-            build_wall = round(time.time() - t0, 1)
-            at_rest = spark.read.parquet(idx_path)
-
-            # half the queries stride the corpus (typical members), half
-            # sit nearest the t=0.5 interpolation midpoint (near-boundary
-            # members — the population cell-probing ANN actually loses).
-            # t(i) depends on i mod 1009 only, so the boundary ids solve
-            # i ≡ r·inv(2654435761) (mod 1009) for the two residues r
-            # whose t is closest to 0.5.
-            # at least 2 per half: n_half // 2 divides the stride below
-            n_half = max(2, n_queries // 2)
-            stride_ids = [int(q * (n_vecs // n_half) + 7)
-                          for q in range(n_half)]
-            inv = pow(2654435761 % 1009, -1, 1009)
-            boundary_ids = []
-            for r in (504, 505):
-                i0 = (r * inv) % 1009
-                step = max(1, n_vecs // 1009 // (n_half // 2)) * 1009
-                boundary_ids += [int(i0 + kk * step)
-                                 for kk in range(n_half // 2)]
-            boundary_ids = [q for q in boundary_ids if q < n_vecs]
-            qids = stride_ids + boundary_ids
-            qvecs = {r["vec_id"]: [float(x) for x in r["embedding"]]
-                     for r in vecs.filter(F.col("vec_id").isin(qids))
-                     .collect()}
-
-            exact_walls = []
-            truths = {}
-            pruned_plan = None
-            files_probed = set()
-            from advanced_text_extraction_spark.operators.similarity \
-                import probe_cells
-            for qid in qids:  # ground truth once per query
-                qv = qvecs[qid]
-                t0 = time.time()
-                truths[qid] = [r["vec_id"] for r in
-                               cosine_topk(vecs, qv, k=k).collect()]
-                exact_walls.append(time.time() - t0)
-            curve = []
-            for nprobe in nprobes:
-                probe_walls, recalls = [], []
-                for qid in qids:
-                    qv = qvecs[qid]
-                    probe_df = ivf_topk(at_rest, qv, cents, nprobe=nprobe,
-                                        k=k, assigned=True)
-                    t0 = time.time()
-                    got = [r["vec_id"] for r in probe_df.collect()]
-                    probe_walls.append(time.time() - t0)
-                    recalls.append(len(set(truths[qid]) & set(got)) / k)
-                    if pruned_plan is None:
-                        pruned_plan = probe_df._sc._jvm.PythonSQLUtils \
-                            .explainString(probe_df._jdf.queryExecution(),
-                                           "formatted")
-                if not files_probed:  # footprint at the smallest nprobe
-                    for cell in probe_cells(qvecs[qids[0]], cents,
-                                            nprobes[0]):
-                        d = os.path.join(idx_path, f"cell={cell}")
-                        files_probed.update(
-                            os.path.join(d, f) for f in os.listdir(d)
-                            if f.endswith(".parquet"))
-                n_s = len(stride_ids)
-                curve.append({
-                    "nprobe": nprobe,
-                    "recall_avg": round(sum(recalls) / len(recalls), 4),
-                    "recall_stride": round(
-                        sum(recalls[:n_s]) / max(n_s, 1), 4),
-                    "recall_boundary": round(
-                        sum(recalls[n_s:]) / max(len(recalls) - n_s, 1),
-                        4),
-                    "recall_min": round(min(recalls), 4),
-                    "probe_query_sec_avg": round(
-                        sum(probe_walls) / len(probe_walls), 3),
-                    "probe_speedup": round(
-                        (sum(exact_walls) / len(exact_walls))
-                        / max(sum(probe_walls) / len(probe_walls),
-                              1e-9), 1),
-                })
-                print(f"nprobe {nprobe}: recall {curve[-1]['recall_avg']}"
-                      f" wall {curve[-1]['probe_query_sec_avg']}s",
-                      file=sys.stderr)
-            nprobe = nprobes[-1]
-            cal1 = _calibrate(24)
-
-            # partition-pruning evidence: the plan must carry the cell
-            # IN-list as PartitionFilters (metadata-only pruning), and
-            # the probed cell directories hold a fraction of the index
-            assert "PartitionFilters" in pruned_plan and \
-                "cell" in pruned_plan.split("PartitionFilters", 1)[1][:200]
-            n_files_probe = len(files_probed)
-            n_files_total = sum(
-                1 for root, _, fs in os.walk(idx_path)
-                for f in fs if f.endswith(".parquet"))
-            top = curve[-1]
-            result = {
-                "metric": "ann_ivf_1m_recall_at_10",
-                "value": top["recall_avg"],
-                "unit": "recall",
-                "n_vecs": n_vecs, "dim": dim, "n_cells": n_cells,
-                "nprobe": top["nprobe"], "k": k, "n_queries": n_queries,
-                "t_max": t_max,
-                "recall_min": top["recall_min"],
-                "curve": curve,
-                "synth_wall_sec": synth_wall,
-                "train_wall_sec": train_wall,
-                "index_build_wall_sec": build_wall,
-                "exact_query_sec_avg": round(
-                    sum(exact_walls) / len(exact_walls), 3),
-                "probe_query_sec_avg": top["probe_query_sec_avg"],
-                "probe_speedup": top["probe_speedup"],
-                "files_read_probe": n_files_probe,
-                "files_in_index": n_files_total,
-                "host_cal_miters_24p_pre": cal0,
-                "host_cal_miters_24p": cal1,
-            }
-    finally:
-        spark.stop()
-    with open(os.path.join(REPO, "BENCH", "last_ann.json"), "w") as f:
-        json.dump(result, f)
-    p = os.path.join(REPO, "BENCH", "BASELINE.md")
-    head = open(p).read() if os.path.exists(p) else ""
-    cut = head.find("## IVF ANN at corpus scale")
-    head = (head[:cut].rstrip() + "\n\n") if cut != -1 \
-        else (head.rstrip() + "\n\n")
-    with open(p, "w") as f:
-        f.write(head + "\n".join([
-            "## IVF ANN at corpus scale (T8b stretch evidence)",
-            "",
-            f"`python bench.py --ann-bench` — trained IVF over "
-            f"{result['n_vecs']} synthetic OVERLAPPING-cluster vectors "
-            f"(dim {dim}, {n_cells} cells, two-center interpolation "
-            f"t ∈ [0, {t_max:g}] + small noise) on local[{CPUS}]. "
-            "r4's synth was degenerate (duplicate-dominated; recall "
-            "1.0 even at nprobe 1); this regime puts real BOUNDARY "
-            "MASS between cells — vectors interpolate between two "
-            "quasi-independent cluster centers with t spanning the "
-            "full segment, so k-means cannot adapt the band away and "
-            "near-boundary queries' true neighbors split across the "
-            "Voronoi edge. Queries: half corpus-stride members, half "
-            "members nearest the t=0.5 midpoint:",
-            "",
-            "| nprobe | recall@10 | stride-q | boundary-q | min "
-            "| probe s/query | speedup |",
-            "|---|---|---|---|---|---|---|",
-            *[f"| {c['nprobe']} | {c['recall_avg']} "
-              f"| {c['recall_stride']} | {c['recall_boundary']} "
-              f"| {c['recall_min']} "
-              f"| {c['probe_query_sec_avg']} | {c['probe_speedup']}x |"
-              for c in result["curve"]],
-            "",
-            f"- headline recall@{k} at nprobe {nprobe}: "
-            f"**{result['value']}** (min {result['recall_min']}) over "
-            f"{n_queries} member queries",
-            f"- train {result['train_wall_sec']} s (2 Lloyd's rounds), "
-            f"index build {result['index_build_wall_sec']} s "
-            f"(assignment written partitionBy(cell))",
-            f"- probe {result['probe_query_sec_avg']} s/query vs exact "
-            f"{result['exact_query_sec_avg']} s/query "
-            f"({result['probe_speedup']}× — plan shows the cell IN-list "
-            f"as PartitionFilters; at nprobe {nprobes[0]} one query's "
-            f"probe set spans {result['files_read_probe']} of "
-            f"{result['files_in_index']} index files)",
-            f"- busy-loop markers {result['host_cal_miters_24p_pre']}"
-            f"/{result['host_cal_miters_24p']} (quiet ≈ 420-550)",
-            "",
-            f"Generated on "
-            f"{time.strftime('%Y-%m-%d %H:%M UTC', time.gmtime())}.",
-            "",
-        ]))
-    print(f"wrote ANN section to {p}", file=sys.stderr)
-    return result
-
-
-def run_skew_probe(mult: int = 400, attempts: int = 4) -> dict:
-    """BASELINE.md skew-resilience evidence: identical job, pinned
-    local[16], on a uniform vs a skewed (one conv ≈ 20% of turns) input
-    of the same size — interleaved best-of-`attempts` each, in ONE
-    session. Interleaving shares steal conditions only statistically:
-    a burst can straddle one label's runs and not the other's (observed:
-    2× wall spread within a probe), so the per-label MINIMUM over ≥4
-    attempts is the estimator, as in the scaling methodology. The salted
-    repartition is what keeps the two numbers equal; without it the
-    skewed conversation would pin one task."""
-    with tempfile.TemporaryDirectory(prefix="ate_skew_",
-                                     dir=SCALING_TMP) as td:
-        uniform = os.path.join(td, "uniform")
-        skewed = os.path.join(td, "skewed")
-        n_u = _synth_input(uniform, mult)
-        n_s = _synth_input(skewed, mult, skew=True)
-        print(f"inputs: uniform {n_u}, skewed {n_s} turns", file=sys.stderr)
-        best = {"uniform": float("inf"), "skewed": float("inf")}
-        for attempt in range(attempts):
-            for label, inp in (("uniform", uniform), ("skewed", skewed)):
-                out = os.path.join(td, f"out_{label}_{attempt}")
-                stats = _run_job(inp, out, "local[16]", 16)
-                if stats is None:
-                    continue
-                print(f"  {label} run {attempt}: {stats['wall_sec']}s",
-                      file=sys.stderr)
-                best[label] = min(best[label], stats["wall_sec"])
-        failed = [lb for lb, v in best.items() if v == float("inf")]
-        if failed:
-            # json.dump would otherwise emit the non-standard Infinity
-            # token and the ratio below would be meaningless
-            raise SystemExit(
-                f"skew probe: all runs failed for {'/'.join(failed)}")
-        # wall_u / wall_s == throughput_skewed / throughput_uniform: the
-        # fraction of uniform-input throughput the skewed input retains
-        # (1.0 = skew fully neutralized, lower = skew hurt)
-        ratio = round(best["uniform"] / best["skewed"], 3)
-        res = {"metric": "skew_resilience", "value": ratio, "unit": "ratio",
-               "rows": n_u, "uniform_sec": best["uniform"],
-               "skewed_sec": best["skewed"]}
-        with open(os.path.join(REPO, "BENCH", "last_skew.json"), "w") as f:
-            json.dump(res, f)
-        p = os.path.join(REPO, "BENCH", "BASELINE.md")
-        # REPLACE any prior skew section rather than appending: repeated
-        # probes would otherwise stack contradictory sections in the
-        # evidence file until the next --scaling rewrote it
-        head = ""
-        if os.path.exists(p):
-            head = open(p).read()
-            cut = head.find("## Skew resilience")
-            if cut != -1:
-                head = head[:cut].rstrip() + "\n\n"
-        with open(p, "w") as f:
-            f.write(head + "\n".join(_skew_md(res)))
-        print(f"wrote skew section to {p}", file=sys.stderr)
-        return res
-
-
-def _skew_md(res: dict) -> list[str]:
-    return [
-        "",
-        "## Skew resilience (salted repartition — SURVEY §2.13 C4)",
-        "",
-        f"Identical pinned local[16] job on {res['rows']} uniform turns vs",
-        "the same corpus with ~20% of turns routed into ONE conversation",
-        "(BASELINE.md skew fixture shape); interleaved attempts in one",
-        "session, per-label MINIMUM (bursty host steal can straddle one",
-        "label's runs and not the other's — observed 2x wall spread — so",
-        "the minimum is the estimator, as in the scaling methodology).",
-        "",
-        f"- uniform: {res['uniform_sec']} s; skewed: {res['skewed_sec']} s",
-        f"- throughput ratio skewed/uniform = **{res['value']}** (computed",
-        "  wall_uniform/wall_skewed — how much throughput the skewed input",
-        "  keeps; 1.0 = skew fully neutralized, lower = skew hurt; the",
-        "  salted exchange splits the hot conversation across salt×bucket",
-        "  tasks, order restored after)"
-        + (" — a value above 1.0 is minimum-estimator noise (two noisy"
-           " minima compared), NOT the skewed input being faster: read it"
-           " as skew fully neutralized" if res["value"] > 1.0 else ""),
-        "",
-    ]
-
-
-def main() -> int:
-    if "--scaling" in sys.argv:
-        out = run_scaling(MULT_SCALING)
-        write_bench_md(out)
-    elif "--burst-4n" in sys.argv:
-        count = int(sys.argv[sys.argv.index("--burst-4n") + 1])
-        run_burst("4N", "local[16]", 16, count)
-        out = rescore_from_pool()
-        write_bench_md(out)
-    elif "--burst-n" in sys.argv:
-        count = int(sys.argv[sys.argv.index("--burst-n") + 1])
-        run_burst("N", "local[4]", 4, count)
-        out = rescore_from_pool()
-        write_bench_md(out)
-    elif "--rescore" in sys.argv:
-        out = rescore_from_pool()
-        write_bench_md(out)
-    elif "--skew-probe" in sys.argv:
-        out = run_skew_probe()
-    elif "--dedup-bench" in sys.argv:
-        out = run_dedup_bench()
-    elif "--ann-bench" in sys.argv:
-        out = run_ann_bench()
-    else:
-        out = run_headline()
-    print(json.dumps(out))
-    return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    print(json.dumps(run_headline()))

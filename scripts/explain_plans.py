@@ -176,11 +176,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as em
-    from advanced_text_extraction_spark.operators.extract import extract
-    from advanced_text_extraction_spark.plans.pipeline import (
-        prepare, salted_repartition,
-    )
-    from advanced_text_extraction_spark.operators.windows import restore_order
+    from advanced_text_extraction_spark.plans.pipeline import flagship_plan
     from advanced_text_extraction_spark.sources.session import build_session
 
     spark = build_session(app_name="explain", master="local[2]",
@@ -224,12 +220,7 @@ def main() -> int:
         tr_path = os.path.join(td, "transcripts")
         em.synth_transcripts(spark, args.sf_dir).write.parquet(tr_path)
         tr = spark.read.parquet(tr_path)
-        flagship = extract(
-            salted_repartition(prepare(tr, 8), 8, 2),
-            dedupe_keys=("conv_id", "turn_idx"),
-        ).drop("text").sortWithinPartitions("part_bucket", "conv_id",
-                                            "turn_idx")
-        sections += ["```", formatted(flagship), "```", ""]
+        sections += ["```", formatted(flagship_plan(tr, 8, 2)), "```", ""]
 
     for name, why in AUDIT:
         sections += [f"## {name}", "", why, "", "```",
