@@ -127,7 +127,7 @@ def synth_transcripts(spark: SparkSession, sf_dir: str,
 def _flagship_extracted(spark: SparkSession, sf_dir: str,
                         include_pdf: bool = True) -> DataFrame:
     """The product's flagship plan (``plans.pipeline.flagship_plan``) at
-    8 buckets × salt 2 over the synthesized transcripts — entry() and the
+    8 buckets over the synthesized transcripts — entry() and the
     e2e queries project different columns off the SAME plan the
     spark-submit job writes, so the gated plan can never diverge from
     the shipped one."""

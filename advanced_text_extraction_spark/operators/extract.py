@@ -201,13 +201,13 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     ``dedupe_keys`` WITHIN the partition (first copy wins).
 
     Partition-local dedupe is exact when the upstream exchange co-locates
-    key copies — the salted repartition hashes on (bucket(conv_id),
-    salt(turn_idx)), so every copy of a (conv_id, turn_idx) key lands in
-    the same partition by construction. Folding U1 (reference
+    key copies — the flagship repartition hashes on bucket(conv_id), so
+    every copy of a (conv_id, turn_idx) key lands in the same partition
+    by construction. Folding U1 (reference
     /root/reference/cli.py:430) into the extraction pass removes the
     dropDuplicates aggregate and its exchange: the whole job keeps ONE
     data shuffle. The seen-set holds only this partition's keys
-    (|partition| tuples — bounded by the salted layout, not the corpus).
+    (|partition| tuples — bounded by the bucket layout, not the corpus).
 
     ``stats_acc`` (a BucketStatsParam accumulator) collects per-bucket
     (input_rows, kept_rows, raw_bytes, errors, wall_us) as a side output
@@ -331,8 +331,9 @@ def extract(df: DataFrame,
 
 
 def new_stats_accumulator(spark):
-    """Per-bucket lineage-stats accumulator: {bucket: (rows, raw_bytes,
-    errors, wall_us)}. Values are exact for a successfully completed write
+    """Per-bucket lineage-stats accumulator: {bucket: (input_rows,
+    kept_rows, raw_bytes, errors, wall_us)} (see :class:`BucketStatsParam`).
+    Values are exact for a successfully completed write
     (one task attempt per partition commits); a re-executed stage could
     double-count, so authoritative *row counts* come from parquet footers
     (sources/catalog.bucket_row_counts) and the accumulator supplies the

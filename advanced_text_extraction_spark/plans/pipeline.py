@@ -8,8 +8,11 @@
       → part_bucket = pmod(xxhash64(conv_id), n_buckets)
       → bucket filters                        [J1 — resume skip of completed
                                                buckets; only_buckets]
-      → Exchange(hash: part_bucket, salt)     [C4 — skew break; co-locates
-                                               (conv_id, turn_idx) copies]
+      → Exchange(hash: part_bucket)           [C4 — co-locates (conv_id,
+                                               turn_idx) copies and a whole
+                                               bucket; REPARTITION_BY_COL,
+                                               so AQE coalesces it to what
+                                               the data needs]
       → mapInPandas(dedupe + extract)         [U1 folded into the kernel —
                                                partition-local seen-set,
                                                exact because copies are
@@ -17,16 +20,23 @@
       → drop(text)                            [raw payload is not output]
       → sortWithinPartitions(part_bucket,     [W3 — stable order, no global
                              conv_id, turn)    sort, no second exchange]
-      → overwrite extracted/ per bucket + append lineage/  (run_extract_job)
+      → overwrite extracted/ per bucket + append lineage/  (run_extract_job;
+                                               lineage from an Arrow table,
+                                               a local relation: no Python)
 
 Scale design notes (10^12 turns, 1000 executors):
-- The ONLY shuffle is the salted repartition; everything else is
+- The ONLY shuffle is the part_bucket repartition; everything else is
   narrow. No collect of data rows ever happens (lineage bucket ids are
   O(n_buckets) — metadata, not data).
-- Salting: a conversation with 10^9 turns would pin one task if we
-  partitioned by conv_id alone; hashing (part_bucket, salt(turn_idx))
-  caps any task at ~|bucket|/salt rows (reference has no analog — its
-  ThreadPoolExecutor fans out per file, text_extractor.py:962-1000).
+- Skew: a bucket is one hash partition, so each bucket is extracted by
+  exactly one task and written as one file per run, whatever the sizes.
+  AQE merges only partitions smaller than its target size, so a large
+  bucket runs in a task of its own. Splitting a conversation too large
+  for one task needs a per-bucket salt derived from lineage (open, see
+  ``salted_repartition``). The reference has no analog — its
+  ThreadPoolExecutor fans out per file, text_extractor.py:962-1000.
+- The Python task count follows the data, not n_buckets (see
+  ``salted_repartition``): each Python task has a fixed start-up cost.
 - Lineage granularity = bucket; failed/killed runs redo only missing
   buckets, and the dynamic partition overwrite makes redo idempotent
   (no dupes on retry) — the reference's md5 cache-hit short-circuit
@@ -40,6 +50,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,7 +90,7 @@ class RunStats:
 def prepare(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     """Deterministic bucket assignment (partition scheme).
 
-    U1 dedupe is NOT a separate pass: the salted repartition co-locates
+    U1 dedupe is NOT a separate pass: the part_bucket repartition co-locates
     all copies of a (conv_id, turn_idx) key, so the extraction kernel
     drops duplicates partition-locally (extract(dedupe_keys=...)) —
     saving the dropDuplicates aggregate and its exchange."""
@@ -90,16 +101,26 @@ def prepare(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
 
 
 def salted_repartition(df: DataFrame, n_buckets: int, salt: int) -> DataFrame:
-    """C4 — break long-conversation skew before the extraction UDF.
+    """C4 — the one exchange before the extraction UDF, hashed on
+    ``part_bucket`` alone; order is restored after the UDF (W3).
 
-    Hash layout on (part_bucket, salt(turn_idx)): rows of one bucket land
-    in ≤ salt tasks, each Arrow-batch-sized; order is restored after the
-    UDF (W3), so the shuffle is free to optimize for evenness."""
-    return df.repartition(
-        n_buckets * salt,
-        "part_bucket",
-        F.pmod(F.xxhash64("turn_idx"), F.lit(salt)),
-    )
+    The exchange is sized by AQE, not by ``n_buckets`` or ``salt`` (both
+    kept in the signature for callers): it starts at
+    ``spark.sql.shuffle.partitions`` and AQE coalesces it to what the data
+    needs, so a small resume runs one Python task, not one per (bucket,
+    salt) pair — on a 4-vCPU host each Python task costs ~0.2–0.3 s of
+    worker CPU before it touches a row. Coalescing merges WHOLE hash
+    partitions, so every copy of a (conv_id, turn_idx) key stays in one
+    task and the folded dedupe stays exact. Never REBALANCE,
+    range-partition or skew-split this exchange: splitting a partition
+    can separate copies.
+
+    The key carries no salt: under coalescing, a bucket split over
+    ``salt`` hash partitions lands in a number of tasks, and so of output
+    files, that follows the partition sizes (11–14 files over ten seeds
+    of one 8-bucket input). With one hash partition per bucket, each
+    bucket is one task and one file."""
+    return df.repartition("part_bucket")
 
 
 def flagship_plan(
@@ -115,7 +136,7 @@ def flagship_plan(
     max_payload_chars: int = MAX_PAYLOAD_CHARS,
 ) -> DataFrame:
     """The flagship plan up to (not including) the write: bucket, filter
-    buckets, ONE salted exchange, folded-dedupe extraction, per-partition
+    buckets, ONE part_bucket exchange, folded-dedupe extraction, per-partition
     order. ``skip_buckets`` is the resume probe's completed set (a
     metadata-level partition prune — cheaper than an anti-join);
     ``only_buckets`` restricts the run; ``stats_acc`` (see
@@ -196,8 +217,13 @@ def run_extract_job(
     ]
     input_rows = 0
     if lineage_rows:
+        # from an Arrow table, not the tuple list: the list becomes
+        # parallelize + a Python map (one Python task per core for at most
+        # n_buckets rows), the table a local relation that runs no Python
         lineage = spark.createDataFrame(
-            lineage_rows,
+            pa.table(list(zip(*lineage_rows)), names=[
+                "part_bucket", "input_rows", "input_bytes", "output_rows",
+                "error_rows", "wall_ms"]),
             "part_bucket int, input_rows long, input_bytes long, "
             "output_rows long, error_rows long, wall_ms long",
         ).withColumns({

@@ -202,15 +202,21 @@ def main() -> int:
         "",
         "The exact production shape of run_extract_job (transcripts read"
         " from parquet, as on a cluster): scan → Project (bucket id) →"
-        " single salted Exchange → MapInPandas (dedupe folded into the"
-        " extraction kernel: partition-local seen-set, exact because the"
-        " salted exchange co-locates (conv_id, turn_idx) copies — commit"
+        " single part_bucket Exchange → MapInPandas (dedupe folded into"
+        " the extraction kernel: partition-local seen-set, exact because"
+        " the exchange co-locates (conv_id, turn_idx) copies — commit"
         " a9a611f removed the dropDuplicates aggregate and its exchange)"
         " → sortWithinPartitions → write. Exactly ONE data Exchange in"
         " the whole job; order restore is a per-partition sort, NOT a"
-        " global one. Lineage is an accumulator side-output of the same"
-        " MapInPandas + parquet footer metadata — no second scan of the"
-        " output appears anywhere (VERDICT r1 #4).",
+        " global one. The Exchange is REPARTITION_BY_COL at"
+        " spark.sql.shuffle.partitions, so at run time AQE coalesces it"
+        " (AQEShuffleRead coalesced, whole hash partitions only): the"
+        " Python task count follows the data, and each bucket is one task"
+        " and one output file; the plan below is the one"
+        " before execution. Lineage is an accumulator side-output of the"
+        " same MapInPandas + parquet footer metadata, written from an"
+        " Arrow-built local relation — no second scan of the output and"
+        " no second Python stage appear anywhere (VERDICT r1 #4).",
         "",
     ]
 

@@ -28,20 +28,21 @@ def main(argv: list[str] | None = None) -> int:
                          "(reference text_extractor.py:778-803 contract); "
                          "explicit CLI flags override config values")
     ap.add_argument("--n-buckets", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=None)
+    ap.add_argument("--salt", type=int, default=None,
+                    help="accepted for compatibility: the extraction "
+                         "exchange hashes the bucket alone, one task and "
+                         "one output file per bucket")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="spark.sql.shuffle.partitions; size to the DATA "
-                         "(2-3x total cores at the data's scale), not the "
-                         "cluster — oversized tasks sort/spill superlinearly")
+                    help="spark.sql.shuffle.partitions: the starting width "
+                         "of the extraction exchange, which AQE coalesces "
+                         "down to what the data needs; it caps the Python "
+                         "tasks, it does not set their count")
     ap.add_argument("--ocr-fallback", default=None,
                     help="OCR engine for the scanned-PDF P3 fallback "
                          "(default config ocr.fallback_engine, 'auto'); "
                          "'none' disables")
-    ap.add_argument("--warmup", action="store_true",
-                    help="start the Python UDF workers before the measured "
-                         "job (steady-state benchmarking)")
     args = ap.parse_args(argv)
 
     from advanced_text_extraction_spark.plans.pipeline import run_extract_job
@@ -85,11 +86,6 @@ def main(argv: list[str] | None = None) -> int:
                           arrow_batch_rows=job.get("arrow_batch_rows", 1024))
     try:
         df = spark.read.parquet(args.input)
-        if args.warmup:
-            from advanced_text_extraction_spark.operators.extract import extract
-            n = spark.sparkContext.defaultParallelism
-            (extract(df.limit(64 * n).repartition(n))
-             .write.format("noop").mode("overwrite").save())
         stats = run_extract_job(
             spark, df, output,
             n_buckets=n_buckets, salt=salt,

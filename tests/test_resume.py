@@ -119,3 +119,47 @@ def test_resume_survives_legacy_lineage_files(spark, roots):
         assert sorted(rerun.buckets_skipped) == done
     finally:
         os.remove(legacy)
+
+
+def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
+                                                  tmp_path):
+    """Lineage written from an Arrow table keeps the schema of lineage
+    written from a tuple list, which existing warehouses hold, and the
+    resume probe reads both runs' buckets from one lineage dir."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "wh")
+    lin = catalog.lineage_path(root)
+    # the tuple-list lineage writer, as earlier versions ran it
+    catalog.append_lineage(spark.createDataFrame(
+        [(b, 10, 100, 10, 0, 5) for b in (4, 5, 6, 7)],
+        "part_bucket int, input_rows long, input_bytes long, "
+        "output_rows long, error_rows long, wall_ms long",
+    ).withColumns({"n_buckets": F.lit(N_BUCKETS),
+                   "extractor_version": F.lit(EXTRACTOR_VERSION),
+                   "run_id": F.lit("run-tuples"),
+                   "finished_ts": F.current_timestamp()}), root)
+    old_files = set(glob.glob(os.path.join(lin, "*.parquet")))
+    run = run_extract_job(spark, spark.read.parquet(transcripts_path), root,
+                          n_buckets=N_BUCKETS, salt=2,
+                          only_buckets=[0, 1, 2, 3])
+    new_files = set(glob.glob(os.path.join(lin, "*.parquet"))) - old_files
+    assert old_files and new_files and run.buckets_done
+
+    old_schema = pq.read_schema(min(old_files))
+    for f in new_files:
+        assert pq.read_schema(f).equals(old_schema, check_metadata=True), f
+        assert spark.read.parquet(f).dtypes == [
+            ("part_bucket", "int"), ("input_rows", "bigint"),
+            ("input_bytes", "bigint"), ("output_rows", "bigint"),
+            ("error_rows", "bigint"), ("wall_ms", "bigint"),
+            ("n_buckets", "int"), ("extractor_version", "string"),
+            ("run_id", "string"), ("finished_ts", "timestamp")]
+    assert run.buckets_skipped == [4, 5, 6, 7]
+    assert catalog.completed_buckets(
+        spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS) == sorted(
+        set(run.buckets_done) | {4, 5, 6, 7})
