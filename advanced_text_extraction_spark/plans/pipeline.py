@@ -22,7 +22,8 @@
                              conv_id, turn)    sort, no second exchange]
       → overwrite extracted/ per bucket + append lineage/  (run_extract_job;
                                                lineage from an Arrow table,
-                                               a local relation: no Python)
+                                               a local relation: no Python;
+                                               one file per run)
 
 Scale design notes (10^12 turns, 1000 executors):
 - The ONLY shuffle is the part_bucket repartition; everything else is
@@ -235,7 +236,10 @@ def run_extract_job(
             "run_id": F.lit(run_id),
             "finished_ts": F.current_timestamp(),
         })
-        catalog.append_lineage(lineage, out_root)
+        # one task and one file per run: a local relation is otherwise
+        # written one task and one file per row, up to the core count, and
+        # the resume probe reads lineage file by file
+        catalog.append_lineage(lineage.coalesce(1), out_root)
         input_rows = sum(r[1] for r in lineage_rows)
     return RunStats(run_id, [r[0] for r in lineage_rows], skipped,
                     input_rows, time.time() - t0)

@@ -8,10 +8,12 @@ Replaces the reference's SQLite cache table
   the idempotent overwrite becomes ``INSERT OVERWRITE``/``MERGE INTO`` on
   ``(conv_id, turn_idx, extractor_version)`` — reference upsert analog
   /root/reference/text_extractor.py:1018-1033,823).
-- ``lineage/``    — one row per completed bucket per run (SURVEY §1.2):
-  drives idempotent checkpoint resume via completed-bucket skip, the Spark
-  analog of the reference's md5-keyed cache probe
-  (/root/reference/text_extractor.py:842-847,1041-1074).
+- ``lineage/``    — one row per completed bucket per run, one file per
+  run (SURVEY §1.2): drives idempotent checkpoint resume via
+  completed-bucket skip, the Spark analog of the reference's md5-keyed
+  cache probe (reference text_extractor.py:842-847,1041-1074).
+  It is metadata: the probe reads it per file on the driver with pyarrow
+  and launches no Spark job.
 
 The sandbox ships no Iceberg runtime jar, so the default engine is plain
 Parquet with dynamic partition overwrite — semantics are identical for
@@ -20,6 +22,7 @@ this job because the write unit IS the partition.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +55,42 @@ def read_extracted(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(extracted_path(root))
 
 
+def _parquet_files(path: str, caller: str, degraded: str):
+    """The pyarrow filesystem under ``path`` and its ``.parquet`` files,
+    listed in one recursive call. Files under a ``_``/``.``-prefixed name
+    (``_SUCCESS``, ``.crc``, the ``_temporary/`` of an unfinished write)
+    are skipped, as Spark's own file index skips them.
+
+    Filesystem access goes through ``pyarrow.fs.FileSystem.from_uri`` so
+    the same code reads ``file://``, ``s3://``, ``hdfs://`` … warehouses.
+    A path with a scheme pyarrow cannot mount (e.g. ``s3a://`` — Hadoop's
+    spelling; pyarrow only knows ``s3://`` — or ``hdfs://`` without
+    libhdfs) logs that ``caller`` runs ``degraded`` and returns
+    ``(None, [])``; it must NOT be silently probed as a local dir."""
+    from pyarrow import fs as pafs
+
+    try:
+        filesystem, base = pafs.FileSystem.from_uri(path)
+    except Exception as exc:
+        # the local fallback is ONLY for scheme-less local paths (pyarrow
+        # rejects relative paths in from_uri)
+        if "://" in path:
+            logging.getLogger(__name__).warning(
+                "%s: pyarrow cannot mount %s (%s); %s — map the warehouse "
+                "scheme to a pyarrow filesystem (s3a:// -> s3://)",
+                caller, path, exc, degraded)
+            return None, []
+        filesystem = pafs.LocalFileSystem()
+        base = os.path.abspath(path)
+    selector = pafs.FileSelector(base, recursive=True, allow_not_found=True)
+    files = [
+        info.path for info in filesystem.get_file_info(selector)
+        if info.type == pafs.FileType.File and info.path.endswith(".parquet")
+        and not any(name.startswith(("_", ".")) for name in
+                    info.path[len(base):].split("/"))]
+    return filesystem, files
+
+
 def bucket_row_counts(root: str,
                       buckets: set[int] | None = None) -> dict[int, int]:
     """Rows on disk per bucket, from parquet FOOTER metadata only — no
@@ -67,62 +106,25 @@ def bucket_row_counts(root: str,
     per-file round-trip latency, and the counts would be discarded
     anyway). The directory listing itself stays one recursive call.
 
-    Filesystem access goes through ``pyarrow.fs.FileSystem.from_uri`` so
-    the same code reads footers on ``file://``, ``s3://``, ``hdfs://`` …
-    warehouses (r1 flagged the old ``os.listdir`` as local-FS-only)."""
+    On a warehouse pyarrow cannot mount this warns and returns ``{}``,
+    and lineage falls back to the retry-inflatable accumulator counts."""
     import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
 
-    base = extracted_path(root)
-    try:
-        filesystem, base_path = pafs.FileSystem.from_uri(base)
-    except Exception as exc:
-        # The local fallback is ONLY for scheme-less local paths (pyarrow
-        # rejects relative paths in from_uri). A path WITH a scheme that
-        # pyarrow can't mount (e.g. s3a:// — Hadoop's spelling; pyarrow
-        # only knows s3://) must NOT be silently probed as a local dir:
-        # that returns {} and quietly degrades lineage output_rows to the
-        # retry-inflatable accumulator count. Surface it instead.
-        if "://" in base:
-            import logging
-            logging.getLogger(__name__).warning(
-                "bucket_row_counts: pyarrow cannot mount %s (%s); "
-                "falling back to accumulator row counts for lineage — "
-                "map the warehouse scheme to a pyarrow filesystem "
-                "(s3a:// -> s3://) for footer-authoritative counts",
-                base, exc)
-            return {}
-        filesystem = pafs.LocalFileSystem()
-        base_path = os.path.abspath(base)
+    filesystem, files = _parquet_files(
+        extracted_path(root), "bucket_row_counts",
+        "falling back to accumulator row counts for lineage")
     counts: dict[int, int] = {}
-    selector = pafs.FileSelector(base_path, recursive=True,
-                                 allow_not_found=True)
-    for info in filesystem.get_file_info(selector):
-        if info.type != pafs.FileType.File \
-                or not info.path.endswith(".parquet"):
-            continue
-        parts = [s for s in info.path.split("/")
-                 if s.startswith("part_bucket=")]
+    for path in files:
+        parts = [s for s in path.split("/") if s.startswith("part_bucket=")]
         if not parts:
             continue
         b = int(parts[-1].split("=", 1)[1])
         if buckets is not None and b not in buckets:
             continue
-        with filesystem.open_input_file(info.path) as f:
+        with filesystem.open_input_file(path) as f:
             counts[b] = counts.get(b, 0) + pq.ParquetFile(f) \
                 .metadata.num_rows
     return counts
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — resolves the
-    path's scheme (file://, hdfs://, s3a://, …) against the session's
-    Hadoop conf, so resume works on any warehouse a real cluster mounts
-    (r1 flagged the old ``os.path.exists`` as local-FS-only)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
 
 
 def completed_buckets(spark: SparkSession, root: str,
@@ -135,60 +137,58 @@ def completed_buckets(spark: SparkSession, root: str,
     --n-buckets must not satisfy the skip probe (it would silently skip
     the whole input while extracting nothing).
 
-    Legacy lineage without the n_buckets column is treated as NOT
-    completed (a warning, then a harmless re-extract — the per-bucket
-    overwrite is idempotent; wrongly skipping is the unsafe direction).
+    Lineage is tiny (one file per run, one row per bucket), so it is read
+    on the driver with pyarrow and launches no Spark job: per file, the
+    footer schema, then only ``part_bucket``, ``extractor_version`` and
+    ``n_buckets``. The rule is per file, so a long-lived warehouse may
+    mix lineage from several engine versions: a legacy file without the
+    n_buckets column adds nothing when ``n_buckets`` is given, and a dir
+    where NO file carries the column logs a warning and returns ``[]``.
+    Wrongly skipping is the unsafe direction; a re-extract is harmless,
+    because the per-bucket overwrite is idempotent. For the same reason
+    a missing lineage dir, or a warehouse pyarrow cannot mount (a
+    warning: resume is off for this run), returns ``[]``. ``spark`` is
+    unused and kept for callers.
 
-    Lineage is tiny (one row per bucket per run) — collecting the bucket
-    ids to the driver gives Catalyst a partition-pruning ``NOT IN`` filter
-    on the scan, strictly cheaper than the row-level anti-join
-    (which remains available via :func:`resume_anti_join`).
+    The caller turns the ids into a partition-pruning ``NOT IN`` filter
+    on the scan (``flagship_plan(skip_buckets=)``,
+    :func:`resume_anti_join`).
     """
+    import pyarrow.parquet as pq
+
     path = lineage_path(root)
-    if not _fs_exists(spark, path):  # Iceberg: catalog.tableExists
-        return []
-    # mergeSchema: a long-lived warehouse accumulates lineage files from
-    # several engine versions; plain read.parquet samples ONE file's
-    # schema, so a single legacy file (pre-n_buckets) would hide the
-    # column carried by every NEW file and permanently disable resume
-    # for the whole table (observed on a mid-r2 warehouse). Merged,
-    # legacy rows read n_buckets as null and fail the filter below —
-    # exactly "treat unverifiable rows as incomplete". Lineage is tiny,
-    # so the extra footer reads are noise.
-    lineage = spark.read.option("mergeSchema", "true").parquet(path)
-    done = lineage.filter(F.col("extractor_version") == extractor_version)
-    if n_buckets is not None:
-        if "n_buckets" not in lineage.columns:
-            import logging
-            logging.getLogger(__name__).warning(
-                "completed_buckets: lineage at %s predates the n_buckets "
-                "column; treating prior runs as incomplete (idempotent "
-                "re-extract) rather than risking a wrong-bucketing skip",
-                path)
-            return []
-        done = done.filter(F.col("n_buckets") == n_buckets)
-    rows = done.select("part_bucket").distinct().collect()
-    return sorted(r[0] for r in rows)
+    filesystem, files = _parquet_files(
+        path, "completed_buckets", "resume is off for this run")
+    done: set[int] = set()
+    stamped = False
+    for file in files:
+        with filesystem.open_input_file(file) as f:
+            pf = pq.ParquetFile(f)
+            has_n_buckets = "n_buckets" in pf.schema_arrow.names
+            stamped |= has_n_buckets
+            if n_buckets is not None and not has_n_buckets:
+                continue  # legacy file: its bucketing is unverifiable
+            columns = ["part_bucket", "extractor_version"]
+            if n_buckets is not None:
+                columns.append("n_buckets")
+            rows = pf.read(columns=columns).to_pylist()
+        done.update(r["part_bucket"] for r in rows
+                    if r["extractor_version"] == extractor_version
+                    and (n_buckets is None or r["n_buckets"] == n_buckets))
+    if files and n_buckets is not None and not stamped:
+        logging.getLogger(__name__).warning(
+            "completed_buckets: lineage at %s predates the n_buckets "
+            "column; treating prior runs as incomplete (idempotent "
+            "re-extract) rather than risking a wrong-bucketing skip", path)
+    return sorted(done)
 
 
 def resume_anti_join(df: DataFrame, spark: SparkSession, root: str,
                      extractor_version: str,
                      n_buckets: int | None = None) -> DataFrame:
-    """Row-level variant of the resume filter (SURVEY §2.5 J1): broadcast
-    LEFT ANTI JOIN against lineage — used when buckets can be partially
-    written (e.g. streaming backfill), at the cost of a broadcast.
-    Keyed on n_buckets like :func:`completed_buckets` — bucket ids from
-    a different bucketing never match."""
-    if not _fs_exists(spark, lineage_path(root)):
-        return df
-    # mergeSchema for the same reason as completed_buckets: one legacy
-    # file must not hide n_buckets from the whole table
-    lineage = spark.read.option("mergeSchema", "true") \
-        .parquet(lineage_path(root))
-    done = lineage.filter(F.col("extractor_version") == extractor_version)
-    if n_buckets is not None:
-        if "n_buckets" not in lineage.columns:
-            return df  # legacy lineage: never skip on unverifiable rows
-        done = done.filter(F.col("n_buckets") == n_buckets)
-    return df.join(F.broadcast(done.select("part_bucket").distinct()),
-                   "part_bucket", "left_anti")
+    """Bucket-level resume filter (SURVEY §2.5 J1) on a DataFrame that
+    already carries ``part_bucket``: drops the rows of every bucket
+    :func:`completed_buckets` reports done, as a ``NOT IN`` filter, or
+    returns ``df`` unchanged when none is done."""
+    done = completed_buckets(spark, root, extractor_version, n_buckets)
+    return df.filter(~F.col("part_bucket").isin(done)) if done else df

@@ -1,6 +1,6 @@
 """Direct tests for module surface flagged untested in VERDICT r1 #7:
 ``with_confidence_filter`` (P6), ``history_top_n`` (W2 module twin),
-``resume_anti_join`` (J1 row-level variant) — plus the r2 scale levers in
+``resume_anti_join`` (J1 bucket-level filter) — plus the r2 scale levers in
 ``similarity`` (parameterized n_bits, multi-band recall union,
 recommended_n_bits sizing)."""
 
@@ -56,7 +56,7 @@ def test_history_top_n(spark):
 
 
 # ---------------------------------------------------------------------------
-# J1 — row-level resume anti-join
+# J1 — bucket-level resume filter
 # ---------------------------------------------------------------------------
 
 def test_resume_anti_join(spark, transcripts_path, tmp_path):

@@ -7,6 +7,12 @@ anti-probe — reference md5 cache-hit analog text_extractor.py:842-847)."""
 
 from __future__ import annotations
 
+import glob
+import logging
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from advanced_text_extraction_spark.operators.extract import EXTRACTOR_VERSION
@@ -14,6 +20,11 @@ from advanced_text_extraction_spark.plans.pipeline import run_extract_job
 from advanced_text_extraction_spark.sources import catalog
 
 N_BUCKETS = 8
+
+
+def _lineage_files(root) -> set[str]:
+    return set(glob.glob(os.path.join(catalog.lineage_path(root),
+                                      "*.parquet")))
 
 
 @pytest.fixture(scope="module")
@@ -84,16 +95,10 @@ def test_resume_keyed_on_n_buckets(spark, roots):
 def test_resume_survives_legacy_lineage_files(spark, roots):
     """Schema evolution: a lineage dir holding BOTH legacy files (written
     before the n_buckets column existed) and modern files must still
-    satisfy the skip probe — plain read.parquet samples one file's
-    schema, so without mergeSchema a single legacy file can hide
-    n_buckets from the whole table and permanently disable resume
-    (observed on a mid-r2 warehouse via the spark-submit surface)."""
-    import glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    satisfy the skip probe. The probe's rule is per file, so one legacy
+    file cannot hide n_buckets from the whole table and permanently
+    disable resume (observed on a mid-r2 warehouse via the spark-submit
+    surface, when the probe read the dir under one sampled schema)."""
     df, root = roots  # warehouse completed at N_BUCKETS=8 by earlier tests
     done = catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
                                      n_buckets=N_BUCKETS)
@@ -126,14 +131,9 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
     """Lineage written from an Arrow table keeps the schema of lineage
     written from a tuple list, which existing warehouses hold, and the
     resume probe reads both runs' buckets from one lineage dir."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "wh")
-    lin = catalog.lineage_path(root)
     # the tuple-list lineage writer, as earlier versions ran it
     catalog.append_lineage(spark.createDataFrame(
         [(b, 10, 100, 10, 0, 5) for b in (4, 5, 6, 7)],
@@ -143,11 +143,11 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
                    "extractor_version": F.lit(EXTRACTOR_VERSION),
                    "run_id": F.lit("run-tuples"),
                    "finished_ts": F.current_timestamp()}), root)
-    old_files = set(glob.glob(os.path.join(lin, "*.parquet")))
+    old_files = _lineage_files(root)
     run = run_extract_job(spark, spark.read.parquet(transcripts_path), root,
                           n_buckets=N_BUCKETS, salt=2,
                           only_buckets=[0, 1, 2, 3])
-    new_files = set(glob.glob(os.path.join(lin, "*.parquet"))) - old_files
+    new_files = _lineage_files(root) - old_files
     assert old_files and new_files and run.buckets_done
 
     old_schema = pq.read_schema(min(old_files))
@@ -163,3 +163,84 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
     assert catalog.completed_buckets(
         spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS) == sorted(
         set(run.buckets_done) | {4, 5, 6, 7})
+
+
+def test_resume_probe_and_lineage_append_launch_no_extra_work(
+        spark, transcripts_path, tmp_path):
+    """Lineage is metadata: the resume probe reads it on the driver and
+    launches no Spark job, and a run appends ONE lineage file whatever
+    its number of buckets (a local relation is otherwise written one
+    task and one file per row), so the probe's reads grow by one file
+    per run."""
+    df, root = spark.read.parquet(transcripts_path), str(tmp_path / "wh")
+    run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2,
+                    only_buckets=[0, 1, 2, 3])
+    sc, group = spark.sparkContext, "test-resume-probe-jobs"
+    sc.setJobGroup(group, "completed_buckets")
+    try:
+        done = catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                         N_BUCKETS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = spark._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(spark._jvm.java.util.ArrayList())
+    in_group = [jobs.apply(i).jobId() for i in range(jobs.size())
+                if jobs.apply(i).jobGroup().isDefined()
+                and jobs.apply(i).jobGroup().get() == group]
+    assert done and in_group == []
+
+    before = _lineage_files(root)
+    run = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    assert run.buckets_skipped == done and len(run.buckets_done) > 1
+    assert len(_lineage_files(root) - before) == 1
+
+
+def _forge_lineage(path, buckets, version=EXTRACTOR_VERSION,
+                   n_buckets=None) -> None:
+    """A lineage file holding only the columns the probe reads; without
+    ``n_buckets`` it has the legacy schema, which predates that column."""
+    cols = {"part_bucket": pa.array(buckets, pa.int32()),
+            "extractor_version": pa.array([version] * len(buckets))}
+    if n_buckets is not None:
+        cols["n_buckets"] = pa.array([n_buckets] * len(buckets), pa.int32())
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table(cols), path)
+
+
+def test_legacy_lineage_of_this_version_is_not_done(spark, tmp_path,
+                                                    caplog):
+    """A legacy file stamped with the CURRENT extractor version adds no
+    bucket when n_buckets is given (its bucketing is unverifiable), while
+    with n_buckets=None legacy and modern rows count alike; files under a
+    ``_``-prefixed name (an unfinished write's ``_temporary/``) are not
+    lineage."""
+    root = str(tmp_path / "wh")
+    lin = catalog.lineage_path(root)
+    _forge_lineage(os.path.join(lin, "part-00000-legacy.parquet"), [2, 3])
+    with caplog.at_level(logging.WARNING, logger=catalog.__name__):
+        assert catalog.completed_buckets(
+            spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS) == []
+    assert "predates the n_buckets column" in caplog.text
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION) \
+        == [2, 3]
+
+    _forge_lineage(os.path.join(lin, "part-00001-modern.parquet"), [0, 1],
+                   n_buckets=N_BUCKETS)
+    _forge_lineage(os.path.join(lin, "_temporary", "0", "part-x.parquet"),
+                   [5], n_buckets=N_BUCKETS)
+    assert catalog.completed_buckets(
+        spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS) == [0, 1]
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION) \
+        == [0, 1, 2, 3]
+
+
+def test_unmountable_warehouse_turns_resume_off(spark, caplog):
+    """A warehouse scheme pyarrow cannot mount is never probed as a local
+    dir: the probe warns and returns [], so the run re-extracts
+    (idempotent) instead of failing."""
+    with caplog.at_level(logging.WARNING, logger=catalog.__name__):
+        assert catalog.completed_buckets(
+            spark, "s3a://bucket/wh", EXTRACTOR_VERSION, N_BUCKETS) == []
+    assert "resume is off for this run" in caplog.text
