@@ -33,24 +33,6 @@ from ..kernels.sniff import sniff_content_type
 EXTRACTOR_VERSION = "ate-spark/0.1"
 MAX_PAYLOAD_CHARS = 2_000_000
 
-# P3 OCR-fallback extension point (reference text_extractor.py:501-507,
-# 575-610): when a PDF's text layer fails the >50-char gate the reference
-# re-renders pages and OCRs them. No OCR engine ships in this sandbox, so
-# the hook is None by default — the gate result is still recorded in
-# metadata['text_layer'] and a deployment with an OCR engine registers
-# `ocr_fallback = fn(pdf_bytes) -> (text, confidence)`; per-worker lazy
-# engine init belongs inside fn (reference eager-init analog :315-325).
-ocr_fallback = None
-# Engine name the kernel last armed IN THIS PROCESS ("" = never armed by
-# a kernel). Spark reuses Python workers across jobs by default
-# (spark.python.worker.reuse), so module state outlives a job — the
-# kernel re-arms (or disarms) whenever its engine setting differs from
-# what this process last armed, instead of a sticky install-once guard
-# that would let job A's engine leak into job B.
-# (engine, preprocess, confidence_threshold) tuple, None (disarmed), or
-# "" = never armed by a kernel in this process
-_armed_engine: tuple | None | str = ""
-
 SPAN_TYPE = T.ArrayType(
     T.StructType([
         T.StructField("block_idx", T.IntegerType(), False),
@@ -88,9 +70,16 @@ def _span_dicts(spans) -> list[dict]:
 
 
 def extract_one(payload: str | None,
-                max_chars: int = MAX_PAYLOAD_CHARS) -> dict:
+                max_chars: int = MAX_PAYLOAD_CHARS,
+                ocr_fallback=None) -> dict:
     """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch).
-    ``max_chars`` is the config extract.max_payload_chars cap."""
+    ``max_chars`` is the config extract.max_payload_chars cap.
+
+    ``ocr_fallback`` is the P3 hook (reference text_extractor.py:501-507,
+    575-610): ``fn(pdf_bytes) -> (text, confidence)``, called when a PDF's
+    text layer fails the >50-char gate; ``operators.ocr.pdf_ocr_fallback``
+    builds one. Without it the gate result is still recorded in
+    metadata['text_layer']."""
     raw = payload or ""
     truncated = len(raw) > max_chars
     if truncated:
@@ -216,39 +205,14 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     corpus must not report 30% fewer input rows)."""
 
     def _extract_batches(batches):
-        # Arm the P3 OCR hook IN THIS PROCESS: the kernel runs in Spark's
-        # Python workers, so a driver-side install_pdf_ocr_fallback()
-        # call would only set the driver's module global. The engine name
-        # is a plain string, so the closure stays picklable. Workers are
-        # REUSED across jobs — arm/disarm on engine change, never
-        # install-once (a sticky install would leak job A's engine, or a
-        # disabled=None setting, into job B on reused workers while fresh
-        # workers obey the new setting — nondeterministic per-row
-        # behavior within one job).
-        #
-        # The armed-state MUST be read through an explicit module import,
-        # not a `global` reference: cloudpickle ships a nested closure's
-        # referenced globals BY VALUE, so a `global _armed_engine` here
-        # would compare the DRIVER's value (e.g. set by a driver-side
-        # install call) instead of this worker process's — skipping the
-        # arm step on fresh workers. Modules pickle by reference, so the
-        # attribute lookup below always hits the executing process's
-        # real state.
-        from advanced_text_extraction_spark.operators import (
-            extract as _self)
-        armed_key = (None if ocr_fallback_engine is None else
-                     (ocr_fallback_engine, ocr_preprocess,
-                      ocr_confidence_threshold))
-        if _self._armed_engine != armed_key:
-            if ocr_fallback_engine is None:
-                _self.ocr_fallback = None
-                _self._armed_engine = None
-            else:
-                from .ocr import install_pdf_ocr_fallback
-                install_pdf_ocr_fallback(
-                    engine=ocr_fallback_engine,
-                    preprocess=ocr_preprocess,
-                    confidence_threshold=ocr_confidence_threshold)
+        # the P3 hook is built here, once per task, so a worker with no
+        # engine never imports the OCR stack
+        ocr_fallback = None
+        if ocr_fallback_engine is not None:
+            from .ocr import pdf_ocr_fallback
+            ocr_fallback = pdf_ocr_fallback(ocr_fallback_engine,
+                                            ocr_preprocess,
+                                            ocr_confidence_threshold)
         seen: set | None = set() if dedupe_keys else None
         for pdf in batches:
             if stats_acc is not None and bucket_col in pdf.columns:
@@ -279,7 +243,8 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
             clock = time.perf_counter_ns
             for payload in pdf["text"]:
                 t0 = clock()
-                recs.append(extract_one(payload, max_payload_chars))
+                recs.append(extract_one(payload, max_payload_chars,
+                                        ocr_fallback))
                 row_us.append((clock() - t0) // 1000)
             out = pdf.copy()
             for col in ("content_type", "extracted_text", "spans",
@@ -311,14 +276,14 @@ def extract(df: DataFrame,
 
     The payload column must be named ``text``. All input columns are
     carried through; SPEC.md §6 columns are appended. Partitioning is the
-    caller's concern (see ``plans/pipeline.py`` for the salted layout).
+    caller's concern (see ``plans/pipeline.py`` for the bucket layout).
     ``dedupe_keys`` enables partition-local dedupe (see _make_kernel —
     only exact when copies are co-located by the upstream exchange).
     ``stats_acc`` (see :func:`new_stats_accumulator`) collects per-bucket
     lineage stats as a side output of the extraction pass.
-    ``ocr_fallback_engine`` (e.g. ``'auto'``/``'template'``) arms the P3
-    scanned-PDF OCR fallback inside each Python worker (SPEC §4/§4c) —
-    the worker-safe form of ``operators.ocr.install_pdf_ocr_fallback``;
+    ``ocr_fallback_engine`` (e.g. ``'auto'``/``'template'``) turns on the
+    P3 scanned-PDF OCR fallback (SPEC §4/§4c): each task builds it with
+    ``operators.ocr.pdf_ocr_fallback`` and passes it to ``extract_one``;
     ``ocr_preprocess`` and ``ocr_confidence_threshold`` are the config
     ocr.preprocess / extract.confidence_threshold knobs (a below-threshold
     OCR result is rejected and the short text layer kept);

@@ -5,9 +5,10 @@ Reference analogs:
   ``ocr_images`` — decode raster payloads, preprocess, recognize; one
   fixed-schema row per image, failure-as-data.
 - PDF OCR source S5 (:575-610): ``pdf_ocr_pages`` + the
-  ``install_pdf_ocr_fallback`` hook that arms the extraction operator's
-  P3 gate (text layer <= 50 chars -> OCR the page images, '\\n\\n' page
-  join, mean page confidence :601-603).
+  ``pdf_ocr_fallback`` factory, whose callable the extraction kernel
+  passes to ``extract_one`` for the P3 gate (text layer <= 50 chars ->
+  OCR the page images, '\\n\\n' page join, mean page confidence
+  :601-603).
 - A6 token-confidence mean (:431-437): ``token_confidence_stats`` —
   explode + filter(conf > 0) + avg/100, the columnar re-expression of the
   tesseract dict aggregation.
@@ -34,7 +35,6 @@ from pyspark.sql import types as T
 from ..kernels.image_codec import decode_image, decode_raw_gray
 from ..kernels.ocr import normalize_to_charset, ocr_image, render_page
 from ..kernels.pdf_extract import extract_page_images
-from . import extract as extract_mod
 
 OCR_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -120,15 +120,12 @@ def ocr_pdf_bytes(pdf_bytes: bytes, engine: str = "auto",
     return text, conf, page_confs
 
 
-def install_pdf_ocr_fallback(engine: str = "auto",
-                             preprocess: bool = True,
-                             confidence_threshold: float = 0.0) -> None:
-    """Arm the extraction operator's P3 hook: PDFs whose text layer fails
-    the >50-char gate get their page images OCR'd (reference auto method
-    :501-507). Idempotent per setting tuple; the extraction kernel calls
-    this in each (possibly REUSED) Spark Python worker whenever the
-    process's armed settings differ from the job's, so per-job arming
-    stays deterministic across worker reuse.
+def pdf_ocr_fallback(engine: str = "auto", preprocess: bool = True,
+                     confidence_threshold: float = 0.0):
+    """The P3 hook for ``extract_one(..., ocr_fallback=)``: PDFs whose
+    text layer fails the >50-char gate get their page images OCR'd
+    (reference auto method :501-507). Returns
+    ``fn(pdf_bytes) -> (text, confidence)`` and changes no state.
 
     ``confidence_threshold`` is the reference ocr.confidence_threshold
     gate (text_extractor.py:784): an OCR result below it is REJECTED —
@@ -142,8 +139,7 @@ def install_pdf_ocr_fallback(engine: str = "auto",
                 f"ocr confidence {conf:.3f} below threshold "
                 f"{confidence_threshold}")
         return text, conf
-    extract_mod.ocr_fallback = _fallback
-    extract_mod._armed_engine = (engine, preprocess, confidence_threshold)
+    return _fallback
 
 
 PDF_PAGE_OCR_SCHEMA = T.StructType([

@@ -21,7 +21,8 @@ logger = logging.getLogger(__name__)
 # reference default_config analog (text_extractor.py:780-795); sections
 # renamed to their Spark equivalents documented in SURVEY §2:
 # ocr.confidence_threshold → extract.confidence_threshold (P6),
-# batch.max_workers/chunk_size → job.shuffle_partitions / arrow batch (C3),
+# batch.max_workers → the session's cores (sources/session.py),
+# batch.chunk_size → job.arrow_batch_rows (C3),
 # database.path → warehouse.path (K1)
 DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
     "extract": {
@@ -40,8 +41,6 @@ DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
     },
     "job": {
         "n_buckets": 32,
-        "salt": 4,
-        "shuffle_partitions": None,    # None → session default
         "arrow_batch_rows": 1024,      # batch.chunk_size analog (C3)
         "resume": True,
     },

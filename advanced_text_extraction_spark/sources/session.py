@@ -30,23 +30,16 @@ def driver_memory() -> str:
 def build_session(
     app_name: str = "advanced_text_extraction_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     arrow_batch_rows: int = 1024,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = host_cpus()
-    master = master or f"local[{cpus}]"
-    n_threads = int(master[6:-1]) if master.startswith("local[") and master[6:-1].isdigit() else cpus
-    shuffle_partitions = shuffle_partitions or max(n_threads, 8)
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(master or f"local[{host_cpus()}]")
         # AQE: runtime coalescing + skew-split backstop (SURVEY §4.2)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow exchange for pandas UDFs; bounded batches keep the Python
         # worker memory flat regardless of payload skew (SURVEY §2.13 C3)
@@ -68,4 +61,8 @@ def build_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # the exchange's starting width, from the cores the session got;
+    # AQE coalesces it to what the data needs
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism, 8)))
     return spark

@@ -179,8 +179,7 @@ def main() -> int:
     from advanced_text_extraction_spark.plans.pipeline import flagship_plan
     from advanced_text_extraction_spark.sources.session import build_session
 
-    spark = build_session(app_name="explain", master="local[2]",
-                          shuffle_partitions=8)
+    spark = build_session(app_name="explain", master="local[2]")
     qs = em.queries()
 
     def formatted(df) -> str:

@@ -3,7 +3,7 @@
 
     spark-submit --py-files dist/ate_spark.zip scripts/run_extract.py \
         --input /path/to/transcripts_parquet --output /path/to/warehouse \
-        [--n-buckets 32] [--salt 4] [--no-resume] [--master local[32]]
+        [--n-buckets 32] [--no-resume] [--master local[32]]
 
 Reads the transcript table (BASELINE.json:input_hint shape), runs the
 extraction pipeline (plans/pipeline.py), writes ``extracted/`` +
@@ -28,17 +28,8 @@ def main(argv: list[str] | None = None) -> int:
                          "(reference text_extractor.py:778-803 contract); "
                          "explicit CLI flags override config values")
     ap.add_argument("--n-buckets", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=None,
-                    help="accepted for compatibility: the extraction "
-                         "exchange hashes the bucket alone, one task and "
-                         "one output file per bucket")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="spark.sql.shuffle.partitions: the starting width "
-                         "of the extraction exchange, which AQE coalesces "
-                         "down to what the data needs; it caps the Python "
-                         "tasks, it does not set their count")
     ap.add_argument("--ocr-fallback", default=None,
                     help="OCR engine for the scanned-PDF P3 fallback "
                          "(default config ocr.fallback_engine, 'auto'); "
@@ -63,16 +54,14 @@ def main(argv: list[str] | None = None) -> int:
                   "path", DEFAULT_CONFIG["warehouse"]["path"]))
     n_buckets = (args.n_buckets if args.n_buckets is not None
                  else job.get("n_buckets", job_d["n_buckets"]))
-    salt = args.salt if args.salt is not None else job.get("salt", job_d["salt"])
-    shuffle = (args.shuffle_partitions if args.shuffle_partitions is not None
-               else job.get("shuffle_partitions"))
-    resume = job.get("resume", True) and not args.no_resume
+    resume = job.get("resume", job_d["resume"]) and not args.no_resume
     ocr_cfg = cfg.get("ocr", {})
     ocr_d = DEFAULT_CONFIG["ocr"]
     ext_cfg = cfg.get("extract", {})
     ext_d = DEFAULT_CONFIG["extract"]
     ocr_engine = (args.ocr_fallback if args.ocr_fallback is not None
-                  else ocr_cfg.get("fallback_engine", "auto"))
+                  else ocr_cfg.get("fallback_engine",
+                                   ocr_d["fallback_engine"]))
     if ocr_engine in ("none", ""):
         ocr_engine = None
     ocr_preprocess = bool(ocr_cfg.get("preprocess", ocr_d["preprocess"]))
@@ -82,14 +71,13 @@ def main(argv: list[str] | None = None) -> int:
         "max_payload_chars", ext_d["max_payload_chars"]))
 
     spark = build_session(app_name="ate-extract", master=args.master,
-                          shuffle_partitions=shuffle,
-                          arrow_batch_rows=job.get("arrow_batch_rows", 1024))
+                          arrow_batch_rows=job.get("arrow_batch_rows",
+                                                   job_d["arrow_batch_rows"]))
     try:
         df = spark.read.parquet(args.input)
         stats = run_extract_job(
             spark, df, output,
-            n_buckets=n_buckets, salt=salt,
-            resume=resume,
+            n_buckets=n_buckets, resume=resume,
             ocr_fallback_engine=ocr_engine,
             ocr_preprocess=ocr_preprocess,
             ocr_confidence_threshold=conf_threshold,

@@ -90,7 +90,7 @@ def test_stats_accumulator_collects_per_bucket():
     assert all(v[4] >= 0 for v in acc.value.values())  # wall_us
 
 
-def test_pdf_ocr_fallback_hook(monkeypatch):
+def test_pdf_ocr_fallback_hook():
     """P3 gate + OCR fallback extension point (reference
     text_extractor.py:501-507,575-610): without a registered engine the
     short text layer is kept and flagged; with one, its text and mean
@@ -112,8 +112,7 @@ def test_pdf_ocr_fallback_hook(monkeypatch):
         assert pdf_bytes.startswith(b"%PDF")
         return "recovered by ocr " * 10, 0.81
 
-    monkeypatch.setattr(X, "ocr_fallback", fake_ocr)
-    out = X.extract_one(payload)
+    out = X.extract_one(payload, ocr_fallback=fake_ocr)
     assert calls, "fallback not invoked on short text layer"
     assert out["metadata"]["text_layer"] == "ocr"
     assert out["extracted_text"].startswith("recovered by ocr")
@@ -121,7 +120,7 @@ def test_pdf_ocr_fallback_hook(monkeypatch):
     # a healthy text layer never triggers OCR
     calls.clear()
     healthy = gen_pdf_payload(random.Random(6), short=False)
-    X.extract_one(healthy)
+    X.extract_one(healthy, ocr_fallback=fake_ocr)
     assert not calls
 
 

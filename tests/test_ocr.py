@@ -22,7 +22,7 @@ from advanced_text_extraction_spark.kernels.pdf_extract import (
     extract_page_images, extract_pdf)
 from advanced_text_extraction_spark.operators import extract as extract_mod
 from advanced_text_extraction_spark.operators.ocr import (
-    install_pdf_ocr_fallback, ocr_images, ocr_pdf_bytes, ocr_roundtrip,
+    ocr_images, ocr_pdf_bytes, ocr_roundtrip, pdf_ocr_fallback,
     pdf_ocr_pages, page_confidence_stats, token_confidence_stats)
 from fixtures.gen import build_scanned_pdf, gen_scanned_pdf_payload
 
@@ -252,8 +252,7 @@ def test_scanned_pdf_page_images_and_ocr():
     assert gate == "short" and n_pages == 2
 
 
-def test_extract_one_ocr_fallback(monkeypatch):
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
+def test_extract_one_ocr_fallback():
     rng = random.Random(11)
     payload, expected = gen_scanned_pdf_payload(rng)
     # without the hook: short text layer, empty text
@@ -261,25 +260,19 @@ def test_extract_one_ocr_fallback(monkeypatch):
     assert rec["metadata"]["text_layer"] == "short"
     assert rec["extracted_text"].strip() == ""  # '\n\n' page joins only
     # with the hook: OCR text replaces it, engine confidence replaces 0.95
-    install_pdf_ocr_fallback()
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(payload, ocr_fallback=pdf_ocr_fallback())
     assert rec["metadata"]["text_layer"] == "ocr"
     assert rec["extracted_text"] == expected
     assert 0.5 < rec["confidence"] <= 1.0
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
 
 
 def test_text_layer_pdf_unaffected_by_fallback():
     rng = random.Random(5)
     from fixtures.gen import gen_pdf_payload
-    install_pdf_ocr_fallback()
-    try:
-        payload = gen_pdf_payload(rng)
-        rec = extract_mod.extract_one(payload)
-        assert rec["metadata"]["text_layer"] == "ok"
-        assert rec["confidence"] == 0.95
-    finally:
-        extract_mod.ocr_fallback = None
+    payload = gen_pdf_payload(rng)
+    rec = extract_mod.extract_one(payload, ocr_fallback=pdf_ocr_fallback())
+    assert rec["metadata"]["text_layer"] == "ok"
+    assert rec["confidence"] == 0.95
 
 
 # ---------------------------------------------------------------------------
@@ -344,10 +337,9 @@ def test_ocr_roundtrip_operator(spark):
 
 
 def test_ocr_fallback_arms_inside_spark_workers(spark):
-    """Regression: the P3 hook must arm in the Python WORKERS, not just
-    the driver — a driver-side install_pdf_ocr_fallback() sets only the
-    driver's module global, and workers import the module fresh. The
-    picklable ocr_fallback_engine spec re-installs per worker."""
+    """Regression: the P3 hook must reach the Python WORKERS, and follow
+    each job's setting on reused workers: the picklable
+    ocr_fallback_engine spec builds the fallback inside every task."""
     rng = random.Random(23)
     payload, expected = gen_scanned_pdf_payload(rng)
     rows = [("c", 0, "user", payload, None, None),
@@ -368,33 +360,9 @@ def test_ocr_fallback_arms_inside_spark_workers(spark):
     assert out[0].extracted_text == expected
     assert 0.5 < out[0].confidence <= 1.0
     assert out[1].extracted_text == "plain text turn"
-
-
-def test_arming_ignores_leaked_driver_state(spark):
-    """Regression: a driver-side install_pdf_ocr_fallback() marks the
-    DRIVER's module as armed; cloudpickle ships a closure's referenced
-    globals by value, so a `global`-based guard in the kernel would see
-    the driver's armed-state, conclude 'already armed', and skip arming
-    in a worker whose real module state is unarmed. The kernel must read
-    armed-state through the worker's imported module instead."""
-    rng = random.Random(29)
-    payload, expected = gen_scanned_pdf_payload(rng)
-    # poison the driver: armed-state set, hook reset (the shape any
-    # driver-side install + cleanup leaves behind)
-    install_pdf_ocr_fallback(engine="template")
-    extract_mod.ocr_fallback = None
-    try:
-        df = spark.createDataFrame(
-            [("c", 0, "user", payload, None, None)],
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp")
-        from advanced_text_extraction_spark.operators.extract import extract
-        out = extract(df, ocr_fallback_engine="template").collect()
-        assert out[0].metadata["text_layer"] == "ocr"
-        assert out[0].extracted_text == expected
-    finally:
-        extract_mod._armed_engine = ""
-        extract_mod.ocr_fallback = None
+    # the same reused workers, no engine again: settings stay per job
+    out2 = {r.turn_idx: r for r in extract(df).collect()}
+    assert out2[0].metadata["text_layer"] == "short"
 
 
 def test_run_extract_job_ocr_fallback(spark, tmp_path):
@@ -546,21 +514,19 @@ def test_external_engine_plugs_into_registry(monkeypatch):
 
 
 def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
-    """P3 arming with an explicit engine name must route scanned-PDF
-    pages through the plugged engine — proving a real tesseract would
-    carry the PDF OCR fallback with zero code changes."""
+    """A P3 fallback built with an explicit engine name must route
+    scanned-PDF pages through the plugged engine — proving a real
+    tesseract would carry the PDF OCR fallback with zero code changes."""
     from advanced_text_extraction_spark.kernels import ocr as K
 
-    monkeypatch.setattr(extract_mod, "ocr_fallback", None)
-    monkeypatch.setattr(extract_mod, "_armed_engine", None)
     monkeypatch.setitem(
         K.ENGINES, "tesseract",
         lambda img: ("PLUGGED PAGE TEXT", 0.88, [88.0, 87.0]))
 
     rng = random.Random(11)
     payload, _expected = gen_scanned_pdf_payload(rng)
-    install_pdf_ocr_fallback(engine="tesseract")
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(
+        payload, ocr_fallback=pdf_ocr_fallback(engine="tesseract"))
     assert rec["metadata"]["text_layer"] == "ocr"
     assert "PLUGGED PAGE TEXT" in rec["extracted_text"]
     assert rec["confidence"] == pytest.approx(0.88)
@@ -569,8 +535,8 @@ def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
     # keeps the short-but-valid text layer, recording the rejection
     monkeypatch.setitem(K.ENGINES, "tesseract",
                         lambda img: ("LOW CONF", 0.2, [20.0]))
-    install_pdf_ocr_fallback(engine="tesseract", confidence_threshold=0.5)
-    rec = extract_mod.extract_one(payload)
+    rec = extract_mod.extract_one(payload, ocr_fallback=pdf_ocr_fallback(
+        engine="tesseract", confidence_threshold=0.5))
     assert rec["metadata"]["text_layer"] == "short"
     assert "ocr_error" in rec["metadata"]
 

@@ -71,12 +71,7 @@ def test_failing_ocr_fallback_keeps_short_text_layer():
     def exploding_fallback(pdf_bytes):
         raise ValueError("no raster decodable")
 
-    prev = extract_mod.ocr_fallback
-    extract_mod.ocr_fallback = exploding_fallback
-    try:
-        row = extract_mod.extract_one(payload)
-    finally:
-        extract_mod.ocr_fallback = prev
+    row = extract_mod.extract_one(payload, ocr_fallback=exploding_fallback)
     assert row["status"] == "ok"
     assert "tiny" in row["extracted_text"]
     assert row["metadata"]["text_layer"] == "short"
@@ -148,7 +143,7 @@ def test_partial_config_section_does_not_crash(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "build_session", lambda **kw: _Spark())
 
     cfg = tmp_path / "cfg.json"
-    # 'job' section present but PARTIAL: n_buckets only — salt and the
+    # 'job' section present but PARTIAL: n_buckets only — resume and the
     # rest must fall back to package defaults, not KeyError (the merge
     # is a shallow section replace by reference contract)
     cfg.write_text(json.dumps({"job": {"n_buckets": 7}, "warehouse": {}}))
@@ -156,7 +151,7 @@ def test_partial_config_section_does_not_crash(tmp_path, monkeypatch):
                            "--config", str(cfg)])
     assert rc == 0
     assert calls["n_buckets"] == 7
-    assert calls["salt"] == 4           # package default survived
+    assert calls["resume"] is True      # package default survived
     assert calls["output"] == "warehouse"
 
 
@@ -652,8 +647,7 @@ def test_config_extract_and_ocr_keys_are_wired(tmp_path, monkeypatch):
 
 def test_extract_one_max_chars_and_ocr_threshold_rejection():
     from advanced_text_extraction_spark.operators import extract as em
-    from advanced_text_extraction_spark.operators.ocr import (
-        install_pdf_ocr_fallback)
+    from advanced_text_extraction_spark.operators.ocr import pdf_ocr_fallback
 
     row = em.extract_one("word " * 100, max_chars=10)
     assert row["metadata"]["truncated"] == "true"
@@ -663,12 +657,8 @@ def test_extract_one_max_chars_and_ocr_threshold_rejection():
     # valid text layer is kept and the rejection lands in metadata
     short_pdf = build_pdf([["tiny"]], random.Random(3), flate=False)
     payload = base64.b64encode(short_pdf).decode()
-    prev_fb, prev_armed = em.ocr_fallback, em._armed_engine
-    install_pdf_ocr_fallback("template", confidence_threshold=2.0)
-    try:
-        row = em.extract_one(payload)
-    finally:
-        em.ocr_fallback, em._armed_engine = prev_fb, prev_armed
+    row = em.extract_one(payload, ocr_fallback=pdf_ocr_fallback(
+        "template", confidence_threshold=2.0))
     assert row["status"] == "ok"
     assert "tiny" in row["extracted_text"]
     assert "below threshold" in row["metadata"]["ocr_error"]
