@@ -48,20 +48,9 @@ def _spread(df: DataFrame) -> DataFrame:
     per row >> shuffle cost per row. On a production table with normal
     file-level parallelism the guard makes this a no-op — lifting these
     query definitions does NOT inherit a gratuitous full-corpus exchange
-    (VERDICT r2). ``ATE_FORCE_SPREAD=0/1`` overrides the heuristic both
-    ways. getNumPartitions() here only PLANS the scan (splits the files);
-    it runs no job."""
-    import os
-    force = os.environ.get("ATE_FORCE_SPREAD")
-    sess = df.sparkSession
-    par = sess.sparkContext.defaultParallelism
-    if force is not None:
-        # strict 0/1: 'true'/'yes'/typos would otherwise silently mean
-        # force-DISABLE, inverting the user's intent (ADVICE r3)
-        if force not in ("0", "1"):
-            raise ValueError(
-                f"ATE_FORCE_SPREAD must be '0' or '1', got {force!r}")
-        return df.repartition(par) if force == "1" else df
+    (VERDICT r2). getNumPartitions() here only PLANS the scan (splits
+    the files); it runs no job."""
+    par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, par // 2):
         return df.repartition(par)
     return df
@@ -570,8 +559,12 @@ def _extract_e2e_pdf(s: SparkSession, d: str) -> DataFrame:
     return _e2e_pipeline(s, d, include_pdf=True)
 
 
-# latest-wins slot for curate_e2e's persisted extraction boundary (same
-# lifecycle trade as textstats._last_tf — see that docstring)
+# latest-wins slot for curate_e2e's persisted extraction boundary. It
+# stands for the warehouse write between the extract and curate jobs:
+# without it the extraction kernel runs once per downstream branch (5x
+# in the final plan): the branches share no exchange below the kernel
+# for AQE to reuse. The slot unpersists the previous call's table on
+# re-entry.
 _last_curate_ext: DataFrame | None = None
 
 

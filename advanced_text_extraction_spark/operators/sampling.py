@@ -15,7 +15,7 @@ training mix at 100 TB:
   sample for held-out splits.
 - `pack_sequences` shuffles ONCE on a shard key, then packs each shard
   independently with a window cumulative sum. Packing quality does not
-  need a global document order, so the global-sort bottleneck a naive
+  need a corpus-wide document order, so the total-sort bottleneck a naive
   formulation hits (one task sorting the corpus) is designed out:
   shards pack in parallel and each emits sequences that are full except
   possibly its last.
@@ -95,10 +95,10 @@ def pack_sequences(df: DataFrame, id_col: str, text_col: str,
 
     Scale shape: ONE exchange on the shard key, then a per-shard
     ordered cumulative sum (window, rows unbounded preceding). Packing
-    needs no global document order — shards pack independently and in
+    needs no corpus-wide document order — shards pack independently and in
     parallel, so parallelism is n_shards (size it ~4× cluster cores);
     the per-shard sort is the only super-linear cost and it is local.
-    A single global window would funnel the corpus through ONE task —
+    A single corpus-wide window would funnel the corpus through ONE task —
     the anti-pattern this shape exists to avoid."""
     n_tok = word_count(F.coalesce(F.col(text_col), F.lit("")))
     # md5-derived shard, not pmod(id): works for ANY id type (a string
@@ -173,14 +173,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-# last persisted per-doc bigram table — latest-wins lifecycle shared with
-# operators/dedup.py's _last_band_keys / textstats._last_tf (see those
-# docstrings for the trade and the durable-table production alternative)
-_last_doc_bigrams: DataFrame | None = None
-
-
-def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
-                   doc_bigrams: DataFrame | None = None) -> DataFrame:
+def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Bigram conditional-LM quality proxy — the next tier above
     ``unigram_logprob`` toward CCNet's n-gram-LM perplexity gate: fit
     bigram transition counts on the corpus itself, score each doc by its
@@ -196,47 +189,35 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     per-doc bigram count (decimal × bigint is exact in both engines),
     decimal-summed, and only the final mean divides as double.
 
-    Scale shape: posexplode + a per-doc lead() window build bigrams
-    (codegen'd; ONE doc-keyed exchange), then ONE (doc,w1,w2) partial
-    aggregation collapses within-doc repeats — that table is persisted
-    and materialized once because it feeds BOTH the corpus model and
-    the scoring join (the tfidf/LSH double-execution lesson). The
-    corpus bigram counts derive from the persisted table (vocab-sized
-    partial aggs), head counts derive from the bigram counts (no third
-    corpus pass), and both join back with unique-per-key build sides.
-    Pass ``doc_bigrams`` (persisted, schema (id, w1, w2, dn)) to own
-    the lifecycle; stage it as a durable table at 100 TB."""
-    from pyspark.storagelevel import StorageLevel
-
-    if doc_bigrams is None:
-        arr = F.split(
-            F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-        toks = df.select(
-            F.col(id_col), F.posexplode(arr).alias("pos", "w1")) \
-            .where(F.col("w1") != "")
-        w = Window.partitionBy(id_col).orderBy("pos")
-        bgs = toks.withColumn("w2", F.lead("w1").over(w)) \
-            .where(F.col("w2").isNotNull())
-        global _last_doc_bigrams
-        if _last_doc_bigrams is not None:
-            try:
-                _last_doc_bigrams.unpersist(blocking=False)
-            except Exception:
-                pass  # session of the old handle may be gone
-        doc_bigrams = bgs.groupBy(id_col, "w1", "w2").agg(
-            F.count(F.lit(1)).alias("dn")) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _last_doc_bigrams = doc_bigrams
-        doc_bigrams.count()  # materialize ONCE before the branches fork
-
-    bg_counts = doc_bigrams.groupBy("w1", "w2").agg(
-        F.sum("dn").alias("c12"))
-    head_counts = bg_counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    Scale shape: bigrams come from zipping the token array with itself
+    shifted by one — a row-local, codegen'd explode with no exchange
+    and no per-doc window. ``array_remove`` drops the empty tokens that
+    ``trim`` (spaces only) leaves around tabs and newlines, and
+    ``greatest(n, 0)`` keeps ``slice`` off a negative length on empty
+    docs. The corpus model counts the bigram rows directly (one
+    vocab-sized partial agg; head counts are a window sum over it, no
+    extra join), while ONE (doc,w1,w2) partial aggregation collapses
+    within-doc repeats for the scoring join. Each branch re-runs the
+    codegen'd tokenize: cheaper than a doc-keyed exchange between
+    them."""
+    arr = F.array_remove(
+        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"), "")
+    n = F.greatest(F.size("toks") - 1, F.lit(0))
+    bigrams = (
+        df.select(F.col(id_col), arr.alias("toks"))
+        .select(F.col(id_col), F.explode(F.arrays_zip(
+            F.slice("toks", 1, n), F.slice("toks", 2, n))).alias("bg"))
+        .select(F.col(id_col), F.col("bg.0").alias("w1"),
+                F.col("bg.1").alias("w2")))
+    doc_bigrams = bigrams.groupBy(id_col, "w1", "w2").agg(
+        F.count(F.lit(1)).alias("dn"))
+    bg_counts = bigrams.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).alias("c12")) \
+        .withColumn("c1", F.sum("c12").over(Window.partitionBy("w1")))
     term = F.round(F.log10(F.col("c12") / F.col("c1")), 12) \
         .cast("decimal(28,12)")
     scored = (doc_bigrams
               .join(bg_counts, ["w1", "w2"])
-              .join(head_counts, "w1")
               .groupBy(id_col)
               .agg(F.sum("dn").cast("long").alias("n_bigrams"),
                    # dn as DECIMAL(8,0): 8+28+1 = 37 ≤ 38, so the

@@ -194,44 +194,21 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     return df.select(id_col, text_col).mapInPandas(kernel, schema=schema)
 
 
-# last persisted term-frequency table — same latest-wins lifecycle as
-# operators/dedup.py's _last_band_keys (see that docstring for the trade)
-_last_tf: DataFrame | None = None
+def _terms(text_col: str):
+    """The keyword tokenizer: codegen'd lower + regexp_extract_all."""
+    return F.regexp_extract_all(
+        F.lower(F.coalesce(F.col(text_col), F.lit(""))), F.lit("[a-z]+"), 0)
 
 
 def doc_term_freq(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, term, tf) table: ONE codegen'd tokenize (lower +
-    regexp_extract_all('[a-z]+')) + explode + (id, term)-keyed partial
-    aggregation, PERSISTED and materialized before return — tfidf_topk
-    and bm25_topk each fork multiple consumers off this table, and Spark
-    re-runs the scan+tokenize subtree per branch without the barrier.
-    Latest-wins module slot (call-site ownership: pass the result as
-    ``tf=`` to several scorers to share one build); stage as a durable
-    table in a 100 TB pipeline."""
-    from pyspark.storagelevel import StorageLevel
-
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    tokens = df.select(
-        F.col(id_col),
-        F.explode(F.regexp_extract_all(
-            F.lower(c), F.lit("[a-z]+"), 0)).alias("term"))
-    global _last_tf
-    if _last_tf is not None:
-        try:
-            _last_tf.unpersist(blocking=False)
-        except Exception:
-            pass  # session of the old handle may be gone
-    tf = tokens.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _last_tf = tf
-    tf.count()  # materialize ONCE before the branches fork
-    return tf
+    """(id, term, tf) table: ONE codegen'd tokenize + explode +
+    (id, term)-keyed partial aggregation."""
+    tokens = df.select(F.col(id_col), F.explode(_terms(text_col)).alias("term"))
+    return tokens.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def tfidf_topk(df: DataFrame, id_col: str, text_col: str,
-               k: int = 5, min_df: int = 1,
-               tf: DataFrame | None = None) -> DataFrame:
+               k: int = 5, min_df: int = 1) -> DataFrame:
     """Per-document top-k keyword extraction by TF-IDF — the classic
     corpus-curation signal (topic tagging, boilerplate spotting, domain
     mixing) the reference has no analog for. Corpus-scale shape:
@@ -253,17 +230,14 @@ def tfidf_topk(df: DataFrame, id_col: str, text_col: str,
     the rational form keeps the DuckDB oracle hash-exact. Score is
     ``tf * (n+1)/(df+1)`` rounded to 6dp.
 
-    The tf table feeds BOTH the df aggregation and the scoring join, and
-    Spark does not reuse the exchange between the branches — without a
-    barrier the scan+tokenize pipeline would run twice (the LSH
-    double-kernel lesson). Default path persists tf in a latest-wins
-    module slot; pass a persisted+materialized ``tf`` (schema
-    (id, term, tf)) to own the lifecycle, or stage tf as a durable
-    intermediate table in a 100 TB pipeline."""
+    The tf table feeds both the df aggregation and the scoring join, so
+    the scan + tokenize runs once per branch: codegen'd JVM work, no
+    Python. The df aggregation stays a term-keyed groupBy + join rather
+    than a term-partitioned window, which AQE could not skew-split on
+    stopwords."""
     from pyspark.sql import Window
 
-    if tf is None:
-        tf = doc_term_freq(df, id_col, text_col)
+    tf = doc_term_freq(df, id_col, text_col)
     dfreq = tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")).filter(F.col("df") >= min_df)
     n_docs = df.select(
@@ -284,8 +258,7 @@ def tfidf_topk(df: DataFrame, id_col: str, text_col: str,
 
 
 def bm25_topk(df: DataFrame, id_col: str, text_col: str,
-              k: int = 5, k1: float = 1.2, b: float = 0.75,
-              tf: DataFrame | None = None) -> DataFrame:
+              k: int = 5, k1: float = 1.2, b: float = 0.75) -> DataFrame:
     """Per-document top-k terms by BM25 — tfidf_topk's ranking sibling
     with the Okapi length-normalized tf saturation (long boilerplate
     docs stop dominating, repeated terms stop scaling linearly):
@@ -298,20 +271,21 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     bit-identically when the oracle mirrors the expression tree, so the
     driver hash gate holds without precision games.
 
-    Scale shape: shares the persisted (id, term, tf) table
-    (``doc_term_freq``) across ALL its consumers — df aggregation,
-    per-doc length aggregation (whose 1-row mean becomes avgdl, a
-    cascaded vocab-free agg), and the scoring join; unique-per-key
-    build sides; WindowGroupLimit prunes top-k map-side."""
+    Scale shape: the (id, term, tf) table (``doc_term_freq``) feeds the
+    term-keyed df aggregation (unique-per-key build side) and the
+    scoring join; the doc length is a window sum over the doc-keyed
+    exchange the top-k window reads anyway. n_docs and avgdl come from
+    ONE map-side aggregate over the raw input — per-doc token counts,
+    docs with ≥1 token only (ids are unique, as tfidf_topk's n_docs
+    also assumes) — broadcast as a 1-row table."""
     from pyspark.sql import Window
 
-    if tf is None:
-        tf = doc_term_freq(df, id_col, text_col)
+    tf = doc_term_freq(df, id_col, text_col)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    doclen = tf.groupBy(id_col).agg(F.sum("tf").alias("doclen"))
-    corpus = doclen.agg(
+    corpus = df.select(F.size(_terms(text_col)).alias("n")) \
+        .where(F.col("n") > 0).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("doclen") / F.count(F.lit(1))).alias("avgdl"))  # 1 row
+        (F.sum("n") / F.count(F.lit(1))).alias("avgdl"))  # 1 row
     idf_r = (F.col("n_docs") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))
     tf_d = F.col("tf").cast("double")
     sat = (tf_d * (F.lit(k1) + F.lit(1.0))
@@ -319,7 +293,8 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
                                   + F.lit(b) * (F.col("doclen")
                                                 / F.col("avgdl")))))
     scored = (tf.join(dfreq, "term")
-              .join(doclen, id_col)
+              .withColumn("doclen",
+                          F.sum("tf").over(Window.partitionBy(id_col)))
               .crossJoin(F.broadcast(corpus))
               .withColumn("score", F.round(idf_r * sat, 6)))
     w = Window.partitionBy(id_col).orderBy(

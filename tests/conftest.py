@@ -16,7 +16,7 @@ from fixtures.gen import gen_transcripts  # noqa: E402
 def spark():
     from advanced_text_extraction_spark.sources.session import build_session
 
-    s = build_session(app_name="ate-tests", master="local[8]")
+    s = build_session(app_name="ate-tests")
     assert s.conf.get("spark.sql.shuffle.partitions") == "8"
     yield s
     s.stop()

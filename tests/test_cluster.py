@@ -154,45 +154,45 @@ def test_simhash_sketch_width_tiers_consistent(spark):
     assert wide[(0, 1)] == 0
 
 
-def test_caller_owned_sketch_lifecycle(spark):
-    """r2 ADVICE: two concurrent near-dup plans must not evict each
-    other's cache barrier — callers can pass a persisted sketch/band
-    table and own its lifecycle; results match the default path and no
-    module-global slot is touched."""
-    from pyspark.storagelevel import StorageLevel
-
+def test_near_dup_and_keyword_plans_are_pure(spark, tmp_path):
+    """Building a near-dup or keyword plan launches no Spark job and
+    caches nothing; the self-joins still run their Python kernel ONCE,
+    because both join sides read one reused exchange. The corpus is read
+    from parquet, as the driver queries read it: a small file plans a
+    broadcast join whose two sides share no exchange unless the
+    operator puts one below the fork."""
     from advanced_text_extraction_spark.operators import dedup as D
+    from advanced_text_extraction_spark.operators import sampling as SMP
+    from advanced_text_extraction_spark.operators import textstats as TS
 
     texts = [
         "the quick brown fox jumps over the lazy dog near the river",
         "the quick brown fox jumps over the lazy dog near the river",
         "completely different words about spark shuffles and parquet",
     ]
-    df = spark.createDataFrame(list(enumerate(texts)),
-                               "doc_id long, text string")
+    spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string") \
+        .write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    sc.setJobGroup("plans-are-pure", "build near-dup and keyword plans")
+    try:
+        lsh = D.lsh_candidate_pairs(df, "doc_id", "text")
+        sim = D.simhash_neardup_pairs(df, "doc_id", "text")
+        TS.tfidf_topk(df, "doc_id", "text")
+        TS.bm25_topk(df, "doc_id", "text")
+        SMP.bigram_logprob(df, "doc_id", "text")
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "plans-are-pure")) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert cache.isEmpty()
 
-    # simhash: caller-owned sketch
-    sk = D.simhash_sketch(df, "doc_id", "text", n_bits=32) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    sk.count()
-    before = D._last_simhashes
-    owned = {(r["id_a"], r["id_b"]) for r in D.simhash_neardup_pairs(
-        df, "doc_id", "text", sketch=sk).collect()}
-    assert D._last_simhashes is before  # global slot untouched
-    default = {(r["id_a"], r["id_b"]) for r in D.simhash_neardup_pairs(
-        df, "doc_id", "text").collect()}
-    assert owned == default == {(0, 1)}
-    sk.unpersist()
-
-    # LSH: caller-owned band keys
-    keys = D.lsh_band_keys(df, "doc_id", "text") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    keys.count()
-    before = D._last_band_keys
-    owned = {(r["id_a"], r["id_b"]) for r in D.lsh_candidate_pairs(
-        df, "doc_id", "text", band_keys=keys).collect()}
-    assert D._last_band_keys is before
-    default = {(r["id_a"], r["id_b"]) for r in D.lsh_candidate_pairs(
-        df, "doc_id", "text").collect()}
-    assert owned == default == {(0, 1)}
-    keys.unpersist()
+    for plan in (lsh, sim):
+        assert {(r["id_a"], r["id_b"]) for r in plan.collect()} == {(0, 1)}
+        # the AQE final plan of the run that just finished
+        final = plan._jdf.queryExecution().executedPlan() \
+            .executedPlan().toString()
+        assert final.count("MapInPandas") == 1, final
+        assert "ReusedExchange" in final, final

@@ -197,3 +197,14 @@ def test_bigram_logprob_scores_transitions(spark):
     assert out[0]["mean_logprob"] == round(
         (-0.301029995664 + 0.0) / 2, 6) == -0.150515
     assert out[2]["mean_logprob"] == -0.30103
+
+    # whitespace edge cases: tabs/newlines around and between tokens,
+    # runs of spaces, NULL, empty and blank docs (no bigram, no row)
+    texts = ["\ta b\n", "a  b   a b", None, "", "   ", "x",
+             "\n\nx y\t", "a b c a b", " a b", "b a"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    rows = sorted((r["doc_id"], r["n_bigrams"], r["mean_logprob"]) for r in
+                  bigram_logprob(df, "doc_id", "text").collect())
+    assert rows == [(0, 1, 0.0), (1, 3, -0.058697), (6, 1, 0.0),
+                    (7, 4, -0.11928), (8, 1, 0.0), (9, 1, -0.176091)]
