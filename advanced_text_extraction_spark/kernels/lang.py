@@ -279,10 +279,12 @@ def detect_language(text: str) -> str:
         return "unknown"
     lowered = text.lower()
     scores: dict[str, int] = {}
-    # every script range and boost pattern is non-ASCII, so pure-ASCII
-    # text (the overwhelming transcript case) scores 0 on all of them —
-    # isascii() is a C-speed gate that skips 20 whole-string regex scans
-    if not lowered.isascii():
+    # every script range and boost pattern lies at or above U+0370 (and
+    # no character in a script range lowercases below it), so text whose
+    # lowered form stays below U+0370 — ASCII and Latin-script prose, the
+    # overwhelming transcript case — scores 0 on all of them: isascii()
+    # (O(1)) and max() are C-speed gates that skip 23 regex scans
+    if not lowered.isascii() and max(lowered) >= "\u0370":
         for lang, rx in _SCRIPT_RES.items():
             scores[lang] = len(rx.findall(text))
         for lang, rx in _BOOST_RES.items():

@@ -1,6 +1,7 @@
 """Unicode / whitespace normalization kernels (SPEC.md §2).
 
-Pure functions; applied batch-wise from pandas UDFs (``operators/extract.py``).
+Pure functions; applied per row inside the Arrow extraction kernel
+(``operators/extract.py``).
 Reference analog: the plain-text source decode+strip path
 (/root/reference/text_extractor.py:927-960) plus the north-star mandated
 "regex/Unicode normalization for cleanup" stage (SURVEY.md §2.8 F14).
@@ -11,10 +12,14 @@ from __future__ import annotations
 import re
 import unicodedata
 
-# Zero-width characters deleted outright (SPEC.md §2 step 2).
-_ZERO_WIDTH = dict.fromkeys((0x200B, 0x200C, 0x200D, 0xFEFF))
+# Zero-width characters deleted outright (SPEC.md §2 step 2). A compiled
+# class is a C scan; str.translate with a dict table walks every
+# character through the slow mapping path (~8x slower per turn).
+_ZERO_WIDTH_RE = re.compile("[\u200b\u200c\u200d\ufeff]")
 
-_HORIZ_WS_RE = re.compile(r"[ \t ]+")
+# Horizontal whitespace runs collapse to one space; only runs that change
+# are matched, so a lone space between words is not rewritten to itself.
+_HORIZ_WS_RE = re.compile("[ \t\u00a0]{2,}|[\t\u00a0]")
 _SPACE_AROUND_NL_RE = re.compile(r" *\n *")
 _MANY_NL_RE = re.compile(r"\n{3,}")
 _INLINE_WS_RE = re.compile(r"\s+", re.UNICODE)
@@ -23,7 +28,7 @@ _INLINE_WS_RE = re.compile(r"\s+", re.UNICODE)
 def normalize_plain(s: str) -> str:
     """Plain-text payload normalization — SPEC.md §2 (NFC + whitespace)."""
     s = unicodedata.normalize("NFC", s)
-    s = s.translate(_ZERO_WIDTH)
+    s = _ZERO_WIDTH_RE.sub("", s)
     s = s.replace("\r\n", "\n").replace("\r", "\n")
     s = _HORIZ_WS_RE.sub(" ", s)
     s = _SPACE_AROUND_NL_RE.sub("\n", s)
@@ -34,5 +39,5 @@ def normalize_plain(s: str) -> str:
 def normalize_inline(s: str) -> str:
     """Single-block normalization for HTML block text — SPEC.md §3 flush."""
     s = unicodedata.normalize("NFC", s)
-    s = s.translate(_ZERO_WIDTH)
+    s = _ZERO_WIDTH_RE.sub("", s)
     return _INLINE_WS_RE.sub(" ", s).strip()

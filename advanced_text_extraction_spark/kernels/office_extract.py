@@ -30,6 +30,8 @@ import unicodedata
 import zipfile
 import xml.etree.ElementTree as ET
 
+from .sniff import MAX_INFLATE_BYTES
+
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 _S = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _P = "{http://schemas.openxmlformats.org/presentationml/2006/main}"
@@ -42,6 +44,29 @@ Span = tuple[int, int, int, int, int]
 
 class OfficeError(ValueError):
     """Malformed office payload; caller maps to status='error'."""
+
+
+class _BoundedZip(zipfile.ZipFile):
+    """A ZipFile whose member reads share one inflate budget
+    (``sniff.MAX_INFLATE_BYTES``): a member whose declared size exceeds
+    what is left raises before any inflation, and a read asks for at most
+    the declared size plus one byte, so a header that understates the
+    expansion ends in zipfile's CRC error, not in the expansion — a zip
+    bomb becomes an error row, not a worker OOM."""
+
+    def __init__(self, data: bytes):
+        super().__init__(io.BytesIO(data))
+        self.budget = MAX_INFLATE_BYTES
+
+    def read(self, name, pwd=None) -> bytes:
+        size = self.getinfo(name).file_size
+        if size > self.budget:
+            raise OfficeError(f"member {name} exceeds the inflate budget "
+                              f"of {MAX_INFLATE_BYTES} bytes")
+        with self.open(name, pwd=pwd) as member:
+            data = member.read(size + 1)
+        self.budget -= len(data)
+        return data
 
 
 def _nfc(s: str) -> str:
@@ -288,7 +313,7 @@ def extract_office(data: bytes) -> tuple[str, str, list[Span], dict]:
     malformed condition — the caller maps it to a status='error' row.
     """
     try:
-        zf = zipfile.ZipFile(io.BytesIO(data))
+        zf = _BoundedZip(data)
     except zipfile.BadZipFile as exc:
         raise OfficeError(f"bad zip: {exc}") from exc
     with zf:

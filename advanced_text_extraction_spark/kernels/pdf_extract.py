@@ -11,8 +11,9 @@ descending-y reading order, x-sorted runs within a line (north-star
 requirement).
 
 Object model: scan for ``N G obj … endobj``; streams delimited by
-``stream``/``endstream``; FlateDecode via stdlib zlib. Page order from the
-root /Pages node's /Kids when present.
+``stream``/``endstream``; FlateDecode via stdlib zlib, bounded by the
+per-document inflate budget ``sniff.MAX_INFLATE_BYTES``. Page order from
+the root /Pages node's /Kids when present.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ from __future__ import annotations
 import re
 import unicodedata
 import zlib
+
+from .sniff import MAX_INFLATE_BYTES
 
 _OBJ_START_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _STREAM_START_RE = re.compile(rb"stream\r?\n")
@@ -89,12 +92,26 @@ def _parse_objects(data: bytes) -> dict[int, tuple[bytes, bytes | None]]:
     return objs
 
 
-def _decode_stream(head: bytes, raw: bytes) -> bytes:
+def _decode_stream(head: bytes, raw: bytes, budget: int) -> bytes:
+    """The stream's bytes, FlateDecoded when its dict says so, inflating
+    at most ``budget`` bytes: a deflate bomb (~1000:1) raises PdfError
+    instead of allocating its full expansion."""
     if b"/FlateDecode" in head:
+        inflater = zlib.decompressobj()
         try:
-            raw = zlib.decompress(raw)
+            # max_length 0 would mean "no limit": ask for one byte more
+            # than the budget, so an exhausted budget still stops it
+            out = inflater.decompress(raw, budget + 1)
         except zlib.error as exc:
             raise PdfError(f"FlateDecode failed: {exc}") from exc
+        if len(out) > budget:
+            raise PdfError(f"FlateDecode output exceeds the inflate "
+                           f"budget of {MAX_INFLATE_BYTES} bytes")
+        if not inflater.eof:  # what zlib.decompress reports for this
+            raise PdfError("FlateDecode failed: Error -5 while "
+                           "decompressing data: incomplete or truncated "
+                           "stream")
+        raw = out
     return raw
 
 
@@ -152,6 +169,7 @@ def _content_refs(head: bytes) -> list[int]:
 
 def _page_content_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> list[bytes]:
     streams: list[bytes] = []
+    budget = MAX_INFLATE_BYTES  # shared by every stream of the document
     for _num, head in _ordered_pages(objs):
         refs = _content_refs(head)
         if not refs:
@@ -165,7 +183,8 @@ def _page_content_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> list[b
             entry = objs.get(ref)
             if entry is None or entry[1] is None:
                 raise PdfError(f"missing /Contents stream object {ref}")
-            parts.append(_decode_stream(entry[0], entry[1]))
+            parts.append(_decode_stream(entry[0], entry[1], budget))
+            budget -= len(parts[-1])
         # §7.8.2: multiple streams form one content stream, separated by
         # at least one whitespace byte
         streams.append(b"\n".join(parts))
@@ -193,6 +212,7 @@ def extract_page_images(data: bytes) -> list[list[tuple[int, int, bytes]]]:
     """
     objs = _parse_objects(data)
     out: list[list[tuple[int, int, bytes]]] = []
+    budget = MAX_INFLATE_BYTES  # shared by every image of the document
     for _num, head in _ordered_pages(objs):
         images: list[tuple[int, int, bytes]] = []
         xm = _XOBJ_DICT_RE.search(head)
@@ -208,8 +228,9 @@ def extract_page_images(data: bytes) -> list[list[tuple[int, int, bytes]]]:
                 hm = _HEIGHT_RE.search(ihead)
                 if not (wm and hm):
                     continue
-                images.append((int(wm.group(1)), int(hm.group(1)),
-                               _decode_stream(ihead, istream)))
+                pixels = _decode_stream(ihead, istream, budget)
+                budget -= len(pixels)
+                images.append((int(wm.group(1)), int(hm.group(1)), pixels))
         out.append(images)
     return out
 

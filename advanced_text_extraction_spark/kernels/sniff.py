@@ -23,6 +23,12 @@ _HTML_TAG_RE = re.compile(
 )
 _B64_WS_RE = re.compile(r"\s+")
 
+# Bytes a binary payload (PDF streams, OOXML members) may inflate to, per
+# row: the decoded-side twin of extract.MAX_PAYLOAD_CHARS. Deflate expands
+# up to ~1000:1, so a capped payload could otherwise claim gigabytes of
+# worker memory; past the budget the row becomes a status='error' row.
+MAX_INFLATE_BYTES = 64 << 20
+
 
 def sniff_content_type(payload: str) -> tuple[str, bytes | None, str]:
     """Return ``(content_type, decoded_bytes_or_None, error)``.

@@ -26,7 +26,7 @@ import re
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -252,13 +252,23 @@ def ngram_jaccard_pairs(shingles: DataFrame, id_col: str,
     cap². Ultra-common shingles carry no near-dup signal (they match
     everything), so recall loss is negligible — the same rationale as
     stopword pruning. Default None preserves exact semantics for the
-    post-LSH verify path and the driver oracle."""
+    post-LSH verify path and the driver oracle.
+
+    The shingles are repartitioned on ``shingle`` BEFORE they fork into
+    the size aggregate and the two join sides, so every branch reads ONE
+    exchange: AQE reuses that stage (``ReusedExchange``) and the
+    shingling kernel runs once per action, not once per branch. The
+    exchange already satisfies the self-join's distribution, and the
+    doc-frequency cap is a window over it — no exchange and no fork of
+    its own (an aggregate joined back would prune the exchange's columns
+    and so shingle the corpus a second time)."""
+    shingles = shingles.repartition("shingle")
     if max_doc_freq is not None:
-        rare = (shingles.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_doc_freq)
-                .select("shingle"))
-        shingles = shingles.join(rare, "shingle")
+        shingles = (shingles
+                    .withColumn("df", F.count(F.lit(1)).over(
+                        Window.partitionBy("shingle")))
+                    .filter(F.col("df") <= max_doc_freq)
+                    .drop("df"))
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
     b = shingles.select(F.col(id_col).alias("id_b"), "shingle")

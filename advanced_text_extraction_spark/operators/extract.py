@@ -1,9 +1,12 @@
-"""The extraction operator: Arrow-batched ``mapInPandas`` dispatch.
+"""The extraction operator: an Arrow-native ``mapInArrow`` dispatch.
 
 Reference analog: ``extract_from_file`` + ``batch_extract``
 (/root/reference/text_extractor.py:834-885,962-1000) — the resolve →
-dispatch → extract state machine, re-expressed as ONE vectorized pass over
-Arrow record batches. Failures become ``status='error'`` rows instead of
+dispatch → extract state machine, re-expressed as ONE pass over Arrow
+record batches: no pandas frame, and no per-row record dict — the kernel
+reads the payload and key columns as Python lists, carries every other
+input column through zero-copy, and builds the computed columns from
+flat per-row lists. Failures become ``status='error'`` rows instead of
 exceptions (a row never kills the job; reference failure-list analog
 /root/reference/text_extractor.py:987-989).
 
@@ -16,8 +19,10 @@ intrinsic, same as any vectorized string kernel).
 from __future__ import annotations
 
 import time
+from itertools import accumulate
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,24 +67,14 @@ def output_schema(input_schema: T.StructType) -> T.StructType:
     return T.StructType(list(input_schema.fields) + EXTRACTED_FIELDS)
 
 
-def _span_dicts(spans) -> list[dict]:
-    return [
-        {"block_idx": b, "start": s, "end": e, "src_start": ss, "src_end": se}
-        for b, s, e, ss, se in spans
-    ]
-
-
-def extract_one(payload: str | None,
-                max_chars: int = MAX_PAYLOAD_CHARS,
-                ocr_fallback=None) -> dict:
-    """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch).
-    ``max_chars`` is the config extract.max_payload_chars cap.
-
-    ``ocr_fallback`` is the P3 hook (reference text_extractor.py:501-507,
-    575-610): ``fn(pdf_bytes) -> (text, confidence)``, called when a PDF's
-    text layer fails the >50-char gate; ``operators.ocr.pdf_ocr_fallback``
-    builds one. Without it the gate result is still recorded in
-    metadata['text_layer']."""
+def _extract_row(payload: str | None, max_chars: int,
+                 ocr_fallback) -> tuple:
+    """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch) as the
+    tuple ``(content_type, extracted_text, spans, confidence, language,
+    status, error, metadata)``; ``spans`` is a list of
+    ``(block_idx, start, end, src_start, src_end)`` tuples. The Arrow
+    kernel builds its columns from these; :func:`extract_one` is the
+    record view."""
     raw = payload or ""
     truncated = len(raw) > max_chars
     if truncated:
@@ -139,14 +134,34 @@ def extract_one(payload: str | None,
         spans = [(0, 0, len(text), 0, len(raw))] if text else []
         meta["n_blocks"] = "1" if text else "0"
 
+    return (content_type, text, spans, confidence, detect_language(text),
+            status, err if status == "error" else "", meta)
+
+
+def extract_one(payload: str | None,
+                max_chars: int = MAX_PAYLOAD_CHARS,
+                ocr_fallback=None) -> dict:
+    """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch) as a
+    record. ``max_chars`` is the config extract.max_payload_chars cap.
+
+    ``ocr_fallback`` is the P3 hook (reference text_extractor.py:501-507,
+    575-610): ``fn(pdf_bytes) -> (text, confidence)``, called when a PDF's
+    text layer fails the >50-char gate; ``operators.ocr.pdf_ocr_fallback``
+    builds one. Without it the gate result is still recorded in
+    metadata['text_layer']."""
+    (content_type, text, spans, confidence, language, status, error,
+     meta) = _extract_row(payload, max_chars, ocr_fallback)
     return {
         "content_type": content_type,
         "extracted_text": text,
-        "spans": _span_dicts(spans),
+        "spans": [
+            {"block_idx": b, "start": s, "end": e, "src_start": ss,
+             "src_end": se}
+            for b, s, e, ss, se in spans],
         "confidence": confidence,
-        "language": detect_language(text),
+        "language": language,
         "status": status,
-        "error": err if status == "error" else "",
+        "error": error,
         "metadata": meta,
         "extractor_version": EXTRACTOR_VERSION,
     }
@@ -173,11 +188,18 @@ _NULL_KEY = ("\x00<null>",)  # sentinel: dropDuplicates treats nulls as equal
 
 
 def _norm_key(key: tuple) -> tuple:
-    """Normalize nulls/NaN in a dedupe-key tuple: pd.isna values never
-    compare equal to themselves (NaN != NaN), which would silently keep
-    duplicate null-keyed rows — dropDuplicates semantics treat nulls as
-    equal, so the folded dedupe must too."""
-    return tuple(_NULL_KEY if pd.isna(k) else k for k in key)
+    """Normalize nulls/NaN in a dedupe-key tuple: NaN never compares
+    equal to itself, which would silently keep duplicate NaN-keyed rows —
+    dropDuplicates semantics treat nulls as equal, so the folded dedupe
+    must too."""
+    return tuple(_NULL_KEY if k is None or k != k else k for k in key)
+
+
+# the Arrow types Spark expects for the computed columns (SPEC.md §6)
+_SPAN_STRUCT = pa.struct([pa.field(f.name, pa.int32(), nullable=False)
+                          for f in SPAN_TYPE.elementType.fields])
+_SPANS_ARROW = pa.list_(_SPAN_STRUCT)
+_META_ARROW = pa.map_(pa.string(), pa.string())
 
 
 def _make_kernel(dedupe_keys: tuple[str, ...] | None,
@@ -186,8 +208,9 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
                  ocr_preprocess: bool = True,
                  ocr_confidence_threshold: float = 0.0,
                  max_payload_chars: int = MAX_PAYLOAD_CHARS):
-    """Build the mapInPandas kernel, optionally deduplicating on
-    ``dedupe_keys`` WITHIN the partition (first copy wins).
+    """Build the mapInArrow kernel, an ``Iterator[pa.RecordBatch]``
+    transform, optionally deduplicating on ``dedupe_keys`` WITHIN the
+    partition (first copy wins).
 
     Partition-local dedupe is exact when the upstream exchange co-locates
     key copies — the flagship repartition hashes on bucket(conv_id), so
@@ -197,6 +220,11 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     dropDuplicates aggregate and its exchange: the whole job keeps ONE
     data shuffle. The seen-set holds only this partition's keys
     (|partition| tuples — bounded by the bucket layout, not the corpus).
+
+    Every input column but ``text`` is carried through zero-copy (the
+    payload is not output, SPEC.md §6); the computed columns are built
+    from flat per-row lists, so no pandas frame and no per-row
+    record dict is ever materialised.
 
     ``stats_acc`` (a BucketStatsParam accumulator) collects per-bucket
     (input_rows, kept_rows, raw_bytes, errors, wall_us) as a side output
@@ -214,53 +242,90 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
                                             ocr_preprocess,
                                             ocr_confidence_threshold)
         seen: set | None = set() if dedupe_keys else None
-        for pdf in batches:
-            if stats_acc is not None and bucket_col in pdf.columns:
+        clock = time.perf_counter_ns
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            names = rb.schema.names
+            with_stats = stats_acc is not None and bucket_col in names
+            if with_stats:
                 # true INPUT counts, recorded BEFORE the dedupe mask —
                 # the per-bucket tuples merge element-wise, so input
                 # rows and processed-row stats arrive as separate adds
+                vc = pc.value_counts(rb.column(bucket_col))
                 stats_acc.add({
-                    int(b): (int(n), 0, 0, 0, 0)
-                    for b, n in
-                    pdf.groupby(bucket_col, sort=False).size().items()})
+                    b: (n, 0, 0, 0, 0) for b, n in
+                    zip(vc.field("values").to_pylist(),
+                        vc.field("counts").to_pylist()) if b is not None})
             if dedupe_keys:
                 mask = []
-                for key in zip(*(pdf[k] for k in dedupe_keys)):
+                for key in zip(*(rb.column(k).to_pylist()
+                                 for k in dedupe_keys)):
                     key = _norm_key(key)
                     if key in seen:
                         mask.append(False)
                     else:
                         seen.add(key)
                         mask.append(True)
-                pdf = pdf[mask]
-                if pdf.empty:
-                    continue
-            # true per-row kernel time (one perf_counter pair per row is
-            # ~100ns against ms-scale extraction — r1 flagged the
-            # per-batch MEAN here as making lineage wall_ms approximate)
-            recs = []
-            row_us = []
-            clock = time.perf_counter_ns
-            for payload in pdf["text"]:
+                if not all(mask):
+                    rb = rb.filter(pa.array(mask))
+                    if not rb.num_rows:
+                        continue
+            rows, row_us = [], []
+            for payload in rb.column("text").to_pylist():
+                # true per-row kernel time (one perf_counter pair per row
+                # is ~100ns against µs-to-ms-scale extraction)
                 t0 = clock()
-                recs.append(extract_one(payload, max_payload_chars,
-                                        ocr_fallback))
+                rows.append(_extract_row(payload, max_payload_chars,
+                                         ocr_fallback))
                 row_us.append((clock() - t0) // 1000)
-            out = pdf.copy()
-            for col in ("content_type", "extracted_text", "spans",
-                        "confidence", "language", "status", "error",
-                        "metadata", "extractor_version"):
-                out[col] = [r[col] for r in recs]
-            out["proc_us"] = row_us
-            if stats_acc is not None and bucket_col in out.columns:
-                upd: dict[int, tuple] = {}
-                for b, g in out.groupby(bucket_col, sort=False):
-                    raw = sum(int(m["raw_len"]) for m in g["metadata"])
-                    errs = int((g["status"] == "error").sum())
-                    upd[int(b)] = (0, len(g), raw, errs,
-                                   int(g["proc_us"].sum()))
-                stats_acc.add(upd)
-            yield out
+            (cts, texts, row_spans, confs, langs, statuses, errors,
+             metas) = zip(*rows)
+            spans = [sp for r in row_spans for sp in r]
+            span_offsets = list(accumulate(map(len, row_spans), initial=0))
+            meta_offsets = list(accumulate(map(len, metas), initial=0))
+            computed = {
+                "content_type": pa.array(cts, pa.string()),
+                "extracted_text": pa.array(texts, pa.string()),
+                "spans": pa.ListArray.from_arrays(
+                    pa.array(span_offsets, pa.int32()),
+                    pa.StructArray.from_arrays(
+                        [pa.array(c, pa.int32())
+                         for c in (list(zip(*spans)) or [()] * 5)],
+                        fields=list(_SPAN_STRUCT)),
+                    type=_SPANS_ARROW),
+                "confidence": pa.array(confs, pa.float64()),
+                "language": pa.array(langs, pa.string()),
+                "status": pa.array(statuses, pa.string()),
+                "error": pa.array(errors, pa.string()),
+                "metadata": pa.MapArray.from_arrays(
+                    pa.array(meta_offsets, pa.int32()),
+                    pa.array([k for m in metas for k in m], pa.string()),
+                    pa.array([v for m in metas for v in m.values()],
+                             pa.string()),
+                    type=_META_ARROW),
+                "extractor_version": pa.array(
+                    [EXTRACTOR_VERSION] * len(rows), pa.string()),
+                "proc_us": pa.array(row_us, pa.int64()),
+            }
+            if with_stats:
+                upd: dict[int, list[int]] = {}
+                for b, meta, status, us in zip(
+                        rb.column(bucket_col).to_pylist(), metas,
+                        statuses, row_us):
+                    v = upd.get(b)
+                    if v is None:
+                        v = upd[b] = [0, 0, 0, 0, 0]
+                    v[1] += 1
+                    v[2] += int(meta["raw_len"])
+                    v[3] += status == "error"
+                    v[4] += us
+                stats_acc.add({b: tuple(v) for b, v in upd.items()
+                               if b is not None})
+            keep = [i for i, name in enumerate(names) if name != "text"]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in keep] + list(computed.values()),
+                names=[names[i] for i in keep] + list(computed))
 
     return _extract_batches
 
@@ -274,9 +339,10 @@ def extract(df: DataFrame,
             max_payload_chars: int = MAX_PAYLOAD_CHARS) -> DataFrame:
     """Apply the extraction dispatch over a transcripts DataFrame.
 
-    The payload column must be named ``text``. All input columns are
-    carried through; SPEC.md §6 columns are appended. Partitioning is the
-    caller's concern (see ``plans/pipeline.py`` for the bucket layout).
+    The payload column must be named ``text``. Every other input column
+    is carried through; SPEC.md §6 columns are appended, and the raw
+    payload is not output. Partitioning is the caller's concern (see
+    ``plans/pipeline.py`` for the bucket layout).
     ``dedupe_keys`` enables partition-local dedupe (see _make_kernel —
     only exact when copies are co-located by the upstream exchange).
     ``stats_acc`` (see :func:`new_stats_accumulator`) collects per-bucket
@@ -288,11 +354,12 @@ def extract(df: DataFrame,
     ocr.preprocess / extract.confidence_threshold knobs (a below-threshold
     OCR result is rejected and the short text layer kept);
     ``max_payload_chars`` is the config extract.max_payload_chars cap."""
-    return df.mapInPandas(_make_kernel(dedupe_keys, stats_acc, bucket_col,
-                                       ocr_fallback_engine, ocr_preprocess,
-                                       ocr_confidence_threshold,
-                                       max_payload_chars),
-                          schema=output_schema(df.schema))
+    carried = T.StructType([f for f in df.schema.fields if f.name != "text"])
+    return df.mapInArrow(_make_kernel(dedupe_keys, stats_acc, bucket_col,
+                                      ocr_fallback_engine, ocr_preprocess,
+                                      ocr_confidence_threshold,
+                                      max_payload_chars),
+                         schema=output_schema(carried))
 
 
 def new_stats_accumulator(spark):

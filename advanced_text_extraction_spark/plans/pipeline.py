@@ -13,11 +13,12 @@
                                                bucket; REPARTITION_BY_COL,
                                                so AQE coalesces it to what
                                                the data needs]
-      → mapInPandas(dedupe + extract)         [U1 folded into the kernel —
+      → mapInArrow(dedupe + extract)          [U1 folded into the kernel —
                                                partition-local seen-set,
                                                exact because copies are
-                                               co-located; Arrow-vectorized]
-      → drop(text)                            [raw payload is not output]
+                                               co-located; Arrow in and out,
+                                               no pandas; the raw payload
+                                               is not output]
       → sortWithinPartitions(part_bucket,     [W3 — stable order, no global
                              conv_id, turn)    sort, no second exchange]
       → overwrite extracted/ per bucket + append lineage/  (run_extract_job;
@@ -147,11 +148,9 @@ def flagship_plan(
         df = df.filter(~F.col("part_bucket").isin(skip_buckets))
     if only_buckets is not None:
         df = df.filter(F.col("part_bucket").isin(only_buckets))
-    # the raw payload is NOT part of the output contract (SURVEY §1.2
-    # `extracted` schema) — carrying `text` through the write would
-    # re-store the whole input corpus: double the parquet encode CPU and
-    # write volume for a column every consumer already has upstream.
-    # The sort leads with part_bucket so FileFormatWriter's required
+    # extract() does not carry the raw payload through: it is not part of
+    # the output contract (SURVEY §1.2 `extracted` schema), and writing
+    # `text` would re-store the whole input corpus. The sort leads with part_bucket so FileFormatWriter's required
     # ordering (partition columns first) is already satisfied — otherwise
     # the writer inserts its own part_bucket-only sort, which is not
     # stable and would scramble the (conv_id, turn_idx) order
@@ -162,7 +161,6 @@ def flagship_plan(
                    ocr_preprocess=ocr_preprocess,
                    ocr_confidence_threshold=ocr_confidence_threshold,
                    max_payload_chars=max_payload_chars) \
-        .drop("text") \
         .sortWithinPartitions("part_bucket", "conv_id", "turn_idx")
 
 

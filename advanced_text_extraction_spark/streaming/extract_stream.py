@@ -4,13 +4,13 @@ over a transcript stream.
 The reference is strictly batch (SURVEY §2.12) and the north rule asks
 for batch-with-checkpoint-resume — that job lives in plans/pipeline.py.
 This module is the forward path for continuously-arriving transcripts:
-``readStream`` → the SAME ``extract()`` mapInPandas dispatch (kernels are
+``readStream`` → the SAME ``extract()`` mapInArrow dispatch (kernels are
 stream/batch agnostic) → ``writeStream`` with a checkpoint, so exactly-once
 sink semantics replace the lineage table. Windowed reporting uses
 watermarks to bound state for late turns.
 
 Scale notes:
-- mapInPandas on a streaming DataFrame keeps the identical Arrow batch
+- mapInArrow on a streaming DataFrame keeps the identical Arrow batch
   shape as batch mode — no kernel changes, one code path to test.
 - the per-conversation order-restore window is NOT applied in-stream
   (a global sort over an unbounded stream is undefined); order is a

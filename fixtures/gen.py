@@ -246,6 +246,63 @@ def _emit_pdf(objs: list[bytes]) -> bytes:
     return bytes(out)
 
 
+def _deflate_repeated(chunk: bytes, total: int) -> bytes:
+    """zlib stream of ``chunk`` repeated to ``total`` bytes, compressed
+    chunk by chunk so the expansion is never held in memory."""
+    comp = zlib.compressobj(9)
+    out = []
+    for _ in range(total // len(chunk)):
+        out.append(comp.compress(chunk))
+    out.append(comp.flush())
+    return b"".join(out)
+
+
+def build_flate_bomb_pdf(stream_bytes: int, n_pages: int = 1) -> bytes:
+    """A PDF of ``n_pages`` pages whose FlateDecode content streams each
+    inflate to ``stream_bytes`` bytes of whitespace (~1000:1) — the
+    deflate bomb the extraction's inflate budget must stop."""
+    comp = _deflate_repeated(b" " * (1 << 20), stream_bytes)
+    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
+    objs = [b"<< /Type /Catalog /Pages 2 0 R >>",
+            f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()]
+    for i in range(n_pages):
+        objs.append(f"<< /Type /Page /Parent 2 0 R /Contents {4 + 2 * i} "
+                    f"0 R >>".encode())
+        objs.append(f"<< /Length {len(comp)} /Filter /FlateDecode >>\n"
+                    f"stream\n".encode() + comp + b"\nendstream")
+    return _emit_pdf(objs)
+
+
+def build_zip_bomb_docx(member_bytes: int,
+                        declared_bytes: int | None = None) -> bytes:
+    """A DOCX whose word/document.xml inflates to ``member_bytes`` bytes.
+    ``declared_bytes`` rewrites the size its central directory claims, so
+    the header lies about the expansion."""
+    import io
+    import struct
+    import zipfile
+
+    head = f"<w:document {_W_NS}><w:body><w:p><w:r><w:t>".encode()
+    tail = b"</w:t></w:r></w:p></w:body></w:document>"
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("[Content_Types].xml", '<?xml version="1.0"?><Types/>')
+        with zf.open("word/document.xml", "w") as member:
+            member.write(head)
+            for _ in range((member_bytes - len(head) - len(tail)) >> 20):
+                member.write(b"a" * (1 << 20))
+            member.write(tail)
+    data = bytearray(buf.getvalue())
+    if declared_bytes is not None:
+        # the central directory's uncompressed-size field (offset 24) is
+        # the size zipfile trusts
+        name = b"word/document.xml"
+        at = data.rfind(name) - 46  # the 46-byte header precedes the name
+        assert data[at:at + 4] == b"PK\x01\x02"
+        struct.pack_into("<I", data, at + 24, declared_bytes)
+    return bytes(data)
+
+
 def gen_pdf_payload(rng: random.Random, short: bool = False) -> str:
     lang = "en"
     n_pages = 1 if short else rng.randint(1, 3)

@@ -100,6 +100,28 @@ def test_ngram_jaccard_doc_freq_cap(spark):
     assert got[(1, 2)] == 1.0  # true Jaccard over the filtered universe
 
 
+def test_ngram_jaccard_shingles_once_per_action(spark):
+    """The shingles fork into the size aggregate and both join sides
+    (and the doc-frequency cap) above ONE shingle exchange: the final
+    plan runs the shingling kernel once and reuses that exchange."""
+    from advanced_text_extraction_spark.operators.dedup import (
+        ngram_jaccard_pairs, word_shingles)
+
+    rows = [(1, "alpha beta gamma delta all rights reserved"),
+            (2, "alpha beta gamma delta all rights reserved"),
+            (3, "epsilon zeta eta theta all rights reserved")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for cap, want in ((None, {(1, 2), (1, 3), (2, 3)}), (2, {(1, 2)})):
+        plan = ngram_jaccard_pairs(word_shingles(df, "doc_id", "text"),
+                                   "doc_id", threshold=0.01,
+                                   max_doc_freq=cap)
+        assert {(r["id_a"], r["id_b"]) for r in plan.collect()} == want
+        final = plan._jdf.queryExecution().executedPlan() \
+            .executedPlan().toString()
+        assert final.count("MapInPandas") == 1, final
+        assert "ReusedExchange" in final, final
+
+
 def test_simhash_neardup_pairs_exact_recall(spark):
     """Banding recall is EXACT for hamming <= n_bands-1: compare the
     banded operator against a brute-force all-pairs hamming join."""

@@ -1,21 +1,27 @@
 """Partition-local dedupe inside the extraction kernel (U1 folded into
-the mapInPandas pass): pure-pandas tests of the batch iterator — no Spark
-session needed, the kernel is an iterator[pd.DataFrame] transform."""
+the mapInArrow pass): pure-Arrow tests of the batch iterator — no Spark
+session needed, the kernel is an iterator[pa.RecordBatch] transform."""
 
 from __future__ import annotations
 
-import pandas as pd
+import base64
+import random
 
-from advanced_text_extraction_spark.operators.extract import _make_kernel
+import pyarrow as pa
+
+from advanced_text_extraction_spark.operators.extract import (
+    MAX_PAYLOAD_CHARS, _make_kernel, extract_one)
 
 
 def _batches(rows, size=3):
-    df = pd.DataFrame(rows)
-    return iter(df.iloc[i:i + size] for i in range(0, len(df), size))
+    table = pa.Table.from_pylist(rows)
+    return iter(table.slice(i, size).to_batches()[0]
+                for i in range(0, len(rows), size))
 
 
-def _run(kernel, rows, size=3):
-    return pd.concat(list(kernel(_batches(rows, size))), ignore_index=True)
+def _run(kernel, rows, size=3) -> list[dict]:
+    return pa.Table.from_batches(list(kernel(_batches(rows, size)))) \
+        .to_pylist()
 
 
 ROWS = [
@@ -30,7 +36,7 @@ ROWS = [
 
 def test_dedupe_drops_later_copies_across_batches():
     out = _run(_make_kernel(("conv_id", "turn_idx")), ROWS, size=2)
-    keys = list(zip(out.conv_id, out.turn_idx))
+    keys = [(r["conv_id"], r["turn_idx"]) for r in out]
     assert len(keys) == len(set(keys)) == 4
     # first copy wins — row order of survivors preserved
     assert keys == [("a", 0), ("a", 1), ("b", 0), ("b", 1)]
@@ -43,9 +49,12 @@ def test_no_dedupe_when_disabled():
 
 def test_fully_duplicate_batch_is_skipped():
     rows = [ROWS[0], ROWS[0], ROWS[0], ROWS[0]]
-    out = _run(_make_kernel(("conv_id", "turn_idx")), rows, size=2)
+    batches = list(_make_kernel(("conv_id", "turn_idx"))(
+        _batches(rows, size=2)))
+    assert len(batches) == 1  # the second batch is all copies: no output
+    out = pa.Table.from_batches(batches).to_pylist()
     assert len(out) == 1
-    assert out.loc[0, "extracted_text"] == "hello world"
+    assert out[0]["extracted_text"] == "hello world"
 
 
 def test_null_and_nan_keys_dedupe_like_dropduplicates():
@@ -55,8 +64,9 @@ def test_null_and_nan_keys_dedupe_like_dropduplicates():
     rows = [
         {"conv_id": None, "turn_idx": float("nan"), "text": "null key"},
         {"conv_id": None, "turn_idx": float("nan"), "text": "null key"},
-        {"conv_id": "a", "turn_idx": 0, "text": "real key"},
+        {"conv_id": "a", "turn_idx": 0.0, "text": "real key"},
         {"conv_id": None, "turn_idx": float("nan"), "text": "null key"},
+        {"conv_id": None, "turn_idx": None, "text": "null key"},
     ]
     out = _run(_make_kernel(("conv_id", "turn_idx")), rows, size=2)
     assert len(out) == 2  # one null-keyed survivor + one real row
@@ -78,16 +88,23 @@ def test_stats_accumulator_collects_per_bucket():
 
     acc = FakeAcc()
     rows = [dict(r, part_bucket=i % 2) for i, r in enumerate(ROWS)]
+    rows.append({"conv_id": "c", "turn_idx": 0, "part_bucket": 1,
+                 "text": "JVBERi0xLjQKbm90IGEgcGRm!!"})  # broken base64
     out = _run(_make_kernel(("conv_id", "turn_idx"), stats_acc=acc), rows)
     assert set(acc.value) == {0, 1}
     # v[0] = TRUE input rows (pre-dedupe: feeding a duplicate-heavy
     # corpus must not deflate lineage input_rows), v[1] = kept rows
     assert sum(v[0] for v in acc.value.values()) == len(rows)
     assert sum(v[1] for v in acc.value.values()) == len(out)
-    raw_bytes = sum(v[2] for v in acc.value.values())
-    assert raw_bytes == int(out.metadata.map(lambda m: int(m["raw_len"])).sum())
-    assert all(v[3] == 0 for v in acc.value.values())  # no error rows
-    assert all(v[4] >= 0 for v in acc.value.values())  # wall_us
+    for b in (0, 1):
+        kept = [r for r in out if r["part_bucket"] == b]
+        assert acc.value[b][:4] == (
+            sum(1 for r in rows if r["part_bucket"] == b), len(kept),
+            sum(int(dict(r["metadata"])["raw_len"]) for r in kept),
+            sum(r["status"] == "error" for r in kept))
+        assert acc.value[b][4] == sum(r["proc_us"] for r in kept)  # wall_us
+    assert acc.value[1][3] == 1  # the broken-base64 row
+    assert acc.value[0][3] == 0
 
 
 def test_pdf_ocr_fallback_hook():
@@ -95,8 +112,6 @@ def test_pdf_ocr_fallback_hook():
     text_extractor.py:501-507,575-610): without a registered engine the
     short text layer is kept and flagged; with one, its text and mean
     confidence replace the text-layer result."""
-    import random
-
     from advanced_text_extraction_spark.operators import extract as X
     from fixtures.gen import gen_pdf_payload
 
@@ -129,5 +144,48 @@ def test_extraction_columns_present_after_dedupe():
     for col in ("content_type", "extracted_text", "spans", "confidence",
                 "language", "status", "error", "metadata",
                 "extractor_version", "proc_us"):
-        assert col in out.columns
-    assert (out.status == "ok").all()
+        assert col in out[0]
+    assert "text" not in out[0]  # the raw payload is not output
+    assert all(r["status"] == "ok" for r in out)
+
+
+def test_kernel_columns_equal_extract_one_row_for_row():
+    """The Arrow kernel is extract_one, column for column: one mixed
+    batch of every payload kind, spans and metadata included, with the
+    carried input columns unchanged and the payload dropped."""
+    from fixtures.gen import (
+        gen_docx_payload, gen_html, gen_pdf_payload, gen_plain,
+        gen_pptx_payload, gen_xlsx_payload)
+
+    rng = random.Random(11)
+    payloads = [
+        gen_plain(rng), gen_html(rng), gen_pdf_payload(rng),
+        gen_pdf_payload(rng, short=True), gen_docx_payload(rng),
+        gen_xlsx_payload(rng), gen_pptx_payload(rng),
+        "JVBERi0xLjQK@@@not base64",                      # broken base64
+        base64.b64encode(b"PK\x03\x04 not a zip").decode(),
+        None, "", "   ​  ",
+        "Привіт і світ " * 3 + "　日本語のテキストです",
+        "word " * (MAX_PAYLOAD_CHARS // 5 + 7),             # over the cap
+    ]
+    payloads = [p[0] if isinstance(p, tuple) else p for p in payloads]
+    rows = [{"conv_id": "c", "turn_idx": i, "role": "user", "text": p}
+            for i, p in enumerate(payloads)]
+    batch = pa.RecordBatch.from_pylist(rows)
+    out = pa.Table.from_batches(list(_make_kernel(None)(iter([batch]))))
+    assert out.column_names[:3] == ["conv_id", "turn_idx", "role"]
+    got = out.to_pylist()
+    assert len(got) == len(payloads)
+    kinds = set()
+    for row, payload in zip(got, payloads):
+        want = extract_one(payload)
+        kinds.add((want["content_type"], want["status"]))
+        assert row.pop("proc_us") >= 0
+        row["metadata"] = dict(row["metadata"])
+        assert row.pop("conv_id") == "c" and row.pop("role") == "user"
+        row.pop("turn_idx")
+        assert row == want
+    assert {"text", "html", "pdf", "docx", "excel",
+            "powerpoint"} <= {k for k, _ in kinds}
+    assert ("pdf", "error") in kinds and ("office", "error") in kinds
+    assert got[-1]["metadata"]["truncated"] == "true"

@@ -81,7 +81,7 @@ def test_job_runs_one_aqe_sized_python_stage(spark, transcripts_path,
     plans = [e.physicalPlanDescription() for e in _seq(
         spark._jsparkSession.sharedState().statusStore().executionsList())
         if any(e.jobs().contains(j) for j in job_ids)]
-    plan = "\n".join(p for p in plans if "MapInPandas" in p)
+    plan = "\n".join(p for p in plans if "MapInArrow" in p)
     read = re.search(r"AQEShuffleRead \((\d+)\)\n\s*\+- ShuffleQueryStage "
                      r"\(\d+\).*\n\s*\+- Exchange \((\d+)\)", plan)
     assert read, plan
@@ -103,7 +103,7 @@ def test_job_runs_one_aqe_sized_python_stage(spark, transcripts_path,
         if ran and any(op in n for n in names for op in _PYTHON_OPS):
             python_stages.append(names)
     assert len(python_stages) == 1, python_stages
-    assert "MapInPandas" in python_stages[0], python_stages
+    assert "MapInArrow" in python_stages[0], python_stages
 
 
 def test_each_bucket_is_one_task_and_one_file(spark, transcripts_path,

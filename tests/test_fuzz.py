@@ -23,9 +23,10 @@ from advanced_text_extraction_spark.kernels.image_codec import (
     encode_tiff)
 from advanced_text_extraction_spark.kernels.ocr import ocr_image, render_page
 from advanced_text_extraction_spark.operators.extract import extract_one
+from advanced_text_extraction_spark.kernels.sniff import MAX_INFLATE_BYTES
 from fixtures.gen import (
-    build_pdf, build_scanned_pdf, gen_docx_payload, gen_pptx_payload,
-    gen_xlsx_payload)
+    build_flate_bomb_pdf, build_pdf, build_scanned_pdf, build_zip_bomb_docx,
+    gen_docx_payload, gen_pptx_payload, gen_xlsx_payload)
 
 
 def _rand_bytes(rng: random.Random, n: int) -> bytes:
@@ -86,6 +87,37 @@ def test_extract_one_never_raises_on_corrupt_payloads():
     for payload in cases:
         rec = extract_one(payload)          # must never raise
         assert rec["status"] in ("ok", "error", "empty")
+
+
+@pytest.mark.parametrize("bomb", [
+    "pdf-one-stream", "pdf-streams-over-budget-together", "docx-member",
+    "docx-member-understated"])
+def test_inflate_bombs_end_as_error_rows(bomb):
+    """Deflate expands ~1000:1, so a payload under the char cap can claim
+    gigabytes. Each bomb ends as a status='error' row, and the largest
+    (4x the budget in one stream) peaks at a bounded allocation."""
+    import tracemalloc
+
+    budget = MAX_INFLATE_BYTES
+    raw = {
+        "pdf-one-stream": lambda: build_flate_bomb_pdf(4 * budget),
+        # each stream alone is under the budget; the document is not
+        "pdf-streams-over-budget-together":
+            lambda: build_flate_bomb_pdf(budget // 2, n_pages=3),
+        "docx-member": lambda: build_zip_bomb_docx(budget + (16 << 20)),
+        "docx-member-understated":
+            lambda: build_zip_bomb_docx(budget + (16 << 20), 1000),
+    }[bomb]()
+    tracemalloc.start()
+    try:
+        row = extract_one(base64.b64encode(raw).decode())
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert row["status"] == "error", row["metadata"]
+    assert row["extracted_text"] == ""
+    assert row["error"]
+    assert peak < 3 * budget, peak
 
 
 def test_decode_image_raises_only_its_own_error_type():
