@@ -273,7 +273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["path_functions"] = _path_functions
 
     # ---- multimodal (binary payload + typed metadata; deterministic
-    # fake codec — real codecs plug into the same registry) ----
+    # FAKE containers, decoded by kernels/image_codec.decode_image) ----
     from advanced_text_extraction_spark.multimodal import media as M
 
     q["media_image_stats"] = lambda s, d: M.image_stats(

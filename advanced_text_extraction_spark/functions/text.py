@@ -56,9 +56,3 @@ def content_type_prefilter(col) -> Column:
         .when(t.rlike(html_probe), F.lit("html"))
         .otherwise(F.lit("text"))
     )
-
-
-def stopword_hits(col, words: list[str]) -> Column:
-    """Count occurrences of any marker word (word-bounded), natively."""
-    pat = r"\b(" + "|".join(words) + r")\b"
-    return F.regexp_count(F.lower(col), F.lit(pat))

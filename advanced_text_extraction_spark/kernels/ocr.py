@@ -113,7 +113,6 @@ FONT: dict[str, tuple[str, ...]] = {
     "]": (".###.", "...#.", "...#.", "...#.", "...#.", "...#.", ".###."),
 }
 
-CHARSET = set(FONT) | {" "}
 GLYPH_W, GLYPH_H = 5, 7
 ADVANCE, LINE_STRIDE = 8, 10  # cols per char cell, rows per line
 

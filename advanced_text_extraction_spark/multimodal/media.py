@@ -2,11 +2,11 @@
 
 A 100 TB training-data pipeline carries image/audio/video next to text.
 The Spark-side contract here is real and tested — schema, partitioning,
-Arrow batch shape, mapInPandas signatures — while the codec layer is a
-registry: this container ships no image/audio libraries, so the default
-codec is a deterministic FAKE container format (magic-tagged headers over
-numpy-decodable raw bytes). Real codecs (JPEG/PNG/WAV) plug into the same
-registry behind an import-try and raise ``NotImplementedError`` here.
+Arrow batch shape, mapInPandas signatures. Every image decode is
+``kernels/image_codec.decode_image`` folded to gray: it sniffs the magic
+and decodes the FAKE container below and PNM/BMP/PNG/JPEG/TIFF/WebP from
+scratch. The synthesized table uses deterministic FAKE containers
+(magic-tagged headers over numpy-decodable raw bytes).
 
 Fake container formats (all big-endian u16 fields):
 - image: b'FIMG' | width u16 | height u16 | width*height grayscale bytes
@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..kernels.image_codec import decode_image
+from ..kernels.image_prep import to_gray
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),      # image|audio|video
@@ -42,54 +45,12 @@ MEDIA_SCHEMA = T.StructType([
 
 
 # ---------------------------------------------------------------------------
-# codec registry (the extension point; mirrors the reference's OCR-engine
-# registry /root/reference/text_extractor.py:320-325)
+# FAKE image container writer (decoding is image_codec.decode_image's)
 # ---------------------------------------------------------------------------
-
-def _decode_fake_image(buf: bytes) -> np.ndarray:
-    # delegates to the kernel codec (ONE FIMG decoder in the codebase):
-    # it validates the header and buffer-vs-w*h length with typed errors
-    # — the previous inline copy surfaced truncation as a bare reshape
-    # ValueError with a different message
-    from ..kernels.image_codec import decode_raw_gray
-
-    if buf[:4] != b"FIMG":
-        raise ValueError("not a FIMG payload")
-    if len(buf) < 8:
-        raise ValueError("truncated FIMG header")
-    w, h = struct.unpack(">HH", buf[4:8])
-    return decode_raw_gray(buf[8:8 + w * h], w, h)
-
 
 def _encode_fake_image(arr: np.ndarray) -> bytes:
     h, w = arr.shape
     return b"FIMG" + struct.pack(">HH", w, h) + arr.astype(np.uint8).tobytes()
-
-
-def _decode_real_image(buf: bytes) -> np.ndarray:
-    try:  # pragma: no cover - real codec path, lib not in this container
-        import cv2  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "real image codecs (cv2/PIL) are not installed in this "
-            "environment — use the 'sniff' codec (from-scratch "
-            "PNG/JPEG/TIFF/BMP/PNM decoders) or install opencv") from exc
-    import cv2
-    return cv2.imdecode(np.frombuffer(buf, np.uint8), cv2.IMREAD_GRAYSCALE)
-
-
-def _decode_sniff_image(buf: bytes) -> np.ndarray:
-    """Magic-sniffing from-scratch decoder over every container the
-    kernel codec supports (FIMG/PNM/BMP/PNG/JPEG/TIFF), folded to
-    the grayscale contract the feature kernels expect."""
-    from ..kernels.image_codec import decode_image
-    from ..kernels.image_prep import to_gray
-
-    return to_gray(decode_image(bytes(buf)))
-
-
-IMAGE_CODECS = {"fake": _decode_fake_image, "real": _decode_real_image,
-                "sniff": _decode_sniff_image}
 
 
 # ---------------------------------------------------------------------------
@@ -151,17 +112,15 @@ IMAGE_STATS_SCHEMA = T.StructType([
 ])
 
 
-def image_stats(df: DataFrame, codec: str = "fake") -> DataFrame:
+def image_stats(df: DataFrame) -> DataFrame:
     """Decode + feature-extract images (width/height/intensity moments).
     Failure-as-data: undecodable payloads become status='error' rows."""
-    decode = IMAGE_CODECS[codec]
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    arr = decode(bytes(payload))
+                    arr = to_gray(decode_image(bytes(payload)))
                     # moments via E[x²]−E[x]² (integer sums are exact in
                     # float64, so this is bit-reproducible across engines)
                     m1 = float(arr.mean())
@@ -178,22 +137,20 @@ def image_stats(df: DataFrame, codec: str = "fake") -> DataFrame:
         .mapInPandas(kernel, schema=IMAGE_STATS_SCHEMA)
 
 
-def resize_images(df: DataFrame, scale: int = 2,
-                  codec: str = "fake") -> DataFrame:
+def resize_images(df: DataFrame, scale: int = 2) -> DataFrame:
     """Downsample by integer stride (numpy slicing — the stand-in for a
-    real resampler); re-encoded into the same container format so the
+    real resampler); re-encoded as the FAKE gray container so the
     output is again an opaque media table. Failure-as-data like
     image_stats: an undecodable payload passes through unchanged with
     meta.status='error' instead of failing the task 4× and killing the
     whole job."""
-    decode = IMAGE_CODECS[codec]
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
-                    arr = decode(bytes(payload))[::scale, ::scale]
+                    arr = to_gray(decode_image(bytes(payload)))
+                    arr = arr[::scale, ::scale]
                     out.append((int(mid), "image", _encode_fake_image(arr),
                                 {"width": str(arr.shape[1]),
                                  "height": str(arr.shape[0]),
@@ -268,7 +225,7 @@ def frame_stats(df: DataFrame, every: int = 2) -> DataFrame:
             rows = []
             for mid, fidx, frame in zip(pdf["media_id"], pdf["frame_idx"],
                                         pdf["frame"]):
-                arr = _decode_fake_image(bytes(frame))
+                arr = to_gray(decode_image(bytes(frame)))
                 rows.append((int(mid), int(fidx), float(arr.mean())))
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               FRAME_STATS_SCHEMA.fields])

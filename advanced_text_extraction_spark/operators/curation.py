@@ -285,8 +285,7 @@ def paragraph_dedup(df: DataFrame, id_col: str, text_col: str,
 
 def curation_policy(df: DataFrame, id_col: str, text_col: str,
                     min_quality: float = 0.3,
-                    min_logprob: float = -4.0,
-                    fused: bool = True) -> DataFrame:
+                    min_logprob: float = -4.0) -> DataFrame:
     """One keep/drop decision per document composing the three quality
     tiers this module family provides — the shape of a production
     curation gate (RefinedWeb/Gopher-style pipelines stack rule gates,
@@ -303,31 +302,23 @@ def curation_policy(df: DataFrame, id_col: str, text_col: str,
     oracle (which composes the three sub-oracles verbatim) hashes
     identically.
 
-    Scale shape (``fused=True``, the default — VERDICT r3 #2): gopher
-    keep and quality score are BOTH row-local, so they are computed in
-    ONE projection over one corpus scan; only the LM tier — intrinsically
-    corpus-wide (vocab fit) — is a separate branch, joined back doc-keyed
-    (already partitioned by its own final aggregation). ``fused=False``
-    keeps the three-way composition of the standalone operators (each
-    independently oracle-gated) — the test surface that pins
-    fused ≡ composed. All joins are id-equi-joins, no new shuffle
-    classes; fusing removes one full corpus scan AND the gopher⋈quality
-    equi-join (the LM branch keeps its own documented scan shape)."""
+    Scale shape (VERDICT r3 #2): gopher keep and quality score are BOTH
+    row-local, so they are computed in ONE projection over one corpus
+    scan; only the LM tier — intrinsically corpus-wide (vocab fit) — is a
+    separate branch, joined back doc-keyed (already partitioned by its
+    own final aggregation). tests/test_curation.py pins this plan
+    value-equal to the composition of the three standalone operators
+    (each independently oracle-gated), with one corpus scan and the
+    gopher⋈quality equi-join fewer; the LM branch keeps its own
+    documented scan shape."""
     from .sampling import unigram_logprob
-    from .textstats import quality_exprs, quality_score
+    from .textstats import quality_exprs
 
-    if fused:
-        g = df.select(
-            F.col(id_col),
-            gopher_exprs(F.col(text_col))["gopher_keep"]
-            .alias("gopher_keep"),
-            quality_exprs(F.col(text_col))["quality"].alias("quality"),
-        )
-    else:
-        g = gopher_quality_flags(df, id_col, text_col) \
-            .select(id_col, "gopher_keep") \
-            .join(quality_score(df, id_col, text_col)
-                  .select(id_col, "quality"), id_col)
+    g = df.select(
+        F.col(id_col),
+        gopher_exprs(F.col(text_col))["gopher_keep"].alias("gopher_keep"),
+        quality_exprs(F.col(text_col))["quality"].alias("quality"),
+    )
     u = unigram_logprob(df, id_col, text_col) \
         .select(id_col, "mean_logprob")
     j = g.join(u, id_col, "left")

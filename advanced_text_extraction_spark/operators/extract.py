@@ -34,9 +34,10 @@ from ..kernels.normalize import normalize_plain
 from ..kernels.office_extract import extract_office
 from ..kernels.pdf_extract import extract_pdf
 from ..kernels.sniff import sniff_content_type
+from ..sources.config import DEFAULT_CONFIG
 
 EXTRACTOR_VERSION = "ate-spark/0.1"
-MAX_PAYLOAD_CHARS = 2_000_000
+MAX_PAYLOAD_CHARS = DEFAULT_CONFIG["extract"]["max_payload_chars"]
 
 SPAN_TYPE = T.ArrayType(
     T.StructType([
@@ -200,10 +201,11 @@ _SPAN_STRUCT = pa.struct([pa.field(f.name, pa.int32(), nullable=False)
                           for f in SPAN_TYPE.elementType.fields])
 _SPANS_ARROW = pa.list_(_SPAN_STRUCT)
 _META_ARROW = pa.map_(pa.string(), pa.string())
+_BUCKET = "part_bucket"  # the lineage-stats key column (plans/pipeline.py)
 
 
 def _make_kernel(dedupe_keys: tuple[str, ...] | None,
-                 stats_acc=None, bucket_col: str = "part_bucket",
+                 stats_acc=None,
                  ocr_fallback_engine: str | None = None,
                  ocr_preprocess: bool = True,
                  ocr_confidence_threshold: float = 0.0,
@@ -247,12 +249,12 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
             if not rb.num_rows:
                 continue
             names = rb.schema.names
-            with_stats = stats_acc is not None and bucket_col in names
+            with_stats = stats_acc is not None and _BUCKET in names
             if with_stats:
                 # true INPUT counts, recorded BEFORE the dedupe mask —
                 # the per-bucket tuples merge element-wise, so input
                 # rows and processed-row stats arrive as separate adds
-                vc = pc.value_counts(rb.column(bucket_col))
+                vc = pc.value_counts(rb.column(_BUCKET))
                 stats_acc.add({
                     b: (n, 0, 0, 0, 0) for b, n in
                     zip(vc.field("values").to_pylist(),
@@ -311,7 +313,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
             if with_stats:
                 upd: dict[int, list[int]] = {}
                 for b, meta, status, us in zip(
-                        rb.column(bucket_col).to_pylist(), metas,
+                        rb.column(_BUCKET).to_pylist(), metas,
                         statuses, row_us):
                     v = upd.get(b)
                     if v is None:
@@ -332,7 +334,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
 
 def extract(df: DataFrame,
             dedupe_keys: tuple[str, ...] | None = None,
-            stats_acc=None, bucket_col: str = "part_bucket",
+            stats_acc=None,
             ocr_fallback_engine: str | None = None,
             ocr_preprocess: bool = True,
             ocr_confidence_threshold: float = 0.0,
@@ -355,7 +357,7 @@ def extract(df: DataFrame,
     OCR result is rejected and the short text layer kept);
     ``max_payload_chars`` is the config extract.max_payload_chars cap."""
     carried = T.StructType([f for f in df.schema.fields if f.name != "text"])
-    return df.mapInArrow(_make_kernel(dedupe_keys, stats_acc, bucket_col,
+    return df.mapInArrow(_make_kernel(dedupe_keys, stats_acc,
                                       ocr_fallback_engine, ocr_preprocess,
                                       ocr_confidence_threshold,
                                       max_payload_chars),

@@ -45,7 +45,7 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def quality_exprs(c) -> dict:
     """The quality-score column expressions over a text COLUMN (not a
     DataFrame) — the expression-level surface that lets composite gates
-    (``curation.curation_policy`` fused mode) compute quality inside the
+    (``curation.curation_policy``) compute quality inside the
     SAME projection as other row-local signals, one corpus scan total."""
     n = char_count(c)
     # raw (unrounded) ratios feed the blend — summing pre-rounded values

@@ -1,4 +1,4 @@
-"""Window / ordering operators (SURVEY.md §2.4 W1–W4).
+"""Window / ordering operators (SURVEY.md §2.4 W1–W3).
 
 All built-in Catalyst window functions — no UDFs. W3 (stable turn order)
 is the flagship plan's ``sortWithinPartitions`` in ``plans/pipeline.py``.
@@ -8,13 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def with_turn_seq(df: DataFrame) -> DataFrame:
-    """W4 — per-conversation display enumeration (reference
-    /root/reference/gui.py:1080): row_number over the turn order."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_seq", F.row_number().over(w))
 
 
 def sessionize_batch(df: DataFrame, conv_col: str = "conv_id",

@@ -63,8 +63,9 @@ from ..operators.extract import (
     new_stats_accumulator,
 )
 from ..sources import catalog
+from ..sources.config import DEFAULT_CONFIG
 
-DEFAULT_N_BUCKETS = 32
+DEFAULT_N_BUCKETS = DEFAULT_CONFIG["job"]["n_buckets"]
 DEFAULT_SALT = 4
 
 

@@ -22,12 +22,12 @@ logger = logging.getLogger(__name__)
 # renamed to their Spark equivalents documented in SURVEY §2:
 # ocr.confidence_threshold → extract.confidence_threshold (P6),
 # batch.max_workers → the session's cores (sources/session.py),
-# batch.chunk_size → job.arrow_batch_rows (C3),
+# batch.chunk_size → the session's fixed 1024-row Arrow batch (C3),
 # database.path → warehouse.path (K1)
 DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
     "extract": {
         "confidence_threshold": 0.5,   # text_extractor.py:784 (P6)
-        "max_payload_chars": 2_000_000,
+        "max_payload_chars": 2_000_000,  # operators/extract.py reads it
     },
     "ocr": {
         # reference ocr.default_engine analog (text_extractor.py:782):
@@ -40,8 +40,7 @@ DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
         "path": "warehouse",           # database.path analog
     },
     "job": {
-        "n_buckets": 32,
-        "arrow_batch_rows": 1024,      # batch.chunk_size analog (C3)
+        "n_buckets": 32,               # plans/pipeline.py reads it
         "resume": True,
     },
 }

@@ -30,7 +30,6 @@ def driver_memory() -> str:
 def build_session(
     app_name: str = "advanced_text_extraction_spark",
     master: str | None = None,
-    arrow_batch_rows: int = 1024,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     builder = (
@@ -44,7 +43,7 @@ def build_session(
         # Arrow exchange for pandas UDFs; bounded batches keep the Python
         # worker memory flat regardless of payload skew (SURVEY §2.13 C3)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # idempotent per-partition overwrite (reference J2 upsert analog)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", driver_memory())

@@ -4,8 +4,9 @@ over a transcript stream.
 The reference is strictly batch (SURVEY §2.12) and the north rule asks
 for batch-with-checkpoint-resume — that job lives in plans/pipeline.py.
 This module is the forward path for continuously-arriving transcripts:
-``readStream`` → the SAME ``extract()`` mapInArrow dispatch (kernels are
-stream/batch agnostic) → ``writeStream`` with a checkpoint, so exactly-once
+``readStream`` → the SAME ``operators.extract.extract()`` mapInArrow
+dispatch, called directly on the stream (kernels are stream/batch
+agnostic) → ``writeStream`` with a checkpoint, so exactly-once
 sink semantics replace the lineage table. Windowed reporting uses
 watermarks to bound state for late turns.
 
@@ -48,12 +49,6 @@ def read_transcript_stream(spark: SparkSession, input_path: str,
     )
 
 
-def extract_stream(stream: DataFrame) -> DataFrame:
-    """The batch extraction dispatch applied to a stream — same kernels,
-    same output schema."""
-    return extract(stream)
-
-
 def start_extraction_stream(spark: SparkSession, input_path: str,
                             output_path: str, checkpoint_path: str,
                             available_now: bool = True):
@@ -61,7 +56,7 @@ def start_extraction_stream(spark: SparkSession, input_path: str,
     semantics. ``available_now=True`` drains the current backlog and
     stops (the batch-parity mode used by tests); ``False`` runs
     continuously."""
-    out = extract_stream(read_transcript_stream(spark, input_path))
+    out = extract(read_transcript_stream(spark, input_path))
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_path)
@@ -78,7 +73,7 @@ def windowed_turn_counts(stream: DataFrame, window: str = "5 minutes",
     """Streaming reporting analog of the batch method-distribution
     summary (SURVEY §2.3 A3): turns per content type per event-time
     window. The watermark bounds state for late-arriving turns."""
-    extracted = extract_stream(stream)
+    extracted = extract(stream)
     return (
         extracted.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "content_type")

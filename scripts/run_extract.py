@@ -70,9 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     max_payload = int(ext_cfg.get(
         "max_payload_chars", ext_d["max_payload_chars"]))
 
-    spark = build_session(app_name="ate-extract", master=args.master,
-                          arrow_batch_rows=job.get("arrow_batch_rows",
-                                                   job_d["arrow_batch_rows"]))
+    spark = build_session(app_name="ate-extract", master=args.master)
     try:
         df = spark.read.parquet(args.input)
         stats = run_extract_job(

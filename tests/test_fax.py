@@ -9,9 +9,11 @@ import numpy as np
 import pytest
 
 from advanced_text_extraction_spark.kernels.fax_codec import (
-    _BLACK_CODES, _EXT_MAKEUP, _WHITE_CODES, g4_decode, g4_encode)
+    _BLACK_CODES, _EXT_MAKEUP, _WHITE_CODES, g4_decode)
+from fixtures.fax_codec import g4_encode
 from advanced_text_extraction_spark.kernels.image_codec import (
-    ImageError, decode_tiff, encode_tiff)
+    ImageError, decode_tiff)
+from fixtures.image_codec import encode_tiff
 
 
 def _unpack(data: bytes, w: int, h: int) -> np.ndarray:
@@ -116,7 +118,8 @@ def test_g3_mh_roundtrip_property():
     byte-aligned rows), G3 1D (EOL-separated), G3 2D (tag-bit-mixed
     1D first row + 2D lines against the previous row)."""
     from advanced_text_extraction_spark.kernels.fax_codec import (
-        g3_decode, g3_encode, mh_decode, mh_encode)
+        g3_decode, mh_decode)
+    from fixtures.fax_codec import g3_encode, mh_encode
     rng = np.random.default_rng(17)
     for trial in range(24):
         h = int(rng.integers(1, 30))
@@ -147,8 +150,8 @@ def test_g3_mh_roundtrip_property():
 def test_mh_rows_are_byte_aligned_and_independent():
     """TIFF §10: each MH row starts on a byte boundary — decoding row 2
     must not depend on row 1's trailing bit position."""
-    from advanced_text_extraction_spark.kernels.fax_codec import (
-        mh_decode, mh_encode)
+    from advanced_text_extraction_spark.kernels.fax_codec import mh_decode
+    from fixtures.fax_codec import mh_encode
     ink = np.zeros((2, 9), bool)
     ink[0, 3:5] = True   # row 0 codes in a non-multiple-of-8 bit count
     ink[1, 0:9] = True

@@ -13,14 +13,17 @@ from __future__ import annotations
 
 import base64
 import random
+import struct
 
 import numpy as np
 import pytest
 
 from advanced_text_extraction_spark.kernels.encoding import decode_bytes
 from advanced_text_extraction_spark.kernels.image_codec import (
-    ImageError, decode_image, encode_bmp_gray, encode_pgm, encode_png_gray,
-    encode_tiff)
+    ImageError, decode_image)
+from fixtures.image_codec import (
+    _png_chunk, encode_bmp_gray, encode_pgm, encode_png_gray, encode_tiff,
+    png_gray_bomb)
 from advanced_text_extraction_spark.kernels.ocr import ocr_image, render_page
 from advanced_text_extraction_spark.operators.extract import extract_one
 from advanced_text_extraction_spark.kernels.sniff import MAX_INFLATE_BYTES
@@ -120,8 +123,54 @@ def test_inflate_bombs_end_as_error_rows(bomb):
     assert peak < 3 * budget, peak
 
 
+def test_png_idat_bomb_inflates_only_the_pixels():
+    """A 16x16 gray PNG whose IDAT inflates to 256 MiB: the decoder
+    inflates only the bytes the header's dimensions need, so it returns
+    the image's pixels from a small, bounded allocation."""
+    import tracemalloc
+
+    img = ((np.arange(256) * 7) % 251).astype(np.uint8).reshape(16, 16)
+    buf = png_gray_bomb(img, 256 << 20)
+    tracemalloc.start()
+    try:
+        out = decode_image(buf)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert (out == img).all()
+    assert peak < 8 << 20, peak
+
+
+def test_png_short_idat_keeps_its_error_messages():
+    """The bounded inflate keeps zlib.decompress's message for a stream
+    cut short, also when it already holds every pixel, and reports a
+    finished stream too short for the header's dimensions as truncated
+    pixel data."""
+    import zlib
+
+    img = ((np.arange(12 * 9) * 5) % 251).astype(np.uint8).reshape(12, 9)
+    png = encode_png_gray(img)
+    at = png.index(b"IDAT")
+    (n,) = struct.unpack(">I", png[at - 4:at])
+    idat = png[at + 4:at + 4 + n]
+
+    def with_idat(data: bytes) -> bytes:
+        return png[:at - 4] + _png_chunk(b"IDAT", data) + png[at + 8 + n:]
+
+    with pytest.raises(ImageError, match="^PNG inflate failed: Error -5 "
+                       "while decompressing data: incomplete or truncated "
+                       "stream$"):
+        decode_image(with_idat(idat[:len(idat) // 2]))
+    with pytest.raises(ImageError, match="^PNG inflate failed: Error -5"):
+        decode_image(with_idat(idat[:-4]))  # all pixels, no checksum
+    rows = b"".join(b"\0" + r.tobytes() for r in img[:6])
+    with pytest.raises(ImageError, match="^truncated PNG pixel data$"):
+        decode_image(with_idat(zlib.compress(rows)))
+    assert (decode_image(with_idat(idat)) == img).all()
+
+
 def test_decode_image_raises_only_its_own_error_type():
-    from advanced_text_extraction_spark.kernels.image_codec import encode_jpeg
+    from fixtures.image_codec import encode_jpeg
 
     rng = random.Random(99)
     samples = [_rand_bytes(rng, rng.randrange(0, 300)) for _ in range(60)]
@@ -175,8 +224,7 @@ def test_progressive_jpeg_decoder_total_over_corruption():
     the hook) — never an uncaught exception or a hang. The multi-scan
     walk adds parser surface (scan headers, EOBn, refinement bits) that
     baseline fuzzing cannot reach."""
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        encode_jpeg)
+    from fixtures.image_codec import encode_jpeg
 
     rng = random.Random(7)
     img = render_page("PROG FUZZ 42", scale=2)

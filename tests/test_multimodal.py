@@ -1,8 +1,8 @@
 """Multimodal plumbing: binary payload columns + typed metadata, decoded
-via mapInPandas kernels over the deterministic fake codec. The Spark-side
-contract (schemas, batch iteration, row-exploding frame sampler,
-failure-as-data) is fully real; the codec registry stubs real formats
-behind NotImplementedError."""
+via mapInPandas kernels through the from-scratch image codecs (the
+deterministic FAKE container and real raster formats alike). The
+Spark-side contract (schemas, batch iteration, row-exploding frame
+sampler, failure-as-data) is fully real."""
 
 from __future__ import annotations
 
@@ -85,19 +85,14 @@ def test_audio_stats(media_df):
         assert r["rms"] == pytest.approx(float(np.sqrt((pcm ** 2).mean())))
 
 
-def test_real_codec_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        M.IMAGE_CODECS["real"](b"\xff\xd8\xff")
-
-
 def test_image_stats_sniff_codec_over_jpeg_and_png(spark):
-    """The 'sniff' codec decodes real container formats from scratch —
+    """image_stats sniffs and decodes real container formats from scratch —
     JPEG payloads (the dominant real-world raster, r2 VERDICT gap #1)
     flow through the same Spark plumbing as the fake container."""
     import pandas as pd
 
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg, encode_png_gray)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg, encode_png_gray
 
     imgs = {
         0: ((np.arange(24 * 32) * 7) % 251).astype(np.uint8).reshape(24, 32),
@@ -113,7 +108,7 @@ def test_image_stats_sniff_codec_over_jpeg_and_png(spark):
                       "payload": list(payloads.values()),
                       "meta": [{}] * 3}),
         schema=M.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in M.image_stats(df, codec="sniff").collect()}
+    out = {r["media_id"]: r for r in M.image_stats(df).collect()}
     for mid, img in imgs.items():
         r = out[mid]
         assert r["status"] == "ok"
@@ -131,8 +126,7 @@ def test_image_stats_sniff_codec_over_tiff(spark):
     paths in-plan."""
     import pandas as pd
 
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        encode_tiff)
+    from fixtures.image_codec import encode_tiff
     from advanced_text_extraction_spark.kernels.image_prep import to_gray
 
     rng = np.random.default_rng(21)
@@ -158,7 +152,7 @@ def test_image_stats_sniff_codec_over_tiff(spark):
                       "meta": [{}] * len(payloads)}),
         schema=M.MEDIA_SCHEMA)
     out = {r["media_id"]: r
-           for r in M.image_stats(df, codec="sniff").collect()}
+           for r in M.image_stats(df).collect()}
     for mid, img in imgs.items():
         r = out[mid]
         assert r["status"] == "ok"
@@ -174,8 +168,7 @@ def test_image_stats_sniff_codec_over_webp(spark):
     import pandas as pd
 
     from advanced_text_extraction_spark.kernels.image_prep import to_gray
-    from advanced_text_extraction_spark.kernels.webp_codec import (
-        encode_webp)
+    from fixtures.webp_codec import encode_webp
 
     rng = np.random.default_rng(29)
     imgs = {
@@ -195,7 +188,7 @@ def test_image_stats_sniff_codec_over_webp(spark):
                       "meta": [{}] * 3}),
         schema=M.MEDIA_SCHEMA)
     out = {r["media_id"]: r
-           for r in M.image_stats(df, codec="sniff").collect()}
+           for r in M.image_stats(df).collect()}
     for mid, img in imgs.items():
         r = out[mid]
         assert r["status"] == "ok"
@@ -212,8 +205,8 @@ def test_image_stats_sniff_codec_over_progressive_jpeg(spark):
     real-world JPEG slice after baseline landed)."""
     import pandas as pd
 
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     from advanced_text_extraction_spark.kernels.image_prep import to_gray
 
     rng = np.random.default_rng(5)
@@ -234,7 +227,7 @@ def test_image_stats_sniff_codec_over_progressive_jpeg(spark):
                       "meta": [{}] * 2}),
         schema=M.MEDIA_SCHEMA)
     out = {r["media_id"]: r
-           for r in M.image_stats(df, codec="sniff").collect()}
+           for r in M.image_stats(df).collect()}
     for mid, img in imgs.items():
         r = out[mid]
         assert r["status"] == "ok"

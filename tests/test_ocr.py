@@ -13,8 +13,8 @@ from hypothesis import strategies as st
 
 from advanced_text_extraction_spark.kernels import image_prep as prep
 from advanced_text_extraction_spark.kernels.image_codec import (
-    decode_bmp, decode_image, decode_pnm, encode_bmp_gray, encode_pgm,
-    ImageError)
+    decode_bmp, decode_image, decode_pnm, ImageError)
+from fixtures.image_codec import encode_bmp_gray, encode_pgm
 from advanced_text_extraction_spark.kernels.ocr import (
     FONT, normalize_to_charset, ocr_image, recognize, render_page,
     select_engine)
@@ -53,8 +53,8 @@ def test_bad_magic_raises():
 
 
 def test_png_roundtrip_all_encoder_filters():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_png, encode_png_gray)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_png
+    from fixtures.image_codec import encode_png_gray
     arr = ((np.arange(31 * 17) * 13) % 251).astype(np.uint8).reshape(17, 31)
     for ft in (0, 1, 2):
         assert (decode_png(encode_png_gray(arr, ft)) == arr).all()
@@ -65,7 +65,8 @@ def test_png_average_paeth_rgb_palette():
     import struct
     import zlib as _zlib
     from advanced_text_extraction_spark.kernels.image_codec import (
-        _paeth, _png_chunk, _PNG_SIG, decode_png)
+        _paeth, _PNG_SIG, decode_png)
+    from fixtures.image_codec import _png_chunk
     arr = ((np.arange(31 * 17) * 13) % 251).astype(np.uint8).reshape(17, 31)
     h, w = arr.shape
     # forward-filter with average (3) / paeth (4) and decode back
@@ -105,8 +106,7 @@ def test_png_average_paeth_rgb_palette():
 
 
 def test_ocr_through_png():
-    from advanced_text_extraction_spark.kernels.image_codec import \
-        encode_png_gray
+    from fixtures.image_codec import encode_png_gray
     img = render_page("PNG PATH 99", scale=3)
     assert recognize(decode_image(encode_png_gray(img)))["text"] \
         == "PNG PATH 99"
@@ -400,8 +400,8 @@ def _psnr(a, b):
 
 
 def test_jpeg_gray_roundtrip():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     # uniform block is DC-only: must roundtrip exactly
     flat = np.full((24, 40), 200, np.uint8)
     assert (decode_jpeg(encode_jpeg(flat, quality=90)) == flat).all()
@@ -417,8 +417,8 @@ def test_jpeg_gray_roundtrip():
 
 
 def test_jpeg_color_444_and_420():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     yy, xx = np.mgrid[0:33, 0:41]
     img = np.zeros((33, 41, 3), np.uint8)
     img[..., 0] = (xx * 6).astype(np.uint8)
@@ -431,8 +431,8 @@ def test_jpeg_color_444_and_420():
 
 
 def test_jpeg_restart_markers():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     img = ((np.arange(64 * 64) * 29) % 256).astype(np.uint8).reshape(64, 64)
     buf = encode_jpeg(img, quality=95, restart_interval=3)
     assert any(bytes([0xFF, 0xD0 + i]) in buf for i in range(8))
@@ -440,8 +440,8 @@ def test_jpeg_restart_markers():
 
 
 def test_jpeg_dispatch_and_errors():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     img = ((np.arange(16 * 24) * 11) % 256).astype(np.uint8).reshape(16, 24)
     buf = encode_jpeg(img, quality=95)
     assert (decode_image(buf) == decode_jpeg(buf)).all()
@@ -462,8 +462,8 @@ def test_jpeg_dispatch_and_errors():
 
 
 def test_ocr_reads_jpeg_render():
-    from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_jpeg, encode_jpeg)
+    from advanced_text_extraction_spark.kernels.image_codec import decode_jpeg
+    from fixtures.image_codec import encode_jpeg
     page = render_page(TXT.split("\n")[0])
     back = decode_jpeg(encode_jpeg(page, quality=95))
     res = ocr_image(back, engine="auto", preprocess=True)
@@ -548,7 +548,8 @@ def test_jpeg_progressive_matches_baseline_exactly():
     across gray/color, 4:4:4/4:2:0, odd dims, and EOB-run-heavy
     (flat/gradient) content."""
     from advanced_text_extraction_spark.kernels.image_codec import (
-        decode_image, decode_jpeg, encode_jpeg)
+        decode_image, decode_jpeg)
+    from fixtures.image_codec import encode_jpeg
     rng = np.random.default_rng(11)
     cases = [
         (rng.integers(0, 256, size=(33, 41), dtype=np.uint8), False),
@@ -578,9 +579,10 @@ def test_jpeg_progressive_scan_coders_property():
     the progressive scan decoders must reproduce the blocks exactly
     (covers EOBn runs, ZRL-with-history interleaving, band splits)."""
     from advanced_text_extraction_spark.kernels.image_codec import (
-        _ac_first, _ac_refine, _BitReader, _BitWriter, _ac_first_tokens,
-        _ac_refine_tokens, _build_dht, _canonical_codes, _encode_codes,
-        _write_tokens)
+        _ac_first, _ac_refine, _BitReader, _canonical_codes)
+    from fixtures.image_codec import (
+        _BitWriter, _ac_first_tokens, _ac_refine_tokens, _build_dht,
+        _encode_codes, _write_tokens)
 
     rng = np.random.default_rng(23)
     for trial in range(20):

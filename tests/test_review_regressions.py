@@ -155,6 +155,51 @@ def test_partial_config_section_does_not_crash(tmp_path, monkeypatch):
     assert calls["output"] == "warehouse"
 
 
+def test_retired_config_keys_are_ignored(tmp_path, monkeypatch):
+    """job.arrow_batch_rows, job.salt and job.shuffle_partitions are no
+    longer read: an old config that still carries them runs, and none of
+    them reaches the session or the job."""
+    import advanced_text_extraction_spark.plans.pipeline as pipeline
+    import advanced_text_extraction_spark.sources.session as session
+    import scripts.run_extract as run_extract
+
+    calls = {}
+
+    def fake_job(spark, df, output, **kw):
+        calls["job"] = kw
+        from types import SimpleNamespace
+        return SimpleNamespace(run_id="t", input_rows=0, buckets_done=0,
+                               buckets_skipped=0, wall_sec=0.0)
+
+    class _Read:
+        def parquet(self, p):
+            return "df"
+
+    class _Spark:
+        read = _Read()
+
+        def stop(self):
+            pass
+
+    def fake_session(**kw):
+        calls["session"] = kw
+        return _Spark()
+
+    monkeypatch.setattr(pipeline, "run_extract_job", fake_job)
+    monkeypatch.setattr(session, "build_session", fake_session)
+    cfg = tmp_path / "cfg.json"
+    cfg.write_text(json.dumps({"job": {
+        "n_buckets": 5, "arrow_batch_rows": 64, "salt": 4,
+        "shuffle_partitions": 16}}))
+    rc = run_extract.main(["--input", str(tmp_path / "in"),
+                           "--config", str(cfg)])
+    assert rc == 0
+    assert set(calls["session"]) == {"app_name", "master"}
+    assert calls["job"]["n_buckets"] == 5
+    assert not {"arrow_batch_rows", "salt", "shuffle_partitions"} \
+        & set(calls["job"])
+
+
 # ------------------------------------------- punctuation-only line bands
 
 def test_punctuation_only_line_not_split():

@@ -17,8 +17,8 @@ import numpy as np
 import pytest
 
 from advanced_text_extraction_spark.kernels.image_codec import (
-    ImageError, _lzw_decode, _lzw_encode, _packbits_decode,
-    _packbits_encode_row, decode_image, decode_tiff, encode_tiff)
+    ImageError, _lzw_decode, _packbits_decode, decode_image, decode_tiff)
+from fixtures.image_codec import _lzw_encode, _packbits_encode_row, encode_tiff
 
 
 def _imgs() -> dict[str, np.ndarray]:

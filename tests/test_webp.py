@@ -20,8 +20,9 @@ import pytest
 
 from advanced_text_extraction_spark.kernels.image_codec import (
     ImageError, decode_image)
-from advanced_text_extraction_spark.kernels.webp_codec import (
-    _BitW, _huffman_lengths, _write_prefix_code, decode_webp, encode_webp)
+from advanced_text_extraction_spark.kernels.webp_codec import decode_webp
+from fixtures.webp_codec import (
+    _BitW, _huffman_lengths, _write_prefix_code, encode_webp)
 
 
 def _imgs() -> dict[str, np.ndarray]:
@@ -277,7 +278,8 @@ def test_simple_code_pair_storage_order_not_canonical():
     s1=3) must decode 0→200, 1→3 — canonical (by-value) assignment would
     swap them (ADVICE r4)."""
     from advanced_text_extraction_spark.kernels.webp_codec import (
-        _Bits, _BitW, _read_prefix_code)
+        _Bits, _read_prefix_code)
+    from fixtures.webp_codec import _BitW
     bw = _BitW()
     bw.write(1, 1)    # simple form
     bw.write(1, 1)    # two symbols
