@@ -28,6 +28,8 @@ the argmax if the max is ≥ 2, ties broken alphabetically, else
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
+from collections import Counter
 
 # Ḁ-ỿ (U+1E00-U+1EFF, Latin Extended Additional) covers the Vietnamese
 # tone-marked vowels that À-ɏ misses — "được" would otherwise split.
@@ -245,25 +247,30 @@ BOOSTS: dict[str, tuple[str, str]] = {
     "ne": ("hi", "छन्|भएको|गर्न|लागि|गरेको"),
 }
 
-# precompiled per-script character classes — C-speed counting; this runs
-# per document inside the extraction kernel's hot path
-_SCRIPT_RES: dict[str, re.Pattern] = {
-    lang: re.compile(
-        "[" + "".join(f"{chr(lo)}-{chr(hi)}" for lo, hi in ranges) + "]")
-    for lang, ranges in SCRIPTS.items()
-}
+# ONE character class over every script range finds all script characters
+# in a single pass; a bisect over the sorted range starts then names the
+# script of each distinct hit (the ranges are disjoint). This runs per
+# document inside the extraction kernel's hot path.
+_RANGES = sorted((lo, hi, lang) for lang, ranges in SCRIPTS.items()
+                 for lo, hi in ranges)
+_RANGE_STARTS = [lo for lo, _, _ in _RANGES]
+_RANGE_LANGS = [lang for _, _, lang in _RANGES]
+_SCRIPT_RE = re.compile(
+    "[" + "".join(f"{chr(lo)}-{chr(hi)}" for lo, hi, _ in _RANGES) + "]")
 _BOOST_RES: dict[str, re.Pattern] = {
     lang: re.compile(pat) for lang, (_, pat) in BOOSTS.items()
     if pat is not None
 }
+# any character at or above U+0370, where every script range and boost
+# pattern lies
+_ABOVE_U036F_RE = re.compile("[^\x00-\u036f]")
 
 _MIN_HITS = 2
 
-# inverted stopword index: token -> languages claiming it. Scoring all 20
-# Latin profiles is then ONE pass over the token list (a dict probe per
-# token, C-speed) instead of 20 membership scans — measured 288 -> ~60
-# us/doc on transcript-shaped text; this runs per turn inside the
-# extraction kernel's hot path, ~46% of the whole extract cost before.
+# inverted stopword index: token -> languages claiming it. Scoring all 32
+# Latin profiles is then one set intersection of the document's distinct
+# tokens with this index (C-speed) instead of a membership scan per
+# profile; this runs per turn inside the extraction kernel's hot path.
 _STOP_LANGS: dict[str, tuple[str, ...]] = {}
 for _lang, _words in STOPWORDS.items():
     for _w in _words:
@@ -283,18 +290,21 @@ def detect_language(text: str) -> str:
     # no character in a script range lowercases below it), so text whose
     # lowered form stays below U+0370 — ASCII and Latin-script prose, the
     # overwhelming transcript case — scores 0 on all of them: isascii()
-    # (O(1)) and max() are C-speed gates that skip 23 regex scans
-    if not lowered.isascii() and max(lowered) >= "\u0370":
-        for lang, rx in _SCRIPT_RES.items():
-            scores[lang] = len(rx.findall(text))
+    # (O(1)) and one stop-at-first-hit search gate the script and boost
+    # scans
+    if not lowered.isascii() and _ABOVE_U036F_RE.search(lowered):
+        for ch, n in Counter(_SCRIPT_RE.findall(text)).items():
+            lang = _RANGE_LANGS[bisect_right(_RANGE_STARTS, ord(ch)) - 1]
+            scores[lang] = scores.get(lang, 0) + n
         for lang, rx in _BOOST_RES.items():
             scores[lang] = len(rx.findall(lowered))
         for lang, (base, _) in BOOSTS.items():
             if scores.get(lang, 0) >= _MIN_HITS:
                 scores[lang] += scores.get(base, 0)
-    for tok in _TOKEN_RE.findall(lowered):
-        for lang in _STOP_LANGS.get(tok, ()):
-            scores[lang] = scores.get(lang, 0) + 1
+    tokens = Counter(_TOKEN_RE.findall(lowered))
+    for tok in tokens.keys() & _STOP_LANGS.keys():
+        for lang in _STOP_LANGS[tok]:
+            scores[lang] = scores.get(lang, 0) + tokens[tok]
     best_lang, best_hits = "unknown", 0
     for lang in sorted(scores):
         if scores[lang] > best_hits:

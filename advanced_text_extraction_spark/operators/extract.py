@@ -235,8 +235,8 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     corpus must not report 30% fewer input rows)."""
 
     def _extract_batches(batches):
-        # the P3 hook is built here, once per task, so a worker with no
-        # engine never imports the OCR stack
+        # the P3 hook is built here, once per task; the worker daemon
+        # (sources/worker_daemon.py) has already imported the OCR stack
         ocr_fallback = None
         if ocr_fallback_engine is not None:
             from .ocr import pdf_ocr_fallback

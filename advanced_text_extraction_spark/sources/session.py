@@ -6,6 +6,13 @@ this process may run on and a driver heap of half the physical memory,
 unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` say otherwise. On a
 real cluster the same factory applies — only master, memory, and the
 Iceberg catalog packages change (see sources/catalog.py).
+
+Python workers fork from this package's daemon (sources/worker_daemon.py),
+which preloads the flagship's imports. The daemon starts before any task
+puts a ``--py-files`` zip on ``sys.path``, so the session hands the
+workers the directory or zip this package was imported from as their
+``PYTHONPATH``. On a cluster that path must also exist on the executors,
+as it does for a zip YARN ships with ``--py-files``.
 """
 
 from __future__ import annotations
@@ -13,6 +20,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory or zip holding the package: three levels above this file
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 
 def host_cpus() -> int:
@@ -55,6 +66,10 @@ def build_session(
         .config("spark.ui.enabled", "false")
         # local mode: no data locality to wait for — schedule immediately
         .config("spark.locality.wait", "0s")
+        # workers fork from a daemon that already holds the flagship's
+        # imports; it needs the package before any task ships it
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

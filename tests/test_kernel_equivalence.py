@@ -1,8 +1,10 @@
 """The text hot path's fast formulations equal the plain ones they
 replace: zero-width deletion by a compiled class instead of
 ``str.translate``, horizontal-whitespace collapse that matches only runs
-that change, and the lang-id gate that skips the script and boost scans
-when the lowered text stays below U+0370.
+that change, and lang-id's gate that skips the script and boost scans
+when the lowered text stays below U+0370, its one union-class script scan
+(each hit named by a bisect over the range starts) and its stopword tally
+over distinct tokens.
 
 The reference formulations live here, verbatim, and both are driven over
 a hazard alphabet: the whitespace and control characters where Python's
@@ -48,13 +50,20 @@ def ref_normalize_inline(s: str) -> str:
     return _REF_INLINE_WS_RE.sub(" ", s).strip()
 
 
+_REF_SCRIPT_RES = {
+    code: re.compile(
+        "[" + "".join(f"{chr(lo)}-{chr(hi)}" for lo, hi in ranges) + "]")
+    for code, ranges in lang.SCRIPTS.items()
+}
+
+
 def ref_detect_language(text: str) -> str:
     if not text:
         return "unknown"
     lowered = text.lower()
     scores: dict[str, int] = {}
     if not lowered.isascii():
-        for code, rx in lang._SCRIPT_RES.items():
+        for code, rx in _REF_SCRIPT_RES.items():
             scores[code] = len(rx.findall(text))
         for code, rx in lang._BOOST_RES.items():
             scores[code] = len(rx.findall(lowered))
@@ -103,14 +112,29 @@ def test_detect_language_equals_reference(s):
     assert lang.detect_language(s) == ref_detect_language(s)
 
 
+# every script range's ends and middle, in both cases where one exists,
+# and the boost markers: strings that mix several scripts
+_SCRIPT_CHARS = sorted({
+    c for lo, hi in (r for ranges in lang.SCRIPTS.values() for r in ranges)
+    for cp in (lo, (lo + hi) // 2, hi)
+    for c in (chr(cp), chr(cp).upper(), chr(cp).lower()) if len(c) == 1
+} | set(re.sub(r"[\[\]|]", "", "".join(
+    p for _, p in lang.BOOSTS.values() if p is not None))))
+_MIXED = _SCRIPT_CHARS + _STOPWORDS + _HAZARDS + [" "] * 20
+
+
 def test_bulk_random_strings_equal_reference():
-    """A seeded sweep wider than hypothesis' budget: piece-built strings
-    plus raw code points from the BMP's script blocks."""
+    """A seeded sweep wider than hypothesis' budget: piece-built strings,
+    mixed-script strings, and raw code points from the BMP's script
+    blocks."""
     rng = random.Random(8)
-    for i in range(20_000):
-        if i % 2:
+    for i in range(30_000):
+        if i % 3 == 1:
             s = "".join(rng.choice(_PIECES)
                         for _ in range(rng.randrange(0, 60)))
+        elif i % 3 == 2:
+            s = "".join(rng.choice(_MIXED)
+                        for _ in range(rng.randrange(0, 80)))
         else:
             s = "".join(chr(rng.choice((rng.randrange(0x20, 0x3000),
                                         rng.randrange(0x3000, 0xD800))))
@@ -118,6 +142,14 @@ def test_bulk_random_strings_equal_reference():
         assert normalize_plain(s) == ref_normalize_plain(s), repr(s)
         assert normalize_inline(s) == ref_normalize_inline(s), repr(s)
         assert lang.detect_language(s) == ref_detect_language(s), repr(s)
+
+
+def test_script_ranges_are_disjoint():
+    """detect_language names a script hit by a bisect over the range
+    starts, which is exact only if no two ranges overlap."""
+    ranges = sorted(r for rs in lang.SCRIPTS.values() for r in rs)
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo, (hex(hi), hex(lo))
 
 
 def test_no_script_character_lowercases_below_the_gate():
