@@ -19,6 +19,7 @@ intrinsic, same as any vectorized string kernel).
 from __future__ import annotations
 
 import time
+from dataclasses import replace
 from itertools import accumulate
 
 import pyarrow as pa
@@ -34,10 +35,10 @@ from ..kernels.normalize import normalize_plain
 from ..kernels.office_extract import extract_office
 from ..kernels.pdf_extract import extract_pdf
 from ..kernels.sniff import sniff_content_type
-from ..sources.config import DEFAULT_CONFIG
+from ..sources.config import ExtractOptions
 
 EXTRACTOR_VERSION = "ate-spark/0.1"
-MAX_PAYLOAD_CHARS = DEFAULT_CONFIG["extract"]["max_payload_chars"]
+MAX_PAYLOAD_CHARS = ExtractOptions().max_payload_chars
 
 SPAN_TYPE = T.ArrayType(
     T.StructType([
@@ -206,10 +207,7 @@ _BUCKET = "part_bucket"  # the lineage-stats key column (plans/pipeline.py)
 
 def _make_kernel(dedupe_keys: tuple[str, ...] | None,
                  stats_acc=None,
-                 ocr_fallback_engine: str | None = None,
-                 ocr_preprocess: bool = True,
-                 ocr_confidence_threshold: float = 0.0,
-                 max_payload_chars: int = MAX_PAYLOAD_CHARS):
+                 options: ExtractOptions = ExtractOptions()):
     """Build the mapInArrow kernel, an ``Iterator[pa.RecordBatch]``
     transform, optionally deduplicating on ``dedupe_keys`` WITHIN the
     partition (first copy wins).
@@ -232,17 +230,18 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
     (input_rows, kept_rows, raw_bytes, errors, wall_us) as a side output
     of the same pass — the lineage source, replacing any read-back of
     the written table. input_rows is pre-dedupe (feeding a 30%-duplicate
-    corpus must not report 30% fewer input rows)."""
+    corpus must not report 30% fewer input rows).
+
+    ``options`` are the run's :class:`ExtractOptions`."""
 
     def _extract_batches(batches):
         # the P3 hook is built here, once per task; the worker daemon
         # (sources/worker_daemon.py) has already imported the OCR stack
         ocr_fallback = None
-        if ocr_fallback_engine is not None:
+        if options.ocr_fallback_engine is not None:
             from .ocr import pdf_ocr_fallback
-            ocr_fallback = pdf_ocr_fallback(ocr_fallback_engine,
-                                            ocr_preprocess,
-                                            ocr_confidence_threshold)
+            ocr_fallback = pdf_ocr_fallback(options)
+        max_chars = options.max_payload_chars
         seen: set | None = set() if dedupe_keys else None
         clock = time.perf_counter_ns
         for rb in batches:
@@ -278,8 +277,7 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
                 # true per-row kernel time (one perf_counter pair per row
                 # is ~100ns against µs-to-ms-scale extraction)
                 t0 = clock()
-                rows.append(_extract_row(payload, max_payload_chars,
-                                         ocr_fallback))
+                rows.append(_extract_row(payload, max_chars, ocr_fallback))
                 row_us.append((clock() - t0) // 1000)
             (cts, texts, row_spans, confs, langs, statuses, errors,
              metas) = zip(*rows)
@@ -335,10 +333,8 @@ def _make_kernel(dedupe_keys: tuple[str, ...] | None,
 def extract(df: DataFrame,
             dedupe_keys: tuple[str, ...] | None = None,
             stats_acc=None,
-            ocr_fallback_engine: str | None = None,
-            ocr_preprocess: bool = True,
-            ocr_confidence_threshold: float = 0.0,
-            max_payload_chars: int = MAX_PAYLOAD_CHARS) -> DataFrame:
+            options: ExtractOptions = ExtractOptions(),
+            **changes) -> DataFrame:
     """Apply the extraction dispatch over a transcripts DataFrame.
 
     The payload column must be named ``text``. Every other input column
@@ -349,18 +345,16 @@ def extract(df: DataFrame,
     only exact when copies are co-located by the upstream exchange).
     ``stats_acc`` (see :func:`new_stats_accumulator`) collects per-bucket
     lineage stats as a side output of the extraction pass.
-    ``ocr_fallback_engine`` (e.g. ``'auto'``/``'template'``) turns on the
-    P3 scanned-PDF OCR fallback (SPEC §4/§4c): each task builds it with
-    ``operators.ocr.pdf_ocr_fallback`` and passes it to ``extract_one``;
-    ``ocr_preprocess`` and ``ocr_confidence_threshold`` are the config
-    ocr.preprocess / extract.confidence_threshold knobs (a below-threshold
-    OCR result is rejected and the short text layer kept);
-    ``max_payload_chars`` is the config extract.max_payload_chars cap."""
+    ``options`` defaults to the job's :class:`ExtractOptions`: the P3
+    scanned-PDF OCR fallback (SPEC §4/§4c) on engine ``'auto'``, built
+    once per task with ``operators.ocr.pdf_ocr_fallback``, and an OCR
+    result below the confidence threshold rejected and the short text
+    layer kept. Keyword ``changes`` replace fields of ``options``
+    (``ocr_fallback_engine=None``: no fallback); an unknown name raises
+    ``TypeError``."""
+    options = replace(options, **changes)
     carried = T.StructType([f for f in df.schema.fields if f.name != "text"])
-    return df.mapInArrow(_make_kernel(dedupe_keys, stats_acc,
-                                      ocr_fallback_engine, ocr_preprocess,
-                                      ocr_confidence_threshold,
-                                      max_payload_chars),
+    return df.mapInArrow(_make_kernel(dedupe_keys, stats_acc, options),
                          schema=output_schema(carried))
 
 

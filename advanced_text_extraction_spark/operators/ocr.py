@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from ..kernels.image_codec import decode_image, decode_raw_gray
 from ..kernels.ocr import normalize_to_charset, ocr_image, render_page
 from ..kernels.pdf_extract import extract_page_images
+from ..sources.config import ExtractOptions
 
 OCR_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -120,24 +121,23 @@ def ocr_pdf_bytes(pdf_bytes: bytes, engine: str = "auto",
     return text, conf, page_confs
 
 
-def pdf_ocr_fallback(engine: str = "auto", preprocess: bool = True,
-                     confidence_threshold: float = 0.0):
+def pdf_ocr_fallback(options: ExtractOptions = ExtractOptions()):
     """The P3 hook for ``extract_one(..., ocr_fallback=)``: PDFs whose
     text layer fails the >50-char gate get their page images OCR'd
-    (reference auto method :501-507). Returns
-    ``fn(pdf_bytes) -> (text, confidence)`` and changes no state.
+    (reference auto method :501-507) with ``options``' engine and
+    preprocessing. Returns ``fn(pdf_bytes) -> (text, confidence)`` and
+    changes no state. An OCR result below ``ocr_confidence_threshold``
+    (reference text_extractor.py:784) is REJECTED — the caller keeps the
+    short-but-valid text layer and records the rejection in
+    metadata['ocr_error']."""
+    threshold = options.ocr_confidence_threshold
 
-    ``confidence_threshold`` is the reference ocr.confidence_threshold
-    gate (text_extractor.py:784): an OCR result below it is REJECTED —
-    the caller keeps the short-but-valid text layer and records the
-    rejection in metadata['ocr_error']."""
     def _fallback(pdf_bytes: bytes) -> tuple[str, float]:
-        text, conf, _pages = ocr_pdf_bytes(pdf_bytes, engine=engine,
-                                           preprocess=preprocess)
-        if conf < confidence_threshold:
+        text, conf, _pages = ocr_pdf_bytes(
+            pdf_bytes, options.ocr_fallback_engine, options.ocr_preprocess)
+        if conf < threshold:
             raise ValueError(
-                f"ocr confidence {conf:.3f} below threshold "
-                f"{confidence_threshold}")
+                f"ocr confidence {conf:.3f} below threshold {threshold}")
         return text, conf
     return _fallback
 

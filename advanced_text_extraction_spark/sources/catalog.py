@@ -26,7 +26,8 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .config import ExtractOptions
 
 
 def extracted_path(root: str) -> str:
@@ -129,66 +130,68 @@ def bucket_row_counts(root: str,
 
 def completed_buckets(spark: SparkSession, root: str,
                       extractor_version: str,
-                      n_buckets: int | None = None) -> list[int]:
-    """Buckets already completed by a prior run of this extractor version
-    UNDER THE SAME BUCKETING. A bucket id is only meaningful relative to
-    n_buckets — pmod(hash, 8) and pmod(hash, 32) partitions are
-    semantically unrelated, so lineage written with a different
-    --n-buckets must not satisfy the skip probe (it would silently skip
-    the whole input while extracting nothing).
+                      n_buckets: int | None = None,
+                      options: ExtractOptions | None = None) -> list[int]:
+    """Buckets whose stored rows a prior run of this extractor version
+    wrote UNDER THE SAME BUCKETING AND OPTIONS. pmod(hash, 8) and
+    pmod(hash, 32) buckets are unrelated partitions, and a bucket
+    extracted under other :class:`ExtractOptions` holds other rows than
+    this run would write: neither may satisfy the skip probe (it would
+    silently skip input while extracting nothing).
+
+    Each bucket is decided on its LATEST lineage row (``finished_ts``),
+    because the per-bucket overwrite keeps only the latest run's rows on
+    disk: after runs under options A, B, A, a bucket is done for A only
+    if the third run rewrote it. A long-lived warehouse may mix lineage
+    from several engine versions; a row from a file missing a key column
+    asked for (``n_buckets``, ``options``: legacy lineage) never matches,
+    so such a bucket is re-extracted once, and if NO file carries them
+    all, a warning says so. Wrongly skipping is the unsafe direction; a
+    re-extract is harmless, because the per-bucket overwrite is
+    idempotent. For the same reason a missing lineage dir, or a warehouse
+    pyarrow cannot mount (a warning: resume is off for this run), returns
+    ``[]``.
 
     Lineage is tiny (one file per run, one row per bucket), so it is read
     on the driver with pyarrow and launches no Spark job: per file, the
-    footer schema, then only ``part_bucket``, ``extractor_version`` and
-    ``n_buckets``. The rule is per file, so a long-lived warehouse may
-    mix lineage from several engine versions: a legacy file without the
-    n_buckets column adds nothing when ``n_buckets`` is given, and a dir
-    where NO file carries the column logs a warning and returns ``[]``.
-    Wrongly skipping is the unsafe direction; a re-extract is harmless,
-    because the per-bucket overwrite is idempotent. For the same reason
-    a missing lineage dir, or a warehouse pyarrow cannot mount (a
-    warning: resume is off for this run), returns ``[]``. ``spark`` is
-    unused and kept for callers.
-
-    The caller turns the ids into a partition-pruning ``NOT IN`` filter
-    on the scan (``flagship_plan(skip_buckets=)``,
-    :func:`resume_anti_join`).
+    footer schema, then only the columns named above. ``spark`` is unused
+    and kept for callers. The caller turns the ids into a
+    partition-pruning ``NOT IN`` filter (``flagship_plan(skip_buckets=)``).
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = lineage_path(root)
     filesystem, files = _parquet_files(
         path, "completed_buckets", "resume is off for this run")
-    done: set[int] = set()
+    keys = {"n_buckets": n_buckets,
+            "options": None if options is None else options.to_json()}
+    keys = {k: v for k, v in keys.items() if v is not None}
+    latest: dict[int, int] = {}  # bucket -> finished_ts (µs) of last row
+    matched: dict[int, int] = {}  # bucket -> that of last matching row
     stamped = False
     for file in files:
         with filesystem.open_input_file(file) as f:
             pf = pq.ParquetFile(f)
-            has_n_buckets = "n_buckets" in pf.schema_arrow.names
-            stamped |= has_n_buckets
-            if n_buckets is not None and not has_n_buckets:
-                continue  # legacy file: its bucketing is unverifiable
-            columns = ["part_bucket", "extractor_version"]
-            if n_buckets is not None:
-                columns.append("n_buckets")
-            rows = pf.read(columns=columns).to_pylist()
-        done.update(r["part_bucket"] for r in rows
-                    if r["extractor_version"] == extractor_version
-                    and (n_buckets is None or r["n_buckets"] == n_buckets))
-    if files and n_buckets is not None and not stamped:
+            names = set(pf.schema_arrow.names)
+            keyed = keys.keys() <= names
+            stamped |= keyed
+            t = pf.read(columns=["part_bucket", "extractor_version",
+                                 *(keys if keyed else ()),
+                                 *({"finished_ts"} & names)])
+        # Spark may write INT96 (read as ns) or micros: one unit for all
+        ts = (t["finished_ts"].cast(pa.timestamp("us", "UTC"))
+              .cast(pa.int64()).to_pylist()
+              if "finished_ts" in names else [0] * t.num_rows)
+        for r, when in zip(t.to_pylist(), ts):
+            b = r["part_bucket"]
+            latest[b] = max(latest.get(b, when), when)
+            if keyed and r["extractor_version"] == extractor_version \
+                    and all(r[k] == v for k, v in keys.items()):
+                matched[b] = max(matched.get(b, when), when)
+    if files and not stamped:
         logging.getLogger(__name__).warning(
-            "completed_buckets: lineage at %s predates the n_buckets "
-            "column; treating prior runs as incomplete (idempotent "
-            "re-extract) rather than risking a wrong-bucketing skip", path)
-    return sorted(done)
-
-
-def resume_anti_join(df: DataFrame, spark: SparkSession, root: str,
-                     extractor_version: str,
-                     n_buckets: int | None = None) -> DataFrame:
-    """Bucket-level resume filter (SURVEY §2.5 J1) on a DataFrame that
-    already carries ``part_bucket``: drops the rows of every bucket
-    :func:`completed_buckets` reports done, as a ``NOT IN`` filter, or
-    returns ``df`` unchanged when none is done."""
-    done = completed_buckets(spark, root, extractor_version, n_buckets)
-    return df.filter(~F.col("part_bucket").isin(done)) if done else df
+            "completed_buckets: lineage at %s predates the %s column(s); "
+            "treating prior runs as incomplete (idempotent re-extract) "
+            "rather than risking a wrong skip", path, ", ".join(keys))
+    return sorted(b for b, when in matched.items() if when >= latest[b])

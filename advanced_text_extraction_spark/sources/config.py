@@ -1,12 +1,14 @@
 """Job configuration model (SURVEY §1.1c — reference parity).
 
-The reference merges an optional JSON config file over built-in defaults
-(/root/reference/text_extractor.py:778-803): a *shallow* ``dict.update``
-(a user section replaces the default section wholesale), with a warning
-— never an error — when the file is missing or unparsable. This module
-reproduces that contract for the Spark job's knobs; CLI flags override
-config values (scripts/run_extract.py), mirroring how the reference CLI
-overrides ``batch.max_workers`` (/root/reference/cli.py:484-488).
+``load_config`` merges an optional JSON file over built-in defaults as
+the reference does (text_extractor.py:778-803): a *shallow*
+``dict.update``, and a warning — never an error — when the file is
+missing or unparsable. The four settings that change a row's
+extraction are one frozen :class:`ExtractOptions`, whose defaults are
+their only definition; the job passes one such value down to the
+kernel (other entry points get the defaults), and lineage records it.
+CLI flags override config values (scripts/run_extract.py), as the
+reference CLI overrides ``batch.max_workers`` (cli.py:484-488).
 """
 
 from __future__ import annotations
@@ -14,27 +16,65 @@ from __future__ import annotations
 import json
 import logging
 import os
+from dataclasses import asdict, dataclass
 from typing import Any
 
 logger = logging.getLogger(__name__)
+
+
+@dataclass(frozen=True)
+class ExtractOptions:
+    """How every row of one run is extracted. ``ocr_fallback_engine`` runs
+    the scanned-PDF P3 fallback (text_extractor.py:782; ``None``: off);
+    an OCR result below ``ocr_confidence_threshold`` (:784) is rejected
+    and the short text layer kept; ``ocr_preprocess`` is :783. A payload
+    over ``max_payload_chars`` is truncated and flagged in metadata."""
+    ocr_fallback_engine: str | None = "auto"
+    ocr_preprocess: bool = True
+    ocr_confidence_threshold: float = 0.5
+    max_payload_chars: int = 2_000_000
+
+    @classmethod
+    def from_config(cls, cfg: dict[str, dict[str, Any]]) -> ExtractOptions:
+        """The options of a merged config, each missing key at its default
+        (a shallow merge keeps partial sections); engine ``'none'``/``''``
+        disables OCR."""
+        ocr, ext, d = cfg.get("ocr", {}), cfg.get("extract", {}), cls()
+        engine = ocr.get("fallback_engine", d.ocr_fallback_engine)
+        return cls(
+            ocr_fallback_engine=None if engine in ("none", "") else engine,
+            ocr_preprocess=bool(ocr.get("preprocess", d.ocr_preprocess)),
+            ocr_confidence_threshold=float(ext.get(
+                "confidence_threshold", d.ocr_confidence_threshold)),
+            max_payload_chars=int(ext.get(
+                "max_payload_chars", d.max_payload_chars)))
+
+    def to_json(self) -> str:
+        """Sorted-key JSON: the lineage stamp the resume probe matches."""
+        return json.dumps(asdict(self), sort_keys=True)
+
+
+_OPTIONS = ExtractOptions()
 
 # reference default_config analog (text_extractor.py:780-795); sections
 # renamed to their Spark equivalents documented in SURVEY §2:
 # ocr.confidence_threshold → extract.confidence_threshold (P6),
 # batch.max_workers → the session's cores (sources/session.py),
 # batch.chunk_size → the session's fixed 1024-row Arrow batch (C3),
-# database.path → warehouse.path (K1)
+# database.path → warehouse.path (K1).
+# The extract/ocr entries mirror ExtractOptions' defaults and no code
+# reads them (from_config falls back to the class): they are kept so
+# the dict load_config returns shows every config key, as the
+# reference's default_config does, and the shallow merge replaces a
+# section the way the reference's does.
 DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
     "extract": {
-        "confidence_threshold": 0.5,   # text_extractor.py:784 (P6)
-        "max_payload_chars": 2_000_000,  # operators/extract.py reads it
+        "confidence_threshold": _OPTIONS.ocr_confidence_threshold,
+        "max_payload_chars": _OPTIONS.max_payload_chars,
     },
     "ocr": {
-        # reference ocr.default_engine analog (text_extractor.py:782):
-        # engine used by the scanned-PDF P3 fallback; 'auto' applies the
-        # size heuristics, 'none' disables the fallback
-        "fallback_engine": "auto",
-        "preprocess": True,            # text_extractor.py:783
+        "fallback_engine": _OPTIONS.ocr_fallback_engine,
+        "preprocess": _OPTIONS.ocr_preprocess,
     },
     "warehouse": {
         "path": "warehouse",           # database.path analog

@@ -3,9 +3,11 @@
 Local mode stands in for the multi-executor cluster (BASELINE.md). Its
 sizing comes from the host the job starts on: ``local[N]`` over the CPUs
 this process may run on and a driver heap of half the physical memory,
-unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` say otherwise. On a
-real cluster the same factory applies — only master, memory, and the
-Iceberg catalog packages change (see sources/catalog.py).
+unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` say otherwise. Under
+spark-submit the launcher's ``--master`` is kept, unless the caller
+passes ``master``. On a real cluster the same factory applies — only
+master, memory, and the Iceberg catalog packages change (see
+sources/catalog.py).
 
 Python workers fork from this package's daemon (sources/worker_daemon.py),
 which preloads the flagship's imports. The daemon starts before any task
@@ -45,14 +47,13 @@ def build_session(
 ) -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{host_cpus()}]")
         # AQE: runtime coalescing + skew-split backstop (SURVEY §4.2)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow exchange for pandas UDFs; bounded batches keep the Python
-        # worker memory flat regardless of payload skew (SURVEY §2.13 C3)
+        # Arrow exchange for pandas UDFs; the batch cap counts rows only,
+        # so worker memory follows payload size (SURVEY §2.13 C3)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # idempotent per-partition overwrite (reference J2 upsert analog)
@@ -71,6 +72,10 @@ def build_session(
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
+    # spark-submit sets PYSPARK_GATEWAY_PORT for the script it runs; its
+    # --master (or its own default) then holds unless the caller names one
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(master or f"local[{host_cpus()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

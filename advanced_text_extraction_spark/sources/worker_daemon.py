@@ -9,7 +9,8 @@ import heap out of the collector's reach: the per-task ``gc.collect()``
 of a reused worker no longer walks (and so dirties) those pages.
 
 The list is what a flagship ``mapInArrow`` task imports, OCR fallback
-included (``ocr_fallback_engine='auto'`` builds it in every task);
+included (the default ``ExtractOptions`` engine, ``'auto'``, builds it
+in every task);
 ``tests/test_worker_daemon.py`` fails if a task imports a package module
 that is not here. Nothing here may start a thread: a fork keeps only the
 forking one. pyarrow's jemalloc would start its background purge thread

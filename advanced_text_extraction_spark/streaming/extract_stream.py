@@ -53,9 +53,10 @@ def start_extraction_stream(spark: SparkSession, input_path: str,
                             output_path: str, checkpoint_path: str,
                             available_now: bool = True):
     """Run the extraction stream to parquet with exactly-once checkpoint
-    semantics. ``available_now=True`` drains the current backlog and
-    stops (the batch-parity mode used by tests); ``False`` runs
-    continuously."""
+    semantics, under the batch job's default ``ExtractOptions`` (so a turn
+    extracts alike in both tiers). ``available_now=True`` drains the
+    current backlog and stops (the batch-parity mode used by tests);
+    ``False`` runs continuously."""
     out = extract(read_transcript_stream(spark, input_path))
     writer = (
         out.writeStream.format("parquet")

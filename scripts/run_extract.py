@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Headless extraction job — the spark-submit entry point.
 
-    spark-submit --py-files dist/ate_spark.zip scripts/run_extract.py \
+    spark-submit [--master local[32]] --py-files dist/ate_spark.zip \
+        scripts/run_extract.py \
         --input /path/to/transcripts_parquet --output /path/to/warehouse \
-        [--n-buckets 32] [--no-resume] [--master local[32]]
+        [--n-buckets 32] [--no-resume] [--config cfg.json]
 
 Reads the transcript table (BASELINE.json:input_hint shape), runs the
 extraction pipeline (plans/pipeline.py), writes ``extracted/`` +
@@ -29,7 +30,6 @@ def main(argv: list[str] | None = None) -> int:
                          "explicit CLI flags override config values")
     ap.add_argument("--n-buckets", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--master", default=None)
     ap.add_argument("--ocr-fallback", default=None,
                     help="OCR engine for the scanned-PDF P3 fallback "
                          "(default config ocr.fallback_engine, 'auto'); "
@@ -37,16 +37,23 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from advanced_text_extraction_spark.plans.pipeline import run_extract_job
-    from advanced_text_extraction_spark.sources.config import load_config
+    from advanced_text_extraction_spark.sources.config import (
+        DEFAULT_CONFIG,
+        ExtractOptions,
+        load_config,
+    )
     from advanced_text_extraction_spark.sources.session import build_session
 
     cfg = load_config(args.config)
+    if args.ocr_fallback is not None:
+        cfg["ocr"] = {**cfg.get("ocr", {}),
+                      "fallback_engine": args.ocr_fallback}
+    options = ExtractOptions.from_config(cfg)
     # The merge is shallow by reference contract (a user section replaces
     # the default section wholesale, text_extractor.py:799) — so every
     # read falls back to the package default rather than [] - indexing,
     # keeping a partial user section (e.g. {"job": {"n_buckets": 16}})
     # runnable instead of a KeyError.
-    from advanced_text_extraction_spark.sources.config import DEFAULT_CONFIG
     job = cfg.get("job", {})
     job_d = DEFAULT_CONFIG["job"]
     output = (args.output
@@ -55,34 +62,17 @@ def main(argv: list[str] | None = None) -> int:
     n_buckets = (args.n_buckets if args.n_buckets is not None
                  else job.get("n_buckets", job_d["n_buckets"]))
     resume = job.get("resume", job_d["resume"]) and not args.no_resume
-    ocr_cfg = cfg.get("ocr", {})
-    ocr_d = DEFAULT_CONFIG["ocr"]
-    ext_cfg = cfg.get("extract", {})
-    ext_d = DEFAULT_CONFIG["extract"]
-    ocr_engine = (args.ocr_fallback if args.ocr_fallback is not None
-                  else ocr_cfg.get("fallback_engine",
-                                   ocr_d["fallback_engine"]))
-    if ocr_engine in ("none", ""):
-        ocr_engine = None
-    ocr_preprocess = bool(ocr_cfg.get("preprocess", ocr_d["preprocess"]))
-    conf_threshold = float(ext_cfg.get(
-        "confidence_threshold", ext_d["confidence_threshold"]))
-    max_payload = int(ext_cfg.get(
-        "max_payload_chars", ext_d["max_payload_chars"]))
 
-    spark = build_session(app_name="ate-extract", master=args.master)
+    # the master is spark-submit's --master, or its default local[*]
+    # without one; SPARK_GRAFT_CPUS sizes only runs outside spark-submit
+    spark = build_session(app_name="ate-extract")
     try:
         df = spark.read.parquet(args.input)
-        stats = run_extract_job(
-            spark, df, output,
-            n_buckets=n_buckets, resume=resume,
-            ocr_fallback_engine=ocr_engine,
-            ocr_preprocess=ocr_preprocess,
-            ocr_confidence_threshold=conf_threshold,
-            max_payload_chars=max_payload,
-        )
+        stats = run_extract_job(spark, df, output, n_buckets=n_buckets,
+                                resume=resume, options=options)
         print(json.dumps({
             "run_id": stats.run_id,
+            "master": spark.sparkContext.master,
             "input_rows": stats.input_rows,
             "buckets_done": stats.buckets_done,
             "buckets_skipped": stats.buckets_skipped,

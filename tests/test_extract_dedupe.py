@@ -11,6 +11,8 @@ import pyarrow as pa
 
 from advanced_text_extraction_spark.operators.extract import (
     MAX_PAYLOAD_CHARS, _make_kernel, extract_one)
+from advanced_text_extraction_spark.operators.ocr import pdf_ocr_fallback
+from advanced_text_extraction_spark.sources.config import ExtractOptions
 
 
 def _batches(rows, size=3):
@@ -172,13 +174,15 @@ def test_kernel_columns_equal_extract_one_row_for_row():
     rows = [{"conv_id": "c", "turn_idx": i, "role": "user", "text": p}
             for i, p in enumerate(payloads)]
     batch = pa.RecordBatch.from_pylist(rows)
+    options = ExtractOptions()  # the kernel's default: OCR fallback armed
+    fallback = pdf_ocr_fallback(options)
     out = pa.Table.from_batches(list(_make_kernel(None)(iter([batch]))))
     assert out.column_names[:3] == ["conv_id", "turn_idx", "role"]
     got = out.to_pylist()
     assert len(got) == len(payloads)
     kinds = set()
     for row, payload in zip(got, payloads):
-        want = extract_one(payload)
+        want = extract_one(payload, options.max_payload_chars, fallback)
         kinds.add((want["content_type"], want["status"]))
         assert row.pop("proc_us") >= 0
         row["metadata"] = dict(row["metadata"])

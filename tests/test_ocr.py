@@ -24,6 +24,7 @@ from advanced_text_extraction_spark.operators import extract as extract_mod
 from advanced_text_extraction_spark.operators.ocr import (
     ocr_images, ocr_pdf_bytes, ocr_roundtrip, pdf_ocr_fallback,
     pdf_ocr_pages, page_confidence_stats, token_confidence_stats)
+from advanced_text_extraction_spark.sources.config import ExtractOptions
 from fixtures.gen import build_scanned_pdf, gen_scanned_pdf_payload
 
 TXT = "THE QUICK BROWN FOX 123\nJUMPS OVER THE LAZY DOG"
@@ -350,7 +351,8 @@ def test_ocr_fallback_arms_inside_spark_workers(spark):
     from advanced_text_extraction_spark.operators.extract import extract
 
     # unarmed: scanned PDF yields an (effectively) empty short text layer
-    out0 = {r.turn_idx: r for r in extract(df).collect()}
+    out0 = {r.turn_idx: r
+            for r in extract(df, ocr_fallback_engine=None).collect()}
     assert out0[0].metadata["text_layer"] == "short"
     assert out0[0].extracted_text.strip() == ""
     # armed via the worker-safe engine spec
@@ -361,7 +363,8 @@ def test_ocr_fallback_arms_inside_spark_workers(spark):
     assert 0.5 < out[0].confidence <= 1.0
     assert out[1].extracted_text == "plain text turn"
     # the same reused workers, no engine again: settings stay per job
-    out2 = {r.turn_idx: r for r in extract(df).collect()}
+    out2 = {r.turn_idx: r
+            for r in extract(df, ocr_fallback_engine=None).collect()}
     assert out2[0].metadata["text_layer"] == "short"
 
 
@@ -526,7 +529,8 @@ def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
     rng = random.Random(11)
     payload, _expected = gen_scanned_pdf_payload(rng)
     rec = extract_mod.extract_one(
-        payload, ocr_fallback=pdf_ocr_fallback(engine="tesseract"))
+        payload, ocr_fallback=pdf_ocr_fallback(
+            ExtractOptions(ocr_fallback_engine="tesseract")))
     assert rec["metadata"]["text_layer"] == "ocr"
     assert "PLUGGED PAGE TEXT" in rec["extracted_text"]
     assert rec["confidence"] == pytest.approx(0.88)
@@ -536,7 +540,8 @@ def test_fallback_arming_routes_to_plugged_engine(monkeypatch):
     monkeypatch.setitem(K.ENGINES, "tesseract",
                         lambda img: ("LOW CONF", 0.2, [20.0]))
     rec = extract_mod.extract_one(payload, ocr_fallback=pdf_ocr_fallback(
-        engine="tesseract", confidence_threshold=0.5))
+        ExtractOptions(ocr_fallback_engine="tesseract",
+                       ocr_confidence_threshold=0.5)))
     assert rec["metadata"]["text_layer"] == "short"
     assert "ocr_error" in rec["metadata"]
 

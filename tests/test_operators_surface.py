@@ -1,6 +1,6 @@
 """Direct tests for module surface flagged untested in VERDICT r1 #7:
 ``with_confidence_filter`` (P6), ``history_top_n`` (W2 module twin),
-``resume_anti_join`` (J1 bucket-level filter) — plus the r2 scale levers in
+the J1 bucket-level resume filter — plus the r2 scale levers in
 ``similarity`` (parameterized n_bits, multi-band recall union,
 recommended_n_bits sizing)."""
 
@@ -59,6 +59,12 @@ def test_history_top_n(spark):
 # J1 — bucket-level resume filter
 # ---------------------------------------------------------------------------
 
+def _resume_filter(pre, spark, root, version):
+    """What ``flagship_plan(skip_buckets=)`` does with the probe's ids."""
+    done = catalog.completed_buckets(spark, root, version, 4)
+    return pre.filter(~F.col("part_bucket").isin(done)) if done else pre
+
+
 def test_resume_anti_join(spark, transcripts_path, tmp_path):
     from advanced_text_extraction_spark.plans.pipeline import prepare
 
@@ -66,18 +72,18 @@ def test_resume_anti_join(spark, transcripts_path, tmp_path):
     df = spark.read.parquet(transcripts_path)
     # before any lineage exists: passthrough
     pre = prepare(df, n_buckets=4)
-    assert catalog.resume_anti_join(pre, spark, root,
-                                    EXTRACTOR_VERSION).count() == pre.count()
-    # complete buckets {0, 1}; the anti-join must drop exactly those rows
+    assert _resume_filter(pre, spark, root,
+                          EXTRACTOR_VERSION).count() == pre.count()
+    # complete buckets {0, 1}; the filter must drop exactly those rows
     run_extract_job(spark, df, root, n_buckets=4, salt=2,
                     only_buckets=[0, 1])
-    remaining = catalog.resume_anti_join(pre, spark, root, EXTRACTOR_VERSION)
+    remaining = _resume_filter(pre, spark, root, EXTRACTOR_VERSION)
     expect = pre.filter(~F.col("part_bucket").isin([0, 1]))
     assert remaining.count() == expect.count()
     assert remaining.filter(F.col("part_bucket").isin([0, 1])).count() == 0
     # a different extractor version sees no completed work
-    assert catalog.resume_anti_join(pre, spark, root,
-                                    "other/9.9").count() == pre.count()
+    assert _resume_filter(pre, spark, root,
+                          "other/9.9").count() == pre.count()
 
 
 def test_lineage_without_output_rescan(spark, transcripts_path, tmp_path):

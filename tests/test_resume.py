@@ -18,6 +18,7 @@ import pytest
 from advanced_text_extraction_spark.operators.extract import EXTRACTOR_VERSION
 from advanced_text_extraction_spark.plans.pipeline import run_extract_job
 from advanced_text_extraction_spark.sources import catalog
+from advanced_text_extraction_spark.sources.config import ExtractOptions
 
 N_BUCKETS = 8
 
@@ -90,6 +91,14 @@ def test_resume_keyed_on_n_buckets(spark, roots):
     run = run_extract_job(spark, df, root, n_buckets=4, salt=2)
     assert run.buckets_skipped == []
     assert run.input_rows == df.count()
+    # back at 8 buckets, the dirs the 4-bucket run overwrote hold its
+    # rows: their latest lineage rows say so, and only they are redone
+    done8 = set(catalog.completed_buckets(
+        spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS))
+    assert not done8 & set(run.buckets_done)
+    back = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    assert sorted(back.buckets_done) == sorted(run.buckets_done)
+    assert set(back.buckets_skipped) == done8
 
 
 def test_resume_survives_legacy_lineage_files(spark, roots):
@@ -134,7 +143,8 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "wh")
-    # the tuple-list lineage writer, as earlier versions ran it
+    # the tuple-list lineage writer, as earlier versions ran it, plus the
+    # options column
     catalog.append_lineage(spark.createDataFrame(
         [(b, 10, 100, 10, 0, 5) for b in (4, 5, 6, 7)],
         "part_bucket int, input_rows long, input_bytes long, "
@@ -142,7 +152,8 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
     ).withColumns({"n_buckets": F.lit(N_BUCKETS),
                    "extractor_version": F.lit(EXTRACTOR_VERSION),
                    "run_id": F.lit("run-tuples"),
-                   "finished_ts": F.current_timestamp()}), root)
+                   "finished_ts": F.current_timestamp(),
+                   "options": F.lit(ExtractOptions().to_json())}), root)
     old_files = _lineage_files(root)
     run = run_extract_job(spark, spark.read.parquet(transcripts_path), root,
                           n_buckets=N_BUCKETS, salt=2,
@@ -158,11 +169,74 @@ def test_lineage_from_arrow_matches_tuple_lineage(spark, transcripts_path,
             ("input_bytes", "bigint"), ("output_rows", "bigint"),
             ("error_rows", "bigint"), ("wall_ms", "bigint"),
             ("n_buckets", "int"), ("extractor_version", "string"),
-            ("run_id", "string"), ("finished_ts", "timestamp")]
+            ("run_id", "string"), ("finished_ts", "timestamp"),
+            ("options", "string")]
     assert run.buckets_skipped == [4, 5, 6, 7]
     assert catalog.completed_buckets(
         spark, root, EXTRACTOR_VERSION, n_buckets=N_BUCKETS) == sorted(
         set(run.buckets_done) | {4, 5, 6, 7})
+
+
+def test_resume_keyed_on_options(spark, transcripts_path, tmp_path):
+    """A bucket extracted under other options holds other rows than this
+    run would write: a rerun with a changed OCR threshold re-extracts
+    every bucket, and a rerun with unchanged options is still a no-op.
+    Options A, B, then A again: the third run re-extracts every bucket,
+    because B's rows are what the overwrite left on disk."""
+    df, root = spark.read.parquet(transcripts_path), str(tmp_path / "wh")
+    first = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    done = sorted(first.buckets_done)
+    assert first.buckets_skipped == [] and done
+
+    same = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2,
+                           options=ExtractOptions())
+    assert same.buckets_done == [] and same.input_rows == 0
+    assert sorted(same.buckets_skipped) == done
+
+    stricter = ExtractOptions(ocr_confidence_threshold=0.9)
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                     N_BUCKETS, stricter) == []
+    changed = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2,
+                              options=stricter)
+    assert changed.buckets_skipped == []
+    assert sorted(changed.buckets_done) == done
+    assert changed.input_rows == first.input_rows
+    again = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2,
+                            options=stricter)
+    assert again.buckets_done == [] and sorted(again.buckets_skipped) == done
+
+    back = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    assert back.buckets_skipped == [] and sorted(back.buckets_done) == done
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                     N_BUCKETS, stricter) == []
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                     N_BUCKETS, ExtractOptions()) == done
+
+
+def test_lineage_without_options_is_reextracted_once(spark, transcripts_path,
+                                                     tmp_path, caplog):
+    """Lineage written before the options column says nothing of the
+    options its buckets were extracted under: a run re-extracts them once,
+    and the run after it is a no-op. The four-argument probe, which asks
+    for no options, still counts them."""
+    df, root = spark.read.parquet(transcripts_path), str(tmp_path / "wh")
+    first = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    done = sorted(first.buckets_done)
+    for f in _lineage_files(root):
+        pq.write_table(pq.read_table(f).drop_columns(["options"]), f)
+    assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                     N_BUCKETS) == done
+    with caplog.at_level(logging.WARNING, logger=catalog.__name__):
+        assert catalog.completed_buckets(spark, root, EXTRACTOR_VERSION,
+                                         N_BUCKETS, ExtractOptions()) == []
+    assert "options column" in caplog.text
+
+    rerun = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    assert rerun.buckets_skipped == [] and sorted(rerun.buckets_done) == done
+    again = run_extract_job(spark, df, root, n_buckets=N_BUCKETS, salt=2)
+    assert again.buckets_done == [] and sorted(again.buckets_skipped) == done
+    out = catalog.read_extracted(spark, root)
+    assert out.count() == out.dropDuplicates(["conv_id", "turn_idx"]).count()
 
 
 def test_resume_probe_and_lineage_append_launch_no_extra_work(

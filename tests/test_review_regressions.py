@@ -9,6 +9,7 @@ import base64
 import json
 import random
 import re
+from types import SimpleNamespace
 
 import pytest
 
@@ -135,6 +136,7 @@ def test_partial_config_section_does_not_crash(tmp_path, monkeypatch):
 
     class _Spark:
         read = _Read()
+        sparkContext = SimpleNamespace(master="local[1]")
 
         def stop(self):
             pass
@@ -177,6 +179,7 @@ def test_retired_config_keys_are_ignored(tmp_path, monkeypatch):
 
     class _Spark:
         read = _Read()
+        sparkContext = SimpleNamespace(master="local[1]")
 
         def stop(self):
             pass
@@ -194,7 +197,7 @@ def test_retired_config_keys_are_ignored(tmp_path, monkeypatch):
     rc = run_extract.main(["--input", str(tmp_path / "in"),
                            "--config", str(cfg)])
     assert rc == 0
-    assert set(calls["session"]) == {"app_name", "master"}
+    assert set(calls["session"]) == {"app_name"}
     assert calls["job"]["n_buckets"] == 5
     assert not {"arrow_batch_rows", "salt", "shuffle_partitions"} \
         & set(calls["job"])
@@ -669,6 +672,7 @@ def test_config_extract_and_ocr_keys_are_wired(tmp_path, monkeypatch):
 
     class _Spark:
         read = _Read()
+        sparkContext = SimpleNamespace(master="local[1]")
 
         def stop(self):
             pass
@@ -684,15 +688,16 @@ def test_config_extract_and_ocr_keys_are_wired(tmp_path, monkeypatch):
     rc = run_extract.main(["--input", str(tmp_path / "in"),
                            "--config", str(cfg)])
     assert rc == 0
-    assert calls["ocr_fallback_engine"] == "template"
-    assert calls["ocr_preprocess"] is False
-    assert calls["ocr_confidence_threshold"] == 0.9
-    assert calls["max_payload_chars"] == 1234
+    assert calls["options"].ocr_fallback_engine == "template"
+    assert calls["options"].ocr_preprocess is False
+    assert calls["options"].ocr_confidence_threshold == 0.9
+    assert calls["options"].max_payload_chars == 1234
 
 
 def test_extract_one_max_chars_and_ocr_threshold_rejection():
     from advanced_text_extraction_spark.operators import extract as em
     from advanced_text_extraction_spark.operators.ocr import pdf_ocr_fallback
+    from advanced_text_extraction_spark.sources.config import ExtractOptions
 
     row = em.extract_one("word " * 100, max_chars=10)
     assert row["metadata"]["truncated"] == "true"
@@ -703,7 +708,8 @@ def test_extract_one_max_chars_and_ocr_threshold_rejection():
     short_pdf = build_pdf([["tiny"]], random.Random(3), flate=False)
     payload = base64.b64encode(short_pdf).decode()
     row = em.extract_one(payload, ocr_fallback=pdf_ocr_fallback(
-        "template", confidence_threshold=2.0))
+        ExtractOptions(ocr_fallback_engine="template",
+                       ocr_confidence_threshold=2.0)))
     assert row["status"] == "ok"
     assert "tiny" in row["extracted_text"]
     assert "below threshold" in row["metadata"]["ocr_error"]

@@ -3,7 +3,9 @@ README ships it, submitted with ``--py-files`` from a directory that does
 not hold the package, with no ``PYTHONPATH``. Python workers fork from
 the package's daemon, which starts before any task puts the zip on
 ``sys.path``, so this is the path that breaks if the session does not
-hand the workers the package."""
+hand the workers the package. The job runs on the launcher's
+``--master``: the script has no master flag of its own, and the session
+must not replace the launcher's with the host's CPU count."""
 
 from __future__ import annotations
 
@@ -48,7 +50,7 @@ def test_spark_submit_from_the_zip(tmp_path):
     cmd = [_spark_submit(), "--master", "local[2]", "--driver-memory", "1g",
            "--py-files", str(pkg_zip), str(ROOT / "scripts" / "run_extract.py"),
            "--input", inp, "--output", str(out),
-           "--n-buckets", str(N_BUCKETS), "--master", "local[2]"]
+           "--n-buckets", str(N_BUCKETS)]
 
     def submit() -> dict:
         res = subprocess.run(cmd, cwd=cwd, env=env, capture_output=True,
@@ -57,6 +59,7 @@ def test_spark_submit_from_the_zip(tmp_path):
         return json.loads(res.stdout.strip().splitlines()[-1])
 
     first = submit()
+    assert first["master"] == "local[2]"  # the launcher's, not the host's
     assert first["input_rows"] == table.num_rows
     assert sorted(first["buckets_done"]) == list(range(N_BUCKETS))
     assert first["buckets_skipped"] == []

@@ -14,6 +14,7 @@ import pyarrow as pa
 from pyspark.sql import types as T
 
 from advanced_text_extraction_spark.operators.extract import _make_kernel
+from advanced_text_extraction_spark.sources.config import ExtractOptions
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON = "advanced_text_extraction_spark.sources.worker_daemon"
@@ -57,7 +58,7 @@ def test_daemon_preloads_what_a_flagship_task_imports(spark,
     """Drift guard: a flagship extraction task, OCR fallback armed as the
     job arms it, imports no package module (nor pyarrow or pandas) that
     the daemon did not already import before forking it."""
-    kernel = _make_kernel(("conv_id", "turn_idx"), None, "auto")
+    kernel = _make_kernel(("conv_id", "turn_idx"), None, ExtractOptions())
 
     def report(batches):
         import gc
