@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .image_codec import ImageError
+from .image_codec import ImageError, _BitReader
 
 # ---------------------------------------------------------------------------
 # T.4 §2 run-length code tables (terminating 0-63, makeup 64-1728,
@@ -105,69 +105,38 @@ _EXT_MAKEUP: dict[int, str] = {
     2560: "000000011111",
 }
 
-# decode maps: bitstring -> run length, per color (extended makeups in
+
+def _decode_map(codes: dict) -> dict:
+    """value → bitstring, inverted into the ``(length, code) → value``
+    table ``_BitReader.huff`` reads."""
+    return {(len(c), int(c, 2)): v for v, c in codes.items()}
+
+
+# decode maps: run length per code, per color (extended makeups in
 # both); all three tables are verified prefix-free by tests/test_fax.py
-_WHITE_DEC = {c: r for r, c in {**_WHITE_CODES, **_EXT_MAKEUP}.items()}
-_BLACK_DEC = {c: r for r, c in {**_BLACK_CODES, **_EXT_MAKEUP}.items()}
-_MAX_CODE_LEN = 14
+_WHITE_DEC = _decode_map({**_WHITE_CODES, **_EXT_MAKEUP})
+_BLACK_DEC = _decode_map({**_BLACK_CODES, **_EXT_MAKEUP})
 
 # 2D mode codes (T.6 table 4/T.4 table 4): vertical V0/VR/VL, horizontal,
-# pass; the 7-bit extension prefix enters uncompressed mode (rejected)
-_MODES: dict[str, str] = {
-    "1": "V0", "011": "VR1", "000011": "VR2", "0000011": "VR3",
-    "010": "VL1", "000010": "VL2", "0000010": "VL3",
-    "001": "H", "0001": "P", "0000001": "EXT",
-}
+# pass; the 7-bit extension prefix enters uncompressed mode (rejected).
+# Seven zeros are EOFB padding/terminator or garbage (T.6 EOFB = two
+# EOLs, 000000000001 twice): with it the set is a complete prefix code,
+# so every 7-bit prefix decodes to a mode
+_MODES = _decode_map({
+    "V0": "1", "VR1": "011", "VR2": "000011", "VR3": "0000011",
+    "VL1": "010", "VL2": "000010", "VL3": "0000010",
+    "H": "001", "P": "0001", "EXT": "0000001", "EOFB": "0000000",
+})
 _V_DELTA = {"V0": 0, "VR1": 1, "VR2": 2, "VR3": 3,
             "VL1": -1, "VL2": -2, "VL3": -3}
 
 
-class _BitReader:
-    """MSB-first bit reader over a byte string."""
-
-    __slots__ = ("data", "pos", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.nbits = len(data) * 8
-
-    def read1(self) -> int:
-        if self.pos >= self.nbits:
-            raise ImageError("G4: bit stream exhausted")
-        b = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return b
-
-
-def _read_mode(br: _BitReader) -> str:
-    s = ""
-    while len(s) < 7:
-        s += "01"[br.read1()]
-        m = _MODES.get(s)
-        if m is not None:
-            return m
-    # 7 zeros: either EOFB padding/terminator or garbage — the caller
-    # stops row assembly on it (T.6 EOFB = two EOLs, 000000000001 twice)
-    if s == "0000000":
-        return "EOFB"
-    raise ImageError(f"G4: invalid mode code {s!r}")
-
-
-def _read_run(br: _BitReader, dec: dict[str, int]) -> int:
+def _read_run(br: _BitReader, dec: dict) -> int:
     """One run length: zero or more makeup codes then a terminating
     code (T.4 §2.4.1.2 allows chained extended makeups for wide rows)."""
     total = 0
     while True:
-        s = ""
-        run = None
-        while len(s) < _MAX_CODE_LEN:
-            s += "01"[br.read1()]
-            run = dec.get(s)
-            if run is not None:
-                break
-        if run is None:
-            raise ImageError(f"G4: invalid run code {s!r}")
+        run = br.huff(dec)
         total += run
         if run < 64:  # terminating code ends the run
             return total
@@ -190,7 +159,7 @@ def _decode_2d_row(br: _BitReader, ref: list[int],
             i += 1
         b1 = ref[i] if i < len(ref) else width
         b2 = ref[i + 1] if i + 1 < len(ref) else width
-        mode = _read_mode(br)
+        mode = br.huff(_MODES)
         if mode == "EOFB":
             # EOFB/EOL is only legal between rows; inside a row it
             # means the stream is truncated for this geometry
@@ -287,7 +256,7 @@ def _expect_eol(br: _BitReader) -> None:
     fill; a fill-free stream passes the same check)."""
     zeros = 0
     while True:
-        if br.read1():
+        if br.bit():
             if zeros >= 11:
                 return
             raise ImageError("fax: malformed G3 EOL")
@@ -308,7 +277,7 @@ def g3_decode(data: bytes, width: int, height: int,
     ref: list[int] = [width, width]
     for y in range(height):
         _expect_eol(br)
-        one_d = br.read1() == 1 if two_d else True
+        one_d = br.bit() == 1 if two_d else True
         cur = (_mh_decode_row(br, width) if one_d
                else _decode_2d_row(br, ref, width))
         out[y] = _pack_row(cur, width)

@@ -12,10 +12,12 @@ container without imaging libraries:
   top-down rows, 4-byte row padding)
 - PNG (baseline: stdlib zlib inflate + numpy scanline unfiltering; color
   types 0/2/3/4/6 at bit depth 8, filters 0-4)
-- JPEG (baseline sequential DCT per ITU-T T.81: Huffman entropy decode,
-  dequantize/dezigzag, vectorized 8x8 IDCT, chroma upsampling, YCbCr→RGB;
-  4:4:4/4:2:2/4:2:0, restart markers)
-- TIFF 6.0 (strips AND §15 tiles, both byte orders: Compression none/
+- JPEG (baseline sequential and progressive DCT per ITU-T T.81, one
+  scan routine for both: Huffman entropy decode, dequantize/dezigzag,
+  vectorized 8x8 IDCT, chroma upsampling, YCbCr→RGB; 4:4:4/4:2:2/4:2:0,
+  restart markers)
+- TIFF 6.0 (strips AND §15 tiles through one assembler, both byte
+  orders: Compression none/
   LZW/PackBits and the whole CCITT fax family — G4/T.6, G3/T.4 1D+2D,
   Modified Huffman (kernels/fax_codec.py) — Predictor 2, 1-bit bilevel
   + 8/16-bit gray/RGB, 4/8-bit ColorMap palettes, planar or
@@ -31,6 +33,8 @@ live in ``fixtures/image_codec.py``.
 
 All decoders return ``np.ndarray`` of dtype uint8 — ``(h, w)`` grayscale
 or ``(h, w, 3)`` RGB — matching what the preprocessing kernel consumes.
+PNG, JPEG and TIFF headers share one pixel cap (``_check_dims``), and
+JPEG, TIFF LZW and the fax codes one MSB-first ``_BitReader``.
 """
 
 from __future__ import annotations
@@ -44,6 +48,61 @@ import numpy as np
 
 class ImageError(ValueError):
     """Malformed raster payload; caller maps to status='error'."""
+
+
+def _check_dims(w: int, h: int, what: str) -> None:
+    """The one pixel cap of every header-sized decode (PNG, JPEG, TIFF
+    and its tiles): a corrupt header's multi-gigapixel claim becomes a
+    typed error instead of an executor OOM."""
+    if w <= 0 or h <= 0 or w * h > (1 << 28):
+        raise ImageError(f"bad {what} dimensions {w}x{h}")
+
+
+def _gray_if_equal(px: np.ndarray) -> np.ndarray:
+    """``(h, w, 3)`` → ``(h, w)`` when all three channels agree (a gray
+    image stored as color), else the color array; both contiguous."""
+    if (px[..., 0] == px[..., 1]).all() and (px[..., 1] == px[..., 2]).all():
+        return np.ascontiguousarray(px[..., 0])
+    return np.ascontiguousarray(px)
+
+
+class _BitReader:
+    """MSB-first bit reader over bytes: JPEG entropy segments, TIFF LZW
+    codes and the CCITT fax codes all read through it."""
+
+    __slots__ = ("data", "pos", "nbits")
+
+    def __init__(self, data: bytes):
+        self.data = data
+        self.pos = 0
+        self.nbits = len(data) * 8
+
+    def bit(self) -> int:
+        pos = self.pos
+        if pos >= self.nbits:
+            raise ImageError("bit stream exhausted")
+        self.pos = pos + 1
+        return (self.data[pos >> 3] >> (7 - (pos & 7))) & 1
+
+    def take(self, n: int) -> int:
+        """The next ``n`` bits as an unsigned int (0 for ``n == 0``)."""
+        pos, end = self.pos, self.pos + n
+        if end > self.nbits:
+            raise ImageError("bit stream exhausted")
+        self.pos = end
+        chunk = int.from_bytes(self.data[pos >> 3:(end + 7) >> 3], "big")
+        return (chunk >> (-end & 7)) & ((1 << n) - 1)
+
+    def huff(self, table: dict):
+        """One symbol of a prefix code given as ``(length, code) →
+        symbol`` (``_canonical_codes``' shape), codes up to 16 bits."""
+        code = 0
+        for length in range(1, 17):
+            code = (code << 1) | self.bit()
+            sym = table.get((length, code))
+            if sym is not None:
+                return sym
+        raise ImageError("invalid Huffman code")
 
 
 # ---------------------------------------------------------------------------
@@ -157,10 +216,7 @@ def decode_bmp(buf: bytes) -> np.ndarray:
         raise ImageError(f"unsupported BMP bpp {bpp}")
     if not top_down:
         bgr = bgr[::-1]
-    rgb = bgr[..., ::-1]
-    if (rgb[..., 0] == rgb[..., 1]).all() and (rgb[..., 1] == rgb[..., 2]).all():
-        return np.ascontiguousarray(rgb[..., 0])
-    return np.ascontiguousarray(rgb)
+    return _gray_if_equal(bgr[..., ::-1])
 
 
 # ---------------------------------------------------------------------------
@@ -226,10 +282,7 @@ def decode_png(buf: bytes) -> np.ndarray:
             idat += data
     if w is None:
         raise ImageError("PNG missing IHDR")
-    if w <= 0 or h <= 0 or w * h > (1 << 28):
-        # the size cap turns a corrupt-header 4-billion-pixel allocation
-        # into a typed error instead of an executor OOM
-        raise ImageError(f"bad PNG dimensions {w}x{h}")
+    _check_dims(w, h, "PNG")
     if bitdepth != 8 or interlace != 0:
         raise ImageError(
             f"unsupported PNG (bitdepth {bitdepth}, interlace {interlace})")
@@ -300,13 +353,11 @@ def decode_png(buf: bytes) -> np.ndarray:
         nchan = 3
     if nchan == 1:
         return np.ascontiguousarray(px[:, :, 0])
-    if (px[..., 0] == px[..., 1]).all() and (px[..., 1] == px[..., 2]).all():
-        return np.ascontiguousarray(px[..., 0])
-    return np.ascontiguousarray(px)
+    return _gray_if_equal(px)
 
 
 # ---------------------------------------------------------------------------
-# JPEG (baseline sequential DCT, from scratch — ITU-T T.81)
+# JPEG (baseline sequential and progressive DCT, from scratch — ITU-T T.81)
 # ---------------------------------------------------------------------------
 # The one compressed format real multimodal corpora are dominated by
 # (reference OCRs .jpg natively via cv2.imread,
@@ -315,7 +366,10 @@ def decode_png(buf: bytes) -> np.ndarray:
 # components, any sampling factors 1-2 (4:4:4/4:2:2/4:2:0), restart
 # markers, multiple DQT/DHT segments — and progressive (SOF2: spectral
 # selection + successive approximation, DC/AC first and refinement
-# scans, EOBn runs, per-scan DHT redefinition). Arithmetic / 12-bit /
+# scans, EOBn runs, per-scan DHT redefinition). Both go through one scan
+# routine (``_decode_scan``): a baseline scan is the progressive routine
+# run once over the full spectrum 0..63, so only the per-mode header
+# checks in ``decode_jpeg`` tell the two apart. Arithmetic / 12-bit /
 # hierarchical route to the import-guarded real-codec hook.
 
 class _UnsupportedJpeg(ImageError):
@@ -356,39 +410,6 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict:
             k += 1
         code <<= 1
     return table
-
-
-class _BitReader:
-    """MSB-first bit reader over a destuffed entropy segment."""
-
-    def __init__(self, data: bytes):
-        self.bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        self.pos = 0
-
-    def bit(self) -> int:
-        if self.pos >= len(self.bits):
-            raise ImageError("JPEG entropy data exhausted")
-        b = int(self.bits[self.pos])
-        self.pos += 1
-        return b
-
-    def take(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if self.pos + n > len(self.bits):
-            raise ImageError("JPEG entropy data exhausted")
-        chunk = self.bits[self.pos:self.pos + n]
-        self.pos += n
-        return int(chunk @ (1 << np.arange(n - 1, -1, -1, dtype=np.int64)))
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ImageError("invalid JPEG Huffman code")
 
 
 def _extend(v: int, t: int) -> int:
@@ -458,30 +479,6 @@ def _split_entropy(buf: bytes, start: int) -> tuple[list[bytes], int]:
             break
     segs.append(bytes(cur))
     return segs, min(i, n)
-
-
-def _decode_block_seq(reader: "_BitReader", zz: np.ndarray, preds: dict,
-                      c: dict) -> None:
-    """Baseline-sequential block decode: DC diff + AC runs (T.81 F.2)."""
-    t = reader.huff(c["dc"])
-    if t > 15:  # corrupt table: category beyond spec overflows int64
-        raise ImageError("bad JPEG DC category")
-    preds[c["id"]] += _extend(reader.take(t), t)
-    zz[0] = preds[c["id"]]
-    k = 1
-    while k < 64:
-        rs = reader.huff(c["ac"])
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ImageError("JPEG AC run overflows block")
-        zz[k] = _extend(reader.take(s), s)
-        k += 1
 
 
 def _ac_first(reader: "_BitReader", block: np.ndarray, ss: int, se: int,
@@ -559,37 +556,32 @@ def _ac_refine(reader: "_BitReader", block: np.ndarray, ss: int, se: int,
     return eobrun
 
 
-def _decode_scan_prog(segs: list[bytes], scan: list[tuple], geom: tuple,
-                      ss: int, se: int, ah: int, al: int,
-                      restart_interval: int, w: int, h: int) -> None:
-    """One progressive scan over the persistent coefficient arrays.
-    ``scan`` is [(comp, dctab, actab)]; interleaved (>1 component) scans
-    walk MCU order, single-component scans walk that component's block
-    raster at its own resolution (no MCU padding — T.81 A.2.2)."""
+def _decode_scan(segs: list[bytes], scan: list[tuple], geom: tuple,
+                 ss: int, se: int, ah: int, al: int,
+                 restart_interval: int, w: int, h: int) -> None:
+    """One scan, baseline or progressive, over the persistent coefficient
+    arrays. ``scan`` is [(comp, dctab, actab)]. A block of a scan that
+    starts at Ss=0 decodes its DC (first pass or refinement bit); when
+    Se>0 its AC band (Ss or 1 through Se) follows, so a baseline scan
+    (0..63) is a DC pass and an AC-first pass per block. Interleaved (>1
+    component) scans walk MCU order, single-component scans walk that
+    component's block raster at its own resolution (no MCU padding —
+    T.81 A.2.2)."""
     hmax, vmax, mcus_x, mcus_y = geom
-    if ss == 0:
-        if se != 0:
-            raise ImageError("progressive JPEG scan mixes DC and AC")
-        if ah == 0 and any(t[1] is None for t in scan):
-            raise ImageError("JPEG DC scan references missing DHT")
-    else:
-        if len(scan) > 1:
-            raise ImageError("progressive JPEG AC scan with >1 component")
-        if not (ss <= se <= 63):
-            raise ImageError("bad JPEG spectral band")
-        if scan[0][2] is None:
-            raise ImageError("JPEG AC scan references missing DHT")
-
-    interleaved = len(scan) > 1
-    if interleaved:
-        units = mcus_x * mcus_y
+    if len(scan) > 1:
+        cols, units = mcus_x, mcus_x * mcus_y
+        layout = [(c, dctab, actab, c["v"], c["h"], by, bx)
+                  for c, dctab, actab in scan
+                  for by in range(c["v"]) for bx in range(c["h"])]
     else:
         c = scan[0][0]
         comp_w = -((-w * c["h"]) // hmax)  # ceil(w*h_i/hmax), T.81 A.1.1
         comp_h = -((-h * c["v"]) // vmax)
-        bw = -(-comp_w // 8)
-        bh = -(-comp_h // 8)
-        units = bw * bh
+        cols = -(-comp_w // 8)
+        units = cols * -(-comp_h // 8)
+        layout = [(*scan[0], 1, 1, 0, 0)]
+    ac_pass = _ac_first if ah == 0 else _ac_refine
+    band_start = max(ss, 1)
 
     reader = _BitReader(segs[0])
     seg_idx = 0
@@ -603,40 +595,21 @@ def _decode_scan_prog(segs: list[bytes], scan: list[tuple], geom: tuple,
             reader = _BitReader(segs[seg_idx])
             preds = {t[0]["id"]: 0 for t in scan}
             eobrun = 0
-        if interleaved:  # DC scan over MCUs
-            my, mx = divmod(m, mcus_x)
-            for c, dctab, _ in scan:
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        block = c["coef"][my * c["v"] + by, mx * c["h"] + bx]
-                        if ah == 0:
-                            t = reader.huff(dctab)
-                            if t > 15:
-                                raise ImageError("bad JPEG DC category")
-                            preds[c["id"]] += _extend(reader.take(t), t)
-                            block[0] = preds[c["id"]] << al
-                        elif reader.bit():
-                            block[0] = int(block[0]) | (1 << al)
-        else:
-            c, dctab, actab = scan[0]
-            my, mx = divmod(m, bw)
-            block = c["coef"][my, mx]
+        my, mx = divmod(m, cols)
+        for c, dctab, actab, sv, sh, by, bx in layout:
+            block = c["coef"][my * sv + by, mx * sh + bx]
             if ss == 0:
                 if ah == 0:
-                    if dctab is None:
-                        raise ImageError("JPEG DC scan references "
-                                         "missing DHT")
                     t = reader.huff(dctab)
-                    if t > 15:
+                    if t > 15:  # corrupt table: beyond spec overflows int64
                         raise ImageError("bad JPEG DC category")
                     preds[c["id"]] += _extend(reader.take(t), t)
                     block[0] = preds[c["id"]] << al
                 elif reader.bit():
                     block[0] = int(block[0]) | (1 << al)
-            elif ah == 0:
-                eobrun = _ac_first(reader, block, ss, se, al, actab, eobrun)
-            else:
-                eobrun = _ac_refine(reader, block, ss, se, al, actab, eobrun)
+            if se:
+                eobrun = ac_pass(reader, block, band_start, se, al, actab,
+                                 eobrun)
 
 
 def decode_jpeg(buf: bytes) -> np.ndarray:
@@ -701,8 +674,7 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 cid, samp, tq = struct.unpack_from(">BBB", payload, 6 + 3 * k)
                 comps.append({"id": cid, "h": samp >> 4, "v": samp & 0x0F,
                               "tq": tq})
-            if w <= 0 or h <= 0 or w * h > (1 << 28):
-                raise ImageError(f"bad JPEG dimensions {w}x{h}")
+            _check_dims(w, h, "JPEG")
             for c in comps:
                 if not (1 <= c["h"] <= 2 and 1 <= c["v"] <= 2):
                     raise _UnsupportedJpeg(
@@ -737,39 +709,24 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
             ss, se, ahal = payload[1 + 2 * ns:1 + 2 * ns + 3]
             ah, al = ahal >> 4, ahal & 0x0F
             n_scans += 1
-            segs = extra  # destuffed entropy segments from _jpeg_segments
-            if progressive:
-                _decode_scan_prog(segs, scan, geom, ss, se, ah, al,
-                                  restart_interval, w, h)
-                continue
-            # ---- baseline sequential: exactly one full-spectrum scan ----
-            if n_scans > 1 or len(scan) != len(comps):
-                raise _UnsupportedJpeg("multi-scan sequential JPEG")
-            if (ss, se, ah, al) != (0, 63, 0, 0):
-                raise ImageError("bad baseline JPEG scan header")
-            for comp, dctab, actab in scan:
-                if dctab is None or actab is None:
+            if not progressive:  # one full-spectrum scan over all comps
+                if n_scans > 1 or len(scan) != len(comps):
+                    raise _UnsupportedJpeg("multi-scan sequential JPEG")
+                if (ss, se, ah, al) != (0, 63, 0, 0):
+                    raise ImageError("bad baseline JPEG scan header")
+            elif ss == 0 and se != 0:
+                raise ImageError("progressive JPEG scan mixes DC and AC")
+            elif ss and len(scan) > 1:
+                raise ImageError("progressive JPEG AC scan with >1 component")
+            if not ss <= se <= 63:
+                raise ImageError("bad JPEG spectral band")
+            for _, dctab, actab in scan:
+                if (ss == 0 and ah == 0 and dctab is None) \
+                        or (se and actab is None):
                     raise ImageError("JPEG scan references missing DHT")
-                comp["dc"], comp["ac"] = dctab, actab
-            hmax, vmax, mcus_x, mcus_y = geom
-            reader = _BitReader(segs[0])
-            seg_idx = 0
-            preds = {c["id"]: 0 for c in comps}
-            for m in range(mcus_x * mcus_y):
-                if restart_interval and m and m % restart_interval == 0:
-                    seg_idx += 1
-                    if seg_idx >= len(segs):
-                        raise ImageError("JPEG missing restart segment")
-                    reader = _BitReader(segs[seg_idx])
-                    preds = {c["id"]: 0 for c in comps}
-                my, mx = divmod(m, mcus_x)
-                for c, _, _ in scan:
-                    for by in range(c["v"]):
-                        for bx in range(c["h"]):
-                            _decode_block_seq(
-                                reader,
-                                c["coef"][my * c["v"] + by, mx * c["h"] + bx],
-                                preds, c)
+            # extra: the destuffed entropy segments from _jpeg_segments
+            _decode_scan(extra, scan, geom, ss, se, ah, al,
+                         restart_interval, w, h)
 
     if n_scans == 0 or not comps:
         raise ImageError("JPEG missing SOF/SOS")
@@ -804,19 +761,20 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
         y - 0.344136 * cb - 0.714136 * cr,
         y + 1.772 * cb,
     ], axis=-1)
-    rgb = np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-    if (rgb[..., 0] == rgb[..., 1]).all() and (rgb[..., 1] == rgb[..., 2]).all():
-        return np.ascontiguousarray(rgb[..., 0])
-    return rgb
+    return _gray_if_equal(np.clip(np.round(rgb), 0, 255).astype(np.uint8))
 
 
 # ---------------------------------------------------------------------------
-# TIFF 6.0 (baseline bilevel/grayscale/RGB, strip-based)
+# TIFF 6.0 (bilevel/grayscale/RGB/palette, strips and tiles)
 # ---------------------------------------------------------------------------
 # The remaining real-world scan container after PNG/JPEG (r3 VERDICT
 # stretch #7). Scope: both byte orders, strip organization (any
-# RowsPerStrip) AND §15 tile organization (r5: TileWidth/TileLength/
-# TileOffsets/TileByteCounts, edge tiles padded then cropped),
+# RowsPerStrip) AND §15 tile organization (TileWidth/TileLength/
+# TileOffsets/TileByteCounts, edge tiles padded, their padding neither
+# decoded nor kept) — one assembler: a strip is a full-width tile of
+# RowsPerStrip rows whose last one is not padded, and a plane is the
+# concatenation of its decoded segments (never preallocated from the
+# header's dimensions),
 # Compression 1 (none) / 2 (Modified Huffman, byte-aligned T.4 1D
 # rows) / 3 (G3/T.4 with EOLs; T4Options bit 0 = 2D lines, fill bits
 # tolerated) / 4 (CCITT G4 fax, T.6) — fax family in
@@ -871,22 +829,21 @@ def _tiff_ifd(buf: bytes, order: str, off: int) -> dict[int, list[int]]:
     return tags
 
 
-def _lzw_decode(data: bytes) -> bytes:
+def _lzw_decode(data: bytes, need: int) -> bytes:
     """TIFF-variant LZW (spec §13): MSB-first bit packing, ClearCode 256,
     EOI 257, 9→12-bit codes with the early-change width bump (the width
     grows when the table length reaches 2**n - 1 — one entry earlier
-    than GIF's 2**n; the convention every TIFF/PDF LZW writer uses)."""
+    than GIF's 2**n; the convention every TIFF/PDF LZW writer uses).
+    Stops once ``need`` bytes are out, so expansion past the segment's
+    pixels (an LZW bomb) is never built."""
     CLEAR, EOI = 256, 257
-    nbits, bitpos = 9, 0
-    nbytes = len(data)
+    nbits = 9
+    reader = _BitReader(data)
     table: list[bytes] = []
     prev = b""
     out = bytearray()
-    while bitpos + nbits <= nbytes * 8:
-        byte0, shift = divmod(bitpos, 8)
-        chunk = int.from_bytes(data[byte0:byte0 + 3].ljust(3, b"\0"), "big")
-        code = (chunk >> (24 - shift - nbits)) & ((1 << nbits) - 1)
-        bitpos += nbits
+    while reader.pos + nbits <= reader.nbits and len(out) < need:
+        code = reader.take(nbits)
         if code == EOI:
             break
         if code == CLEAR:
@@ -914,13 +871,13 @@ def _lzw_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _packbits_decode(data: bytes) -> bytes:
+def _packbits_decode(data: bytes, need: int) -> bytes:
     """PackBits (TIFF spec §9): n in [0,127] copies n+1 literals;
     n in [-127,-1] (two's complement) repeats the next byte 1-n times;
-    -128 is a noop."""
+    -128 is a noop. Stops once ``need`` bytes are out."""
     out = bytearray()
     i, n = 0, len(data)
-    while i < n:
+    while i < n and len(out) < need:
         h = data[i] - 256 if data[i] > 127 else data[i]
         i += 1
         if h == -128:
@@ -966,6 +923,7 @@ def _tiff_segment_pixels(raw: bytes, comp: int, seg_w: int, nrows: int,
     must happen per segment, not on the assembled image), unpack bits /
     fold 16-bit samples to their high byte (the display convention)."""
     row_bytes = (seg_w * spp * bits0 + 7) // 8
+    need = row_bytes * nrows
     if comp in (2, 3, 4):
         # fax family resets its reference/row state per segment; output
         # is the same MSB-packed bilevel shape as an uncompressed one
@@ -977,19 +935,19 @@ def _tiff_segment_pixels(raw: bytes, comp: int, seg_w: int, nrows: int,
         else:
             raw = mh_decode(raw, seg_w, nrows)
     elif comp == 5:
-        raw = _lzw_decode(raw)
+        raw = _lzw_decode(raw, need)
     elif comp == 32773:
-        raw = _packbits_decode(raw)
-    if len(raw) < row_bytes * nrows:
+        raw = _packbits_decode(raw, need)
+    if len(raw) < need:
         raise ImageError("TIFF segment shorter than its rows")
-    seg = np.frombuffer(
-        raw[:row_bytes * nrows], np.uint8).reshape(nrows, row_bytes)
+    seg = np.frombuffer(raw, np.uint8, count=need).reshape(nrows, row_bytes)
     if pred == 2:
         seg = (_undo_predictor2(seg, spp) if bits0 == 8
                else _undo_predictor2_16(seg, spp, order))
     if bits0 == 1:
         px = np.unpackbits(seg, axis=1)[:, :seg_w]
-        return np.where(px == 1, 255, 0).astype(np.uint8)[:, :, None]
+        px *= 255  # in place: no wider temporary than the pixels
+        return px[:, :, None]
     if bits0 == 4:
         # palette nibbles, high nibble first (§4 default fill order)
         inter = np.empty((nrows, seg.shape[1] * 2), np.uint8)
@@ -1028,8 +986,7 @@ def decode_tiff(buf: bytes) -> np.ndarray:
         return v[0]
 
     width, height = one(256), one(257)
-    if not width or not height:
-        raise ImageError("TIFF zero-sized image")
+    _check_dims(width, height, "TIFF")
     comp = one(259, 1)
     photo = one(262, 1)
     spp = one(277, 1)
@@ -1062,52 +1019,38 @@ def decode_tiff(buf: bytes) -> np.ndarray:
     # channel-major), so assemble per channel with spp=1 and stack
     spp_eff = 1 if planar else spp
 
+    if tiled:  # §15: tw×tl blocks, edge tiles padded to full size
+        tw, tl = one(322), one(323)
+        if not tw or not tl or tw % 16 or tl % 16:
+            raise ImageError("TIFF tile dims must be positive ×16 (§15)")
+        _check_dims(tw, tl, "TIFF tile")
+    else:  # a strip is a full-width tile; the last one is not padded
+        tw, tl = width, min(max(one(278, height), 1), height)
+    across = -(-width // tw)
+    down = -(-height // tl)
+
     def assemble(offsets: list[int], counts: list[int]) -> np.ndarray:
-        """All segments of one plane (or the whole chunky image) →
-        (height, width, spp_eff) pixels."""
-        if tiled:
-            # §15 tile organization: tw×tl blocks padded to full size
-            # at the right/bottom edges, left-to-right then top-down
-            tw, tl = one(322), one(323)
-            if not tw or not tl or tw % 16 or tl % 16:
-                raise ImageError(
-                    "TIFF tile dims must be positive ×16 (§15)")
-            across = (width + tw - 1) // tw
-            down = (height + tl - 1) // tl
-            if len(offsets) < across * down or len(counts) < len(offsets):
-                raise ImageError("TIFF tile table shorter than the grid")
-            arr = np.zeros((height, width, spp_eff), np.uint8)
-            for ty in range(down):
-                for tx in range(across):
-                    off = offsets[ty * across + tx]
-                    cnt = counts[ty * across + tx]
-                    if off + cnt > len(buf):
-                        raise ImageError("TIFF tile out of range")
-                    seg = _tiff_segment_pixels(
-                        bytes(buf[off:off + cnt]), comp, tw, tl,
-                        spp_eff, bits[0], pred, order, t4_2d)
-                    hc = min(tl, height - ty * tl)
-                    wc = min(tw, width - tx * tw)
-                    arr[ty * tl:ty * tl + hc,
-                        tx * tw:tx * tw + wc] = seg[:hc, :wc]
-            return arr
-        rps = min(max(one(278, height), 1), height)
-        rows = []
-        for s, (off, cnt) in enumerate(zip(offsets, counts)):
-            if off + cnt > len(buf):
-                raise ImageError("TIFF strip out of range")
-            nrows = min(rps, height - s * rps)
-            if nrows <= 0:
-                break
-            rows.append(_tiff_segment_pixels(
-                bytes(buf[off:off + cnt]), comp, width, nrows,
-                spp_eff, bits[0], pred, order, t4_2d))
-        if not rows:
-            raise ImageError("TIFF has no decodable strips")
-        arr = np.concatenate(rows, axis=0)
-        if arr.shape[0] != height:
-            raise ImageError("TIFF strips do not cover the image height")
-        return arr
+        """All segments of one plane (or the whole chunky image), left
+        to right then top down → (height, width, spp_eff) pixels."""
+        if len(offsets) < across * down or len(counts) < across * down:
+            raise ImageError("TIFF segment table shorter than the grid")
+        bands = []
+        for ty in range(down):
+            # every coding here yields rows in order, so decoding only
+            # the rows the image keeps is a valid prefix of the segment
+            nrows = min(tl, height - ty * tl)
+            segs = []
+            for tx in range(across):
+                off, cnt = offsets[ty * across + tx], counts[ty * across + tx]
+                if off + cnt > len(buf):
+                    raise ImageError("TIFF segment out of range")
+                seg = _tiff_segment_pixels(
+                    bytes(buf[off:off + cnt]), comp, tw, nrows,
+                    spp_eff, bits[0], pred, order, t4_2d)
+                # keep only the columns the image keeps, not the padding
+                segs.append(np.ascontiguousarray(seg[:, :width - tx * tw]))
+            bands.append(np.concatenate(segs, axis=1))
+        return np.concatenate(bands)
 
     offsets = tags.get(324 if tiled else 273)
     if not offsets:
@@ -1139,7 +1082,7 @@ def decode_tiff(buf: bytes) -> np.ndarray:
             raise ImageError("TIFF palette index out of ColorMap range")
         return np.stack([cmap[c][arr] for c in range(3)], axis=-1)
     if photo == 0:  # WhiteIsZero: min value is white
-        arr = (255 - arr.astype(np.uint16)).astype(np.uint8)
+        arr = 255 - arr
     return arr
 
 
@@ -1192,7 +1135,7 @@ def decode_image(buf: bytes) -> np.ndarray:
             # progressive/arithmetic/12-bit — the real-codec hook
             return _decode_real(buf)
     if buf[:4] in (b"II*\x00", b"MM\x00*"):
-        return decode_tiff(buf)  # baseline strips; exotic → real hook
+        return decode_tiff(buf)  # strips/tiles; exotic → real hook
     if buf[:4] == b"RIFF" and buf[8:12] == b"WEBP":
         from .webp_codec import decode_webp
         return decode_webp(buf)  # VP8L from scratch; lossy → real hook

@@ -12,8 +12,9 @@ requirement).
 
 Object model: scan for ``N G obj … endobj``; streams delimited by
 ``stream``/``endstream``; FlateDecode via stdlib zlib, bounded by the
-per-document inflate budget ``sniff.MAX_INFLATE_BYTES``. Page order from
-the root /Pages node's /Kids when present.
+per-document inflate budget ``sniff.MAX_INFLATE_BYTES``, which one
+:class:`PdfDocument` parse hands to both its text layer and its page
+images. Page order from the root /Pages node's /Kids when present.
 """
 
 from __future__ import annotations
@@ -167,72 +168,110 @@ def _content_refs(head: bytes) -> list[int]:
     return [int(cm.group(1))] if cm else []
 
 
-def _page_content_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> list[bytes]:
-    streams: list[bytes] = []
-    budget = MAX_INFLATE_BYTES  # shared by every stream of the document
-    for _num, head in _ordered_pages(objs):
-        refs = _content_refs(head)
-        if not refs:
-            # /Contents is optional per the PDF spec (a blank page) — skip
-            # it, matching the oracle (oracle/extractor.py:_pdf_pages keeps
-            # only pages WITH a /Contents ref). Raising here would flip a
-            # 9-good-pages document into a whole-doc error row.
-            continue
-        parts = []
-        for ref in refs:
-            entry = objs.get(ref)
-            if entry is None or entry[1] is None:
-                raise PdfError(f"missing /Contents stream object {ref}")
-            parts.append(_decode_stream(entry[0], entry[1], budget))
-            budget -= len(parts[-1])
-        # §7.8.2: multiple streams form one content stream, separated by
-        # at least one whitespace byte
-        streams.append(b"\n".join(parts))
-    if not streams:
-        raise PdfError("no page has /Contents")  # oracle: 'no pages'
-    return streams
-
-
 _XOBJ_DICT_RE = re.compile(rb"/XObject\s*<<(.*?)>>", re.DOTALL)
 _NAME_REF_RE = re.compile(rb"/[^\s/<>\[\]()]+\s+(\d+)\s+\d+\s+R")
 _WIDTH_RE = re.compile(rb"/Width\s+(\d+)")
 _HEIGHT_RE = re.compile(rb"/Height\s+(\d+)")
 
 
-def extract_page_images(data: bytes) -> list[list[tuple[int, int, bytes]]]:
-    """Per-page decoded image XObjects — the raster source for the PDF OCR
-    path (S5; reference page render at /root/reference/text_extractor.py:
-    575-610 — a table pipeline carries scanned pages as embedded images
-    rather than re-rendering, so extraction replaces rasterization).
+class PdfDocument:
+    """One parse of a PDF and its one inflate budget: the text layer and
+    the page images draw every stream from the same
+    ``MAX_INFLATE_BYTES``, so a row that reads both (the P3 OCR
+    fallback) parses once and inflates at most that much."""
 
-    Returns one list per page of ``(width, height, raw_bytes)`` where
-    raw_bytes is the FlateDecoded /DeviceGray 8-bit sample buffer
-    (width*height bytes, row-major) — decode with
-    ``image_codec.decode_raw_gray``.
-    """
-    objs = _parse_objects(data)
-    out: list[list[tuple[int, int, bytes]]] = []
-    budget = MAX_INFLATE_BYTES  # shared by every image of the document
-    for _num, head in _ordered_pages(objs):
-        images: list[tuple[int, int, bytes]] = []
-        xm = _XOBJ_DICT_RE.search(head)
-        if xm:
-            for m in _NAME_REF_RE.finditer(xm.group(1)):
-                entry = objs.get(int(m.group(1)))
+    def __init__(self, data: bytes):
+        self.objs = _parse_objects(data)
+        self.pages = _ordered_pages(self.objs)
+        self.budget = MAX_INFLATE_BYTES
+
+    def _inflate(self, head: bytes, raw: bytes) -> bytes:
+        out = _decode_stream(head, raw, self.budget)
+        self.budget -= len(out)
+        return out
+
+    def content_streams(self) -> list[bytes]:
+        streams: list[bytes] = []
+        for _num, head in self.pages:
+            refs = _content_refs(head)
+            if not refs:
+                # /Contents is optional per the PDF spec (a blank page) —
+                # skip it, matching the oracle (oracle/extractor.py:
+                # _pdf_pages keeps only pages WITH a /Contents ref).
+                # Raising here would flip a 9-good-pages document into a
+                # whole-doc error row.
+                continue
+            parts = []
+            for ref in refs:
+                entry = self.objs.get(ref)
                 if entry is None or entry[1] is None:
-                    continue
-                ihead, istream = entry
-                if not re.search(rb"/Subtype\s*/Image\b", ihead):
-                    continue
-                wm = _WIDTH_RE.search(ihead)
-                hm = _HEIGHT_RE.search(ihead)
-                if not (wm and hm):
-                    continue
-                pixels = _decode_stream(ihead, istream, budget)
-                budget -= len(pixels)
-                images.append((int(wm.group(1)), int(hm.group(1)), pixels))
-        out.append(images)
-    return out
+                    raise PdfError(f"missing /Contents stream object {ref}")
+                parts.append(self._inflate(*entry))
+            # §7.8.2: multiple streams form one content stream, separated
+            # by at least one whitespace byte
+            streams.append(b"\n".join(parts))
+        if not streams:
+            raise PdfError("no page has /Contents")  # oracle: 'no pages'
+        return streams
+
+    def page_images(self) -> list[list[tuple[int, int, bytes]]]:
+        """Per-page decoded image XObjects — the raster source for the
+        PDF OCR path (S5; the reference renders pages at
+        text_extractor.py:575-610 — a table pipeline carries scanned
+        pages as embedded images rather than re-rendering, so extraction
+        replaces rasterization).
+
+        Returns one list per page of ``(width, height, raw_bytes)`` where
+        raw_bytes is the FlateDecoded /DeviceGray 8-bit sample buffer
+        (width*height bytes, row-major) — decode with
+        ``image_codec.decode_raw_gray``.
+        """
+        out: list[list[tuple[int, int, bytes]]] = []
+        for _num, head in self.pages:
+            images: list[tuple[int, int, bytes]] = []
+            xm = _XOBJ_DICT_RE.search(head)
+            if xm:
+                for m in _NAME_REF_RE.finditer(xm.group(1)):
+                    entry = self.objs.get(int(m.group(1)))
+                    if entry is None or entry[1] is None:
+                        continue
+                    ihead, istream = entry
+                    if not re.search(rb"/Subtype\s*/Image\b", ihead):
+                        continue
+                    wm = _WIDTH_RE.search(ihead)
+                    hm = _HEIGHT_RE.search(ihead)
+                    if not (wm and hm):
+                        continue
+                    images.append((int(wm.group(1)), int(hm.group(1)),
+                                   self._inflate(ihead, istream)))
+            out.append(images)
+        return out
+
+    def text_layer(
+        self,
+    ) -> tuple[str, list[tuple[int, int, int, int, int]], str, int]:
+        """``(extracted_text, spans, text_layer_flag, n_pages)`` — see
+        :func:`extract_pdf`."""
+        page_texts = [
+            unicodedata.normalize("NFC", _layout(_interpret(s)))
+            for s in self.content_streams()
+        ]
+        spans: list[tuple[int, int, int, int, int]] = []
+        offset = 0
+        for p, text in enumerate(page_texts):
+            if p > 0:
+                offset += 2  # '\n\n' page join (text_extractor.py:573)
+            if text:
+                spans.append((p, offset, offset + len(text), -1, -1))
+            offset += len(text)
+        joined = "\n\n".join(page_texts)
+        gate = "ok" if len(joined.strip()) > 50 else "short"  # P3 gate
+        return joined, spans, gate, len(page_texts)
+
+
+def extract_page_images(data: bytes) -> list[list[tuple[int, int, bytes]]]:
+    """:meth:`PdfDocument.page_images` of a PDF's bytes."""
+    return PdfDocument(data).page_images()
 
 
 # --------------------------------------------------------------------------
@@ -445,20 +484,4 @@ def extract_pdf(
     malformed input (caller converts to a status='error' row — a row never
     kills the job, reference analog text_extractor.py:987-989).
     """
-    objs = _parse_objects(data)
-    page_texts = [
-        unicodedata.normalize("NFC", _layout(_interpret(s)))
-        for s in _page_content_streams(objs)
-    ]
-    out_parts: list[str] = []
-    spans: list[tuple[int, int, int, int, int]] = []
-    offset = 0
-    for p, text in enumerate(page_texts):
-        if p > 0:
-            offset += 2  # '\n\n' page join (text_extractor.py:573)
-        if text:
-            spans.append((p, offset, offset + len(text), -1, -1))
-        offset += len(text)
-    joined = "\n\n".join(page_texts)
-    gate = "ok" if len(joined.strip()) > 50 else "short"  # P3 gate
-    return joined, spans, gate, len(page_texts)
+    return PdfDocument(data).text_layer()

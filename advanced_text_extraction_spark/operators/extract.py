@@ -33,7 +33,7 @@ from ..kernels.html_extract import extract_html
 from ..kernels.lang import detect_language
 from ..kernels.normalize import normalize_plain
 from ..kernels.office_extract import extract_office
-from ..kernels.pdf_extract import extract_pdf
+from ..kernels.pdf_extract import PdfDocument
 from ..kernels.sniff import sniff_content_type
 from ..sources.config import ExtractOptions
 
@@ -93,7 +93,8 @@ def _extract_row(payload: str | None, max_chars: int,
             status = "error"
         else:
             try:
-                text, spans, gate, n_pages = extract_pdf(payload_bytes)
+                doc = PdfDocument(payload_bytes)
+                text, spans, gate, n_pages = doc.text_layer()
                 meta["text_layer"] = gate
                 meta["n_pages"] = str(n_pages)
                 if gate == "short" and ocr_fallback is not None:
@@ -102,8 +103,10 @@ def _extract_row(payload: str | None, max_chars: int,
                     # confidence replaces the 0.95 constant (A6/A7).
                     # OCR failure keeps the (valid) short text layer —
                     # a fallback must never lose what it falls back FROM.
+                    # The page images come from the same parse and the
+                    # inflate budget its content streams left.
                     try:
-                        ocr_text, ocr_conf = ocr_fallback(payload_bytes)
+                        ocr_text, ocr_conf = ocr_fallback(doc.page_images())
                     except Exception as ocr_exc:
                         meta["ocr_error"] = (str(ocr_exc)
                                              or type(ocr_exc).__name__)
@@ -147,10 +150,11 @@ def extract_one(payload: str | None,
     record. ``max_chars`` is the config extract.max_payload_chars cap.
 
     ``ocr_fallback`` is the P3 hook (reference text_extractor.py:501-507,
-    575-610): ``fn(pdf_bytes) -> (text, confidence)``, called when a PDF's
-    text layer fails the >50-char gate; ``operators.ocr.pdf_ocr_fallback``
-    builds one. Without it the gate result is still recorded in
-    metadata['text_layer']."""
+    575-610): ``fn(page_images) -> (text, confidence)``, called when a
+    PDF's text layer fails the >50-char gate with
+    ``PdfDocument.page_images()`` of the parse that read the text layer;
+    ``operators.ocr.pdf_ocr_fallback`` builds one. Without it the gate
+    result is still recorded in metadata['text_layer']."""
     (content_type, text, spans, confidence, language, status, error,
      meta) = _extract_row(payload, max_chars, ocr_fallback)
     return {

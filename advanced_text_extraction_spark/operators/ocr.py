@@ -80,13 +80,14 @@ def ocr_images(df: DataFrame, id_col: str = "media_id",
 # PDF OCR (S5) + the P3 fallback hook
 # ---------------------------------------------------------------------------
 
-def _ocr_pdf_page_stream(pdf_bytes: bytes, engine: str, preprocess: bool):
-    """Yield (page_idx, joined_text, confidence) per PDF page — the ONE
-    per-page decode+OCR loop behind both the scalar S5 path
-    (``ocr_pdf_bytes``) and the page-row operator (``pdf_ocr_pages``).
-    Confidence is None for a page with no embedded images: it has
-    nothing to score, and a 0.0 would drag every downstream mean."""
-    for p, images in enumerate(extract_page_images(pdf_bytes)):
+def _ocr_page_stream(pages: list, engine: str, preprocess: bool):
+    """Yield (page_idx, joined_text, confidence) per PDF page of
+    ``PdfDocument.page_images()`` — the ONE per-page decode+OCR loop
+    behind the scalar S5 path (``ocr_pdf_bytes``), the P3 hook and the
+    page-row operator (``pdf_ocr_pages``). Confidence is None for a page
+    with no embedded images: it has nothing to score, and a 0.0 would
+    drag every downstream mean."""
+    for p, images in enumerate(pages):
         texts = []
         confs = []
         for (w, h, raw) in images:
@@ -96,6 +97,21 @@ def _ocr_pdf_page_stream(pdf_bytes: bytes, engine: str, preprocess: bool):
             confs.append(float(res["confidence"]))
         yield (p, "\n".join(t for t in texts if t),
                float(np.mean(confs)) if confs else None)
+
+
+def _ocr_pages(pages: list, engine: str, preprocess: bool
+               ) -> tuple[str, float, list[float | None]]:
+    """OCR every page image: (text, mean_page_confidence, page_confs);
+    see :func:`ocr_pdf_bytes`."""
+    page_texts: list[str] = []
+    page_confs: list[float | None] = []
+    for _p, text, conf in _ocr_page_stream(pages, engine, preprocess):
+        page_texts.append(text)
+        page_confs.append(conf)
+    text = "\n\n".join(page_texts)
+    scored = [c for c in page_confs if c is not None]
+    conf = float(np.mean(scored)) if scored else 0.0
+    return text, conf, page_confs
 
 
 def ocr_pdf_bytes(pdf_bytes: bytes, engine: str = "auto",
@@ -109,32 +125,24 @@ def ocr_pdf_bytes(pdf_bytes: bytes, engine: str = "auto",
     to score — its page_confs slot is None and it is excluded from the
     doc mean (a 0.0 there would halve the confidence of an otherwise
     fully-OCR'd scan every time a blank page appears)."""
-    page_texts: list[str] = []
-    page_confs: list[float | None] = []
-    for _p, text, conf in _ocr_pdf_page_stream(pdf_bytes, engine,
-                                               preprocess):
-        page_texts.append(text)
-        page_confs.append(conf)
-    text = "\n\n".join(page_texts)
-    scored = [c for c in page_confs if c is not None]
-    conf = float(np.mean(scored)) if scored else 0.0
-    return text, conf, page_confs
+    return _ocr_pages(extract_page_images(pdf_bytes), engine, preprocess)
 
 
 def pdf_ocr_fallback(options: ExtractOptions = ExtractOptions()):
     """The P3 hook for ``extract_one(..., ocr_fallback=)``: PDFs whose
     text layer fails the >50-char gate get their page images OCR'd
     (reference auto method :501-507) with ``options``' engine and
-    preprocessing. Returns ``fn(pdf_bytes) -> (text, confidence)`` and
+    preprocessing. Returns ``fn(page_images) -> (text, confidence)``,
+    taking ``PdfDocument.page_images()`` of the row's one parse, and
     changes no state. An OCR result below ``ocr_confidence_threshold``
     (reference text_extractor.py:784) is REJECTED — the caller keeps the
     short-but-valid text layer and records the rejection in
     metadata['ocr_error']."""
     threshold = options.ocr_confidence_threshold
 
-    def _fallback(pdf_bytes: bytes) -> tuple[str, float]:
-        text, conf, _pages = ocr_pdf_bytes(
-            pdf_bytes, options.ocr_fallback_engine, options.ocr_preprocess)
+    def _fallback(pages: list) -> tuple[str, float]:
+        text, conf, _pages = _ocr_pages(
+            pages, options.ocr_fallback_engine, options.ocr_preprocess)
         if conf < threshold:
             raise ValueError(
                 f"ocr confidence {conf:.3f} below threshold {threshold}")
@@ -169,8 +177,9 @@ def pdf_ocr_pages(df: DataFrame, id_col: str = "doc_id",
                 # partially-OCR'd doc as healthy.
                 doc_rows = []
                 try:
-                    for p, text, conf in _ocr_pdf_page_stream(
-                            bytes(payload), engine, preprocess):
+                    for p, text, conf in _ocr_page_stream(
+                            extract_page_images(bytes(payload)), engine,
+                            preprocess):
                         doc_rows.append((int(did), p, text, conf, "ok"))
                 except Exception:
                     doc_rows = [(int(did), -1, "", 0.0, "error")]

@@ -124,13 +124,17 @@ def test_pdf_ocr_fallback_hook():
 
     calls = []
 
-    def fake_ocr(pdf_bytes: bytes):
-        calls.append(pdf_bytes)
-        assert pdf_bytes.startswith(b"%PDF")
+    def fake_ocr(pages: list):
+        # the page images of the parse that read the text layer: one
+        # list of (width, height, raw) per page
+        calls.append(pages)
+        assert isinstance(pages, list)
+        assert all(isinstance(images, list) for images in pages)
         return "recovered by ocr " * 10, 0.81
 
     out = X.extract_one(payload, ocr_fallback=fake_ocr)
     assert calls, "fallback not invoked on short text layer"
+    assert len(calls[0]) == int(base["metadata"]["n_pages"])
     assert out["metadata"]["text_layer"] == "ocr"
     assert out["extracted_text"].startswith("recovered by ocr")
     assert out["confidence"] == 0.81

@@ -267,6 +267,43 @@ def test_extract_one_ocr_fallback():
     assert 0.5 < rec["confidence"] <= 1.0
 
 
+def test_ocr_fallback_draws_on_the_text_layers_inflate_budget():
+    """P3 reads the page images from the parse that read the text layer,
+    out of the inflate budget its content streams left. Content that
+    inflates nearly all of it leaves too little for the page image: the
+    row keeps its short text layer and names the budget in
+    metadata['ocr_error'] (a second parse would start a fresh budget)."""
+    import zlib
+    from advanced_text_extraction_spark.kernels.sniff import (
+        MAX_INFLATE_BYTES)
+    w = h = 400
+    content = (b"%" + b"x" * (MAX_INFLATE_BYTES - w * h // 2)
+               + b"\nBT /F1 12 Tf 72 720 Td (tiny) Tj ET")
+    streams = {4: (f"/Subtype /Image /Width {w} /Height {h} /ColorSpace "
+                   "/DeviceGray /BitsPerComponent 8 ",
+                   zlib.compress(b"\xff" * (w * h))),
+               5: ("", zlib.compress(content))}
+    objs = {1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            3: b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R "
+               b"/Resources << /XObject << /Im0 4 0 R >> >> >>"}
+    for num, (head, data) in streams.items():
+        objs[num] = (f"<< {head}/Filter /FlateDecode /Length {len(data)} "
+                     ">>\nstream\n").encode() + data + b"\nendstream"
+    pdf = b"%PDF-1.4\n" + b"".join(
+        b"%d 0 obj\n" % n + body + b"\nendobj\n"
+        for n, body in sorted(objs.items())) + b"%%EOF\n"
+    del content
+    rec = extract_mod.extract_one(base64.b64encode(pdf).decode(),
+                                  ocr_fallback=pdf_ocr_fallback())
+    assert rec["status"] == "ok"
+    assert rec["extracted_text"] == "tiny"
+    assert rec["metadata"]["text_layer"] == "short"
+    assert "inflate budget" in rec["metadata"]["ocr_error"]
+    # on its own the page image fits the budget
+    assert len(extract_page_images(pdf)[0][0][2]) == w * h
+
+
 def test_text_layer_pdf_unaffected_by_fallback():
     rng = random.Random(5)
     from fixtures.gen import gen_pdf_payload
@@ -567,15 +604,42 @@ def test_jpeg_progressive_matches_baseline_exactly():
     spike[::9, ::11] = 255
     spike[3::13, 5::7] = 0
     cases.append((spike, False))
-    for img, sub in cases:
+    for k in range(12):  # random sizes 1..70, gray and color
+        h, w = (int(v) for v in rng.integers(1, 71, size=2))
+        shape = (h, w) if k % 2 else (h, w, 3)
+        cases.append((rng.integers(0, 256, size=shape, dtype=np.uint8),
+                      k % 4 == 0))
+    for i, (img, sub) in enumerate(cases):
         for q in (40, 92):
-            base = encode_jpeg(img, quality=q, subsample=sub)
+            # the baseline stream's restart interval only re-cuts the
+            # entropy segments: the coefficients stay the same
+            base = encode_jpeg(img, quality=q, subsample=sub,
+                               restart_interval=(0, 1, 3)[(i + q) % 3])
             prog = encode_jpeg(img, quality=q, subsample=sub,
                                progressive=True)
             assert b"\xff\xc2" in prog and b"\xff\xc0" not in prog
             assert np.array_equal(decode_jpeg(base), decode_jpeg(prog))
             # dispatch decodes progressive natively (no hook, no cv2)
             assert np.array_equal(decode_image(prog), decode_jpeg(prog))
+
+
+def test_jpeg_single_component_scan_walks_block_raster():
+    """T.81 A.2.2: a non-interleaved scan's MCU is one block, taken in
+    the component's block-raster order whatever its sampling factors. A
+    gray baseline stream whose SOF claims 2x2 sampling codes the same
+    blocks in the same order as its 1x1 twin, so it decodes to the same
+    pixels (not in MCU order, 4 blocks at a time)."""
+    from advanced_text_extraction_spark.kernels.image_codec import (
+        decode_jpeg)
+    from fixtures.image_codec import encode_jpeg
+    rng = np.random.default_rng(13)
+    for h, w in [(8, 8), (17, 29), (64, 64)]:
+        raw = encode_jpeg(rng.integers(0, 256, (h, w), dtype=np.uint8),
+                          quality=80)
+        i = raw.index(b"\xff\xc0") + 11  # first component's sampling
+        assert raw[i] == 0x11
+        claimed = raw[:i] + b"\x22" + raw[i + 1:]
+        assert np.array_equal(decode_jpeg(claimed), decode_jpeg(raw))
 
 
 def test_jpeg_progressive_scan_coders_property():

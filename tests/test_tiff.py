@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import random
 import struct
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -33,14 +34,35 @@ def _imgs() -> dict[str, np.ndarray]:
     }
 
 
-@pytest.mark.parametrize("byteorder", ["<", ">"])
-@pytest.mark.parametrize("compression", ["none", "lzw", "packbits"])
-@pytest.mark.parametrize("rows_per_strip", [None, 5])
-def test_roundtrip_matrix(byteorder, compression, rows_per_strip):
+_FAX = ["g4", "mh", "g3", "g3-2d"]
+_COMPRESSIONS = ["none", "lzw", "packbits", *_FAX]
+
+
+def _grid_cases(compression: str):
+    """(name, image, encode_tiff keywords) over planar × predictor for
+    one compression: the fax tiers code bilevel gray only, predictor 2
+    is written for lzw only, and planar wants three samples."""
+    if compression in _FAX:
+        rng = np.random.default_rng(41)
+        for shape in [(37, 53), (16, 16), (1, 1)]:
+            yield (f"bilevel{shape}",
+                   rng.integers(0, 2, shape, dtype=np.uint8) * 255, {})
+        return
     for name, img in _imgs().items():
+        for predictor in (1, 2) if compression == "lzw" else (1,):
+            for planar in (False, True) if img.ndim == 3 else (False,):
+                yield (f"{name}/pred{predictor}/planar{planar}", img,
+                       dict(predictor=predictor, planar=planar))
+
+
+@pytest.mark.parametrize("byteorder", ["<", ">"])
+@pytest.mark.parametrize("compression", _COMPRESSIONS)
+@pytest.mark.parametrize("rows_per_strip", [None, 5, 1, 3, 7])
+def test_roundtrip_matrix(byteorder, compression, rows_per_strip):
+    for name, img, kw in _grid_cases(compression):
         buf = encode_tiff(img, compression=compression,
                           byteorder=byteorder,
-                          rows_per_strip=rows_per_strip)
+                          rows_per_strip=rows_per_strip, **kw)
         out = decode_tiff(buf)
         assert out.shape == img.shape, name
         assert (out == img).all(), name
@@ -73,17 +95,18 @@ def test_lzw_width_growth_through_12_bits_and_reset():
     big = rng.integers(0, 256, (200, 300), dtype=np.uint8)
     assert (decode_tiff(encode_tiff(big, compression="lzw")) == big).all()
     raw = bytes(rng.integers(0, 256, 60_000, dtype=np.uint8))
-    assert _lzw_decode(_lzw_encode(raw)) == raw
+    assert _lzw_decode(_lzw_encode(raw), len(raw)) == raw
     compressible = bytes(rng.integers(0, 4, 60_000, dtype=np.uint8))
-    assert _lzw_decode(_lzw_encode(compressible)) == compressible
+    assert _lzw_decode(_lzw_encode(compressible),
+                       len(compressible)) == compressible
 
 
 def test_lzw_rejects_garbage_with_typed_error():
     with pytest.raises(ImageError):
-        _lzw_decode(b"\x00\x01\x02\x03")  # no leading ClearCode
+        _lzw_decode(b"\x00\x01\x02\x03", 1 << 20)  # no ClearCode
     # stream claiming a code far beyond the table
     with pytest.raises(ImageError):
-        _lzw_decode(bytes([0x80, 0x00]) + b"\xff\xff\xff\xff")
+        _lzw_decode(bytes([0x80, 0x00]) + b"\xff\xff\xff\xff", 1 << 20)
 
 
 def test_packbits_spec_worked_example():
@@ -92,19 +115,19 @@ def test_packbits_spec_worked_example():
     packed = bytes.fromhex("FEAA0280002AFDAA0380002A22F7AA")
     want = bytes.fromhex("AAAAAA80002AAAAAAAAA80002A22"
                          "AAAAAAAAAAAAAAAAAAAA")
-    assert _packbits_decode(packed) == want
+    assert _packbits_decode(packed, len(want)) == want
     # and our encoder's output for that row decodes back (encoder need
     # not be byte-identical to the example, only contract-equal)
-    assert _packbits_decode(_packbits_encode_row(want)) == want
+    assert _packbits_decode(_packbits_encode_row(want), len(want)) == want
 
 
 def test_packbits_row_roundtrip_lengths():
     rng = np.random.default_rng(5)
     for n in (0, 1, 2, 127, 128, 129, 257, 1000):
         row = bytes(rng.integers(0, 3, n, dtype=np.uint8))
-        assert _packbits_decode(_packbits_encode_row(row)) == row
+        assert _packbits_decode(_packbits_encode_row(row), n) == row
         runy = bytes([200] * n)
-        assert _packbits_decode(_packbits_encode_row(runy)) == runy
+        assert _packbits_decode(_packbits_encode_row(runy), n) == runy
 
 
 def _bilevel_tiff(bits_rows: np.ndarray, photometric: int,
@@ -112,14 +135,22 @@ def _bilevel_tiff(bits_rows: np.ndarray, photometric: int,
     """Hand-rolled 1-bit TIFF (our encoder is 8-bit only — bilevel is a
     decode-side contract for fax-style scans)."""
     h, w = bits_rows.shape
-    data = np.packbits(bits_rows, axis=1).tobytes()
+    return _one_strip_tiff(w, h, 1, 1, np.packbits(bits_rows, axis=1)
+                           .tobytes(), photometric, order)
+
+
+def _one_strip_tiff(w: int, h: int, bits: int, compression: int,
+                    data: bytes, photometric: int = 1,
+                    order: str = "<") -> bytes:
+    """Hand-rolled single-strip gray TIFF around ``data`` as given: the
+    header may claim any size, whatever the strip holds."""
     out = bytearray(struct.pack(
         order + "2sHI", b"II" if order == "<" else b"MM", 42, 0))
     off = len(out)
     out += data
-    fields = [(256, 4, w), (257, 4, h), (258, 3, 1), (259, 3, 1),
-              (262, 3, photometric), (273, 4, off), (277, 3, 1),
-              (278, 4, h), (279, 4, len(data))]
+    fields = [(256, 4, w), (257, 4, h), (258, 3, bits),
+              (259, 3, compression), (262, 3, photometric), (273, 4, off),
+              (277, 3, 1), (278, 4, h), (279, 4, len(data))]
     struct.pack_into(order + "I", out, 4, len(out))
     out += struct.pack(order + "H", len(fields))
     for tag, typ, val in fields:
@@ -169,14 +200,13 @@ def test_unsupported_shapes_route_to_real_hook():
 
 
 @pytest.mark.parametrize("byteorder", ["<", ">"])
-@pytest.mark.parametrize("compression", ["none", "lzw", "packbits"])
+@pytest.mark.parametrize("compression", _COMPRESSIONS)
 def test_tiled_roundtrip_matrix(byteorder, compression):
     """§15 tile organization: edge tiles padded on encode, cropped on
-    decode; predictor resets at each tile's left edge (exercised via
-    the lzw+predictor case below)."""
-    for name, img in _imgs().items():
+    decode; predictor resets at each tile's left edge."""
+    for name, img, kw in _grid_cases(compression):
         buf = encode_tiff(img, compression=compression,
-                          byteorder=byteorder, tile=(16, 32))
+                          byteorder=byteorder, tile=(16, 32), **kw)
         out = decode_tiff(buf)
         assert out.shape == img.shape, name
         assert (out == img).all(), name
@@ -345,7 +375,7 @@ def test_lzw_roundtrip_property(data):
     """decode(encode(x)) == x for arbitrary byte strings — hypothesis
     shrinks any early-change desync to a minimal counterexample (the
     off-by-one lives at code 253/509/1021, unreachable by eye)."""
-    assert _lzw_decode(_lzw_encode(data)) == data
+    assert _lzw_decode(_lzw_encode(data), len(data)) == data
 
 
 @settings(max_examples=60, deadline=None)
@@ -355,7 +385,7 @@ def test_lzw_roundtrip_property_repetitive(chunk, reps):
     """Highly repetitive inputs maximize table growth per byte — the
     regime where width bumps and the 4094-entry reset actually fire."""
     data = chunk * reps
-    assert _lzw_decode(_lzw_encode(data)) == data
+    assert _lzw_decode(_lzw_encode(data), len(data)) == data
 
 
 def test_fuzz_totality_over_corrupt_tiffs():
@@ -380,3 +410,108 @@ def test_fuzz_totality_over_corrupt_tiffs():
             assert isinstance(out, np.ndarray)
         except (ImageError, NotImplementedError):
             pass
+
+
+def _peak_bytes(fn) -> int:
+    """Peak traced allocation (numpy's included) while ``fn`` runs."""
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def _zero_run_lzw(nbytes: int) -> bytes:
+    """The LZW stream of ``nbytes`` zeros, packed straight from its
+    codes: ClearCode, literal 0, then each next table entry (258, 259,
+    …, each one zero longer than the last) at the decoder's
+    early-change widths."""
+    codes, width, table, out = [(256, 9), (0, 9)], 9, 258, 1
+    while out < nbytes:
+        codes.append((table, width))
+        out += table - 256
+        table += 1
+        if table == (1 << width) - 1 and width < 12:
+            width += 1
+    value = nbits = 0
+    for code, w in codes:
+        value, nbits = (value << w) | code, nbits + w
+    return (value << (-nbits % 8)).to_bytes((nbits + 7) // 8, "big")
+
+
+def test_lzw_bomb_inflates_only_the_segment():
+    """A 16×16 strip needs 256 bytes; an LZW stream that codes 4 MiB
+    (one run of zeros) must stop there instead of building its whole
+    expansion, as PNG's IDAT inflate does."""
+    bomb = _zero_run_lzw(4 << 20)
+    assert len(bomb) < 4096
+    assert _lzw_decode(bomb, 4 << 20)[:4 << 20] == bytes(4 << 20)
+    buf = _one_strip_tiff(16, 16, 8, 5, bomb)
+    out = {}
+    peak = _peak_bytes(lambda: out.setdefault("px", decode_tiff(buf)))
+    assert (out["px"] == 0).all() and out["px"].shape == (16, 16)
+    assert peak < 1 << 20, peak
+    # both stop within one code / run of what was asked
+    assert _lzw_decode(bomb, 256)[:256] == bytes(256)
+    assert len(_lzw_decode(bomb, 256)) < 300
+    assert _packbits_decode(b"\x81\x00" * 1000, 300) == bytes(384)
+
+
+def _shared_tile_tiff(w: int, h: int, tw: int, tl: int,
+                      data: bytes) -> bytes:
+    """Hand-rolled 8-bit gray LZW TIFF of tw×tl tiles (at least two)
+    whose every TileOffsets entry points at the one segment ``data``."""
+    n = -(-w // tw) * -(-h // tl)
+    out = bytearray(struct.pack("<2sHI", b"II", 42, 0))
+    seg_at = len(out)
+    out += data
+    offsets_at = len(out)
+    out += struct.pack(f"<{n}I", *[seg_at] * n)
+    counts_at = len(out)
+    out += struct.pack(f"<{n}I", *[len(data)] * n)
+    fields = [(256, 4, 1, w), (257, 4, 1, h), (258, 3, 1, 8),
+              (259, 3, 1, 5), (262, 3, 1, 1), (277, 3, 1, 1),
+              (322, 4, 1, tw), (323, 4, 1, tl), (324, 4, n, offsets_at),
+              (325, 4, n, counts_at)]
+    struct.pack_into("<I", out, 4, len(out))
+    out += struct.pack("<H", len(fields))
+    for tag, typ, count, val in fields:
+        out += struct.pack("<HHI", tag, typ, count) \
+            + struct.pack("<H" if typ == 3 else "<I", val).ljust(4, b"\0")
+    out += struct.pack("<I", 0)
+    return bytes(out)
+
+
+def test_tall_tiles_over_a_short_image_decode_only_its_rows():
+    """Tiles are padded to full size at the image's edges, but only the
+    rows and columns the image keeps are decoded and kept: eight
+    16×65,536 tiles over a 128×16 image, all sharing one LZW segment
+    that codes a whole padded tile (1 MiB) of zeros, peak like the
+    image, not like eight padded tiles."""
+    bomb = _zero_run_lzw(16 << 16)
+    buf = _shared_tile_tiff(8 * 16, 16, 16, 1 << 16, bomb)
+    assert len(buf) < 4096
+    out = {}
+    peak = _peak_bytes(lambda: out.setdefault("px", decode_tiff(buf)))
+    assert out["px"].shape == (16, 128) and (out["px"] == 0).all()
+    assert peak < 1 << 20, peak
+    # the right edge: a 120-wide image crops its last tile to 8 columns
+    assert decode_tiff(_shared_tile_tiff(120, 16, 16, 1 << 16, bomb)) \
+        .shape == (16, 120)
+
+
+def test_g4_header_beyond_the_pixel_cap_is_typed_error():
+    """The one pixel cap PNG and JPEG headers have holds for TIFF: a
+    G4 strip of one coded white row under a header claiming 2^26 × 8
+    pixels (> 2^28) is rejected before any pixel is allocated."""
+    white_row = bytes([0b10000000])  # V0: the row copies the white ref
+    buf = _one_strip_tiff(1 << 26, 8, 1, 4, white_row, photometric=0)
+
+    def decode():
+        with pytest.raises(ImageError, match="dimensions"):
+            decode_tiff(buf)
+    assert _peak_bytes(decode) < 1 << 20
+    # a header inside the cap decodes the same stream
+    assert (decode_tiff(_one_strip_tiff(40, 1, 1, 4, white_row, 0))
+            == 255).all()
