@@ -11,18 +11,23 @@ is the primary payload type mandated by BASELINE.json:north_star. The
 ``'\\n\\n'`` block-join contract mirrors the reference's page join
 (/root/reference/text_extractor.py:573).
 
-Implementation: streaming ``html.parser`` handler (stdlib; exposes
-``getpos()`` for source offsets). ``convert_charrefs=False`` so entity and
-character references are separate events with known raw extents — spans
-stay byte-accurate. One pass, O(n); no DOM tree is materialized — this
-runs vectorized over Arrow batches in the extract UDF.
+Implementation: a regex event scanner with ``html.parser``'s event
+semantics (``convert_charrefs=False``, Python 3.11): data runs, start,
+end and self-closing tags, entity and character references, each event
+at its absolute offset in the raw markup, so spans stay exact without a
+line table. One master pattern (``_EVENT_RE``) consumes the common
+constructs in C; anything else (a tag it does not cover, an incomplete
+construct, a marked section) goes through a port of the stdlib parser's
+procedure for that construct, including its two passes: ``feed`` stops at
+the first incomplete construct, ``close`` resumes there and turns the
+rest into data. One pass, O(n); no DOM tree is materialized — this runs
+vectorized over Arrow batches in the extract UDF.
 """
 
 from __future__ import annotations
 
 import html as _html
 import re
-from html.parser import HTMLParser
 
 from .normalize import normalize_inline
 
@@ -43,131 +48,350 @@ CHROME_ATTR_RE = re.compile(
     r"|ads?|advert|share|social|breadcrumbs?|popup|modal)(?:$|[\s_-])",
     re.IGNORECASE,
 )
+# html.parser's CDATA_CONTENT_ELEMENTS: raw text up to the close tag
+_CDATA_TAGS = ("script", "style")
+
+# -- the common constructs, one alternative each ---------------------------
+# A start tag: the stdlib's tag-name class, then attributes separated by
+# ASCII whitespace (ASCII names, an optional '=' and a quoted or bare
+# value, with no whitespace around the '='). For this subset the stdlib
+# finds the same tag end, name, attributes and '/>' form; any other tag
+# fails here and takes the ported procedure. Possessive quantifiers keep
+# a bare value from giving back a trailing '/' as a '/>' ending. The other
+# alternatives are the stdlib's own end-tag and reference patterns, and a
+# '<' or '&' it reads as text. Comments, declarations and processing
+# instructions take the ported procedure: one search each, as in the
+# stdlib, where a pattern would scan an unterminated one twice.
+_EVENT_RE = re.compile(r"""
+    (?P<data>[^&<]++)
+  | (?P<start><(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*+)
+     (?P<attrs>(?:[\t\n\r\f\x20]++[a-zA-Z_:][-a-zA-Z0-9_:.]*+
+        (?:=(?:"[^"]*+"|'[^']*+'|[^\s"'=<>`]++))?)*+)
+     [\t\n\r\f\x20]*+(?P<empty>/?)>)
+  | </\s*(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*>
+  | &\#(?P<charref>[0-9]++|[xX][0-9a-fA-F]++)(?:;|(?=[^0-9a-fA-F]))
+  | &(?P<entityref>[a-zA-Z][-.a-zA-Z0-9]*)(?:;|(?=[^a-zA-Z0-9]))
+  | (?P<lone><(?=[^a-zA-Z/!?])|&(?=[^a-zA-Z\#]))
+""", re.VERBOSE)
+(_DATA, _START, _END, _CHARREF, _ENTITYREF, _LONE) = (
+    _EVENT_RE.groupindex[g]
+    for g in ("data", "start", "end", "charref", "entityref", "lone"))
+# an _EVENT_RE start tag whose attribute text lacks this has no class or
+# id value, so its attributes are never parsed
+_CLASS_OR_ID_RE = re.compile(r"(?:class|id)=", re.IGNORECASE)
+
+# -- the stdlib parser's own patterns, for the ported procedures ----------
+_TAGFIND = re.compile(r'([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*')
+_ATTRFIND = re.compile(
+    r'((?<=[\'"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*'
+    r'(\'[^\']*\'|"[^"]*"|(?![\'"])[^>\s]*))?(?:\s|/(?!>))*')
+_LOCATE_STARTTAG_END = re.compile(r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""", re.VERBOSE)
+_COMMENTCLOSE = re.compile(r'--\s*>')
+_DECLNAME = re.compile(r'[a-zA-Z][-_.a-zA-Z0-9]*\s*')
+_MARKEDSECTIONCLOSE = re.compile(r']\s*]\s*>')
+_MSMARKEDSECTIONCLOSE = re.compile(r']\s*>')
+_CDATA_CLOSE = {t: re.compile(r'</\s*%s\s*>' % t, re.I) for t in _CDATA_TAGS}
 
 
-class _Extractor(HTMLParser):
-    """Single-pass block segmenter with chrome / link-density accounting."""
+def _start_tag_end(raw: str, i: int) -> int:
+    """The stdlib's check for a whole start tag at ``raw[i] == '<'``: the
+    tag's end offset, or -1 while it is incomplete."""
+    j = _LOCATE_STARTTAG_END.match(raw, i).end()
+    nxt = raw[j:j + 1]
+    if nxt == ">":
+        return j + 1
+    if nxt == "/":
+        return j + 2 if raw.startswith("/>", j) else -1
+    if nxt == "" or nxt in ("abcdefghijklmnopqrstuvwxyz=/"
+                            "ABCDEFGHIJKLMNOPQRSTUVWXYZ"):
+        return -1
+    return j if j > i else i + 1
 
-    def __init__(self, raw: str) -> None:
-        super().__init__(convert_charrefs=False)
-        # line-start offsets for getpos()→absolute-offset conversion
-        self._line_starts = [0]
-        for m in re.finditer("\n", raw):
-            self._line_starts.append(m.end())
-        # element stack entries: (tag, is_chrome, is_exclude)
-        self._stack: list[tuple[str, bool, bool]] = []
-        self._exclude_depth = 0
-        self._chrome_depth = 0
-        self._anchor_depth = 0
-        # current block accumulator
-        self._parts: list[str] = []
-        self._words = 0
-        self._link_words = 0
-        self._chrome_hit = False
-        self._src_start = -1
-        self._src_end = -1
-        self.blocks: list[tuple[str, int, int, int, int, bool]] = []
-        # (text, words, link_words, src_start, src_end, chrome_hit)
 
-    def _abs_pos(self) -> int:
-        line, col = self.getpos()
-        return self._line_starts[line - 1] + col
+def _scan_name(raw: str, i: int, declstartpos: int) -> tuple[str | None, int]:
+    """The stdlib's name token of a marked section: ``(name, end)``, the
+    end -1 while the input ends inside it."""
+    if i == len(raw):
+        return None, -1
+    m = _DECLNAME.match(raw, i)
+    if not m:
+        raise AssertionError(
+            "expected name token at %r" % raw[declstartpos:declstartpos + 20])
+    s = m.group()
+    if i + len(s) == len(raw):
+        return None, -1
+    return s.strip().lower(), m.end()
 
-    def _flush(self) -> None:
-        if not self._parts:
+
+def _marked_section_end(raw: str, i: int) -> int:
+    """``<![name ... ]]>`` (or the MS-Office ``]>`` form): its end, or -1
+    while incomplete. Unknown names raise as the stdlib parser does."""
+    name, j = _scan_name(raw, i + 3, i)
+    if j < 0:
+        return j
+    if name in {"temp", "cdata", "ignore", "include", "rcdata"}:
+        m = _MARKEDSECTIONCLOSE.search(raw, i + 3)
+    elif name in {"if", "else", "endif"}:
+        m = _MSMARKEDSECTIONCLOSE.search(raw, i + 3)
+    else:
+        raise AssertionError(
+            "unknown status keyword %r in marked section" % raw[i + 3:j])
+    return m.end() if m else -1
+
+
+def _markup_end(raw: str, i: int) -> int:
+    """End of the comment, declaration or processing instruction at
+    ``raw[i:i+2] in ('<!', '<?')``, or -1 while it is incomplete."""
+    if raw.startswith("<!--", i):
+        m = _COMMENTCLOSE.search(raw, i + 4)
+        return m.end() if m else -1
+    if raw.startswith("<![", i):
+        return _marked_section_end(raw, i)
+    k = raw.find(">", i + 2)
+    return k + 1 if k >= 0 else -1
+
+
+def _charref_text(name: str) -> str:
+    """A numeric reference's text: a surrogate code point decodes to
+    U+FFFD (HTML5's rule, as ``html.unescape``), a value beyond U+10FFFF
+    to nothing."""
+    try:
+        cp = int(name[1:], 16) if name[0] in "xX" else int(name)
+        return "\ufffd" if 0xD800 <= cp <= 0xDFFF else chr(cp)
+    except (ValueError, OverflowError):
+        return ""
+
+
+def _attrs_chrome(attrs: list[tuple[str, str | None]]) -> bool:
+    return any(k in ("class", "id") and v and CHROME_ATTR_RE.search(v)
+               for k, v in attrs)
+
+
+def _parse_start_tag(raw: str, i: int, endpos: int
+                     ) -> tuple[str, list[tuple[str, str | None]], str]:
+    """The stdlib's reading of the whole start tag ``raw[i:endpos]``:
+    ``(tag, attrs, tail)``; the tag is an element only when ``tail`` is
+    ``'>'`` or ``'/>'`` (self-closing), else its text is data."""
+    m = _TAGFIND.match(raw, i + 1)
+    k = m.end()
+    attrs: list[tuple[str, str | None]] = []
+    while k < endpos:
+        a = _ATTRFIND.match(raw, k)
+        if not a:
+            break
+        name, rest, value = a.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = _html.unescape(value)
+        attrs.append((name.lower(), value))
+        k = a.end()
+    return m.group(1).lower(), attrs, raw[k:endpos].strip()
+
+
+def _end_tag_end(raw: str, i: int) -> tuple[str | None, int]:
+    """The stdlib's reading of an end tag at ``raw[i:i+2] == '</'`` that
+    ``_EVENT_RE`` did not match: ``(tag or None, end offset)``, the offset
+    -1 while incomplete."""
+    gtpos = raw.find(">", i + 1)
+    if gtpos < 0:
+        return None, -1
+    m = _TAGFIND.match(raw, i + 2)
+    if not m:  # '</>', or a bogus comment up to the first '>'
+        return None, gtpos + 1
+    return m.group(1).lower(), raw.find(">", m.end()) + 1
+
+
+def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
+    """Single-pass block segmenter with chrome / link-density accounting:
+    the kept blocks as ``[(text, src_start, src_end)]``."""
+    blocks: list[tuple[str, int, int]] = []
+    # element stack entries: (tag, is_chrome, is_exclude)
+    stack: list[tuple[str, bool, bool]] = []
+    exclude_depth = chrome_depth = anchor_depth = 0
+    # current block accumulator
+    parts: list[str] = []
+    link_words = 0
+    chrome_hit = False
+    src_start = src_end = -1
+    # the raw-text element (script/style) whose close tag ends the text
+    cdata: str | None = None
+
+    def flush():
+        nonlocal parts, link_words, chrome_hit, src_start, src_end
+        if not parts:
             return
-        text = normalize_inline("".join(self._parts))
-        if text:
-            self.blocks.append(
-                (text, self._words, self._link_words, self._src_start,
-                 self._src_end, self._chrome_hit)
-            )
-        self._parts = []
-        self._words = 0
-        self._link_words = 0
-        self._chrome_hit = False
-        self._src_start = -1
-        self._src_end = -1
+        # KEEP rule (SPEC.md §3): non-chrome and link density <= 1/3,
+        # with words counted per text node; a block without link words
+        # never needs its word count
+        if not chrome_hit and (not link_words or 3 * link_words <= sum(
+                len(p.split()) for p in parts)):
+            text = normalize_inline("".join(parts))
+            if text:
+                blocks.append((text, src_start, src_end))
+        parts = []
+        link_words = 0
+        chrome_hit = False
+        src_start = src_end = -1
 
-    # -- parser events ---------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        if tag in VOID_TAGS:
-            if tag == "br" and not self._exclude_depth:
-                self._parts.append(" ")
+    def start_tag(tag, empty, attrs):
+        """A start tag (``empty``: self-closing) and its attributes."""
+        nonlocal exclude_depth, chrome_depth, anchor_depth, cdata
+        if empty or tag in VOID_TAGS:
+            if tag == "br" and not exclude_depth:
+                parts.append(" ")
             if tag in BLOCK_TAGS:  # hr
-                self._flush()
+                flush()
             return
         if tag in BLOCK_TAGS:
-            self._flush()
-        chrome = tag in CHROME_TAGS or any(
-            k in ("class", "id") and v and CHROME_ATTR_RE.search(v)
-            for k, v in attrs
-        )
+            flush()
+        chrome = tag in CHROME_TAGS or _attrs_chrome(attrs)
         exclude = tag in EXCLUDE_TAGS
-        self._stack.append((tag, chrome, exclude))
+        stack.append((tag, chrome, exclude))
         if chrome:
-            self._chrome_depth += 1
+            chrome_depth += 1
         if exclude:
-            self._exclude_depth += 1
+            exclude_depth += 1
         if tag == "a":
-            self._anchor_depth += 1
+            anchor_depth += 1
+        if tag in _CDATA_TAGS:
+            cdata = tag
 
-    def handle_startendtag(self, tag, attrs):
-        if tag == "br" and not self._exclude_depth:
-            self._parts.append(" ")
-        if tag in BLOCK_TAGS:
-            self._flush()
-
-    def handle_endtag(self, tag):
+    def end_tag(tag):
+        nonlocal exclude_depth, chrome_depth, anchor_depth
         if tag in VOID_TAGS:
             return
         if tag in BLOCK_TAGS:
-            self._flush()
+            flush()
         # pop to the nearest matching open tag (tolerates mismatched markup)
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i][0] == tag:
-                for _tag, chrome, exclude in self._stack[i:]:
+        for k in range(len(stack) - 1, -1, -1):
+            if stack[k][0] == tag:
+                for _tag, chrome, exclude in stack[k:]:
                     if chrome:
-                        self._chrome_depth -= 1
+                        chrome_depth -= 1
                     if exclude:
-                        self._exclude_depth -= 1
+                        exclude_depth -= 1
                     if _tag == "a":
-                        self._anchor_depth -= 1
-                del self._stack[i:]
+                        anchor_depth -= 1
+                del stack[k:]
                 break
 
-    def _add_text(self, decoded: str, raw_len: int) -> None:
-        if self._exclude_depth or not decoded:
+    def text(decoded: str, pos: int, raw_len: int) -> None:
+        """A text node: a data run, or a reference and its raw length."""
+        nonlocal link_words, chrome_hit, src_start, src_end
+        if exclude_depth or not decoded:
             return
-        pos = self._abs_pos()
-        if self._src_start < 0:
-            self._src_start = pos
-        self._src_end = pos + raw_len
-        self._parts.append(decoded)
-        n = len(decoded.split())
-        self._words += n
-        if self._anchor_depth > 0:
-            self._link_words += n
-        if self._chrome_depth > 0:
-            self._chrome_hit = True
+        if src_start < 0:
+            src_start = pos
+        src_end = pos + raw_len
+        parts.append(decoded)
+        if anchor_depth:
+            link_words += len(decoded.split())
+        if chrome_depth:
+            chrome_hit = True
 
-    def handle_data(self, data):
-        self._add_text(data, len(data))
-
-    def handle_entityref(self, name):
-        self._add_text(_html.unescape(f"&{name};"), len(name) + 2)
-
-    def handle_charref(self, name):
-        try:
-            cp = int(name[1:], 16) if name[0] in "xX" else int(name)
-            decoded = chr(cp)
-        except (ValueError, OverflowError):
-            decoded = ""
-        self._add_text(decoded, len(name) + 3)
-
-    def close(self):
-        super().close()
-        self._flush()
+    n = len(raw)
+    i = 0
+    end = False  # the stdlib parser is in feed() until the first stop
+    match = _EVENT_RE.match
+    while i < n:
+        if cdata is not None:
+            # raw text inside an excluded element: it adds nothing, and
+            # only the element's own close tag ends it
+            m = _CDATA_CLOSE[cdata].search(raw, i)
+            if m is not None:
+                end_tag(cdata)
+                cdata = None
+                i = m.end()
+                continue
+        else:
+            m = match(raw, i)
+            if m is not None:
+                kind = m.lastindex
+                if kind == _DATA:
+                    s = m.group(_DATA)
+                    text(s, i, len(s))
+                elif kind == _START:
+                    attrs = m.group("attrs")
+                    start_tag(m.group("tag").lower(), m.group("empty"),
+                              _parse_start_tag(raw, i, m.end())[1]
+                              if _CLASS_OR_ID_RE.search(attrs) else ())
+                elif kind == _END:
+                    end_tag(m.group(_END).lower())
+                elif kind == _CHARREF:
+                    name = m.group(_CHARREF)
+                    text(_charref_text(name), i, len(name) + 3)
+                elif kind == _ENTITYREF:
+                    name = m.group(_ENTITYREF)
+                    text(_html.unescape(f"&{name};"), i, len(name) + 2)
+                elif kind == _LONE:
+                    text(raw[i], i, 1)
+                i = m.end()
+                continue
+            # what the stdlib parser does at this '<' or '&'
+            if raw.startswith("&#", i):
+                if raw.find(";", i) >= 0:  # bail by consuming '&#'
+                    text("&#", i, 2)
+                    i += 2
+            elif raw[i] == "&":
+                # '&' + a name running to the end of the input, or '&' at
+                # its end; close() drops the '&' of a one-letter name
+                if i + 2 == n:
+                    i += 1
+            elif i + 1 < n:
+                # a tag, comment or declaration _EVENT_RE does not cover
+                c = raw[i + 1]
+                if c == "/":
+                    tag, k = _end_tag_end(raw, i)
+                    if tag is not None:
+                        end_tag(tag)
+                elif c == "!" or c == "?":
+                    k = _markup_end(raw, i)
+                else:
+                    k = _start_tag_end(raw, i)
+                    if k >= 0:
+                        tag, attrs, tail = _parse_start_tag(raw, i, k)
+                        if tail in (">", "/>"):
+                            start_tag(tag, tail == "/>", attrs)
+                        else:
+                            text(raw[i:k], i, k - i)
+                if k < 0 and end:
+                    # incomplete at the end of the input: text up to the
+                    # next '>' (or '<')
+                    k = raw.find(">", i + 1) + 1
+                    if not k:
+                        k = raw.find("<", i + 1)
+                        if k < 0:
+                            k = i + 1
+                    text(raw[i:k], i, k - i)
+                if k >= 0:
+                    i = k
+                    continue
+        # the stdlib parser's feed() stops here; close() resumes at i and
+        # ends with the rest as one data run
+        if end:
+            break
+        end = True
+    # (inside a raw-text element this text is excluded)
+    text(raw[i:], i, n - i)
+    flush()
+    return blocks
 
 
 def extract_html(raw: str) -> tuple[str, list[tuple[int, int, int, int, int]]]:
@@ -176,22 +400,10 @@ def extract_html(raw: str) -> tuple[str, list[tuple[int, int, int, int, int]]]:
     spans: list of (block_idx, start, end, src_start, src_end); start/end
     offsets into extracted_text, src_* into the raw markup.
     """
-    parser = _Extractor(raw)
-    parser.feed(raw)
-    parser.close()
-
-    out_parts: list[str] = []
+    blocks = _html_blocks(raw)
     spans: list[tuple[int, int, int, int, int]] = []
     offset = 0
-    idx = 0
-    for text, words, link_words, src_start, src_end, chrome in parser.blocks:
-        # KEEP rule (SPEC.md §3): non-chrome and link density <= 1/3
-        if chrome or 3 * link_words > words:
-            continue
-        if out_parts:
-            offset += 2  # '\n\n'
-        out_parts.append(text)
+    for idx, (text, src_start, src_end) in enumerate(blocks):
         spans.append((idx, offset, offset + len(text), src_start, src_end))
-        offset += len(text)
-        idx += 1
-    return "\n\n".join(out_parts), spans
+        offset += len(text) + 2  # '\n\n'
+    return "\n\n".join(text for text, _, _ in blocks), spans

@@ -22,7 +22,6 @@ _ZERO_WIDTH_RE = re.compile("[\u200b\u200c\u200d\ufeff]")
 _HORIZ_WS_RE = re.compile("[ \t\u00a0]{2,}|[\t\u00a0]")
 _SPACE_AROUND_NL_RE = re.compile(r" *\n *")
 _MANY_NL_RE = re.compile(r"\n{3,}")
-_INLINE_WS_RE = re.compile(r"\s+", re.UNICODE)
 
 
 def normalize_plain(s: str) -> str:
@@ -38,6 +37,8 @@ def normalize_plain(s: str) -> str:
 
 def normalize_inline(s: str) -> str:
     """Single-block normalization for HTML block text — SPEC.md §3 flush."""
+    # str.split() breaks on exactly the characters \s matches, so this is
+    # "collapse each \s+ run to one space, then strip" without rewriting
+    # every lone space between words to itself
     s = unicodedata.normalize("NFC", s)
-    s = _ZERO_WIDTH_RE.sub("", s)
-    return _INLINE_WS_RE.sub(" ", s).strip()
+    return " ".join(_ZERO_WIDTH_RE.sub("", s).split())

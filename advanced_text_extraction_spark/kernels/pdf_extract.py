@@ -275,7 +275,159 @@ def extract_page_images(data: bytes) -> list[list[tuple[int, int, bytes]]]:
 
 
 # --------------------------------------------------------------------------
-# content-stream tokenizer / interpreter
+# content-stream interpreter: one regex match per text operation
+# --------------------------------------------------------------------------
+
+# The content-stream grammar of ISO 32000 §7.2/§7.3 as the token loop
+# below reads it. A "regular" byte is neither white space nor a delimiter;
+# a run of them is a number when all of it is one, else an operator.
+_REG = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_SKIP = rb"[\x00\t\n\x0c\r ]++|%[^\n]*+|<<|>>"  # << >> are ignored
+_ANY = rb"(?:" + _SKIP + rb")*+"
+_NUM = rb"[-+]?+(?:\d++\.?+\d*+|\.\d++)(?!" + _REG + rb")"
+# a literal without nested parentheses, every escape well-formed
+_LIT = rb"\((?:[^\\()]++|\\[\s\S])*+\)"
+_HEX = rb"<[0-9A-Fa-f\t\n\x0b\x0c\r ]*+>"
+_STR = _LIT + rb"|" + _HEX
+_NAME = rb"/" + _REG + rb"*+"
+# an array of strings, numbers and names: no nesting, no operators
+_ARR = rb"\[(?:" + rb"|".join((_SKIP, _NUM, _STR, _NAME)) + rb")*+\]"
+_OPERAND = rb"|".join((_NUM, _STR, _NAME, _ARR))
+
+
+def _op(name: str, operands: list[tuple[str | None, bytes]],
+        ops: bytes) -> bytes:
+    """An alternative of ``_OP_RE``: exactly these operands, each in a
+    named group (or unnamed, for None), then one of ``ops``; the operator
+    group, named ``name``, is the match's ``lastgroup``."""
+    out = _ANY
+    for group, pattern in operands:
+        out += (rb"(?:" if group is None else
+                rb"(?P<" + group.encode() + rb">") + pattern + rb")" + _ANY
+    return out + rb"(?P<" + name.encode() + rb">" + ops + rb")(?!" + _REG + rb")"
+
+
+_TEXT_OP = rb"(?:BT|T[dDmLjJ*]|['\"])(?!" + _REG + rb")"
+# the operations of every other operator, operands included
+_OTHER_OPS = (rb"(?:(?:" + _SKIP + rb"|" + _OPERAND + rb")*+(?!" + _TEXT_OP
+              + rb")" + _REG + rb"++)*+")
+# One text operation per match, after the other operations before it,
+# which the match skips without converting an operand. A text operation
+# with the operands it reads matches the alternative of its shape, which
+# hands them over in groups; any other text operation matches ``op``
+# (``args`` alone matches operands at the end of the stream). What no
+# operation can take — a stray or unbalanced delimiter, a nested literal
+# or array, an operator inside an array, a string that never ends —
+# matches ``bad``. ``bad``, and an ``op`` of a shape the interpreter does
+# not read (``Td`` after a string, ``Tj`` after two strings), hand the
+# whole stream to the token loop, whose results and errors are the
+# contract.
+_OP_RE = re.compile(_OTHER_OPS + rb"(?:" + rb"|".join((
+    _op("td", [("td_x", _NUM), ("td_y", _NUM)], rb"Td|TD"),
+    _op("show", [("show_s", _STR)], rb"Tj|'"),
+    _op("tj", [("tj_a", _ARR)], rb"TJ"),
+    _op("tm", [(None, _NUM)] * 4 + [("tm_x", _NUM), ("tm_y", _NUM)], rb"Tm"),
+    _op("tl", [("tl_n", _NUM)], rb"TL"),
+    _op("show2", [(None, _NUM), (None, _NUM), ("show2_s", _STR)], rb'"'),
+    rb"(?P<args>(?:" + _SKIP + rb"|" + _OPERAND + rb")*+)(?:(?P<op>" + _REG
+    + rb"++)|\Z)",
+    rb"(?P<bad>[\s\S])")) + rb")")
+# the elements of a TJ array
+_ELEM_RE = re.compile(rb"(?:" + _SKIP + rb")|(" + _NUM + rb")|(" + _STR
+                      + rb")|" + _NAME)
+_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|\r\n?|[\s\S])")
+_ESCAPE_BYTES = {
+    b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+    b"\r\n": b"", b"\r": b"", b"\n": b"",  # line continuation
+}
+
+
+def _unescape(m: re.Match) -> bytes:
+    e = m.group(1)
+    if 0x30 <= e[0] <= 0x37:  # octal, 1-3 digits
+        return bytes((int(e, 8) & 0xFF,))
+    return _ESCAPE_BYTES.get(e, e)
+
+
+def _string(tok: bytes) -> str:
+    """The text of a ``_STR`` token — SPEC.md §4 step 4."""
+    body = tok[1:-1]
+    if tok[0] == 0x3C:  # <hex>
+        body = body.translate(None, b" \t\n\r\x0b\x0c")
+        if len(body) % 2:
+            body += b"0"
+        return bytes.fromhex(body.decode("ascii")).decode("latin-1")
+    if b"\\" in body:
+        body = _ESCAPE_RE.sub(_unescape, body)
+    return body.decode("latin-1")
+
+
+def _tj_text(arr: bytes) -> str:
+    """A ``TJ`` array's text: its strings, and a space for each kerning
+    number at or below ``KERN_SPACE`` — SPEC.md §4 step 3."""
+    parts: list[str] = []
+    for num, s in _ELEM_RE.findall(arr[1:-1]):
+        if s:
+            parts.append(_string(s))
+        elif num and float(num) <= KERN_SPACE:
+            parts.append(" ")
+    return "".join(parts)
+
+
+def _interpret(stream: bytes) -> list[tuple[float, float, str]]:
+    """Run the text operators; return emitted runs (tx, ty, text).
+
+    One ``_OP_RE`` match per text operation, so Python runs once per text
+    operation and converts only the operands it reads; a stream outside
+    the shapes ``_OP_RE`` reads goes through :func:`_interpret_tokens`."""
+    runs: list[tuple[float, float, str]] = []
+    tx = ty = 0.0
+    leading = 0.0
+    for m in _OP_RE.finditer(stream):
+        g = m.lastgroup
+        if g == "td":
+            a, b, op = m.group("td_x", "td_y", "td")
+            a, b = float(a), float(b)
+            if op == b"TD":
+                leading = -b
+            tx, ty = tx + a, ty + b
+            continue
+        if g == "op":  # a text operator
+            op = m.group("op")
+            if op == b"BT":
+                tx = ty = 0.0
+            elif op == b"T*":
+                ty -= leading
+            else:
+                return _interpret_tokens(stream)
+            continue
+        if g == "show":
+            s, op = m.group("show_s", "show")
+            if op == b"'":
+                ty -= leading
+            s = _string(s)
+        elif g == "tj":
+            s = _tj_text(m.group("tj_a"))
+        elif g == "tm":
+            tx, ty = float(m.group("tm_x")), float(m.group("tm_y"))
+            continue
+        elif g == "tl":
+            leading = float(m.group("tl_n"))
+            continue
+        elif g == "show2":
+            ty -= leading
+            s = _string(m.group("show2_s"))
+        elif g == "bad":
+            return _interpret_tokens(stream)
+        else:
+            continue  # operands at the end of the stream
+        if s:
+            runs.append((tx, ty, s))
+    return runs
+
+
+# --------------------------------------------------------------------------
+# the token loop: the path for the syntax _OP_RE does not cover
 # --------------------------------------------------------------------------
 
 _ESCAPES = {
@@ -398,8 +550,9 @@ def _tokenize(data: bytes):
             i = j
 
 
-def _interpret(stream: bytes) -> list[tuple[float, float, str]]:
-    """Run the text operators; return emitted runs (tx, ty, text)."""
+def _interpret_tokens(stream: bytes) -> list[tuple[float, float, str]]:
+    """Run the text operators token by token; return emitted runs (tx, ty,
+    text). The path for the syntax :func:`_interpret` leaves to it."""
     runs: list[tuple[float, float, str]] = []
     tx = ty = 0.0
     leading = 0.0

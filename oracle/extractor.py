@@ -207,8 +207,10 @@ class _TreeBuilder(HTMLParser):
         self._text(_html.unescape(f"&{name};"), len(name) + 2)
 
     def handle_charref(self, name):
+        # a surrogate code point decodes to U+FFFD (HTML5; html.unescape)
         try:
-            decoded = chr(int(name[1:], 16) if name[0] in "xX" else int(name))
+            cp = int(name[1:], 16) if name[0] in "xX" else int(name)
+            decoded = "\ufffd" if 0xD800 <= cp <= 0xDFFF else chr(cp)
         except (ValueError, OverflowError):
             decoded = ""
         self._text(decoded, len(name) + 3)

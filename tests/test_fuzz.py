@@ -16,6 +16,7 @@ import random
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from advanced_text_extraction_spark.kernels.encoding import decode_bytes
@@ -25,7 +26,8 @@ from fixtures.image_codec import (
     _png_chunk, encode_bmp_gray, encode_pgm, encode_png_gray, encode_tiff,
     png_gray_bomb)
 from advanced_text_extraction_spark.kernels.ocr import ocr_image, render_page
-from advanced_text_extraction_spark.operators.extract import extract_one
+from advanced_text_extraction_spark.operators.extract import (
+    _make_kernel, extract_one)
 from advanced_text_extraction_spark.kernels.sniff import MAX_INFLATE_BYTES
 from fixtures.gen import (
     build_flate_bomb_pdf, build_pdf, build_scanned_pdf, build_zip_bomb_docx,
@@ -43,7 +45,10 @@ def _bitflip(rng: random.Random, raw: bytes, flips: int) -> bytes:
     return bytes(ba)
 
 
-def test_extract_one_never_raises_on_corrupt_payloads():
+def corrupt_payloads() -> list[str | None]:
+    """The seeded corrupt-payload corpus: unicode garbage, tag soup, HTML
+    constructs cut or malformed at the end of the input, corrupt PDFs and
+    office zips, and pathological scalars."""
     rng = random.Random(42)
     cases: list[str | None] = []
     # unicode garbage
@@ -83,13 +88,41 @@ def test_extract_one_never_raises_on_corrupt_payloads():
             cases.append(base64.b64encode(
                 _bitflip(rng, raw, rng.randrange(1, 25))).decode())
             cases.append(b64[:rng.randrange(len(b64))])
+    # HTML that ends inside a construct, or holds references and bytes
+    # the event scanner must treat exactly as html.parser does
+    cases += [
+        "<p>a &#xD800; b &#55296; c &#xDFFF;</p>",     # surrogates
+        "<p>big &#x110000; &#99999999999999999999; &#0;</p>",
+        "<p>tail &#", "<p>tail &", "<p>tail &#x", "<p>tail &am",
+        "<div><p>unterminated <a href='x", "<p>open <!-- comment",
+        "<p>before</p><script>var x = '<p>no</p>';", "<style>p{}",
+        "<p>one\rtwo\r<b>three</b>\r</p>\r<p>four</p>",
+        "<p>nul\x00byte</p>\x00<di\x00v>x</div>",
+    ]
     # pathological scalars
     cases += [None, "", " ", "\x00" * 100, "<" * 5000, "&" * 5000,
               "%PDF-", "PK\x03\x04", "﻿" * 200]
+    return cases
 
-    for payload in cases:
+
+def test_extract_one_never_raises_on_corrupt_payloads():
+    for payload in corrupt_payloads():
         rec = extract_one(payload)          # must never raise
         assert rec["status"] in ("ok", "error", "empty")
+
+
+def test_arrow_kernel_keeps_every_corrupt_payload():
+    """The same corpus as one batch through the mapInArrow kernel, whose
+    Arrow arrays reject what a plain record does not (a lone surrogate in
+    a string column fails the whole task): one row per payload, each with
+    a valid status."""
+    cases = corrupt_payloads()
+    batch = pa.RecordBatch.from_pylist(
+        [{"conv_id": "c", "turn_idx": i, "text": p}
+         for i, p in enumerate(cases)])
+    out = pa.Table.from_batches(list(_make_kernel(None)(iter([batch]))))
+    assert out.column("turn_idx").to_pylist() == list(range(len(cases)))
+    assert set(out.column("status").to_pylist()) <= {"ok", "error", "empty"}
 
 
 @pytest.mark.parametrize("bomb", [

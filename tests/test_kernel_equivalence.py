@@ -1,10 +1,11 @@
 """The text hot path's fast formulations equal the plain ones they
 replace: zero-width deletion by a compiled class instead of
 ``str.translate``, horizontal-whitespace collapse that matches only runs
-that change, and lang-id's gate that skips the script and boost scans
-when the lowered text stays below U+0370, its one union-class script scan
-(each hit named by a bisect over the range starts) and its stopword tally
-over distinct tokens.
+that change, the HTML block collapse as ``" ".join(s.split())`` instead
+of a ``\\s+`` substitution, and lang-id's gate that skips the script and
+boost scans when the lowered text stays below U+0370, its one union-class
+script scan (each hit named by a bisect over the range starts) and its
+stopword tally over distinct tokens.
 
 The reference formulations live here, verbatim, and both are driven over
 a hazard alphabet: the whitespace and control characters where Python's
@@ -84,7 +85,8 @@ def ref_detect_language(text: str) -> str:
 
 _HAZARDS = [
     " ", "  ", "\t", "\n", "\r", "\r\n", "\u00a0", "\u3000", "\x85",
-    "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f", "\u2028", "\u2009",
+    "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f", "\u2028", "\u2029",
+    "\u2000", "\u2005", "\u2009", "\u200a", "\u205f", "\u1680",
     "\u200b", "\u200c", "\u200d", "\ufeff",                # zero-width
     "e\u0301", "A\u030a", "\u0301", "\u0308",               # combining
     "\u212b", "\u212a", "\u0130",             # Angstrom, Kelvin, dotted I
@@ -142,6 +144,21 @@ def test_bulk_random_strings_equal_reference():
         assert normalize_plain(s) == ref_normalize_plain(s), repr(s)
         assert normalize_inline(s) == ref_normalize_inline(s), repr(s)
         assert lang.detect_language(s) == ref_detect_language(s), repr(s)
+
+
+def test_normalize_inline_over_whitespace_runs():
+    """``normalize_inline`` joins ``str.split()``'s words where the
+    reference collapses ``\\s+`` runs: equal on strings made of words and
+    of every character either side could read as white space."""
+    pieces = ["a", "bc", "é", "\u0301", "\u200b", "\ufeff", "\u200d", " ",
+              "\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e",
+              "\x1f", "\x85", "\xa0", "\u3000", "\u180e", "\u2028",
+              "\u2029", "\u202f", "\u205f"] + [
+                  chr(c) for c in range(0x2000, 0x200B)]
+    rng = random.Random(9)
+    for _ in range(40_000):
+        s = "".join(rng.choice(pieces) for _ in range(rng.randrange(12)))
+        assert normalize_inline(s) == ref_normalize_inline(s), repr(s)
 
 
 def test_script_ranges_are_disjoint():

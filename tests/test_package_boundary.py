@@ -36,6 +36,23 @@ def test_package_imports_nothing_outside_it():
     assert not bad, bad
 
 
+def test_package_parses_html_without_the_stdlib_parser():
+    """The HTML kernel is its own event scanner; the ``html.parser``-based
+    implementation it replaced is a test reference only."""
+    bad = []
+    for rel, tree in _modules():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            bad += [f"{rel}:{node.lineno}" for n in names
+                    if n == "html.parser"]
+    assert not bad, bad
+
+
 def test_package_defines_no_encoders():
     bad = []
     for rel, tree in _modules():
