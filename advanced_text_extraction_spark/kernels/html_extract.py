@@ -20,8 +20,16 @@ constructs in C; anything else (a tag it does not cover, an incomplete
 construct, a marked section) goes through a port of the stdlib parser's
 procedure for that construct, including its two passes: ``feed`` stops at
 the first incomplete construct, ``close`` resumes there and turns the
-rest into data. One pass, O(n); no DOM tree is materialized — this runs
-vectorized over Arrow batches in the extract UDF.
+rest into data. Where the stdlib searches from every unterminated
+construct to the end of the input again, ``_Ends`` answers each search
+for a closer from the last one, and past the last ``'>'`` no start tag
+is scanned for its attributes; an end tag with no open element of its
+name pops nothing without scanning the element stack. So it is one
+pass, O(n): a run of unterminated comments, tags or marked sections, or
+of unmatched end tags, costs what its length does. A marked section the
+stdlib rejects raises its ``AssertionError``. No DOM tree is
+materialized — this runs vectorized over Arrow batches in the extract
+UDF.
 """
 
 from __future__ import annotations
@@ -62,7 +70,7 @@ _CDATA_TAGS = ("script", "style")
 # '<' or '&' it reads as text. Comments, declarations and processing
 # instructions take the ported procedure: one search each, as in the
 # stdlib, where a pattern would scan an unterminated one twice.
-_EVENT_RE = re.compile(r"""
+_EVENT_PATTERN = r"""
     (?P<data>[^&<]++)
   | (?P<start><(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*+)
      (?P<attrs>(?:[\t\n\r\f\x20]++[a-zA-Z_:][-a-zA-Z0-9_:.]*+
@@ -72,7 +80,12 @@ _EVENT_RE = re.compile(r"""
   | &\#(?P<charref>[0-9]++|[xX][0-9a-fA-F]++)(?:;|(?=[^0-9a-fA-F]))
   | &(?P<entityref>[a-zA-Z][-.a-zA-Z0-9]*)(?:;|(?=[^a-zA-Z0-9]))
   | (?P<lone><(?=[^a-zA-Z/!?])|&(?=[^a-zA-Z\#]))
-""", re.VERBOSE)
+"""
+_EVENT_RE = re.compile(_EVENT_PATTERN, re.VERBOSE)
+# past the last '>' no tag can end, and a start tag's name and attributes
+# may run to the end of the input: the scanner leaves that alternative out
+_TAIL_EVENT_RE = re.compile(
+    _EVENT_PATTERN.replace("(?P<start><", "(?P<start>(?!)<"), re.VERBOSE)
 (_DATA, _START, _END, _CHARREF, _ENTITYREF, _LONE) = (
     _EVENT_RE.groupindex[g]
     for g in ("data", "start", "end", "charref", "entityref", "lone"))
@@ -85,32 +98,101 @@ _TAGFIND = re.compile(r'([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*')
 _ATTRFIND = re.compile(
     r'((?<=[\'"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*'
     r'(\'[^\']*\'|"[^"]*"|(?![\'"])[^>\s]*))?(?:\s|/(?!>))*')
-_LOCATE_STARTTAG_END = re.compile(r"""
-  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
-  (?:[\s/]*                          # optional whitespace before attribute name
-    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
-      (?:\s*=+\s*                    # value indicator
-        (?:'[^']*'                   # LITA-enclosed value
-          |"[^"]*"                   # LIT-enclosed value
-          |(?!['"])[^>\s]*           # bare value
-         )
-        \s*                          # possibly followed by a space
-       )?(?:\s|/(?!>))*
-     )*
-   )?
-  \s*                                # trailing whitespace
+# the stdlib's locatestarttagend_tolerant after the tag name, cut where
+# _Ends memoizes it: before the attributes, then one attribute per match
+# (its loop never gives one back, as nothing after it can fail), then the
+# trailing whitespace
+_LOCATE_BEFORE_ATTRS = re.compile(r"[\s/]*")
+_LOCATE_ATTR = re.compile(r"""
+    (?<=['"\s/])[^\s/>][^\s/=>]*      # attribute name
+    (?:\s*=+\s*                       # value indicator
+      (?:'[^']*'                       # LITA-enclosed value
+        |"[^"]*"                       # LIT-enclosed value
+        |(?!['"])[^>\s]*               # bare value
+       )
+      \s*                              # possibly followed by a space
+     )?(?:\s|/(?!>))*
 """, re.VERBOSE)
+_SPACES = re.compile(r"\s*")
 _COMMENTCLOSE = re.compile(r'--\s*>')
 _DECLNAME = re.compile(r'[a-zA-Z][-_.a-zA-Z0-9]*\s*')
 _MARKEDSECTIONCLOSE = re.compile(r']\s*]\s*>')
 _MSMARKEDSECTIONCLOSE = re.compile(r']\s*>')
 _CDATA_CLOSE = {t: re.compile(r'</\s*%s\s*>' % t, re.I) for t in _CDATA_TAGS}
+# closers found by _Ends.search: of a bogus comment, end tag or
+# incomplete construct, and of a tag name
+_GT = re.compile(">")
+_NAME_END = re.compile(r"[\t\n\r\f />\x00]")
+# a NUL after a tag name that locatestarttagend_tolerant reads as an
+# attribute
+_NUL_ATTR = re.compile(r"(?<=['\"\s/])\x00")
 
 
-def _start_tag_end(raw: str, i: int) -> int:
+class _Ends:
+    """Where one input's constructs end, found without scanning a stretch
+    of it twice for one closer.
+
+    The stdlib parser searches from every unterminated construct to the
+    end of the input again, so a run of them is quadratic. ``search``
+    remembers, per pattern, where its last search started and what it
+    found: that result answers every later search from at or after the
+    start and not past the match (a failed search: no closer from there
+    to the end). Start tags keep where the attribute loop ends per
+    attribute, as one tag's attributes are often another's
+    (``<a x=">" <a x=">" …``)."""
+
+    def __init__(self, raw: str) -> None:
+        self.raw = raw
+        self.no_gt = raw.rfind(">") + 1  # no '>' from here to the end
+        self._found: dict[re.Pattern, tuple] = {}
+        self._after_attr: dict[int, int] = {}
+
+    def search(self, pattern: re.Pattern, pos: int) -> re.Match | None:
+        """``pattern.search(raw, pos)``."""
+        lo, m = self._found.get(pattern, (len(self.raw) + 1, None))
+        if lo <= pos and (m is None or pos <= m.start()):
+            return m
+        m = pattern.search(self.raw, pos)
+        self._found[pattern] = pos, m
+        return m
+
+    def locate_start_tag(self, i: int) -> int:
+        """Where the stdlib's locatestarttagend_tolerant ends on the start
+        tag at ``i``, a '>' following it."""
+        name_end = self.search(_NAME_END, i + 1).start()
+        return self._attrs_end(
+            _LOCATE_BEFORE_ATTRS.match(self.raw, name_end).end())
+
+    def _attrs_end(self, p: int) -> int:
+        """Where the attribute loop entered at ``p`` ends, its trailing
+        whitespace included. A loop entered at one of another loop's
+        attributes goes on as that one did, so each attribute keeps the
+        end."""
+        raw, ends = self.raw, self._after_attr
+        seen = []
+        while (j := ends.get(p)) is None:
+            seen.append(p)
+            m = _LOCATE_ATTR.match(raw, p)
+            if m is None:
+                j = _SPACES.match(raw, p).end()
+                break
+            p = m.end()
+        for q in seen:
+            ends[q] = j
+        return j
+
+
+def _start_tag_end(raw: str, i: int, ends: _Ends) -> int:
     """The stdlib's check for a whole start tag at ``raw[i] == '<'``: the
     tag's end offset, or -1 while it is incomplete."""
-    j = _LOCATE_STARTTAG_END.match(raw, i).end()
+    if i >= ends.no_gt:
+        # no '>' follows: the attribute loop then runs to the end of the
+        # input or stops at an '=' before an unclosed quote, so the tag
+        # is incomplete unless a NUL ends its name and starts no attribute
+        m = ends.search(_NAME_END, i + 1)
+        return (m.start() if m and m.group() == "\x00"
+                and not _NUL_ATTR.match(raw, m.start()) else -1)
+    j = ends.locate_start_tag(i)
     nxt = raw[j:j + 1]
     if nxt == ">":
         return j + 1
@@ -137,32 +219,32 @@ def _scan_name(raw: str, i: int, declstartpos: int) -> tuple[str | None, int]:
     return s.strip().lower(), m.end()
 
 
-def _marked_section_end(raw: str, i: int) -> int:
+def _marked_section_end(raw: str, i: int, ends: _Ends) -> int:
     """``<![name ... ]]>`` (or the MS-Office ``]>`` form): its end, or -1
     while incomplete. Unknown names raise as the stdlib parser does."""
     name, j = _scan_name(raw, i + 3, i)
     if j < 0:
         return j
     if name in {"temp", "cdata", "ignore", "include", "rcdata"}:
-        m = _MARKEDSECTIONCLOSE.search(raw, i + 3)
+        m = ends.search(_MARKEDSECTIONCLOSE, i + 3)
     elif name in {"if", "else", "endif"}:
-        m = _MSMARKEDSECTIONCLOSE.search(raw, i + 3)
+        m = ends.search(_MSMARKEDSECTIONCLOSE, i + 3)
     else:
         raise AssertionError(
             "unknown status keyword %r in marked section" % raw[i + 3:j])
     return m.end() if m else -1
 
 
-def _markup_end(raw: str, i: int) -> int:
+def _markup_end(raw: str, i: int, ends: _Ends) -> int:
     """End of the comment, declaration or processing instruction at
     ``raw[i:i+2] in ('<!', '<?')``, or -1 while it is incomplete."""
     if raw.startswith("<!--", i):
-        m = _COMMENTCLOSE.search(raw, i + 4)
-        return m.end() if m else -1
-    if raw.startswith("<![", i):
-        return _marked_section_end(raw, i)
-    k = raw.find(">", i + 2)
-    return k + 1 if k >= 0 else -1
+        m = ends.search(_COMMENTCLOSE, i + 4)
+    elif raw.startswith("<![", i):
+        return _marked_section_end(raw, i, ends)
+    else:
+        m = ends.search(_GT, i + 2)
+    return m.end() if m else -1
 
 
 def _charref_text(name: str) -> str:
@@ -205,25 +287,29 @@ def _parse_start_tag(raw: str, i: int, endpos: int
     return m.group(1).lower(), attrs, raw[k:endpos].strip()
 
 
-def _end_tag_end(raw: str, i: int) -> tuple[str | None, int]:
+def _end_tag_end(raw: str, i: int, ends: _Ends
+                 ) -> tuple[str | None, int]:
     """The stdlib's reading of an end tag at ``raw[i:i+2] == '</'`` that
     ``_EVENT_RE`` did not match: ``(tag or None, end offset)``, the offset
     -1 while incomplete."""
-    gtpos = raw.find(">", i + 1)
-    if gtpos < 0:
+    gt = ends.search(_GT, i + 1)
+    if gt is None:
         return None, -1
     m = _TAGFIND.match(raw, i + 2)
     if not m:  # '</>', or a bogus comment up to the first '>'
-        return None, gtpos + 1
-    return m.group(1).lower(), raw.find(">", m.end()) + 1
+        return None, gt.end()
+    return m.group(1).lower(), gt.end()  # the name stops before it
 
 
 def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
     """Single-pass block segmenter with chrome / link-density accounting:
     the kept blocks as ``[(text, src_start, src_end)]``."""
     blocks: list[tuple[str, int, int]] = []
-    # element stack entries: (tag, is_chrome, is_exclude)
+    # element stack entries: (tag, is_chrome, is_exclude), and how many
+    # of them each tag name has: an end tag with none open pops nothing,
+    # without a scan of the whole stack
     stack: list[tuple[str, bool, bool]] = []
+    n_open: dict[str, int] = {}
     exclude_depth = chrome_depth = anchor_depth = 0
     # current block accumulator
     parts: list[str] = []
@@ -264,6 +350,7 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
         chrome = tag in CHROME_TAGS or _attrs_chrome(attrs)
         exclude = tag in EXCLUDE_TAGS
         stack.append((tag, chrome, exclude))
+        n_open[tag] = n_open.get(tag, 0) + 1
         if chrome:
             chrome_depth += 1
         if exclude:
@@ -279,10 +366,13 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
             return
         if tag in BLOCK_TAGS:
             flush()
+        if not n_open.get(tag):
+            return
         # pop to the nearest matching open tag (tolerates mismatched markup)
         for k in range(len(stack) - 1, -1, -1):
             if stack[k][0] == tag:
                 for _tag, chrome, exclude in stack[k:]:
+                    n_open[_tag] -= 1
                     if chrome:
                         chrome_depth -= 1
                     if exclude:
@@ -309,7 +399,9 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
     n = len(raw)
     i = 0
     end = False  # the stdlib parser is in feed() until the first stop
-    match = _EVENT_RE.match
+    match, tail_match = _EVENT_RE.match, _TAIL_EVENT_RE.match
+    ends = _Ends(raw)
+    no_gt = ends.no_gt
     while i < n:
         if cdata is not None:
             # raw text inside an excluded element: it adds nothing, and
@@ -321,7 +413,7 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
                 i = m.end()
                 continue
         else:
-            m = match(raw, i)
+            m = match(raw, i) if i < no_gt else tail_match(raw, i)
             if m is not None:
                 kind = m.lastindex
                 if kind == _DATA:
@@ -358,13 +450,13 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
                 # a tag, comment or declaration _EVENT_RE does not cover
                 c = raw[i + 1]
                 if c == "/":
-                    tag, k = _end_tag_end(raw, i)
+                    tag, k = _end_tag_end(raw, i, ends)
                     if tag is not None:
                         end_tag(tag)
                 elif c == "!" or c == "?":
-                    k = _markup_end(raw, i)
+                    k = _markup_end(raw, i, ends)
                 else:
-                    k = _start_tag_end(raw, i)
+                    k = _start_tag_end(raw, i, ends)
                     if k >= 0:
                         tag, attrs, tail = _parse_start_tag(raw, i, k)
                         if tail in (">", "/>"):
@@ -374,8 +466,10 @@ def _html_blocks(raw: str) -> list[tuple[str, int, int]]:
                 if k < 0 and end:
                     # incomplete at the end of the input: text up to the
                     # next '>' (or '<')
-                    k = raw.find(">", i + 1) + 1
-                    if not k:
+                    gt = ends.search(_GT, i + 1)
+                    if gt:
+                        k = gt.end()
+                    else:
                         k = raw.find("<", i + 1)
                         if k < 0:
                             k = i + 1

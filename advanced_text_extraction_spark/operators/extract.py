@@ -69,6 +69,10 @@ def output_schema(input_schema: T.StructType) -> T.StructType:
     return T.StructType(list(input_schema.fields) + EXTRACTED_FIELDS)
 
 
+def _error_message(exc: Exception) -> str:
+    return str(exc) or type(exc).__name__
+
+
 def _extract_row(payload: str | None, max_chars: int,
                  ocr_fallback) -> tuple:
     """Engine extraction of ONE payload (SPEC.md §1–§6 dispatch) as the
@@ -76,7 +80,8 @@ def _extract_row(payload: str | None, max_chars: int,
     status, error, metadata)``; ``spans`` is a list of
     ``(block_idx, start, end, src_start, src_end)`` tuples. The Arrow
     kernel builds its columns from these; :func:`extract_one` is the
-    record view."""
+    record view. A row fails here and nowhere else: any exception after
+    the truncation becomes the error row (SPEC.md §6)."""
     raw = payload or ""
     truncated = len(raw) > max_chars
     if truncated:
@@ -86,61 +91,50 @@ def _extract_row(payload: str | None, max_chars: int,
         meta["truncated"] = "true"
 
     content_type, payload_bytes, err = sniff_content_type(raw)
-    text, spans, confidence, status = "", [], 1.0, "ok"
-    if content_type == "pdf":
-        confidence = 0.95  # text_extractor.py:511
+    # plain text 1.0 (text_extractor.py:945), the document tiers 0.95
+    # (:511,639,689,734)
+    confidence = 1.0 if content_type == "text" else 0.95
+    try:
         if err:
-            status = "error"
+            raise ValueError(err)
+        kind, conf = content_type, confidence
+        if content_type == "pdf":
+            doc = PdfDocument(payload_bytes)
+            text, spans, gate, n_pages = doc.text_layer()
+            extra = {"text_layer": gate, "n_pages": str(n_pages)}
+            if gate == "short" and ocr_fallback is not None:
+                # reference P3: text layer too short → OCR the pages
+                # (text_extractor.py:501-507); engine-reported mean
+                # confidence replaces the 0.95 constant (A6/A7).
+                # OCR failure keeps the (valid) short text layer —
+                # a fallback must never lose what it falls back FROM.
+                # The page images come from the same parse and the
+                # inflate budget its content streams left.
+                try:
+                    ocr_text, ocr_conf = ocr_fallback(doc.page_images())
+                except Exception as ocr_exc:
+                    extra["ocr_error"] = _error_message(ocr_exc)
+                else:
+                    if len(ocr_text.strip()) > len(text.strip()):
+                        text, conf = ocr_text, float(ocr_conf)
+                        spans = ([(0, 0, len(text), -1, -1)]
+                                 if text else [])
+                        extra["text_layer"] = "ocr"
+        elif content_type == "office":
+            # kind: 'docx' | 'excel' | 'powerpoint'
+            kind, text, spans, extra = extract_office(payload_bytes)
+        elif content_type == "html":
+            text, spans = extract_html(raw)
+            extra = {"n_blocks": str(len(spans))}
         else:
-            try:
-                doc = PdfDocument(payload_bytes)
-                text, spans, gate, n_pages = doc.text_layer()
-                meta["text_layer"] = gate
-                meta["n_pages"] = str(n_pages)
-                if gate == "short" and ocr_fallback is not None:
-                    # reference P3: text layer too short → OCR the pages
-                    # (text_extractor.py:501-507); engine-reported mean
-                    # confidence replaces the 0.95 constant (A6/A7).
-                    # OCR failure keeps the (valid) short text layer —
-                    # a fallback must never lose what it falls back FROM.
-                    # The page images come from the same parse and the
-                    # inflate budget its content streams left.
-                    try:
-                        ocr_text, ocr_conf = ocr_fallback(doc.page_images())
-                    except Exception as ocr_exc:
-                        meta["ocr_error"] = (str(ocr_exc)
-                                             or type(ocr_exc).__name__)
-                    else:
-                        if len(ocr_text.strip()) > len(text.strip()):
-                            text, confidence = ocr_text, float(ocr_conf)
-                            spans = ([(0, 0, len(text), -1, -1)]
-                                     if text else [])
-                            meta["text_layer"] = "ocr"
-            except Exception as exc:  # malformed PDF → failure-as-data
-                status, err, text, spans = "error", str(exc) or type(exc).__name__, "", []
-    elif content_type == "office":
-        confidence = 0.95  # text_extractor.py:639,689,734
-        if err:
-            status = "error"
-        else:
-            try:
-                kind, text, spans, office_meta = extract_office(payload_bytes)
-                content_type = kind  # 'docx' | 'excel' | 'powerpoint'
-                meta.update(office_meta)
-            except Exception as exc:  # malformed OOXML → failure-as-data
-                status, err, text, spans = "error", str(exc) or type(exc).__name__, "", []
-    elif content_type == "html":
-        confidence = 0.95  # structured-document tier, text_extractor.py:639
-        text, spans = extract_html(raw)
-        meta["n_blocks"] = str(len(spans))
-    else:
-        confidence = 1.0  # text_extractor.py:945
-        text = normalize_plain(raw)
-        spans = [(0, 0, len(text), 0, len(raw))] if text else []
-        meta["n_blocks"] = "1" if text else "0"
-
-    return (content_type, text, spans, confidence, detect_language(text),
-            status, err if status == "error" else "", meta)
+            text = normalize_plain(raw)
+            spans = [(0, 0, len(text), 0, len(raw))] if text else []
+            extra = {"n_blocks": "1" if text else "0"}
+        return (kind, text, spans, conf, detect_language(text), "ok", "",
+                {**meta, **extra})
+    except Exception as exc:  # failure-as-data: the row, not the task
+        return (content_type, "", [], confidence, detect_language(""),
+                "error", _error_message(exc), meta)
 
 
 def extract_one(payload: str | None,

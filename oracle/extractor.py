@@ -762,9 +762,12 @@ def extract_payload(payload: str) -> dict:
     elif t and _HTML_PROBE.search(t):
         out["content_type"] = "html"
         out["confidence"] = 0.95
-        text, spans = _extract_html(raw)
-        out.update(extracted_text=text, spans=spans)
-        meta["n_blocks"] = str(len(spans))
+        try:  # html.parser rejects some marked sections
+            text, spans = _extract_html(raw)
+            out.update(extracted_text=text, spans=spans)
+            meta["n_blocks"] = str(len(spans))
+        except Exception as e:  # noqa: BLE001 — failure-as-data
+            out.update(status="error", error=str(e) or type(e).__name__)
     else:
         text = _norm_plain(raw)
         out["extracted_text"] = text

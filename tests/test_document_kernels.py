@@ -15,7 +15,9 @@ Arrow string column can hold."""
 from __future__ import annotations
 
 import base64
+import gc
 import random
+import time
 
 import kernel_references as ref
 import pyarrow as pa
@@ -169,11 +171,24 @@ _SOUP = list("<>/!-&#;aAbpx19=\"' \n\t\r[]?_.:\x00\xa0\x0b") + [
     "CDATA", "if", "endif", "doctype", "amp", "D800", "x"]
 
 
+# constructs a run of which took the replaced kernel quadratic time: each
+# unterminated copy searched to the end of the input, each unmatched end
+# tag scanned the whole element stack
+_UNTERMINATED = ["<!--", "<![cdata[", "<![if", "<!x", "<?x", "</a", "<a",
+                 "<a ", "<a b='", '<a x=">" ', "<a\x0b", "<a\x00", "&#",
+                 "b=<a/", "<i></b>"]
+
+
 def test_html_equals_reference_on_generated_documents():
     rng = random.Random(2026)
     docs = [_html_doc(rng) for _ in range(8000)]
     docs += ["".join(rng.choice(_SOUP) for _ in range(rng.randrange(40)))
              for _ in range(6000)]
+    # long runs of one unterminated construct (short: the reference is
+    # quadratic in them)
+    docs += [rng.choice(["", "<p>x</p>"]) + c * rng.randrange(1, 300)
+             + rng.choice(["", "", ">", "-->", "]]>", "<b>", "b='", "\x00"])
+             for c in _UNTERMINATED for _ in range(16)]
     raised = 0
     for doc in docs:
         want = _outcome(ref_extract_html, doc)
@@ -181,6 +196,46 @@ def test_html_equals_reference_on_generated_documents():
         raised += isinstance(want[1], str)
     # the generators reach the stdlib's marked-section errors too
     assert 0 < raised < len(docs) // 4, raised
+
+
+def _cpu(fn, args: list, runs: int) -> list[float]:
+    """The best of ``runs`` CPU times of ``fn`` on each argument. The
+    arguments take turns, so a slow spell of the host falls on all of
+    them, and the cyclic collector is off: a collection scans every
+    object of the test process, not just the kernel's."""
+    best = [float("inf")] * len(args)
+    gc.collect()
+    gc.disable()
+    try:
+        for _ in range(runs):
+            for k, arg in enumerate(args):
+                t0 = time.process_time()
+                _outcome(fn, arg)
+                best[k] = min(best[k], time.process_time() - t0)
+    finally:
+        gc.enable()
+    return best
+
+
+@pytest.mark.parametrize("construct, after", [
+    ("<!--", ""), ("<a<a", ""), ("<![cdata[", ""),
+    ("<a ", ""), ('<a x=">" ', "b='"), ("<i></b>", "")])
+def test_html_cost_grows_linearly_in_unterminated_runs(construct, after):
+    """Every copy of an unterminated construct used to search to the end
+    of the input again, and every unmatched end tag the whole element
+    stack: the CPU ratio of n = 40k to 10k copies was ~16."""
+    small, large = _cpu(extract_html, [
+        "<p>x</p>" + construct * n + after for n in (10_000, 40_000)], 7)
+    assert large < 6 * max(small, 0.005), (small, large)
+
+
+@pytest.mark.parametrize("construct", ["<!x", "</a", "<?x"])
+def test_html_payload_cap_of_unterminated_constructs_is_cheap(construct):
+    """A 2M-character payload (the payload cap) of bogus comments, end
+    tags or processing instructions without '>': each used to search for
+    one to the end of the input."""
+    page = "<p>x</p>" + construct * (2_000_000 // len(construct))
+    assert _cpu(extract_html, [page], 1)[0] < 8
 
 
 def test_surrogate_reference_becomes_replacement_character():

@@ -99,6 +99,12 @@ def corrupt_payloads() -> list[str | None]:
         "<p>one\rtwo\r<b>three</b>\r</p>\r<p>four</p>",
         "<p>nul\x00byte</p>\x00<di\x00v>x</div>",
     ]
+    # marked sections: two the stdlib parser rejects (they end as error
+    # rows), and three cut short
+    cases += [
+        "<html><p>hi</p><![foo]></html>", "<p>x</p><![ x]>",
+        "<p>x</p><![if !mso", "<p>x</p><![cdata[ <b>y</b>", "<p>x</p><![",
+    ]
     # pathological scalars
     cases += [None, "", " ", "\x00" * 100, "<" * 5000, "&" * 5000,
               "%PDF-", "PK\x03\x04", "﻿" * 200]

@@ -6,6 +6,7 @@ fragments leak into the output."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -58,6 +59,15 @@ def test_engine_matches_oracle_on_random_html(doc):
     ]
     assert e["spans"] == o_spans
     assert e["language"] == o["language"]
+
+
+@pytest.mark.parametrize("page", [
+    "<html><p>hi</p><![foo]></html>", "<p>x</p><![ x]>"])
+def test_engine_and_oracle_give_the_same_error_row(page):
+    """Pages html.parser rejects end as the same error row in both."""
+    e = extract_one(page)
+    assert e["status"] == "error"
+    assert e == oracle_extract(page)
 
 
 @settings(max_examples=150, deadline=None)

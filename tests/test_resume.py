@@ -318,3 +318,26 @@ def test_unmountable_warehouse_turns_resume_off(spark, caplog):
         assert catalog.completed_buckets(
             spark, "s3a://bucket/wh", EXTRACTOR_VERSION, N_BUCKETS) == []
     assert "resume is off for this run" in caplog.text
+
+
+def test_page_the_html_parser_rejects_is_an_error_row(spark, transcripts_pdf,
+                                                     tmp_path):
+    """A page holding a marked section the stdlib HTML parser rejects
+    ends as one ``status='error'`` row that lineage counts, and the job
+    completes; it used to fail the task, and so the job."""
+    pdf = transcripts_pdf.head(60).copy()
+    key = tuple(pdf.iloc[7][["conv_id", "turn_idx"]])
+    copies = (pdf.conv_id == key[0]) & (pdf.turn_idx == key[1])
+    pdf.loc[copies, "text"] = "<html><p>hi</p><![foo]></html>"
+    path = str(tmp_path / "transcripts.parquet")
+    pdf.to_parquet(path, index=False)
+    root = str(tmp_path / "wh")
+    run = run_extract_job(spark, spark.read.parquet(path), root,
+                          n_buckets=N_BUCKETS, salt=2)
+    assert run.buckets_done
+    out = catalog.read_extracted(spark, root).toPandas()
+    row = out[(out.conv_id == key[0]) & (out.turn_idx == key[1])]
+    assert row[["content_type", "status", "error"]].values.tolist() == [
+        ["html", "error", "unknown status keyword 'foo' in marked section"]]
+    lineage = spark.read.parquet(catalog.lineage_path(root)).toPandas()
+    assert lineage.error_rows.sum() == (out.status == "error").sum() >= 1
